@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 
 /** The engine's public entry point — one object a user drives without
   * knowing the internal package layout:
@@ -201,6 +201,78 @@ object Graft {
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
+
+  /** `df` with `metric` (an aggregate over its rows) observed inside
+    * whichever job first runs it, plus a reader of the value for after
+    * that job. The value decodes as Spark returns it (a Long for an
+    * integral sum or count, a Row for a struct), except that null — an
+    * integral aggregate over no rows — reads as 0L. */
+  private[graft] def observed(df: DataFrame, metric: Column): (DataFrame, () => Any) = {
+    val obs = new org.apache.spark.sql.Observation() // UUID name: never collides
+    (df.observe(obs, metric.as("m")), () => obs.get.getOrElse("m", null) match {
+      case null => 0L
+      case v => v
+    })
+  }
+
+  /** A convergence test for [[iterate]]: `metric` is [[observed]] on
+    * every round's output inside the job that materializes the round
+    * (no extra pass, no extra job), and the loop stops after the first
+    * round where `done(previous value, this round's value)` holds.
+    * `start` is the previous value round 1 compares against. Under task
+    * retries an observed metric can over-count, so `done` must only
+    * ever hold for a value every attempt agrees on. */
+  private[graft] final case class Until(metric: Column, done: (Any, Any) => Boolean, start: Any = null)
+
+  /** What [[iterate]] returns: the last materialized state (the
+    * caller's, like the initial one), the rounds run, and whether the
+    * [[Until]] test held — false for a capped loop, and always for a
+    * fixed-round loop. */
+  private[graft] final case class Fixpoint(state: DataFrame, rounds: Int, converged: Boolean)
+
+  /** THE ROUND LOOP behind every iterative operator (PageRank, LPA,
+    * BFS, k-core, CC propagation and star contraction, BPE, k-means++):
+    * from the materialized `init`, each round materializes
+    * `step(state)` projected onto `init`'s columns (a step may add
+    * columns its [[Until]] metric reads), releases the round it
+    * supersedes, and stops at `maxRounds` or when `until` holds.
+    *
+    * Storage stays O(current round): persistentRdds pins checkpoint
+    * blocks strongly, so a superseded round is released eagerly (the
+    * r12 leak discipline). `init` is never released — the caller may
+    * still read it — and neither is the returned state; both are the
+    * caller's, or [[releaseState]]'s at the query boundary. A step that
+    * returns its input unchanged (nothing left to apply) costs no
+    * materialization; the round still counts. */
+  private[graft] def iterate(init: DataFrame, maxRounds: Int,
+      until: Option[Until] = None,
+      materialize: DataFrame => DataFrame = compactCheckpoint(_))(
+      step: DataFrame => DataFrame): Fixpoint = {
+    val cols = init.columns.map(functions.col)
+    var state = init
+    var prev = until.map(_.start).orNull
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < maxRounds) {
+      val out = step(state)
+      if (out ne state) {
+        val next = until match {
+          case None => materialize(out.select(cols: _*))
+          case Some(u) =>
+            val (obs, value) = observed(out, u.metric)
+            val m = materialize(obs.select(cols: _*))
+            val v = value()
+            converged = u.done(prev, v)
+            prev = v
+            m
+        }
+        if (state ne init) releaseCheckpoint(state)
+        state = next
+      }
+      rounds += 1
+    }
+    Fixpoint(state, rounds, converged)
+  }
 
   /** Wrap an existing session. Registers the fixture tables as temp
     * views and the engine's native functions (dot_i64). */

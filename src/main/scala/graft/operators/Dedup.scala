@@ -803,39 +803,14 @@ object Dedup {
     * near-duplicate edge for clustering. */
   val CcThreshold = 0.5
 
-  /** Max label-propagation rounds. One-hop propagation needs
-    * O(diameter) rounds; near-dup components are shallow (duplicates of
-    * one source document collide pairwise, diameter ≲ 2), so 20 is a
-    * generous bound with the convergence check exiting far earlier. */
-  private val CcMaxIters = 20
+  /** Max checkpointed propagation rounds before [[propagateMin]]
+    * escalates to [[starContract]]. A round runs two hops (r17), so 20
+    * rounds settle components of diameter up to 40. Near-dup components
+    * are shallow (duplicates of one source document collide pairwise,
+    * diameter ≲ 2), so the convergence check exits far earlier; the
+    * deep chains a boilerplate-bearing corpus grows at scale escalate. */
+  private[graft] val CcMaxIters = 20
 
-  /** Propagation hops folded into ONE checkpointed round of
-    * [[propagateMin]] (r17, guide §2: cut job count, not task time).
-    * Validated like the other env knobs: non-positive or malformed
-    * values fall back to the default of 2. The fixpoint is hop-count-
-    * invariant, so any value computes identical results. */
-  private def ccHopsPerRound: Int =
-    sys.env.get("SPARK_GRAFT_CC_HOPS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(2)
-
-  /** Near-duplicate clustering: connected components over the LSH
-    * near-dup pair graph (est_j ≥ [[CcThreshold]]) — the transitive-
-    * closure step a real pipeline runs after candidate generation, so
-    * "A≈B, B≈C" lands A, B, C in one cluster with one canonical id.
-    *
-    * Distributed min-label propagation (Pregel-style, the same shape as
-    * GraphX/GraphFrames CC): every doc starts labeled with its own id;
-    * each round every node takes the min of its label and its
-    * neighbors' labels (via one shuffle join on the symmetric edge
-    * list) until a fixpoint. The fixpoint is unique (min doc_id per
-    * component), so the result is deterministic regardless of round
-    * count or partitioning. Each round localCheckpoints the label table:
-    * labels are (long, long) pairs — O(docs) state, no lineage blowup.
-    * Rounds are O(component diameter) — tiny for near-dup graphs; for
-    * adversarially long chains switch to the large-star/small-star
-    * variant (same join primitive, provably O(log n) rounds).
-    */
   /** Symmetric (src, dst) edge list from one-direction (da, db) pairs. */
   private[graft] def symmetrize(edges: DataFrame): DataFrame =
     edges.select(explode(array(
@@ -844,12 +819,8 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
   /** Min-label propagation to fixpoint over a PERSISTED symmetric edge
-    * list, starting from `init` (doc_id, label). Convergence is
-    * detected ON THE SAME PASS that materializes the round's labels (an
-    * accumulator counts label decreases inside the eager
-    * localCheckpoint job) — one job per round, not two. Retried tasks
-    * can only over-count, and a converged round counts 0 in every
-    * attempt, so the ==0 exit test is retry-safe. Returns the
+    * list, starting from `init` (doc_id, label): [[propagateRounds]],
+    * then the escalation below if they hit the cap. Returns the
     * localCheckpointed fixpoint.
     *
     * NON-CONVERGENCE ESCALATION (r15): past [[CcMaxIters]] rounds the
@@ -875,103 +846,74 @@ object Dedup {
     * unioning the edge endpoints or the full doc table). */
   private[graft] def propagateMin(s: SparkSession, init: DataFrame, sym: DataFrame,
       what: String): DataFrame = {
-    var labels = graft.Graft.compactCheckpoint(init)
-    var converged = false
-    var it = 0
-    // (r17 measured-and-REJECTED: disabling AQE inside this loop to cut
-    // the per-query-stage job count lost ×0.6–0.9 across the whole CC/
-    // graph family in a floor-gated A/B — AQE's post-shuffle coalescing
-    // carries the tiny-state rounds; the per-stage job latency it adds
-    // is the smaller cost. The loop keeps AQE unconditionally.)
-    // `it` counts CHECKPOINTED rounds (two hops each since r17), so the
-    // CcMaxIters escalation bound now tolerates diameters up to twice
-    // the hop budget before switching to starContract — same fixpoint
-    // either way, just a later switch for the deepest components.
-    while (!converged && it < CcMaxIters) {
-      // r16 (guide §4): the round body is pure codegen expressions —
-      // the previous Dataset.mapPartitions closure forced a
-      // deserialize/serialize round-trip of every label row per round
-      // AND erased the join's hash(doc_id) output partitioning (fresh
-      // exprIds after SerializeFromObject), so every next round
-      // re-shuffled the label table twice. Convergence now rides an
-      // `observe` metric computed INSIDE the same localCheckpoint job
-      // (CollectMetrics — no extra pass, no extra job); like the old
-      // accumulator, a retried task can only over-count and a converged
-      // round counts 0 in every attempt, so the ==0 exit is retry-safe.
-      val obs = new org.apache.spark.sql.Observation() // UUID name: never collides
-      // r17 (guide §2: cut JOB count, not task time): each round now
-      // propagates TWO hops before checkpointing — at sf0.1 the CC
-      // family is choreography-bound (~20 ms driver latency × one job
-      // per round; stream_cc = 121 jobs), and chain components need
-      // half the rounds under a two-hop step. Convergence is exact on
-      // the SECOND hop's change count: zero second-hop improvements
-      // means hop-1's labeling is one-step-stable, and a one-step-
-      // stable labeling IS the unique component-min fixpoint (if some
-      // node sat above its component min, the first rise along a path
-      // from the min-labeled node would improve). The hop-1 subtree is
-      // referenced twice below (join left side + hop-2 aggregation);
-      // its exchanges are deduped by ReuseExchange, so the extra cost
-      // is one in-memory re-join, not a re-shuffle. Retry-safety
-      // unchanged: a converged round counts 0 in every attempt.
-      def hop(cur: DataFrame): DataFrame = {
-        val nbrMin = cur.join(sym, col("doc_id") === col("src"))
-          .groupBy(col("dst")).agg(min(col("label")).as("nbr"))
-        cur.join(nbrMin, col("doc_id") === col("dst"), "left")
-          .select(col("doc_id"),
-            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
-            (col("nbr") < col("label")).as("improved"))
-      }
-      // SPARK_GRAFT_CC_HOPS (default 2) parameterizes the hops-per-
-      // round trade: 2 halves the per-round barrier count (right where
-      // scheduling dominates), 1 restores the single-join round (the
-      // A/B control, and the choice if a deployment's rounds are
-      // compute-bound enough that the duplicated hop-1 join costs more
-      // than the saved barrier).
-      val hopped = (1 until ccHopsPerRound).foldLeft(hop(labels)) {
-        case (cur, _) => hop(cur.select(col("doc_id"), col("label")))
-      }
-      val next = graft.Graft.compactCheckpoint(
-        hopped
-          .observe(obs,
-            sum(when(col("improved"), 1L).otherwise(0L)).as("changed"))
-          .select(col("doc_id"), col("label")))
-      converged = obs.getAsJava.getOrDefault("changed", 0L) match {
-        case null => true // empty label table: nothing can ever change
-        case n: java.lang.Long => n == 0L
-        case other => other.toString.toLong == 0L
-      }
-      // the superseded round's blocks are pinned by persistentRdds
-      // (strong map — GC never reclaims them); release eagerly so live
-      // storage is O(current round), not O(rounds) (Graft.releaseState
-      // scaladoc; the final round is the harness's)
-      graft.Graft.releaseCheckpoint(labels)
-      labels = next
-      it += 1
+    val fx = propagateRounds(init, sym)
+    if (fx.converged) return fx.state
+    // logger, not stdout (r15 VERDICT): a 100 TB operator's scale-path
+    // switch must be observable in job telemetry
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"$what: min-label propagation hit $CcMaxIters rounds " +
+      "(component diameter exceeds the bound) — escalating to " +
+      "large-star/small-star contraction (same fixpoint, O(log n) rounds)")
+    // component ids from the star fixpoint (isolated nodes are their
+    // own component), then each component takes its MIN init label —
+    // the propagateMin fixpoint for any init labeling (scaladoc)
+    val (star, _) = starContract(sym)
+    val comp = init.select(col("doc_id"), col("label"))
+      .join(star.withColumnRenamed("u", "doc_id"), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("label"),
+        coalesce(col("v"), col("doc_id")).as("comp"))
+    val cmin = comp.groupBy(col("comp")).agg(min(col("label")).as("clabel"))
+    val out = comp.join(cmin, Seq("comp"))
+      .select(col("doc_id"), col("clabel").as("label"))
+      .localCheckpoint()
+    graft.Graft.releaseCheckpoint(fx.state)
+    graft.Graft.releaseCheckpoint(star)
+    out
+  }
+
+  /** [[propagateMin]]'s rounds: converged, or capped at [[CcMaxIters]]
+    * (the escalation trigger). Convergence is detected ON THE SAME PASS
+    * that materializes the round's labels — an `observe` count of label
+    * decreases inside the eager checkpoint job, one job per round, not
+    * two. Retried tasks can only over-count, and a converged round
+    * counts 0 in every attempt, so the ==0 exit test is retry-safe; an
+    * empty label table counts 0 too (nothing can ever change).
+    *
+    * (r17 measured-and-REJECTED: disabling AQE inside this loop to cut
+    * the per-query-stage job count lost ×0.6–0.9 across the whole CC/
+    * graph family in a floor-gated A/B — AQE's post-shuffle coalescing
+    * carries the tiny-state rounds; the per-stage job latency it adds
+    * is the smaller cost. The loop keeps AQE unconditionally.) */
+  private[graft] def propagateRounds(init: DataFrame, sym: DataFrame): graft.Graft.Fixpoint = {
+    // r16 (guide §4): the hop is pure codegen expressions — a
+    // Dataset.mapPartitions closure forced a deserialize/serialize
+    // round-trip of every label row AND erased the join's hash(doc_id)
+    // output partitioning, so every next round re-shuffled twice
+    def hop(cur: DataFrame): DataFrame = {
+      val nbrMin = cur.join(sym, col("doc_id") === col("src"))
+        .groupBy(col("dst")).agg(min(col("label")).as("nbr"))
+      cur.join(nbrMin, col("doc_id") === col("dst"), "left")
+        .select(col("doc_id"),
+          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
+          (col("nbr") < col("label")).as("improved"))
     }
-    if (!converged) {
-      // logger, not stdout (r15 VERDICT): a 100 TB operator's scale-path
-      // switch must be observable in job telemetry
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$what: min-label propagation hit $CcMaxIters rounds " +
-        "(component diameter exceeds the bound) — escalating to " +
-        "large-star/small-star contraction (same fixpoint, O(log n) rounds)")
-      // component ids from the star fixpoint (isolated nodes are their
-      // own component), then each component takes its MIN init label —
-      // the propagateMin fixpoint for any init labeling (scaladoc)
-      val (star, _) = starContract(sym)
-      val comp = init.select(col("doc_id"), col("label"))
-        .join(star.withColumnRenamed("u", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("label"),
-          coalesce(col("v"), col("doc_id")).as("comp"))
-      val cmin = comp.groupBy(col("comp")).agg(min(col("label")).as("clabel"))
-      val out = comp.join(cmin, Seq("comp"))
-        .select(col("doc_id"), col("clabel").as("label"))
-        .localCheckpoint()
-      graft.Graft.releaseCheckpoint(labels)
-      graft.Graft.releaseCheckpoint(star)
-      return out
+    graft.Graft.iterate(graft.Graft.compactCheckpoint(init), CcMaxIters,
+      Some(graft.Graft.Until(sum(when(col("improved"), 1L).otherwise(0L)),
+        (_, changed) => changed == 0L))) { labels =>
+      // r17 (guide §2: cut JOB count, not task time): TWO hops per
+      // checkpointed round — at sf0.1 the CC family is choreography-
+      // bound (~20 ms driver latency × one job per round), and chain
+      // components need half the rounds. Convergence is exact on the
+      // SECOND hop's change count: zero second-hop improvements means
+      // hop-1's labeling is one-step-stable, and a one-step-stable
+      // labeling IS the unique component-min fixpoint (if some node sat
+      // above its component min, the first rise along a path from the
+      // min-labeled node would improve). The hop-1 subtree is
+      // referenced twice (join left side + hop-2 aggregation); its
+      // exchanges are deduped by ReuseExchange, so the extra cost is
+      // one in-memory re-join, not a re-shuffle.
+      hop(hop(labels).select(col("doc_id"), col("label")))
     }
-    labels
   }
 
   /** (doc_id, cluster_id, cluster_size, is_canonical) from a label
@@ -996,6 +938,23 @@ object Dedup {
     (mh, symmetrize(edges).repartition(col("src")).persist())
   }
 
+  /** Near-duplicate clustering: connected components over the LSH
+    * near-dup pair graph (est_j ≥ [[CcThreshold]]) — the transitive-
+    * closure step a real pipeline runs after candidate generation, so
+    * "A≈B, B≈C" lands A, B, C in one cluster with one canonical id.
+    *
+    * Distributed min-label propagation ([[propagateMin]], Pregel-style,
+    * the same shape as GraphX/GraphFrames CC): every doc starts labeled
+    * with its own id; each round every node takes the min of its label
+    * and its neighbors' labels (two hops of one shuffle join on the
+    * symmetric edge list) until a fixpoint. The fixpoint is unique (min
+    * doc_id per component), so the result is deterministic regardless
+    * of round count or partitioning. Each round checkpoints the label
+    * table: labels are (long, long) pairs — O(docs) state, no lineage
+    * blowup. Rounds are O(component diameter) — tiny for near-dup
+    * graphs; components deeper than the round cap escalate
+    * automatically (r15) to [[starContract]]'s large-star/small-star
+    * rounds (same fixpoint, provably O(log n) rounds). */
   def dedupCc(s: SparkSession, dir: String): DataFrame = {
     val (mh, sym) = ccSymEdges(s, dir)
     val labels = propagateMin(s,
@@ -1181,8 +1140,8 @@ object Dedup {
   /** Alternating large-star/small-star contraction (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) — the
     * O(log n)-round escape hatch for adversarially deep components
-    * where one-hop min-label propagation ([[dedupCc]]) needs
-    * O(diameter) rounds.
+    * where min-label propagation ([[dedupCc]]) needs O(diameter)
+    * rounds.
     *
     *  - large-star(u): every neighbor v > u is re-pointed at
     *    m = min(N(u) ∪ {u})
@@ -1196,50 +1155,38 @@ object Dedup {
     * groupBy-min + join passes over the edge list (no adjacency
     * collection); the round result is localCheckpointed to keep
     * lineage flat. Convergence = (count, Σ xxhash64(u,v)) unchanged
-    * over a full round — ONE aggregation job on the already-
-    * materialized edges instead of two exceptAll shuffles (a false
-    * fixpoint needs a 64-bit multiset-hash collision between
-    * consecutive rounds; StarCcSpec verifies exact fixpoints against
-    * driver union-find).
+    * over a full round — observed inside the round's own checkpoint
+    * job instead of two exceptAll shuffles (a false fixpoint needs a
+    * 64-bit multiset-hash collision between consecutive rounds;
+    * StarCcSpec verifies exact fixpoints against driver union-find).
+    * A loop that hits `maxIters` returns the star only if one more
+    * round leaves its signature unchanged; otherwise it throws
+    * IllegalStateException.
     *
     * Returns (star edges (u, v=component-min), rounds used).
     */
   private[graft] def starContract(edges0: DataFrame, maxIters: Int = 40): (DataFrame, Int) = {
-    // Σ hashes in DECIMAL(38,0): xxhash64 spans the full 64-bit range,
-    // so a LongType sum overflows (ANSI error); decimal sum is exact.
-    // r16: the signature rides an `observe` metric INSIDE the round's
-    // own localCheckpoint job (CollectMetrics) — the separate sig()
-    // aggregation job per round re-scanned the just-checkpointed edges
-    // and was one of the two actions every round paid.
-    def sigObserved(df: DataFrame): (DataFrame, () => (Long, String)) = {
-      val obs = new org.apache.spark.sql.Observation()
-      val observed = df.observe(obs, count(lit(1)).as("cnt"),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("sg"))
-      (observed, () => {
-        val m = obs.getAsJava
-        val cnt = m.get("cnt") match {
-          case null => 0L; case n: java.lang.Long => n.longValue()
-          case other => other.toString.toLong
-        }
-        val sg = m.get("sg") match {
-          case null => "0"
-          case d: java.math.BigDecimal => d.toPlainString
-          case other => other.toString
-        }
-        (cnt, sg)
-      })
-    }
+    // the round signature (count, Σ xxhash64(u, v)). Σ hashes in
+    // DECIMAL(38,0): xxhash64 spans the full 64-bit range, so a LongType
+    // sum overflows (ANSI error); decimal sum is exact. r16: it rides an
+    // `observe` metric INSIDE each round's own checkpoint job — a
+    // separate aggregation job per round re-scanned the just-
+    // checkpointed edges and was one of the two actions every round paid.
+    val sig = struct(count(lit(1)).as("cnt"),
+      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("sg"))
     // canonical undirected edges u > v, self-loops dropped
-    val (e0, sig0) = sigObserved(edges0
+    val (e0, sig0) = graft.Graft.observed(edges0
       .select(greatest(col("src"), col("dst")).as("u"),
               least(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v")).distinct())
-    // one large-star + small-star round over canonical (u>v) edges.
-    // Returns the (lazy) round result plus the persisted large-star
-    // intermediate the caller unpersists after materializing.
-    def roundOf(cur: DataFrame): (DataFrame, DataFrame) = {
-      // large-star over the symmetric adjacency; referenced twice below
-      // (groupBy + join) so persisted for the round, not re-expanded
+      .where(col("u") =!= col("v")).distinct(), sig)
+    val start = graft.Graft.compactCheckpoint(e0)
+    // one large-star + small-star round over canonical (u>v) edges,
+    // lazy. Its large-star intermediate is referenced twice (groupBy +
+    // join), so it is persisted for the round, not re-expanded, and
+    // released when the next round is built (or after the last).
+    var large = Option.empty[DataFrame]
+    def roundOf(cur: DataFrame): DataFrame = {
+      large.foreach(_.unpersist())
       val sym = cur.select(explode(array(
           struct(col("u").as("a"), col("v").as("b")),
           struct(col("v").as("a"), col("u").as("b")))).as("e"))
@@ -1247,65 +1194,38 @@ object Dedup {
       val mins = sym.groupBy(col("a"))
         .agg(min(col("b")).as("mn"))
         .select(col("a"), least(col("mn"), col("a")).as("m"))
-      val large = sym.join(mins, "a")
+      val ls = sym.join(mins, "a")
         .where(col("b") > col("a"))
         .select(col("b").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v")).distinct().persist()
+      large = Some(ls)
       // small-star over edges oriented u > v
-      val smins = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = large.join(smins, "u")
+      val smins = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
+      ls.join(smins, "u")
         .select(explode(array(
           struct(col("v").as("x"), col("m")),
           struct(col("u").as("x"), col("m")))).as("e"))
         .select(greatest(col("e.x"), col("e.m")).as("u"),
                 least(col("e.x"), col("e.m")).as("v"))
         .where(col("u") =!= col("v")).distinct()
-      (small, large)
     }
-    var edges = graft.Graft.compactCheckpoint(e0)
-    var prevSig = sig0()
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val (smallRaw, large) = roundOf(edges)
-      val (smallObs, sigK) = sigObserved(smallRaw)
-      val small = graft.Graft.compactCheckpoint(smallObs)
-      large.unpersist()
-      val s = sigK()
-      converged = s == prevSig
-      prevSig = s
-      graft.Graft.releaseCheckpoint(edges) // superseded round (see propagateMin)
-      edges = small
-      it += 1
-    }
-    if (!converged) {
-      // Deterministic re-check before declaring non-convergence (r17,
-      // ADVICE): the observe signature can over-count under task
-      // retries — unlike propagateMin's ==0 test (where a converged
-      // round counts 0 in every attempt), a retry-inflated (cnt, Σhash)
-      // corrupts prevSig and can manufacture a spurious "did not
-      // converge" on the very path deep components escalate to. One
-      // more round, signed by a RETRY-DETERMINISTIC aggregation over
-      // the two checkpointed edge tables, settles it exactly.
-      def sigOf(df: DataFrame): (Long, String) = {
-        val r = df.agg(count(lit(1)),
-          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-        (r.getLong(0),
-          Option(r.getDecimal(1)).map(_.toPlainString).getOrElse("0"))
-      }
-      val (nextRaw, large) = roundOf(edges)
-      val next = graft.Graft.compactCheckpoint(nextRaw)
-      large.unpersist()
-      if (sigOf(next) == sigOf(edges)) {
-        // true fixpoint — the observed trail was retry-noise
-        graft.Graft.releaseCheckpoint(edges)
-        return (next, it)
-      }
-      graft.Graft.releaseCheckpoint(next)
-      throw new IllegalStateException(
-        s"starContract did not converge in $maxIters rounds")
-    }
-    (edges, it)
+    val fx = graft.Graft.iterate(start, maxIters,
+      Some(graft.Graft.Until(sig, _ == _, sig0())))(roundOf)
+    // Deterministic re-check before declaring non-convergence (r17,
+    // ADVICE): the observed signature can over-count under task retries
+    // — unlike propagateMin's ==0 test (where a converged round counts
+    // 0 in every attempt), a retry-inflated (cnt, Σhash) corrupts the
+    // previous value and can manufacture a spurious "did not converge"
+    // on the very path deep components escalate to. One more round,
+    // signed by a RETRY-DETERMINISTIC aggregation and compared with the
+    // capped edges' own, settles it exactly: equal signatures mean the
+    // capped state already IS the star.
+    def sigOf(df: DataFrame): Any = df.agg(sig).head().get(0)
+    val capped = !fx.converged && sigOf(roundOf(fx.state)) != sigOf(fx.state)
+    large.foreach(_.unpersist())
+    if (capped) throw new IllegalStateException(
+      s"starContract did not converge in $maxIters rounds")
+    (fx.state, fx.rounds)
   }
 
   /** Near-duplicate clustering via [[starContract]] — identical output

@@ -78,11 +78,11 @@ object Graphs {
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val n = nd.count()
 
-    var state = graft.Graft.compactCheckpoint(
+    val init = graft.Graft.compactCheckpoint(
       nd.join(deg, col("doc_id") === col("src"), "left")
         .select(col("doc_id"), coalesce(col("deg"), lit(0L)).as("deg"),
           lit(PrScale).as("mass")))
-    for (_ <- 1 to PrIters) {
+    val state = graft.Graft.iterate(init, PrIters) { state =>
       // dangling mass + flooring remainders, redistributed uniformly
       // (integer div throughout — a double division here would round
       // differently from the oracle's `//` near integer boundaries)
@@ -93,17 +93,12 @@ object Graphs {
         .select(col("doc_id"), expr("mass div deg").as("share"))
         .join(sym, col("doc_id") === col("src"))
         .groupBy(col("dst")).agg(sum(col("share")).as("inc"))
-      val nextState = graft.Graft.compactCheckpoint(
-        state.join(contrib, col("doc_id") === col("dst"), "left")
-          .crossJoin(broadcast(pot))
-          .select(col("doc_id"), col("deg"),
-            (lit(150000L) +
-              expr(s"(85 * (coalesce(inc, 0L) + pot)) div 100").cast("long")).as("mass")))
-      // superseded round: blocks otherwise pinned for the session
-      // (persistentRdds holds strong refs) — release eagerly
-      graft.Graft.releaseCheckpoint(state)
-      state = nextState
-    }
+      state.join(contrib, col("doc_id") === col("dst"), "left")
+        .crossJoin(broadcast(pot))
+        .select(col("doc_id"), col("deg"),
+          (lit(150000L) +
+            expr(s"(85 * (coalesce(inc, 0L) + pot)) div 100").cast("long")).as("mass"))
+    }.state
     state.select(col("doc_id"), col("deg").as("out_deg"),
       col("mass").as("pr_scaled"),
       (col("mass").cast("double") / lit(1e6)).as("pr"))
@@ -255,9 +250,9 @@ object Graphs {
     * composing. */
   private[graft] def labelPropagationPrepared(s: SparkSession, nd: DataFrame,
       sym: DataFrame): DataFrame = {
-    var labels = graft.Graft.compactCheckpoint(
+    val init = graft.Graft.compactCheckpoint(
       nd.select(col("doc_id"), col("doc_id").as("label")))
-    for (_ <- 1 to LpaIters) {
+    val labels = graft.Graft.iterate(init, LpaIters) { labels =>
       val best = labels.join(sym, col("doc_id") === col("src"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
         // argmax by (c desc, label asc): lexicographic struct-min —
@@ -265,13 +260,10 @@ object Graphs {
         .groupBy(col("dst"))
         .agg(min(struct((-col("c")).as("negc"), col("label"))).as("b"))
         .select(col("dst"), col("b.label").as("new_label"))
-      val nextLabels = graft.Graft.compactCheckpoint(
-        labels.join(best, col("doc_id") === col("dst"), "left")
-          .select(col("doc_id"),
-            coalesce(col("new_label"), col("label")).as("label")))
-      graft.Graft.releaseCheckpoint(labels) // superseded round (see PR loop)
-      labels = nextLabels
-    }
+      labels.join(best, col("doc_id") === col("dst"), "left")
+        .select(col("doc_id"),
+          coalesce(col("new_label"), col("label")).as("label"))
+    }.state
     // community sizes via aggregate + join-back (the ccOutput idiom),
     // not a window over community_id: a mega-community would land every
     // member in one window task, and AQE cannot split window partitions
@@ -540,10 +532,11 @@ object Graphs {
     val nd = graft.Graft.compactCheckpoint(nodes.select(col("doc_id")))
     val sym = edges.select(col("src"), col("dst"))
       .repartition(col("src")).localCheckpoint()
-    var state = graft.Graft.compactCheckpoint(
+    // round state = bfsRound's output; the seeds are round 0's improved
+    val init = graft.Graft.compactCheckpoint(
       nd.join(seeds.select(col("doc_id"), lit(true).as("is_seed")),
           Seq("doc_id"), "left")
-        .select(col("doc_id"),
+        .select(col("doc_id"), col("is_seed").isNotNull.as("improved"),
           when(col("is_seed"), lit(0L)).otherwise(lit(BfsInf)).as("dist"),
           when(col("is_seed"), col("doc_id")).otherwise(lit(-1L)).as("seed")))
     // DELTA propagation: only rows whose (dist, seed) CHANGED last
@@ -553,17 +546,12 @@ object Graphs {
     // oracle's exactly, while each round's edge join touches only the
     // frontier's out-edges (full-relax re-shuffles ~O(E) per round on
     // a dense graph once most nodes are reached).
-    var frontier = state.where(col("dist") === 0L)
-    var prevRound = state // the initial checkpoint is superseded by round 1
-    for (_ <- 1 to BfsIters) {
-      val merged = graft.Graft.compactCheckpoint(bfsRound(state, frontier, sym))
-      graft.Graft.releaseCheckpoint(prevRound) // superseded (see PR loop)
-      prevRound = merged
-      state = merged.select(col("doc_id"), col("dist"), col("seed"))
-      frontier = merged.where(col("improved"))
-        .select(col("doc_id"), col("dist"), col("seed"))
-    }
-    (state, frontier, sym)
+    def state(merged: DataFrame) = merged.select(col("doc_id"), col("dist"), col("seed"))
+    def frontier(merged: DataFrame) = state(merged.where(col("improved")))
+    val merged = graft.Graft.iterate(init, BfsIters) { merged =>
+      bfsRound(state(merged), frontier(merged), sym)
+    }.state
+    (state(merged), frontier(merged), sym)
   }
 
   /** Convergence canary for the fixed round cap: the number of rows a
@@ -638,17 +626,11 @@ object Graphs {
         .join(alive.select(col("doc_id").as("src")), Seq("src"))
         .join(alive.select(col("doc_id").as("dst")), Seq("dst"))
         .groupBy(col("src").as("doc_id")).agg(count(lit(1)).as("deg"))
-    var alive = nd
-    for (_ <- 1 to KCoreRounds) {
-      val nextAlive = graft.Graft.compactCheckpoint(
-        aliveDeg(alive)
-          .where(col("deg") >= KCoreK)
-          .select(col("doc_id")))
-      // superseded round — but never nd itself: the output join below
-      // still reads it
-      if (alive ne nd) graft.Graft.releaseCheckpoint(alive)
-      alive = nextAlive
-    }
+    // nd is iterate's initial state, never released: the output
+    // join below still reads it
+    val alive = graft.Graft.iterate(nd, KCoreRounds) { alive =>
+      aliveDeg(alive).where(col("deg") >= KCoreK).select(col("doc_id"))
+    }.state
     val coreDeg = aliveDeg(alive)
     nd.join(alive.withColumn("in_core", lit(1)), Seq("doc_id"), "left")
       .join(coreDeg, Seq("doc_id"), "left")

@@ -486,26 +486,26 @@ object KMeans {
         |  cast(0 as bigint), (acc, v) -> acc + v)""".stripMargin)
     val first = sc.agg(min(col("vec_id"))).head().getLong(0)
     var chosen = Vector((first, 0L))
-    var dmin = graft.Graft.compactCheckpoint(
-      sc.select(col("vec_id"), dist2To(centerOf(first)).as("dmin")))
-    for (_ <- 2 to PpSeeds) {
-      // argmax (dmin, -vec_id): farthest vector, smallest id on ties
-      val pick = dmin.agg(max(struct(col("dmin"), (-col("vec_id")).as("nid"))).as("p"))
+    // argmax (dmin, -vec_id): farthest vector, smallest id on ties
+    def pick(dmin: DataFrame): Long = {
+      val p = dmin.agg(max(struct(col("dmin"), (-col("vec_id")).as("nid"))).as("p"))
         .select(col("p.nid"), col("p.dmin")).head()
-      val (id, d2) = (-pick.getLong(0), pick.getLong(1))
+      val (id, d2) = (-p.getLong(0), p.getLong(1))
       chosen = chosen :+ (id, d2)
-      if (chosen.size < PpSeeds) {
-        val nextDmin = graft.Graft.compactCheckpoint(dmin.join(
-            sc.select(col("vec_id"), dist2To(centerOf(id)).as("d2new")), "vec_id")
-          .select(col("vec_id"), least(col("dmin"), col("d2new")).as("dmin")))
-        graft.Graft.releaseCheckpoint(dmin) // superseded round
-        dmin = nextDmin
-      }
+      id
     }
-    // the result is a driver-side table — nothing below reads sc/dmin,
-    // so release both here rather than leaving them to the harness
-    graft.Graft.releaseCheckpoint(dmin)
-    graft.Graft.releaseCheckpoint(sc)
+    val init = graft.Graft.compactCheckpoint(
+      sc.select(col("vec_id"), dist2To(centerOf(first)).as("dmin")))
+    // every round but the last picks a seed and folds it into dmin
+    val dmin = graft.Graft.iterate(init, PpSeeds - 2) { dmin =>
+      dmin.join(sc.select(col("vec_id"), dist2To(centerOf(pick(dmin))).as("d2new")), "vec_id")
+        .select(col("vec_id"), least(col("dmin"), col("d2new")).as("dmin"))
+    }.state
+    pick(dmin)
+    // the result is a driver-side table — nothing below reads the
+    // checkpoints, so release them here rather than leaving them to the
+    // harness
+    Seq(dmin, init, sc).foreach(graft.Graft.releaseCheckpoint)
     chosen.zipWithIndex
       .map { case ((id, d2), i) => (i + 1, id, d2) }
       .toDF("round", "vec_id", "d2")

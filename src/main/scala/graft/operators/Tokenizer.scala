@@ -233,9 +233,14 @@ object Tokenizer {
 
   /** The merge rounds over any (term, freq) word-frequency frame. */
   private[graft] def bpeOver(wordFreq: DataFrame): DataFrame = {
-    var words = graft.Graft.compactCheckpoint(wordFreq
+    val init = graft.Graft.compactCheckpoint(wordFreq
       .withColumn("seq", concat_ws(" ", split(col("term"), ""))))
-    for (_ <- 1 to BpeMerges) {
+    // plain localCheckpoint per round (r17): the pre-loop
+    // compactCheckpoint already set the round partition count and
+    // withColumn preserves it, so the per-round size lookup + coalesce
+    // was pure overhead (~200 rounds x an AppStatusStore scan; r16
+    // measured the trainer gates x0.78-0.87 under it)
+    val words = graft.Graft.iterate(init, BpeMerges, materialize = _.localCheckpoint()) { words =>
       val best = words
         .select(col("freq"), split(col("seq"), " ").as("l"))
         .where(size(col("l")) >= 2)
@@ -246,28 +251,19 @@ object Tokenizer {
         .groupBy(col("a"), col("b")).agg(sum(col("freq")).as("wsum"))
         .orderBy(col("wsum").desc, col("a"), col("b"))
         .limit(1).collect()
-      if (best.nonEmpty) {
+      if (best.isEmpty) words // no pair left: the round changes nothing
+      else {
         val a = best(0).getString(0)
         val b = best(0).getString(1)
         // symbols are normalized-letter runs; anything else means the
         // seed column drifted — fail loudly before interpolating
         require(a.matches("[\\p{L}]+") && b.matches("[\\p{L}]+"),
           s"non-letter BPE symbol: '$a' '$b'")
-        // plain localCheckpoint (r17): the pre-loop compactCheckpoint
-        // already set the round partition count and withColumn preserves
-        // it, so the per-round size lookup + coalesce was pure overhead
-        // (~200 rounds x an AppStatusStore scan; r16 measured the trainer
-        // gates x0.78-0.87 under it)
-        val nextWords = words.withColumn("seq",
-            expr(s"trim(regexp_replace(replace(' ' || replace(seq, ' ', '  ') || ' '," +
-              s" ' $a  $b ', ' $a$b '), ' +', ' '))")).localCheckpoint()
-        // superseded round: persistentRdds pins checkpoint blocks
-        // strongly, so without this every merge round's word table
-        // stays cached for the session (the r12 leak-sweep discovery)
-        graft.Graft.releaseCheckpoint(words)
-        words = nextWords
+        words.withColumn("seq",
+          expr(s"trim(regexp_replace(replace(' ' || replace(seq, ' ', '  ') || ' '," +
+            s" ' $a  $b ', ' $a$b '), ' +', ' '))"))
       }
-    }
+    }.state
     words.select(col("term"), col("freq"), col("seq"),
       size(split(col("seq"), " ")).cast("long").as("n_sym"))
   }

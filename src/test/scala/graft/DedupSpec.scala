@@ -428,11 +428,10 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("dedup_cc convergence canary holds at both fixture SFs") {
-    // propagateMin THROWS if the min-label fixpoint is not reached
-    // within the round cap, so simply running the gate at each SF is
-    // the canary: a deeper near-dup graph at a new scale fails the
-    // suite loudly instead of shipping labels short of the transitive
-    // closure (the mm_phash_cc diameter lesson)
+    // past the round cap propagateMin escalates to star contraction
+    // (r15; same labels), so this run alone cannot show a capped loop —
+    // it checks the gate completes at each SF (StarCcSpec pins the
+    // escalation itself)
     for (sf <- Seq("sf0.001", "sf0.01"))
       assert(Dedup.dedupCc(spark, s"/root/testdata/$sf").count() > 0,
         s"$sf: dedup_cc must produce labels")
@@ -520,8 +519,9 @@ class DedupSpec extends AnyFunSuite {
     Seq("dedup_allpairs", "dedup_allpairs_incr", "dedup_recall_eval",
         "dedup_containment", "dedup_containment_incr",
         "stream_icp", "stream_pack",
-        "stream_pack_bpe", "dedup_cc", "graph_pagerank", "vocab_bpe",
-        "pipeline_ppl")
+        "stream_pack_bpe", "dedup_cc", "dedup_cc_star", "stream_cc",
+        "graph_pagerank", "graph_communities", "graph_bfs", "graph_kcore",
+        "vocab_bpe", "pipeline_ppl")
       .foreach { n =>
         SparkEntry.queries(n)(spark, sf).count()
         assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,

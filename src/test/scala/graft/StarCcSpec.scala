@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
 /** Adversarial-topology tests for the large-star/small-star connected
-  * components variant: a 1000-node path is the worst case for one-hop
-  * min-label propagation (diameter 999 ⇒ 999 rounds) and the exact
-  * case star contraction exists for — it must converge in O(log n)
+  * components variant: a 1000-node path is the worst case for
+  * min-label propagation (diameter 999 ⇒ 500 two-hop rounds) and the
+  * exact case star contraction exists for — it must converge in O(log n)
   * rounds to the same unique fixpoint (min node id per component).
   */
 class StarCcSpec extends AnyFunSuite {
@@ -25,6 +25,26 @@ class StarCcSpec extends AnyFunSuite {
     // fixpoint = star: every non-min node points straight at node 0
     assert(labels.size == n - 1)
     assert(labels.values.forall(_ == 0L), "all nodes must label to the component min")
+  }
+
+  test("a cap one round short of the signature-stable round still returns the star") {
+    // the observed loop stops one round before it could SEE the fixpoint
+    // (signatures of rounds R-1 and R equal); the deterministic re-check
+    // must confirm the capped state is already the star, not throw
+    val n = 1000
+    val edges = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))
+      .toDF("src", "dst")
+    val (_, stable) = Dedup.starContract(edges)
+    val (star, rounds) = Dedup.starContract(edges, maxIters = stable - 1)
+    assert(rounds == stable - 1)
+    val labels = star.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels.size == n - 1 && labels.values.forall(_ == 0L),
+      "the re-checked capped state must be the star onto node 0")
+  }
+
+  test("a cap far too small throws instead of returning a partial contraction") {
+    val edges = (0 until 999).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
+    intercept[IllegalStateException](Dedup.starContract(edges, maxIters = 2))
   }
 
   test("multiple components + isolated nodes keep distinct minima") {
@@ -68,10 +88,11 @@ class StarCcSpec extends AnyFunSuite {
   }
 
   test("propagateMin escalates past the round cap to star contraction, preserving min-INIT-label semantics") {
-    // A 40-hop path exceeds CcMaxIters = 20 one-hop rounds, forcing the
-    // r15 escalation (the mixed/boilerplate 100× legs proved deep
-    // chains are the NORMAL topology of a boilerplate corpus — three
-    // gates died of the old throw). The fallback must reproduce
+    // A 40-hop path needs all 40 hops of CcMaxIters = 20 two-hop
+    // rounds: hop 40 still lowers node 0's label in round 20, so the
+    // loop is capped, forcing the r15 escalation (the mixed/
+    // boilerplate 100× legs proved deep chains are the NORMAL topology
+    // of a boilerplate corpus — three gates died of the old throw). The fallback must reproduce
     // propagateMin's fixpoint for an ARBITRARY init labeling — per
     // node, the minimum INIT LABEL over its component (not the
     // component-min node id): init label = 1000 − doc_id makes the
@@ -84,6 +105,13 @@ class StarCcSpec extends AnyFunSuite {
       .persist()
     val init = ((0 until n).map(_.toLong) :+ 99L)
       .map(id => (id, 1000L - id)).toDF("doc_id", "label")
+    val rounds = Dedup.propagateRounds(init, sym)
+    assert(!rounds.converged && rounds.rounds == Dedup.CcMaxIters,
+      "the 40-hop chain must hit the round cap, or escalation never runs")
+    // one hop shorter settles on round 20's second hop: no escalation
+    val shorter = Dedup.propagateRounds(init.where($"doc_id" < n - 1),
+      sym.where($"src" < n - 1 && $"dst" < n - 1))
+    assert(shorter.converged && shorter.rounds == Dedup.CcMaxIters)
     val out = Dedup.propagateMin(spark, init, sym, "escalation-spec")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     sym.unpersist()
