@@ -818,47 +818,88 @@ object Dedup {
         struct(col("db").as("src"), col("da").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
-  /** Min-label propagation to fixpoint over a PERSISTED symmetric edge
-    * list, starting from `init` (doc_id, label): [[propagateRounds]],
-    * then the escalation below if they hit the cap. Returns the
-    * localCheckpointed fixpoint.
+  /** Largest symmetric edge list [[propagateMin]] solves on the driver
+    * instead of in checkpointed rounds: 2^18 = 262,144 edges. The local
+    * solve holds, per edge, one collected (src, dst) row (~80 B: row,
+    * value array, two boxed longs) and up to two endpoint label rows
+    * (~160 B), then primitive arrays (~60 B) — about 300 B per edge,
+    * ~80 MB at the bound. Spark's default 1 GiB driver leaves ~290 MiB
+    * of user memory outside the unified execution/storage region
+    * ((1024 − 300) × 0.4), so the bound keeps the solve under a third
+    * of it; a larger driver heap only adds headroom. Near-dup graphs
+    * per micro-batch sit orders of magnitude below it. */
+  private[graft] val LocalCcMaxEdges = 1 << 18
+
+  /** Min-label propagation to fixpoint over a PERSISTED symmetric
+    * (src, dst) edge list, starting from `init` (doc_id, label), all
+    * longs: per node of `init`, the MIN init label over its component.
+    * Returns the checkpointed fixpoint. `init` is materialized once
+    * ([[graft.Graft.compactCheckpoint]]); then a size switch on the edge
+    * count the code observes picks one of three paths:
     *
-    * NON-CONVERGENCE ESCALATION (r15): past [[CcMaxIters]] rounds the
-    * kernel switches to [[starContract]] (O(log n) rounds) instead of
-    * throwing. The r14-era throw assumed deep components are
-    * adversarial; the r15 mixed/boilerplate 100× legs proved they are
-    * the NORMAL near-dup topology of a boilerplate-bearing corpus
-    * (shared header/footer shingles raise short-doc pairwise Jaccard,
-    * and the banding surfaces a sparse chain-heavy edge subset — three
-    * gates died of the throw at the mixed tier). The fixpoints are
-    * interchangeable: propagation yields, per node, the MIN init label
-    * over its component; the star graph names each component, and one
-    * groupBy-min + join-back reproduces exactly that — for ANY init
-    * labeling, not only identity. Fixture-scale runs converge in <20
-    * rounds, so gate plans, hashes, and fps never see this path.
+    *  - LOCAL: one bounded collect reads at most `localMaxEdges + 1`
+    *    `sym` rows. When the graph fits, [[solveLocal]] runs a union-find
+    *    on the driver and broadcast-joins the moved labels back onto
+    *    `init` — a handful of jobs instead of the rounds' ~10 per round.
+    *  - PROPAGATED: a larger graph runs [[propagateRounds]] to
+    *    convergence.
+    *  - ESCALATED (r15): rounds that hit [[CcMaxIters]] switch to
+    *    [[starContract]] (O(log n) rounds) instead of throwing. The
+    *    r15 mixed/boilerplate 100× legs proved deep components are the
+    *    NORMAL near-dup topology of a boilerplate-bearing corpus
+    *    (shared header/footer shingles raise short-doc pairwise Jaccard,
+    *    and the banding surfaces a sparse chain-heavy edge subset).
+    *    The star graph names each component, and one groupBy-min +
+    *    join-back reproduces the propagation fixpoint — for ANY init
+    *    labeling, not only identity.
+    *
+    * The three fixpoints are the same by construction, so gate outputs
+    * and oracle hashes never depend on the path; one INFO line per call
+    * names the path, the edge count and the rounds run. `localMaxEdges`
+    * is for tests only: a negative value skips the collect and forces
+    * the distributed rounds.
     *
     * PRECONDITION (r16, ADVICE): every `sym` edge endpoint must appear
-    * in `init`'s doc_id set. Propagation cannot move labels through a
-    * node `init` never labeled, but the escalation's [[starContract]]
-    * merges components THROUGH such bridge nodes — the two fixpoints
-    * disagree exactly when the precondition is violated. Every current
-    * caller passes init covering all endpoints (node sets are built by
-    * unioning the edge endpoints or the full doc table). */
+    * in `init`'s doc_id set. Propagation (and the local solve, which
+    * drops every edge with an unlabeled endpoint) cannot move labels
+    * through a node `init` never labeled, but the escalation's
+    * [[starContract]] merges components THROUGH such bridge nodes — the
+    * fixpoints disagree exactly when the precondition is violated.
+    * Every current caller passes init covering all endpoints (node sets
+    * are built by unioning the edge endpoints or the full doc table). */
   private[graft] def propagateMin(s: SparkSession, init: DataFrame, sym: DataFrame,
-      what: String): DataFrame = {
-    val fx = propagateRounds(init, sym)
-    if (fx.converged) return fx.state
+      what: String, localMaxEdges: Int = LocalCcMaxEdges): DataFrame = {
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    val start = graft.Graft.compactCheckpoint(init)
+    if (localMaxEdges >= 0) {
+      // coalesce(1): one task reads sym's partitions in order and stops
+      // at the bound, where a bare limit's take runs a job per batch of
+      // partitions it tries
+      val rows = sym.select(col("src"), col("dst"))
+        .coalesce(1).limit(localMaxEdges + 1).collect()
+      if (rows.length <= localMaxEdges) {
+        log.info(s"$what: connected components path=local edges=${rows.length} rounds=0")
+        return solveLocal(start, rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+      }
+    }
+    val edgeCount = if (localMaxEdges < 0) "uncounted" else s">$localMaxEdges"
+    val fx = propagateRounds(start, sym)
+    if (fx.converged) {
+      log.info(s"$what: connected components path=propagated edges=$edgeCount rounds=${fx.rounds}")
+      graft.Graft.releaseCheckpoint(start)
+      return fx.state
+    }
     // logger, not stdout (r15 VERDICT): a 100 TB operator's scale-path
     // switch must be observable in job telemetry
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+    log.warn(
       s"$what: min-label propagation hit $CcMaxIters rounds " +
       "(component diameter exceeds the bound) — escalating to " +
       "large-star/small-star contraction (same fixpoint, O(log n) rounds)")
     // component ids from the star fixpoint (isolated nodes are their
     // own component), then each component takes its MIN init label —
     // the propagateMin fixpoint for any init labeling (scaladoc)
-    val (star, _) = starContract(sym)
-    val comp = init.select(col("doc_id"), col("label"))
+    val (star, starRounds) = starContract(sym)
+    val comp = start.select(col("doc_id"), col("label"))
       .join(star.withColumnRenamed("u", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), col("label"),
         coalesce(col("v"), col("doc_id")).as("comp"))
@@ -866,14 +907,76 @@ object Dedup {
     val out = comp.join(cmin, Seq("comp"))
       .select(col("doc_id"), col("clabel").as("label"))
       .localCheckpoint()
+    log.info(s"$what: connected components path=escalated edges=$edgeCount " +
+      s"rounds=${fx.rounds + starRounds}")
+    graft.Graft.releaseCheckpoint(start)
     graft.Graft.releaseCheckpoint(fx.state)
     graft.Graft.releaseCheckpoint(star)
     out
   }
 
-  /** [[propagateMin]]'s rounds: converged, or capped at [[CcMaxIters]]
-    * (the escalation trigger). Convergence is detected ON THE SAME PASS
-    * that materializes the round's labels — an `observe` count of label
+  /** [[propagateMin]]'s driver-side solve over the collected edges
+    * (`src(i)`, `dst(i)`) and the materialized `start` (doc_id, label)
+    * longs, one row per doc_id. Only the edges' endpoints are looked up
+    * (one broadcast-join collect); `start` itself is never collected —
+    * for [[dedupCc]] it is the full document table. An endpoint `start`
+    * does not label blocks its edges, exactly as a propagation hop never
+    * moves a label through it. A union-find over dense endpoint indices
+    * gives each touched node its component's min label; the labels that
+    * moved broadcast-join back onto `start`, and the result is
+    * compact-checkpointed (`start` itself when no label moves). */
+  private def solveLocal(start: DataFrame, src: Array[Long],
+      dst: Array[Long]): DataFrame = {
+    val s = start.sparkSession
+    import s.implicits._
+    // dense index per distinct endpoint: sorted, deduplicated ids
+    val all = src ++ dst
+    java.util.Arrays.sort(all)
+    val ids = all.indices.iterator
+      .filter(i => i == 0 || all(i) != all(i - 1)).map(all(_)).toArray
+    def idx(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    val n = ids.length
+    val label = new Array[Long](n)
+    val labeled = new Array[Boolean](n)
+    start.join(broadcast(ids.toSeq.toDF("doc_id")), "doc_id")
+      .select(col("doc_id"), col("label")).collect().foreach { r =>
+        val i = idx(r.getLong(0))
+        label(i) = r.getLong(1)
+        labeled(i) = true
+      }
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (e <- src.indices) {
+      val (a, b) = (idx(src(e)), idx(dst(e)))
+      if (labeled(a) && labeled(b)) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ra) = rb
+      }
+    }
+    val root = Array.tabulate(n)(find)
+    val cmin = Array.fill(n)(Long.MaxValue)
+    for (i <- 0 until n if labeled(i))
+      cmin(root(i)) = math.min(cmin(root(i)), label(i))
+    val moved = (0 until n).collect {
+      case i if labeled(i) && cmin(root(i)) < label(i) => (ids(i), cmin(root(i)))
+    }
+    if (moved.isEmpty) return start
+    // an unmoved row finds no match and keeps its own label
+    val out = graft.Graft.compactCheckpoint(
+      start.join(broadcast(moved.toDF("doc_id", "clabel")), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("clabel"), col("label")).as("label")))
+    graft.Graft.releaseCheckpoint(start)
+    out
+  }
+
+  /** [[propagateMin]]'s distributed rounds from `init` (materialized by
+    * the caller): converged, or capped at [[CcMaxIters]] (the escalation
+    * trigger). Convergence is detected ON THE SAME PASS that
+    * materializes the round's labels — an `observe` count of label
     * decreases inside the eager checkpoint job, one job per round, not
     * two. Retried tasks can only over-count, and a converged round
     * counts 0 in every attempt, so the ==0 exit test is retry-safe; an
@@ -897,7 +1000,7 @@ object Dedup {
           least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
           (col("nbr") < col("label")).as("improved"))
     }
-    graft.Graft.iterate(graft.Graft.compactCheckpoint(init), CcMaxIters,
+    graft.Graft.iterate(init, CcMaxIters,
       Some(graft.Graft.Until(sum(when(col("improved"), 1L).otherwise(0L)),
         (_, changed) => changed == 0L))) { labels =>
       // r17 (guide §2: cut JOB count, not task time): TWO hops per
@@ -943,18 +1046,17 @@ object Dedup {
     * closure step a real pipeline runs after candidate generation, so
     * "A≈B, B≈C" lands A, B, C in one cluster with one canonical id.
     *
-    * Distributed min-label propagation ([[propagateMin]], Pregel-style,
-    * the same shape as GraphX/GraphFrames CC): every doc starts labeled
-    * with its own id; each round every node takes the min of its label
-    * and its neighbors' labels (two hops of one shuffle join on the
-    * symmetric edge list) until a fixpoint. The fixpoint is unique (min
-    * doc_id per component), so the result is deterministic regardless
-    * of round count or partitioning. Each round checkpoints the label
-    * table: labels are (long, long) pairs — O(docs) state, no lineage
-    * blowup. Rounds are O(component diameter) — tiny for near-dup
-    * graphs; components deeper than the round cap escalate
-    * automatically (r15) to [[starContract]]'s large-star/small-star
-    * rounds (same fixpoint, provably O(log n) rounds). */
+    * Components come from [[propagateMin]]: every doc starts labeled
+    * with its own id and ends with the min doc_id of its component.
+    * The fixpoint is unique, so the result does not depend on which
+    * path computes it. An edge list of at most [[LocalCcMaxEdges]]
+    * edges (every fixture scale) is collected once and solved by a
+    * driver union-find; a larger one runs distributed min-label
+    * propagation (Pregel-style, the shape of GraphX/GraphFrames CC: two
+    * hops of one shuffle join per checkpointed round, O(docs) label
+    * state), and components deeper than the round cap escalate (r15)
+    * to [[starContract]]'s large-star/small-star rounds (provably
+    * O(log n) rounds). */
   def dedupCc(s: SparkSession, dir: String): DataFrame = {
     val (mh, sym) = ccSymEdges(s, dir)
     val labels = propagateMin(s,
@@ -1051,7 +1153,7 @@ object Dedup {
     * exactly [[crossEst]]). Instead of re-running CC over the corpus,
     * every snapshot endpoint is CONTRACTED to its prior component
     * canonical: the reduced graph has one node per batch doc + one per
-    * TOUCHED prior component, so the propagation works over
+    * TOUCHED prior component, so the component solve works over
     * O(batch + touched components) — never the 100 TB snapshot. Prior
     * components are connected by construction, so contraction preserves
     * connectivity, and canonicals are component minima, so the reduced
@@ -1095,7 +1197,9 @@ object Dedup {
   /** The genuine steady-state entry: `batch` docs, the snapshot's
     * STORED signature table, and the STORED prior labels. Runs only the
     * delta stages — batch signatures, batch-internal + cross probes,
-    * contraction, reduced propagation, relabel. */
+    * contraction, components of the reduced graph ([[propagateMin]]:
+    * a driver union-find while the reduced edge list fits
+    * [[LocalCcMaxEdges]], distributed rounds above it), relabel. */
   def dedupCcVs(s: SparkSession, batch: DataFrame, sigS: DataFrame,
       prior: DataFrame): DataFrame =
     dedupCcVs(s, batch, sigS, prior, None)
@@ -2029,10 +2133,11 @@ object Dedup {
     * that, and it is what lets these components genuinely span cells.
     * Candidate volume stays ≤ N·nprobe·[[Similarity.IvfMaxCell]];
     * edges are the candidate pairs whose EXACT integer dot clears
-    * [[SemDedupTauScaled]]; components come from the same min-label
-    * propagation kernel as the text CC family ([[propagateMin]] — one
-    * shuffle join per round, same-pass accumulator convergence,
-    * localCheckpointed O(N) label state). Output matches the CC family:
+    * [[SemDedupTauScaled]]; components come from the same
+    * components kernel as the text CC family ([[propagateMin]] — a
+    * driver union-find while the edge list fits [[LocalCcMaxEdges]],
+    * checkpointed shuffle-join rounds above it, O(N) label state).
+    * Output matches the CC family:
     * every vector exactly once as (vec_id, cluster_id, cluster_size,
     * is_canonical). */
   def dedupSemanticCc(s: SparkSession, dir: String): DataFrame = {

@@ -32,7 +32,7 @@ import graft.Tables
   *   3. VERIFY: `levenshtein` ≤ [[ErMaxDist]] per distinct-name pair —
   *      a codegen'd built-in, evaluated once per name pair no matter
   *      how many records carry the names.
-  *   4. CLUSTER: min-label propagation over representative keys (the
+  *   4. CLUSTER: connected components over representative keys (the
   *      shared [[Dedup.propagateMin]] kernel); labels broadcast back
   *      to records through the name table. Records with identical
   *      names are one entity EVEN in dropped blocks (they share a
@@ -141,15 +141,20 @@ object EntityResolution {
     s"""WITH $pairsCtesSql
        |SELECT name_a, name_b, dist, n_a, n_b FROM pairs""".stripMargin
 
+  /** The match graph [[erEntities]] clusters: (distinct-name table, the
+    * symmetric rep-key edge list hash-positioned on `src` and PERSISTED
+    * — the caller unpersists it). */
+  private[graft] def erSymEdges(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (distinctNames(s, dir), Dedup.symmetrize(
+        pairsWithReps(s, dir).select(col("rep_a").as("da"), col("rep_b").as("db")))
+      .repartition(col("src")).persist())
+
   /** Transitive entity clusters broadcast back to records: every part
     * keyed to the min part key of its match component; singletons keep
     * themselves. Sizes via aggregate + join-back (no window over
     * entity_id — a mega-entity would serialize into one window task). */
   def erEntities(s: SparkSession, dir: String): DataFrame = {
-    val dn = distinctNames(s, dir)
-    val sym = Dedup.symmetrize(
-        pairsWithReps(s, dir).select(col("rep_a").as("da"), col("rep_b").as("db")))
-      .repartition(col("src")).persist()
+    val (dn, sym) = erSymEdges(s, dir)
     val labels = Dedup.propagateMin(s,
       dn.select(col("rep").as("doc_id"), col("rep").as("label")),
       sym, "erEntities")

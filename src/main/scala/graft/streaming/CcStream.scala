@@ -7,8 +7,8 @@ import graft.operators.Dedup
 /** Streaming maintenance of the near-dup CLUSTER state — the daily
   * ingest loop of `dedup_cc_incr` run continuously: per micro-batch,
   * batch signatures probe the STORED band index, snapshot endpoints
-  * contract to their stored component canonicals, a reduced
-  * (batch + touched components)-sized propagation relabels, and both
+  * contract to their stored component canonicals, the components of
+  * the reduced (batch + touched components)-sized graph relabel, and both
   * state tables (the signature index and the labels) advance one
   * version. The delta stages are [[Dedup.dedupCcVs]] VERBATIM — the
   * sink adds only the state plumbing, so the streamed fold and the
@@ -31,9 +31,12 @@ import graft.operators.Dedup
   * per doc ever seen) — bucketed on doc_id and bucket-localized at
   * 100 TB, the ZMaintain composition; the labels table likewise. The
   * per-batch COMPUTE, though, is batch-bounded: batch signatures +
-  * band probes + a reduced propagation over batch docs and touched
-  * components only ([[Dedup.dedupCcVs]]'s scaladoc carries the
-  * argument).
+  * band probes + the components of a reduced graph over batch docs and
+  * touched components only ([[Dedup.dedupCcVs]]'s scaladoc carries the
+  * argument). That reduced graph is what makes the per-batch solve
+  * cheap: while its edge list fits [[Dedup.LocalCcMaxEdges]],
+  * [[Dedup.propagateMin]] collects it once and solves it on the driver
+  * instead of running checkpointed propagation rounds.
   *
   * THE FOLD IDENTITY (what the gate pins): contraction preserves
   * connectivity and canonicals are component minima, so ANY batching

@@ -428,13 +428,20 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("dedup_cc convergence canary holds at both fixture SFs") {
-    // past the round cap propagateMin escalates to star contraction
-    // (r15; same labels), so this run alone cannot show a capped loop —
-    // it checks the gate completes at each SF (StarCcSpec pins the
-    // escalation itself)
-    for (sf <- Seq("sf0.001", "sf0.01"))
-      assert(Dedup.dedupCc(spark, s"/root/testdata/$sf").count() > 0,
-        s"$sf: dedup_cc must produce labels")
+    // dedupCc solves fixture-scale graphs on the driver, and a capped
+    // loop would escalate to star contraction with the same labels, so
+    // the gate itself cannot show a capped loop: run the distributed
+    // rounds on its own graph and require them to converge
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val d = s"/root/testdata/$sf"
+      val (mh, sym) = Dedup.ccSymEdges(spark, d)
+      val fx = Dedup.propagateRounds(
+        Tables.documents(spark, d).select(col("doc_id"), col("doc_id").as("label")), sym)
+      sym.unpersist()
+      mh.unpersist()
+      assert(fx.converged, s"$sf: dedup_cc's rounds must converge within " +
+        s"${Dedup.CcMaxIters} rounds (ran ${fx.rounds})")
+    }
   }
 
   test("dedupMinhashVsSig over a stored (parquet round-tripped) signature table equals the in-process path") {

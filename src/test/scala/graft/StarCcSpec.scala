@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{Dedup, EntityResolution}
 
 /** Adversarial-topology tests for the large-star/small-star connected
   * components variant: a 1000-node path is the worst case for
@@ -14,6 +15,20 @@ class StarCcSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
   import spark.implicits._
+
+  /** [[Dedup.propagateMin]]'s (doc_id, label) rows on both paths: the
+    * forced distributed rounds, then the driver union-find — which the
+    * default call takes, since `sym` fits [[Dedup.LocalCcMaxEdges]]. */
+  private def bothPaths(init: DataFrame, sym: DataFrame,
+      what: String): (Set[(Long, Long)], Set[(Long, Long)]) = {
+    assert(sym.count() <= Dedup.LocalCcMaxEdges, s"$what must fit the local path")
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val dist = Dedup.propagateMin(spark, init, sym, s"$what/distributed", localMaxEdges = -1)
+    val local = Dedup.propagateMin(spark, init, sym, s"$what/local")
+    assert(local.schema.map(f => f.name -> f.dataType) ==
+      dist.schema.map(f => f.name -> f.dataType))
+    (rows(dist), rows(local))
+  }
 
   test("1000-node path converges in O(log n) rounds to the component min") {
     val n = 1000
@@ -112,9 +127,12 @@ class StarCcSpec extends AnyFunSuite {
     val shorter = Dedup.propagateRounds(init.where($"doc_id" < n - 1),
       sym.where($"src" < n - 1 && $"dst" < n - 1))
     assert(shorter.converged && shorter.rounds == Dedup.CcMaxIters)
-    val out = Dedup.propagateMin(spark, init, sym, "escalation-spec")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // forced onto the rounds: the 40-edge chain would otherwise be
+    // solved on the driver and never escalate
+    val (dist, local) = bothPaths(init, sym, "escalation-spec")
     sym.unpersist()
+    assert(local == dist, "the driver solve must give the escalation's labels")
+    val out = dist.toMap
     assert((0 until n).forall(i => out(i.toLong) == 1000L - (n - 1)),
       s"every chain node must take the component's min init label: $out")
     assert(out(99L) == 1000L - 99L, "isolated node keeps its own init label")
@@ -133,10 +151,46 @@ class StarCcSpec extends AnyFunSuite {
     val sym = Dedup.symmetrize(
       Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("da", "db")).persist()
     val init = (0L to 3L).map(id => (id, 10L + (3L - id))).toDF("doc_id", "label")
-    val out = Dedup.propagateMin(spark, init, sym, "two-hop-odd-spec")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (dist, local) = bothPaths(init, sym, "two-hop-odd-spec")
     sym.unpersist()
+    assert(local == dist, "the driver solve must give the rounds' labels")
+    val out = dist.toMap
     assert((0L to 3L).forall(out(_) == 10L),
       s"all chain nodes must carry the component-min init label 10: $out")
+  }
+
+  test("local and distributed propagateMin agree on dedup_cc's graph at both fixture SFs") {
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val dir = s"/root/testdata/$sf"
+      val (mh, sym) = Dedup.ccSymEdges(spark, dir)
+      val init = Tables.documents(spark, dir).select($"doc_id", $"doc_id".as("label"))
+      val (dist, local) = bothPaths(init, sym, s"dedup_cc-$sf")
+      sym.unpersist()
+      mh.unpersist()
+      assert(dist.exists { case (d, l) => d != l }, s"$sf: the graph must merge something")
+      assert(local == dist, s"$sf: ${(local -- dist).take(3)} vs ${(dist -- local).take(3)}")
+    }
+  }
+
+  test("local and distributed propagateMin agree on er_entities' match graph") {
+    val (dn, sym) = EntityResolution.erSymEdges(spark, "/root/testdata/sf0.01")
+    val (dist, local) = bothPaths(dn.select($"rep".as("doc_id"), $"rep".as("label")),
+      sym, "er_entities")
+    sym.unpersist()
+    assert(dist.exists { case (d, l) => d != l }, "the match graph must merge something")
+    assert(local == dist, s"${(local -- dist).take(3)} vs ${(dist -- local).take(3)}")
+  }
+
+  test("an endpoint init never labeled blocks the merge on both paths") {
+    // 1–2–3 bridges through node 2, which init does not label: no label
+    // moves through it, so 1 keeps 10 instead of taking 3's label, and
+    // 2 stays out of the output; 4–5 merges normally
+    val sym = Dedup.symmetrize(
+      Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("da", "db")).persist()
+    val init = Seq((1L, 10L), (3L, 3L), (4L, 4L), (5L, 5L)).toDF("doc_id", "label")
+    val (dist, local) = bothPaths(init, sym, "bridge-spec")
+    sym.unpersist()
+    assert(dist.toMap == Map(1L -> 10L, 3L -> 3L, 4L -> 4L, 5L -> 4L))
+    assert(local == dist)
   }
 }
