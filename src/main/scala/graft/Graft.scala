@@ -283,27 +283,38 @@ object Graft {
     g
   }
 
-  /** Self-contained local session at the engine's standard operating
-    * point (AQE on, 32 shuffle partitions, UTC, ns-parquet handling).
-    * If a SparkSession already exists in this JVM, getOrCreate returns
-    * IT and the builder configs (master/cpus included) are ignored — so
-    * the session-level settings the engine depends on are re-applied
-    * explicitly below, and they take effect either way; only the
-    * master/cpus request is best-effort on a pre-existing session. */
+  /** [[session]] wrapped as a [[Graft]] over `dataDir`. */
   def local(dataDir: String = "/root/testdata/sf0.001",
-      cpus: Int = Runtime.getRuntime.availableProcessors()): Graft = {
-    val spark = SparkSession.builder()
+      cpus: Int = Runtime.getRuntime.availableProcessors()): Graft =
+    apply(session(cpus), dataDir)
+
+  /** The one session builder: a local session at the engine's standard
+    * operating point (AQE on, `partitions` shuffle partitions, UTC,
+    * ns-parquet handling). If a SparkSession already exists in this
+    * JVM, getOrCreate returns IT and the builder configs (master/cpus
+    * included) are ignored — so the session-level settings the engine
+    * depends on are re-applied explicitly below, and they take effect
+    * either way; only the master/cpus request is best-effort on a
+    * pre-existing session. Bucketed-table gates (q38) saveAsTable into
+    * the warehouse, so it is pinned under java.io.tmpdir unless the JVM
+    * was given `-Dspark.sql.warehouse.dir`: no run depends on the
+    * working directory being writable. */
+  def session(cpus: Int, partitions: Int = 32): SparkSession = {
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    if (!sys.props.contains("spark.sql.warehouse.dir"))
+      builder.config("spark.sql.warehouse.dir",
+        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
+    val spark = builder.getOrCreate()
     // runtime-settable session confs: applied even when getOrCreate
     // returned someone else's session
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("WARN")
-    apply(spark, dataDir)
+    spark
   }
 }

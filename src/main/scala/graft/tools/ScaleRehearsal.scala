@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkEntry
+import graft.{Graft, SparkEntry}
+import java.nio.file.Files
 
 /** 10× scale rehearsal: replicates the sf0.1 fixtures with shifted keys
   * into a scratch directory (≈6M lineitem rows, 50k docs/vectors, 1M
@@ -14,9 +15,8 @@ import graft.SparkEntry
   * (SPARK_GRAFT_REHEARSAL_ONLY=a,b,c restricts the operator list —
   * the 100× pass times a focused subset, not all ~50.)
   *
-  * SPARK_GRAFT_REHEARSAL_MODE selects the fixture extreme (r14 — the
-  * r13 registry-complete sweep proved the replica fixture measures only
-  * ONE end of each family's cost curve):
+  * SPARK_GRAFT_REHEARSAL_MODE selects the fixture extreme (the replica
+  * fixture alone measures only ONE end of each family's cost curve):
   *   - `replica` (default): every copy keeps its TEXT and dim content
   *     verbatim, keys shifted. Duplication-heavy extreme — the
   *     exact-duplicate contraction makes the dedup families nearly free
@@ -66,18 +66,14 @@ import graft.SparkEntry
 object ScaleRehearsal {
   /** Fixture layout identity. Bump whenever replicate()'s output
     * changes shape so pre-existing fixture dirs REBUILD instead of
-    * silently reproducing a fixed defect: the r13 dim repair never
-    * invalidated dirs built by the pre-fix code (r14 ADVICE) — any
-    * stale dir still carried the 100×-replicated dims and reproduced
-    * the exact q6/q7 join inflation the fix closed. v3 = r14 (marker
-    * introduced; replica layout unchanged from r13). v4 = r14 distinct
-    * salt redesign (per-word tag, df-distribution-preserving). */
+    * silently reproducing a fixed defect (a stale dir once kept the
+    * 100×-replicated dims and their q6/q7 join inflation). v4 = the
+    * per-word, df-distribution-preserving distinct salt. */
   private val FixtureVersion = 4
 
   /** Per-copy doc_id/vec_id shift. ONE constant for the replicate()
-    * shifts map AND mixedText's pmod recovery of the original id (r16,
-    * ADVICE: the literal was duplicated, so changing one site would
-    * silently drift the mixed mode's 10% replica-group partition).
+    * shifts map AND mixedText's pmod recovery of the original id, so
+    * the mixed mode's 10% replica-group partition cannot drift.
     * 10_010_400 = 97·3·34400 — preserves doc_id residues mod the
     * two-table stand-in moduli (BenchMod=97, IncomingMod=3). */
   private val DocStride = 10010400L
@@ -91,53 +87,32 @@ object ScaleRehearsal {
     val src = "/root/testdata/sf0.1"
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val copies = if (args.length > 1) args(1).toInt else 10
-    // r17: honor SPARK_GRAFT_CPUS like Bench so the 100× legs can
-    // record an 8-vs-32-core scaling comparison (the sf0.1 bench is
-    // choreography-bound — every c8/c32 ratio ≈1 — so parallel-scaling
-    // evidence must come from these legs)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table gates (q38) saveAsTable into the warehouse; pin
-      // it to tmp so the full-registry sweep never depends on CWD
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-rehearsal-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_CPUS: parallel-scaling evidence (8 vs 32 cores) must
+    // come from these legs — the sf0.1 bench is choreography-bound
+    val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val mode = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_MODE", "replica")
     require(Set("replica", "distinct", "dimscale", "boilerplate", "mixed")(mode),
       s"unknown SPARK_GRAFT_REHEARSAL_MODE '$mode' " +
         "(replica|distinct|dimscale|boilerplate|mixed)")
 
-    // ---- fixture-version marker (r14, ADVICE): the fixture's identity
-    // is (layout version, mode, copies, source). A dir whose marker
-    // mismatches — including every pre-marker dir — is wiped and
-    // rebuilt; mere existence is never trusted again.
+    // ---- fixture-version marker: the fixture's identity is (layout
+    // version, mode, copies, source). A dir whose marker mismatches —
+    // including every pre-marker dir — is wiped and rebuilt; mere
+    // existence is never trusted again.
     val markerFile = new java.io.File(s"$out/_fixture_meta.txt")
     val markerWant = s"v$FixtureVersion mode=$mode copies=$copies src=$src"
     val markerHave =
-      if (!markerFile.isFile) ""
-      else {
-        val sc = scala.io.Source.fromFile(markerFile)
-        try sc.mkString.trim finally sc.close()
-      }
+      if (markerFile.isFile) Files.readString(markerFile.toPath).trim else ""
     if (markerHave != markerWant && new java.io.File(out).exists()) {
-      // DESTRUCTION GUARD (r15, ADVICE): a marker mismatch triggers a
-      // recursive delete, and every pre-existing NON-fixture directory
-      // also has no marker — so before the r15 guard, a typo'd args(0)
-      // (e.g. /root/testdata itself) was silently destroyed before
-      // anything was read. Only a dir that demonstrably IS a rehearsal
-      // fixture may be wiped: it carries a marker file (any version),
-      // or it holds the full replicated table set AND nothing else
-      // (a fresh scratch dir from a pre-marker build). Anything else
-      // aborts loudly and leaves the dir untouched.
+      // DESTRUCTION GUARD: a marker mismatch triggers a recursive
+      // delete, and every NON-fixture directory (a typo'd args(0), e.g.
+      // the source fixture root itself) has no marker either. Only a dir that
+      // demonstrably IS a rehearsal fixture may be wiped: it carries a
+      // marker file (any version), or it holds the full replicated
+      // table set AND nothing else (a fresh scratch dir from a
+      // pre-marker build). Anything else aborts loudly and leaves the
+      // dir untouched.
       val tableSet = Set("region", "nation", "supplier", "part", "customer",
         "orders", "lineitem", "events", "documents", "embeddings")
         .map(_ + ".parquet")
@@ -145,11 +120,8 @@ object ScaleRehearsal {
         .map(_.toSet).getOrElse(Set.empty[String])
       // an EMPTY existing DIRECTORY is the safe case (nothing to lose)
       // and must be wipeable — the empty set is a subset of the table
-      // set, so no nonEmpty clause (r16, ADVICE: the old guard aborted
-      // on empty dirs while telling the user to point at one). But
-      // File.list() is null for a regular FILE too (r17, ADVICE): a
-      // typo'd path to an existing file must abort, not be deleted, so
-      // the empty-set case is only accepted for a real directory.
+      // set. But File.list() is null for a regular FILE too, and a
+      // typo'd path to an existing file must abort, not be deleted.
       val looksLikeFixture = markerFile.isFile ||
         (new java.io.File(out).isDirectory &&
           entries.subsetOf(tableSet + "_fixture_meta.txt"))
@@ -189,14 +161,12 @@ object ScaleRehearsal {
     // word sequence, the per-doc shingle count, and every shingle's
     // document frequency are EXACTLY the unsalted corpus's (the map
     // w → w·tag is a bijection on words applied uniformly). That
-    // df-distribution preservation is the point: the first r14 salt
-    // (a token INSERTED after every 2nd word) gave boundary shingles
-    // BIGRAM-level dfs, inflating PPJoin prefix candidates ~10× over
-    // any realistic trigram-df corpus and turning the leg into a
-    // worst-case-df benchmark instead of a distinct-cardinality one
-    // (stage-probed 2026-08-16: 3,065 task-seconds of verify CPU at
-    // 30 copies, all candidate-volume). Near-dup structure per copy is
-    // untouched, so the lossless answer scales linearly with copies.
+    // df-distribution preservation is the point: a salt that inserts
+    // tokens gives boundary shingles BIGRAM-level dfs, inflating PPJoin
+    // prefix candidates ~10× and turning the leg into a worst-case-df
+    // benchmark instead of a distinct-cardinality one. Near-dup
+    // structure per copy is untouched, so the lossless answer scales
+    // linearly with copies.
     def saltText(df: DataFrame, i: Int): DataFrame =
       df.withColumn("text",
         regexp_replace(col("text"), "(\\p{L}+)", "$1" + copyTag(i)))
@@ -261,17 +231,9 @@ object ScaleRehearsal {
             "l_suppkey" -> 1000000L), copies)
       } else {
         // dims stay as-is: ONE copy, shared content — the facts keep
-        // their dim foreign keys unshifted, so dim keys must stay unique.
-        // r13 FIXTURE FIX: the old form pushed dims through the same
-        // `copies`-way union with no key shift, i.e. every dim row
-        // duplicated `copies` times — silently multiplying every
-        // fact→dim join's output by the copy count per dim hop (measured
-        // at 100×: l⋈o⋈supplier = 1.84e9 rows instead of 18.4M, q6's
-        // whole chain ~10¹¹ logical rows / 16,600 task-seconds for 5
-        // output rows). Every pre-r13 10×/100× number for a dim-joining
-        // gate measured that inflated workload — conservative direction
-        // (the engine looked worse, never better), adjudicated in
-        // SCALE.md r13d.
+        // their dim foreign keys unshifted, so dim keys must stay unique:
+        // dims duplicated `copies` times would multiply every fact→dim
+        // join's output by the copy count per dim hop (SCALE.md r13d).
         Seq("region", "nation", "supplier", "part")
           .foreach(t => replicate(t, Map.empty, 1))
         replicate("customer", Map("c_custkey" -> 10000000L), copies)
@@ -297,16 +259,13 @@ object ScaleRehearsal {
       replicate("embeddings", Map("vec_id" -> DocStride), copies)
       // marker written only after every table landed: a crashed build
       // leaves no marker and rebuilds clean on the next run
-      val w = new java.io.PrintWriter(markerFile, "UTF-8")
-      try w.println(markerWant) finally w.close()
+      Files.writeString(markerFile.toPath, markerWant + "\n")
     }
 
-    // r12: the rehearsal covers the FULL registry by default — the two
-    // r11 canaries (corpus_icp's silent 30-doc permutation loss,
-    // dedup_allpairs' 11.6x wall) were both caught only because their
-    // operators happened to be in the curated list, so coverage IS the
-    // canary surface. SPARK_GRAFT_REHEARSAL_ONLY=a,b,c still restricts
-    // for focused probes.
+    // the FULL registry by default: coverage IS the canary surface
+    // (corpus_icp's silent permutation loss and dedup_allpairs' 11.6x
+    // wall were caught only because their operators were listed).
+    // SPARK_GRAFT_REHEARSAL_ONLY=a,b,c still restricts for focused probes.
     val allNames = SparkEntry.queries.keys.toSeq.sorted
     val names = sys.env.get("SPARK_GRAFT_REHEARSAL_ONLY") match {
       case Some(list) => list.split(",").toSeq
@@ -318,53 +277,35 @@ object ScaleRehearsal {
     // long before the driver notices. peakExecutionMemory is the
     // max unroll+execution memory any one task held; spills are the
     // pressure-release signal that memory WOULD have been exceeded.
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0)
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-          spilled.addAndGet(m.memoryBytesSpilled)
-          maxTaskMs.getAndUpdate(p => math.max(p, m.executorRunTime))
-        }
-      }
-    })
+    val listener = RunListener.of(spark)
     names.foreach { n => // warmup pass then timed pass
       try {
         SparkEntry.queries(n)(spark, out).count()
-        // release the WARMUP pass's shuffle files before the timed pass
-        // (r14): shuffle files live until ContextCleaner GCs their
-        // dependency objects, so a shuffle-heavy gate's warmup+timed
-        // passes otherwise hold ~2× its scratch footprint concurrently
-        // — at the 100× distinct tier that doubling is the difference
-        // between fitting local disk and ENOSPC. releaseState drops the
-        // cache handles, System.gc() lets the cleaner collect the
-        // warmup plan's shuffles; the timed pass still measures a warm
-        // JVM (codegen/classloading), which is all warmup exists for.
-        graft.Graft.releaseState(spark)
+        // release the WARMUP pass's shuffle files before the timed pass:
+        // they live until ContextCleaner GCs their dependency objects,
+        // and holding ~2× a shuffle-heavy gate's scratch footprint is
+        // ENOSPC at the 100× distinct tier. releaseState drops the cache
+        // handles, System.gc() lets the cleaner collect the warmup
+        // plan's shuffles; the timed pass still runs in a warm JVM.
+        Graft.releaseState(spark)
         System.gc()
-        // drain the async listener bus BEFORE resetting: a warmup task's
-        // trailing onTaskEnd landing after the reset would bleed warmup
-        // memory/spill into the recorded timed-pass numbers (spilled is
-        // additive, so the bleed inflates, never hides)
-        Thread.sleep(300)
-        peakMem.set(0); spilled.set(0); maxTaskMs.set(0)
+        // reset drains the listener bus first, so no warmup task end
+        // lands after it and inflates the timed pass's numbers
+        listener.reset()
         val t0 = System.nanoTime()
         val rows = SparkEntry.queries(n)(spark, out).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener bus drains async; 300 ms covers it
+        val t = listener.totals
         println(f"[rehearsal] $n%-26s $wall%7.1f s  ($rows rows)  " +
-          f"peak-task-mem=${peakMem.get / (1 << 20)}%d MB  " +
-          f"spilled=${spilled.get / (1 << 20)}%d MB  max-task=${maxTaskMs.get}%d ms")
+          f"peak-task-mem=${t.peakMem / (1 << 20)}%d MB  " +
+          f"spilled=${t.memSpill / (1 << 20)}%d MB  max-task=${t.maxTaskMs}%d ms")
       } catch { case e: Throwable =>
         // a full-registry sweep must not die on one gate: record the
         // failure as its own line (a 10x-only failure IS a canary —
         // exactly what the sweep exists to surface) and keep going
         println(s"[rehearsal] $n FAILED: ${e.getClass.getSimpleName} ${e.getMessage}")
       } finally {
-        graft.Graft.releaseState(spark) // caches + checkpointed state
+        Graft.releaseState(spark) // caches + checkpointed state
       }
     }
     spark.stop()

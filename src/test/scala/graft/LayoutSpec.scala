@@ -1,0 +1,37 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Layout rules for `src/main/scala` code (comment lines skipped): one
+  * session builder and one scheduler listener, so hand-built sessions
+  * and ad-hoc listeners cannot come back one tool at a time. */
+class LayoutSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** `file:line` of every code line under [[root]] that contains `needle`. */
+  private def codeMentions(needle: String): Seq[String] = {
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    files.flatMap { f: Path =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) &&
+            !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
+          s"${root.relativize(f)}:${i + 1}"
+      }
+    }
+  }
+
+  test("SparkSession.builder appears once, in Graft.session") {
+    val hits = codeMentions("SparkSession.builder")
+    assert(hits.size == 1 && hits.head.startsWith("graft/Graft.scala:"), hits)
+  }
+
+  test("addSparkListener appears once, in the run listener") {
+    val hits = codeMentions("addSparkListener")
+    assert(hits.size == 1 && hits.head.startsWith("graft/tools/RunListener.scala:"), hits)
+  }
+}
