@@ -202,6 +202,26 @@ object Graft {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
 
+  /** `df` cut into `parts` contiguous ranges of its Long column `key` —
+    * the batches every fold gate feeds through its maintenance step.
+    * The cuts are `lo + i * (hi - lo) / parts` (multiplied before
+    * divided); range 0 holds the keys up to the first cut, the last
+    * range the keys above the last cut, each middle one (cut i, cut
+    * i+1]. An empty `df` has no range: IllegalArgumentException naming
+    * `key`. */
+  private[graft] def rangeSplit(df: DataFrame, key: String, parts: Int): Seq[DataFrame] = {
+    require(parts >= 2, s"rangeSplit needs at least 2 parts, got $parts")
+    val r = df.agg(functions.min(key), functions.max(key)).collect()(0)
+    require(!r.isNullAt(0), s"cannot range-split an empty input on `$key`")
+    val (lo, hi, k) = (r.getLong(0), r.getLong(1), functions.col(key))
+    val cut = (1 until parts).map(i => lo + i * (hi - lo) / parts)
+    (0 until parts).map {
+      case 0 => df.where(k <= cut.head)
+      case i if i == parts - 1 => df.where(k > cut.last)
+      case i => df.where(k > cut(i - 1) && k <= cut(i))
+    }
+  }
+
   /** `df` with `metric` (an aggregate over its rows) observed inside
     * whichever job first runs it, plus a reader of the value for after
     * that job. The value decodes as Spark returns it (a Long for an

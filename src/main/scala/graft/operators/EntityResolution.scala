@@ -221,11 +221,9 @@ object EntityResolution {
     * the batch-sized stages.) */
   def erIncr(s: SparkSession, dir: String): DataFrame = {
     val all = names(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      all.agg(min(col("k")), max(col("k"))).collect()
-    val mid = lo + (hi - lo) / 2
+    val Seq(older, newer) = graft.Graft.rangeSplit(all, "k", 2)
     // ---- stand-in for yesterday's stored state
-    val dnS = dnOf(all.where(col("k") <= mid)).persist()
+    val dnS = dnOf(older).persist()
     val keepS = dnS.groupBy(col("blk")).agg(count(lit(1)).as("df"))
       .where(col("df") <= ErMaxBlock).select(col("blk"))
     val keptS = dnS.join(keepS, Seq("blk"), "left_semi")
@@ -239,7 +237,7 @@ object EntityResolution {
       symS, "erIncr/prior")
     symS.unpersist()
     // ---- steady-state stages (batch-bounded): updated name → entity state
-    val state = erEntitiesVs(s, all.where(col("k") > mid), dnS, prior)
+    val state = erEntitiesVs(s, newer, dnS, prior)
     // ---- write-back: records relabeled through the name column (a
     // real pipeline materializes this lazily as a view over the stored
     // record table; it is a label join, not a re-match)
@@ -348,12 +346,10 @@ object EntityResolution {
     * preconditions as [[erIncr]]. */
   def streamEr(s: SparkSession, dir: String): DataFrame = {
     val all = names(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      all.agg(min(col("k")), max(col("k"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val s1 = erEntitiesVs(s, all.where(col("k") <= mid),
+    val Seq(older, newer) = graft.Graft.rangeSplit(all, "k", 2)
+    val s1 = erEntitiesVs(s, older,
       dnOfState(emptyState(s)), priorOfState(emptyState(s)))
-    val s2 = erEntitiesVs(s, all.where(col("k") > mid),
+    val s2 = erEntitiesVs(s, newer,
       dnOfState(s1), priorOfState(s1))
     recordsUnder(all, s2)
   }

@@ -131,12 +131,10 @@ object Skyline {
   def skylineIncr(s: SparkSession, dir: String): DataFrame = {
     val part = Tables.part(s, dir)
       .select(col("p_partkey"), col("p_size"), col("p_retailprice"))
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      part.agg(min(col("p_partkey")), max(col("p_partkey"))).collect()
-    val mid = lo + (hi - lo) / 2
+    val Seq(older, newer) = graft.Graft.rangeSplit(part, "p_partkey", 2)
     // stored state = yesterday's frontier; batch folds through the merge
-    val stored = skylineOver(part.where(col("p_partkey") <= mid))
-    val batchF = skylineOver(part.where(col("p_partkey") > mid))
+    val stored = skylineOver(older)
+    val batchF = skylineOver(newer)
     val sky = skylineOver(stored.unionByName(batchF))
       .select(col("key").as("p_partkey"), col("size").as("p_size"),
         col("price").as("p_retailprice"))

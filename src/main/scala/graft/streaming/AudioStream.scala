@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.{AlawCodec, FlacCodec, Media, UlawCodec, WavCodec}
@@ -29,12 +29,9 @@ import graft.multimodal.{AlawCodec, FlacCodec, Media, UlawCodec, WavCodec}
   * leading sample is injective in the class (31 and 37 are units mod
   * 16384/127/128), so PCM-digest equality ⇔ same (domain, class).
   *
-  * State layout under `tableDir` (the [[WebStream]] shape): `key/` —
-  * canonical-PCM md5 → MIN owning doc_id, key-hash-bucketed, folded
-  * through [[graft.sources.ZMaintain.mergeBucketed]] (per-batch I/O =
-  * touched-bucket bytes; MIN is idempotent → replay-safe).
-  * `out/batch=<id>/` — admitted rows; a replayed batch rewrites its
-  * own dir identically.
+  * State under `tableDir` is [[MinKeeper]]'s on the column `key`
+  * (canonical-PCM md5 → MIN owning doc_id), the [[ImageStream]] sink
+  * body verbatim.
   *
   * Scale shape: decode is per-row narrow work, zero shuffle; the only
   * shuffled stages are the |distinct keys|-sized fold and the
@@ -42,13 +39,10 @@ import graft.multimodal.{AlawCodec, FlacCodec, Media, UlawCodec, WavCodec}
   */
 object AudioStream {
 
-  val NBuckets = 64
-
   /** Content classes — the [[ImageStream.NClasses]] sizing argument. */
   val NClasses = 97
 
-  private[graft] def keyBucket: Column =
-    pmod(hash(col("key")), lit(NBuckets)).cast("long")
+  private[graft] val keys = new MinKeeper("key")
 
   /** The lossless pair's shared signal: first sample odd by
     * construction (see the domain-disjointness contract above). */
@@ -104,51 +98,14 @@ object AudioStream {
     }.toDF("doc_id", "fmt", "n_samples", "key", "sum_pcm")
   }
 
-  /** Batch-local key state: canonical-PCM key → min owning doc_id. */
-  private[graft] def keyOf(rows: DataFrame): DataFrame =
-    rows.groupBy(col("key")).agg(min(col("doc_id")).as("keeper"))
-
-  /** Keyed state merge — pointwise MIN, idempotent. */
-  private[graft] def mergeKey(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("key"), col("keeper").as("ka"))
-      .join(b.select(col("key"), col("keeper").as("kb")), Seq("key"), "full_outer")
-      .select(col("key"),
-        least(coalesce(col("ka"), col("kb")), coalesce(col("kb"), col("ka")))
-          .as("keeper"))
-
-  /** Admission under a (folded) key state: rows whose canonical-PCM
-    * keeper is their own doc_id. Batch-keyed join, never corpus-keyed. */
-  private[graft] def admittedUnder(rows: DataFrame, state: DataFrame): DataFrame =
-    rows.join(state, Seq("key"))
-      .where(col("doc_id") === col("keeper"))
-      .select(col("doc_id"), col("fmt"), col("n_samples"), col("key"),
-        col("sum_pcm"))
-
-  /** foreachBatch sink: decode the batch once (persisted — the codec
-    * pass feeds the fold AND the admission), fold key state, admit
-    * against the folded state, overwrite this batch's own out dir. */
-  def audioSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val rows = audioRowsOf(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.sources.ZMaintain.mergeBucketed(s, s"$tableDir/key",
-        keyOf(rows), keyBucket, mergeKey, sortWithin = Some("key"))
-      val state = s.read.parquet(s"$tableDir/key")
-        .select(col("key"), col("keeper"))
-      admittedUnder(rows, state)
-        .write.mode("overwrite").parquet(s"$tableDir/out/batch=$batchId")
-    } finally rows.unpersist()
-  }
+  /** foreachBatch sink: decode the batch once, fold its key state,
+    * admit against the folded state (the [[MinKeeper]] body). */
+  def audioSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit =
+    keys.sink(audioRowsOf(batch), tableDir, batchId)
 
   /** The maintained deduped clip set: every admitted batch. */
-  def storedAudio(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/out"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
-      s"no admitted audio rows under $dir")
-    s.read.parquet(dir).drop("batch")
-  }
+  def storedAudio(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.readAppended(s, tableDir, "admitted audio rows")
 
   /** Gate: two crawl-ordered batches through the decode → fold →
     * admit chain; must equal the one-shot min-keeper-per-content-group
@@ -157,15 +114,11 @@ object AudioStream {
     * The md5 key stays JVM-side; the analytic group identity carries
     * the same information. */
   def streamAudio(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id"))
-    val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    require(!r.isNullAt(0), s"empty documents table under $dir")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val mid = lo + (hi - lo) / 2
-    val (b1, b2) = (docs.where(col("doc_id") <= mid), docs.where(col("doc_id") > mid))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(
+      Tables.documents(s, dir).select(col("doc_id")), "doc_id", 2)
     val (rows1, rows2) = (audioRowsOf(b1), audioRowsOf(b2))
-    val folded = mergeKey(keyOf(rows1), keyOf(rows2))
-    admittedUnder(rows1.unionByName(rows2), folded).drop("key")
+    val folded = keys.merge(keys.stateOf(rows1), keys.stateOf(rows2))
+    keys.admittedUnder(rows1.unionByName(rows2), folded).drop("key")
   }
 
   /** Analytic twin: content groups from the class formulas — WAV and

@@ -20,12 +20,11 @@ import graft.operators.Dedup
   * from-scratch CC of the batch (the `stream_er` discipline).
   *
   * Two tables, one commit point: `sig` writes BEFORE `labels`, and
-  * readers pin the newest version committed in BOTH (see
-  * [[storedVersion]]) — a crash between the writes leaves a sig
-  * version without its labels twin, which no reader and no successor
-  * batch ever pairs up. Replay re-reads the same predecessors
-  * (strictly below the batch id) and rewrites both tables
-  * byte-identically — the [[SnapshotStream]] exactly-once argument.
+  * readers and successor batches pin the newest version committed in
+  * BOTH (see [[committedVersions]]) — a crash between the writes
+  * leaves a sig version without its labels twin, which is never
+  * paired up. Otherwise each table follows [[SnapshotStream]]'s
+  * versioned rule.
   *
   * Scale honesty: the signature index is CORPUS-SIZED state (one row
   * per doc ever seen) — bucketed on doc_id and bucket-localized at
@@ -63,24 +62,20 @@ object CcStream {
     SnapshotStream.versionsIn(s, s"$tableDir/labels").filter(sig)
   }
 
-  /** Newest version committed in BOTH state tables (the reader pair). */
-  private[graft] def storedVersion(s: SparkSession, tableDir: String): Option[Long] =
-    committedVersions(s, tableDir).lastOption
+  /** The (sig, labels) pair of committed version `v`. */
+  private def stateAt(s: SparkSession, tableDir: String, v: Long): (DataFrame, DataFrame) =
+    (SnapshotStream.readVersion(s, s"$tableDir/sig", v),
+      SnapshotStream.readVersion(s, s"$tableDir/labels", v))
 
   /** foreachBatch sink: fold `batch` (documents-shaped) into the
-    * stored (sig, labels) state and write `v=<batchId>` of both. The
-    * merge target is the newest committed pair STRICTLY BELOW the
-    * batch id (filter the list, then take the last — a replayed
-    * batch's own half-state is newest and must be skipped, not make
-    * the lookup come up empty and silently re-bootstrap). */
+    * stored (sig, labels) state and write version `batchId` of both.
+    * The merge target is the newest committed PAIR strictly below the
+    * batch id — [[SnapshotStream.predecessor]]'s rule over
+    * [[committedVersions]]. */
   def ccSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val prev = committedVersions(s, tableDir).filter(_ < batchId).lastOption
-    val (sigS, prior) = prev match {
-      case Some(v) => (s.read.parquet(s"$tableDir/sig/v=$v"),
-        s.read.parquet(s"$tableDir/labels/v=$v"))
-      case None => emptyState(batch)
-    }
+    val (sigS, prior) = committedVersions(s, tableDir).filter(_ < batchId).lastOption
+      .fold(emptyState(batch))(stateAt(s, tableDir, _))
     // ONE materialized signature pass feeds both the fold and the
     // state write (recomputing it per consumer doubled the batch cost)
     val sigB = Dedup.minhashSignaturesOf(s, batch)
@@ -88,16 +83,15 @@ object CcStream {
     val out = Dedup.dedupCcVs(s, batch, sigS, prior, Some(sigB))
     val labels = out.select(col("doc_id"), col("cluster_id").as("label"))
       .localCheckpoint() // sever before the writes below re-trigger the fold
-    sigS.unionByName(sigB).write.mode("overwrite")
-      .parquet(s"$tableDir/sig/v=$batchId")
-    labels.write.mode("overwrite").parquet(s"$tableDir/labels/v=$batchId")
+    SnapshotStream.commit(sigS.unionByName(sigB), s"$tableDir/sig", batchId)
+    SnapshotStream.commit(labels, s"$tableDir/labels", batchId)
   }
 
   /** The maintained labels (newest version committed in both tables). */
   def storedLabels(s: SparkSession, tableDir: String): DataFrame = {
-    val v = storedVersion(s, tableDir)
+    val v = committedVersions(s, tableDir).lastOption
     require(v.nonEmpty, s"no committed (sig, labels) pair under $tableDir")
-    s.read.parquet(s"$tableDir/labels/v=${v.get}")
+    SnapshotStream.readVersion(s, s"$tableDir/labels", v.get)
   }
 
   /** Gate: the three-range-batch fold as its batch composition —
@@ -106,13 +100,8 @@ object CcStream {
     * `dedup_cc`'s SQL — the maintenance identity through a real
     * intermediate state. */
   def streamCc(s: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.documents(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val b1 = docs.where(col("doc_id") <= t1)
-    val b2 = docs.where(col("doc_id") > t1 && col("doc_id") <= t2)
-    val b3 = docs.where(col("doc_id") > t2)
+    val Seq(b1, b2, b3) =
+      graft.Graft.rangeSplit(graft.Tables.documents(s, dir), "doc_id", 3)
     val (sig0, lab0) = emptyState(b1)
     def step(batch: DataFrame, sigS: DataFrame, prior: DataFrame) = {
       // ONE materialized signature pass per batch, shared by the fold

@@ -25,10 +25,8 @@ import graft.operators.KMeans
   *
   * State is O(KmC × dim) longs regardless of corpus size — the
   * mergeable-sketch discipline ([[SketchStream]]) applied to vector
-  * state. Versioned-directory sink (`v=<batchId>`, `_SUCCESS`-gated,
-  * merge target = latest version strictly below the batch id) makes
-  * an at-least-once feed exactly-once: a replayed batch re-reads the
-  * same predecessor and rewrites its version byte-identically.
+  * state. [[SnapshotStream]]'s versioned rule makes an at-least-once
+  * feed exactly-once.
   */
 object CentroidStream {
 
@@ -55,20 +53,16 @@ object CentroidStream {
     val s = batch.sparkSession
     val dir = s"$tableDir/cells"
     val local = KMeans.cellStateOf(batch, KMeans.frozenSeeds(s, seedDir))
-    val merged = SnapshotStream.versionsIn(s, dir).filter(_ < batchId).lastOption
-      .map(v => mergeState(s.read.parquet(s"$dir/v=$v"), local))
-      .getOrElse(local)
-    merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/v=$batchId")
+    val merged = SnapshotStream.predecessor(s, dir, batchId)
+      .fold(local)(mergeState(_, local))
+    SnapshotStream.commit(merged.coalesce(1), dir, batchId)
   }
 
   /** The maintained centroid table (latest committed version). */
   def storedCentroids(s: SparkSession, tableDir: String,
       seedDir: String): DataFrame = {
-    val dir = s"$tableDir/cells"
-    val vs = SnapshotStream.versionsIn(s, dir)
-    require(vs.nonEmpty, s"no cell-state versions under $dir")
-    centroidsOf(s, KMeans.frozenSeeds(s, seedDir),
-      s.read.parquet(s"$dir/v=${vs.last}"))
+    val state = SnapshotStream.latest(s, s"$tableDir/cells", "cell-state")
+    centroidsOf(s, KMeans.frozenSeeds(s, seedDir), state)
   }
 
   /** Gate: two-range-batch fold of the embedding corpus through the
@@ -76,13 +70,9 @@ object CentroidStream {
     * (the fold identity). */
   def streamKmeans(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      emb.agg(min(col("vec_id")), max(col("vec_id"))).collect()
-    val mid = lo + (hi - lo) / 2
+    val Seq(e1, e2) = graft.Graft.rangeSplit(emb, "vec_id", 2)
     val cents = KMeans.frozenSeeds(s, dir)
-    val st = mergeState(
-      KMeans.cellStateOf(emb.where(col("vec_id") <= mid), cents),
-      KMeans.cellStateOf(emb.where(col("vec_id") > mid), cents))
+    val st = mergeState(KMeans.cellStateOf(e1, cents), KMeans.cellStateOf(e2, cents))
     centroidsOf(s, cents, st)
   }
 

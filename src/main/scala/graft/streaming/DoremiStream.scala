@@ -15,13 +15,10 @@ import graft.operators.CorpusOps
   * snapshot.
   *
   * The count fold is a SUM — associative, NOT idempotent — so the
-  * state rides the versioned `v=<batchId>` predecessor rule
-  * ([[PackStream]]'s discipline verbatim): a replayed batch re-reads
-  * the newest committed version STRICTLY BELOW its own id, recomputes
-  * the same merge, rewrites the same version — counts never
-  * double-fold. State size is the model itself: |bigram types| rows,
-  * vocabulary-bounded (the [[CorpusOps.taLmKn]] scale argument), the
-  * LM cousin of the sketch-state streams.
+  * state rides [[SnapshotStream]]'s versioned rule: counts never
+  * double-fold on a replay. State size is the model itself: |bigram
+  * types| rows, vocabulary-bounded (the [[CorpusOps.taLmKn]] scale
+  * argument), the LM cousin of the sketch-state streams.
   *
   * THE FOLD IDENTITY (what the gate pins): bigram counts over
   * disjoint batches SUM to the corpus counts EXACTLY (integer
@@ -50,25 +47,18 @@ object DoremiStream {
         (coalesce(col("ca"), lit(0L)) + coalesce(col("cb"), lit(0L))).as("c_bi"))
 
   /** foreachBatch sink: fold this batch's counts over the predecessor
-    * version (strictly below this batch id — the replay rule). */
+    * version. */
   def doremiSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val prev = SnapshotStream.versionsIn(s, s"$tableDir/model")
-      .filter(_ < batchId).lastOption
-      .map(v => s.read.parquet(s"$tableDir/model/v=$v"))
-    val merged = prev match {
-      case Some(st) => mergeModel(st, modelOf(batch))
-      case None     => modelOf(batch)
-    }
-    merged.write.mode("overwrite").parquet(s"$tableDir/model/v=$batchId")
+    val dir = s"$tableDir/model"
+    val local = modelOf(batch)
+    SnapshotStream.commit(SnapshotStream.predecessor(s, dir, batchId)
+      .fold(local)(mergeModel(_, local)), dir, batchId)
   }
 
   /** The maintained model: newest committed version. */
-  def storedModel(s: SparkSession, tableDir: String): DataFrame = {
-    val vs = SnapshotStream.versionsIn(s, s"$tableDir/model")
-    require(vs.nonEmpty, s"no model versions under $tableDir/model")
-    s.read.parquet(s"$tableDir/model/v=${vs.last}")
-  }
+  def storedModel(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.latest(s, s"$tableDir/model", "model")
 
   /** Read-time mixture weights: score `docs` under a folded model and
     * run the [[CorpusOps.mixDoremiOver]] trajectory. */
@@ -89,13 +79,8 @@ object DoremiStream {
     * the fold identity). */
   def streamDoremi(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    require(!r.isNullAt(0), s"empty documents table under $dir")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val mid = lo + (hi - lo) / 2
-    val folded = mergeModel(
-      modelOf(docs.where(col("doc_id") <= mid)),
-      modelOf(docs.where(col("doc_id") > mid)))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(docs, "doc_id", 2)
+    val folded = mergeModel(modelOf(b1), modelOf(b2))
     weightsUnder(s, docs, folded)
   }
 }

@@ -9,12 +9,9 @@ import graft.operators.EntityResolution
   * steady-state step ([[EntityResolution.erEntitiesVs]]: batch-new
   * names verified, snapshot endpoints contracted to prior entities,
   * delta propagation) into standing name-state (name, rep, cnt,
-  * entity label) under [[SnapshotStream]]'s versioned
-  * `_SUCCESS`-gated discipline. Bootstrap-from-empty is the same code
-  * path (an empty predecessor degenerates the step to a from-scratch
-  * build over the batch), and an at-least-once replayed batch
-  * re-reads the same predecessor and rewrites its version
-  * byte-identically — exactly-once state maintenance.
+  * entity label) under [[SnapshotStream]]'s versioned rule.
+  * Bootstrap-from-empty is the same code path (an empty predecessor
+  * degenerates the step to a from-scratch build over the batch).
   *
   * Preconditions inherited from the batch twin (documented at
   * [[EntityResolution.erIncr]]): append-only keys, block cap not
@@ -29,8 +26,7 @@ object ErStream {
   def erSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     val dir = s"$tableDir/er"
-    val prev = SnapshotStream.versionsIn(s, dir).filter(_ < batchId).lastOption
-      .map(v => s.read.parquet(s"$dir/v=$v"))
+    val prev = SnapshotStream.predecessor(s, dir, batchId)
       .getOrElse(EntityResolution.emptyState(s))
     val next = EntityResolution.erEntitiesVs(s,
       EntityResolution.namesOfParts(batch),
@@ -41,14 +37,10 @@ object ErStream {
     // out: hash-partitioned by name across the shuffle width, never a
     // coalesce(1) funnel through one task. The sketch sinks' single
     // file is fine (|keys|-bounded state); this one is not.
-    next.repartition(col("name")).write.mode("overwrite").parquet(s"$dir/v=$batchId")
+    SnapshotStream.commit(next.repartition(col("name")), dir, batchId)
   }
 
   /** The maintained name state (latest committed version). */
-  def storedState(s: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/er"
-    val vs = SnapshotStream.versionsIn(s, dir)
-    require(vs.nonEmpty, s"no ER state versions under $dir")
-    s.read.parquet(s"$dir/v=${vs.last}")
-  }
+  def storedState(s: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.latest(s, s"$tableDir/er", "ER state")
 }

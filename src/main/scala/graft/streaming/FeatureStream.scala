@@ -12,10 +12,9 @@ import graft.operators.Features
   *
   * The state is tiny and fully mergeable: per lang (Σx, Σx² as
   * DECIMAL, n, min, max). Sums and counts are associative+commutative
-  * (NOT idempotent — so the state is versioned `v=<batchId>` with
-  * `_SUCCESS` guards, the [[SnapshotStream]] exactly-once argument:
-  * a replayed batch re-reads the same predecessor and rewrites the
-  * same version, never double-adds); extrema are idempotent anyway.
+  * (NOT idempotent — so the state rides [[SnapshotStream]]'s
+  * versioned rule and a replay never double-adds); extrema are
+  * idempotent anyway.
   * |langs| rows of driver-free state — the sketch-stream class, so a
   * single-file write per version is correct here (unlike the
   * corpus-shaped ER/novelty states).
@@ -42,38 +41,25 @@ object FeatureStream {
         greatest(coalesce(col("hia"), col("hib")), coalesce(col("hib"), col("hia"))).as("hi"))
 
   /** foreachBatch sink: fold the batch's stats into version
-    * `v=<batchId>`, merging from the newest committed version
-    * STRICTLY BELOW the batch id (replay-safe for the non-idempotent
-    * sums). */
+    * `batchId` over its predecessor. */
   def scaleSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val prev = SnapshotStream.versionsIn(s, tableDir).filter(_ < batchId).lastOption
     val batchStats = Features.statsOf(
       batch.select(col("doc_id"), col("lang"), col("n_chars")))
-    val merged = prev match {
-      case Some(v) => merge(s.read.parquet(s"$tableDir/v=$v"), batchStats)
-      case None    => batchStats
-    }
-    merged.coalesce(1).write.mode("overwrite").parquet(s"$tableDir/v=$batchId")
+    val merged = SnapshotStream.predecessor(batch.sparkSession, tableDir, batchId)
+      .fold(batchStats)(merge(_, batchStats))
+    SnapshotStream.commit(merged.coalesce(1), tableDir, batchId)
   }
 
   /** The maintained stats (newest committed version). */
-  def storedStats(s: SparkSession, tableDir: String): DataFrame = {
-    val vs = SnapshotStream.versionsIn(s, tableDir)
-    require(vs.nonEmpty, s"no committed scaling stats under $tableDir")
-    s.read.parquet(s"$tableDir/v=${vs.last}")
-  }
+  def storedStats(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.latest(s, tableDir, "scaling-stats")
 
   /** Gate: two-range-batch fold of the stats, corpus scored under the
     * FOLDED table. Oracle IS `feat_scale`'s SQL — the fold identity. */
   def streamFeatScale(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      d.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val folded = merge(
-      Features.statsOf(d.where(col("doc_id") <= mid)),
-      Features.statsOf(d.where(col("doc_id") > mid)))
+    val Seq(d1, d2) = graft.Graft.rangeSplit(d, "doc_id", 2)
+    val folded = merge(Features.statsOf(d1), Features.statsOf(d2))
     Features.scaleOver(d, folded)
   }
 }

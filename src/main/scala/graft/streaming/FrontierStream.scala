@@ -79,13 +79,7 @@ object FrontierStream {
 
   /** The maintained frontier: read-time anti-join of the two states. */
   def storedFrontier(s: SparkSession, tableDir: String): DataFrame = {
-    def read(part: String) = {
-      val dir = s"$tableDir/$part"
-      val p = new org.apache.hadoop.fs.Path(dir)
-      require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
-        s"no frontier state under $dir")
-      s.read.parquet(dir)
-    }
+    def read(part: String) = SnapshotStream.readDir(s, s"$tableDir/$part", "frontier state")
     read("discovered").select(col("norm"), col("first_seen"))
       .join(read("crawled").select(col("norm")), Seq("norm"), "left_anti")
   }
@@ -94,11 +88,7 @@ object FrontierStream {
     * states. Oracle is the URL-set projection of `web_frontier` —
     * the min/union fold identity. */
   def streamFrontier(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val (b1, b2) = (docs.where(col("doc_id") <= mid), docs.where(col("doc_id") > mid))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(Tables.documents(s, dir), "doc_id", 2)
     mergeDiscovered(discoveredOf(b1), discoveredOf(b2))
       .join(mergeCrawled(crawledBatchOf(b1), crawledBatchOf(b2)), Seq("norm"), "left_anti")
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import graft.operators.Snapshots
 
 /** Streaming SCD-2 maintenance — the third stream-maintenance fold
@@ -9,9 +10,8 @@ import graft.operators.Snapshots
   * folds into the standing history table via
   * [[Snapshots.historyStep]] (close open intervals for arriving keys,
   * append the new open row-versions), under [[SnapshotStream]]'s
-  * versioned-directory discipline — so an at-least-once feed maintains
-  * the history exactly-once: a replayed batch re-reads the same
-  * predecessor table and rewrites its own version byte-identically.
+  * versioned rule — so an at-least-once feed maintains the history
+  * exactly-once.
   *
   * THE MAINTENANCE IDENTITY (what `stream_history` pins and
   * StreamingSpec re-drives through a real checkpointed query): the
@@ -27,23 +27,12 @@ object HistoryStream {
   def historySink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     val dir = s"$tableDir/hist"
-    val prev = SnapshotStream.versionsIn(s, dir).filter(_ < batchId).lastOption
-      .map(v => s.read.parquet(s"$dir/v=$v"))
-      .getOrElse {
-        batch
-          .withColumn("valid_from", org.apache.spark.sql.functions.lit(0L))
-          .withColumn("valid_to", org.apache.spark.sql.functions.lit(0L))
-          .where(org.apache.spark.sql.functions.lit(false))
-      }
-    Snapshots.historyStep(prev, batch, batchId)
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId")
+    val prev = SnapshotStream.predecessor(s, dir, batchId).getOrElse(batch
+      .withColumn("valid_from", lit(0L)).withColumn("valid_to", lit(0L)).where(lit(false)))
+    SnapshotStream.commit(Snapshots.historyStep(prev, batch, batchId), dir, batchId)
   }
 
   /** The maintained history (latest committed version). */
-  def currentHistory(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/hist"
-    val vs = SnapshotStream.versionsIn(s, dir)
-    require(vs.nonEmpty, s"no history versions under $dir")
-    s.read.parquet(s"$dir/v=${vs.last}")
-  }
+  def currentHistory(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.latest(s, s"$tableDir/hist", "history")
 }

@@ -18,12 +18,10 @@ import graft.operators.Similarity
   * by a trainer is immutable; only appends are allowed).
   *
   * Chain extension is ORDER-SENSITIVE (appending is neither
-  * commutative nor idempotent), so the tail state rides the versioned
-  * predecessor rule ([[PackStream]]'s cursor discipline): state
-  * `v=<batchId>` with `_SUCCESS` guards, each batch merging from the
-  * newest committed version STRICTLY BELOW its own id — a replayed
-  * batch re-reads the same predecessor tails, recomputes the same
-  * segment, rewrites the same version. State = one row per chain
+  * commutative nor idempotent), so the tail state rides
+  * [[SnapshotStream]]'s versioned rule: a replayed batch re-reads the
+  * same predecessor tails, recomputes the same segment, rewrites the
+  * same version. State = one row per chain
   * (tail id, absolute position, tail vector): |chains| ≈ N/cap rows —
   * heavier than the |langs|-row cursor class, so versions are written
   * partitioned; at 100 TB the version would be bucketed by chain hash
@@ -107,30 +105,21 @@ object IcpStream {
     val members = membersOf(s, dir, batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val prev = SnapshotStream.versionsIn(s, s"$tableDir/tail")
-        .filter(_ < batchId).lastOption
-        .map(v => s.read.parquet(s"$tableDir/tail/v=$v"))
+      val prev = SnapshotStream.predecessor(s, s"$tableDir/tail", batchId)
       val segment = appendSegment(members, prev)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        segment.write.mode("overwrite").parquet(s"$tableDir/out/batch=$batchId")
-        val advanced = prev match {
-          case Some(st) => mergeTails(st, tailsOf(s, dir, segment))
-          case None     => tailsOf(s, dir, segment)
-        }
-        advanced.write.mode("overwrite").parquet(s"$tableDir/tail/v=$batchId")
+        SnapshotStream.appendBatch(segment, tableDir, batchId)
+        val fresh = tailsOf(s, dir, segment)
+        SnapshotStream.commit(prev.fold(fresh)(mergeTails(_, fresh)),
+          s"$tableDir/tail", batchId)
       } finally segment.unpersist()
     } finally members.unpersist()
   }
 
   /** The maintained order: every appended segment. */
-  def storedOrder(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/out"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
-      s"no ordered segments under $dir")
-    s.read.parquet(dir).drop("batch")
-  }
+  def storedOrder(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.readAppended(s, tableDir, "ordered segments")
 
   /** Gate: two crawl-ordered batches through the tail-carry chain; the
     * segments' union must equal the batch-preferring greedy walk the
@@ -143,17 +132,14 @@ object IcpStream {
     *       consuming the result, or segment-sized cache blocks
     *       accumulate across calls. */
   def streamIcp(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"))
-    val r = e.agg(min(col("vec_id")), max(col("vec_id"))).collect()(0)
-    require(!r.isNullAt(0), s"empty embeddings table under $dir")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val mid = lo + (hi - lo) / 2
+    val Seq(e1, e2) = graft.Graft.rangeSplit(
+      Tables.embeddings(s, dir).select(col("vec_id")), "vec_id", 2)
     // seg1 feeds two consumers (its own output + batch 2's carried
     // tails) — persisted so the assignment+greedy runs once; released
     // by the harness clearCache between queries (the allpairs contract)
-    val seg1 = appendSegment(membersOf(s, dir, e.where(col("vec_id") <= mid)), None)
+    val seg1 = appendSegment(membersOf(s, dir, e1), None)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seg2 = appendSegment(membersOf(s, dir, e.where(col("vec_id") > mid)),
+    val seg2 = appendSegment(membersOf(s, dir, e2),
       Some(tailsOf(s, dir, seg1)))
     seg1.unionByName(seg2)
   }

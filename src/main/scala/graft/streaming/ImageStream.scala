@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.{GifCodec, JpegCodec, Media, PngCodec, TiffCodec}
@@ -27,15 +27,10 @@ import graft.web.{HttpMessage, WarcCodec, WarcRecord}
   * (its dims are 8-multiples, so it can never collide with the
   * small GIF/PNG canvases — distinct byte lengths).
   *
-  * State layout under `tableDir` (the [[WebStream]] shape):
-  * `key/` — canonical-pixel md5 → MIN owning doc_id, key-hash-
-  * bucketed, folded through [[graft.sources.ZMaintain.mergeBucketed]]
-  * (per-batch I/O = touched-bucket bytes; MIN is idempotent →
-  * replay-safe). `out/batch=<id>/` — admitted rows; admission reads
-  * the folded state, so a replayed batch rewrites its own dir
-  * identically. THE FOLD IDENTITY (what the gate pins): with
-  * crawl-ordered batches, min-keeper admission over any batching
-  * equals the one-shot min-per-content-group filter — the oracle
+  * State under `tableDir` is [[MinKeeper]]'s on the column `key`
+  * (canonical-pixel md5 → MIN owning doc_id, bucketed; admitted rows
+  * appended per batch; replay-safe). The gate pins its fold identity
+  * against the one-shot min-per-content-group filter — the oracle
   * recomputes groups, keepers, dims, and pixel sums analytically.
   *
   * Scale shape: decode is one WARC per task, zero shuffle; the only
@@ -44,15 +39,12 @@ import graft.web.{HttpMessage, WarcCodec, WarcRecord}
   */
 object ImageStream {
 
-  val NBuckets = 64
-
   /** Content classes: enough that most keys stay distinct at small SF
     * (the gate must exercise BOTH collapse and pass-through) while
     * every class still collides somewhere in a 500-doc fixture. */
   val NClasses = 97
 
-  private[graft] def keyBucket: Column =
-    pmod(hash(col("key")), lit(NBuckets)).cast("long")
+  private[graft] val keys = new MinKeeper("key")
 
   /** Batch docs (doc_id) → decoded canonical image rows
     * (doc_id, fmt, width, height, key, sum_px): synthesize the wire
@@ -122,51 +114,14 @@ object ImageStream {
     }.toDF("doc_id", "fmt", "width", "height", "key", "sum_px")
   }
 
-  /** Batch-local key state: canonical-pixel key → min owning doc_id. */
-  private[graft] def keyOf(rows: DataFrame): DataFrame =
-    rows.groupBy(col("key")).agg(min(col("doc_id")).as("keeper"))
-
-  /** Keyed state merge — pointwise MIN, idempotent. */
-  private[graft] def mergeKey(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("key"), col("keeper").as("ka"))
-      .join(b.select(col("key"), col("keeper").as("kb")), Seq("key"), "full_outer")
-      .select(col("key"),
-        least(coalesce(col("ka"), col("kb")), coalesce(col("kb"), col("ka")))
-          .as("keeper"))
-
-  /** Admission under a (folded) key state: rows whose canonical-pixel
-    * keeper is their own doc_id. Batch-keyed join, never corpus-keyed. */
-  private[graft] def admittedUnder(rows: DataFrame, state: DataFrame): DataFrame =
-    rows.join(state, Seq("key"))
-      .where(col("doc_id") === col("keeper"))
-      .select(col("doc_id"), col("fmt"), col("width"), col("height"),
-        col("key"), col("sum_px"))
-
-  /** foreachBatch sink: decode the batch once (persisted — the codec
-    * pass feeds the fold AND the admission), fold key state, admit
-    * against the folded state, overwrite this batch's own out dir. */
-  def imageSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val rows = imageRowsOf(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.sources.ZMaintain.mergeBucketed(s, s"$tableDir/key",
-        keyOf(rows), keyBucket, mergeKey, sortWithin = Some("key"))
-      val state = s.read.parquet(s"$tableDir/key")
-        .select(col("key"), col("keeper"))
-      admittedUnder(rows, state)
-        .write.mode("overwrite").parquet(s"$tableDir/out/batch=$batchId")
-    } finally rows.unpersist()
-  }
+  /** foreachBatch sink: decode the batch once, fold its key state,
+    * admit against the folded state (the [[MinKeeper]] body). */
+  def imageSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit =
+    keys.sink(imageRowsOf(batch), tableDir, batchId)
 
   /** The maintained deduped image set: every admitted batch. */
-  def storedImages(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/out"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
-      s"no admitted image rows under $dir")
-    s.read.parquet(dir).drop("batch")
-  }
+  def storedImages(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.readAppended(s, tableDir, "admitted image rows")
 
   /** Gate: two crawl-ordered batches through the decode → fold →
     * admit chain; must equal the one-shot min-keeper-per-content-group
@@ -175,15 +130,11 @@ object ImageStream {
     * md5 key itself is JVM-side, so it stays out of the output; the
     * analytic group identity carries the same information. */
   def streamImages(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id"))
-    val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    require(!r.isNullAt(0), s"empty documents table under $dir")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val mid = lo + (hi - lo) / 2
-    val (b1, b2) = (docs.where(col("doc_id") <= mid), docs.where(col("doc_id") > mid))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(
+      Tables.documents(s, dir).select(col("doc_id")), "doc_id", 2)
     val (rows1, rows2) = (imageRowsOf(b1), imageRowsOf(b2))
-    val folded = mergeKey(keyOf(rows1), keyOf(rows2))
-    admittedUnder(rows1.unionByName(rows2), folded).drop("key")
+    val folded = keys.merge(keys.stateOf(rows1), keys.stateOf(rows2))
+    keys.admittedUnder(rows1.unionByName(rows2), folded).drop("key")
   }
 
   /** Analytic twin: content groups from the class formulas — GIF,

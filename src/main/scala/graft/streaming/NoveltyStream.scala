@@ -71,25 +71,17 @@ object NoveltyStream {
       mergeFirstSeen, sortWithin = Some("g"))
 
   /** The maintained first-occurrence table. */
-  def storedFirstSeen(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/firstseen"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
-      s"no first-seen state under $dir")
-    s.read.parquet(dir).select(col("g"), col("doc_id"))
-  }
+  def storedFirstSeen(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.readDir(s, s"$tableDir/firstseen", "first-seen state")
+      .select(col("g"), col("doc_id"))
 
   /** Gate: two-range-batch fold of the first-occurrence state, scored
     * with the shared novelty projection. Oracle IS `ta_novelty`'s SQL
     * — the min-merge fold identity. */
   def streamNovelty(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val merged = mergeFirstSeen(
-      firstSeenOf(docs.where(col("doc_id") <= mid)),
-      firstSeenOf(docs.where(col("doc_id") > mid)))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(docs, "doc_id", 2)
+    val merged = mergeFirstSeen(firstSeenOf(b1), firstSeenOf(b2))
     CorpusOps.noveltyOver(CorpusOps.noveltyGramsOf(docs), merged)
   }
 }

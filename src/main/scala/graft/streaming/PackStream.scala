@@ -14,12 +14,9 @@ import graft.operators.Cleaning
   * so far, |langs| rows.
   *
   * The cursor is a SUM — associative but NOT idempotent — so the
-  * state is versioned `v=<batchId>` with `_SUCCESS` guards and each
-  * batch merges from the newest committed version STRICTLY BELOW its
-  * own id (the [[FeatureStream]] replay rule: a replayed batch
-  * re-reads the same predecessor, recomputes the same spans, rewrites
-  * the same version — never double-advances the cursor). Span
-  * assignment itself rides THE chunk-manifest kernel
+  * state rides [[SnapshotStream]]'s versioned rule: a replayed batch
+  * recomputes the same spans and never double-advances the cursor.
+  * Span assignment itself rides THE chunk-manifest kernel
   * ([[Cleaning.chunkManifest]]) with the carried cursor as its `base`
   * — one packing definition across the batch, multimodal, and
   * streaming packers.
@@ -87,28 +84,18 @@ object PackStream {
     val toks = tokensOf(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val prev = SnapshotStream.versionsIn(s, s"$tableDir/cursor")
-        .filter(_ < batchId).lastOption
-        .map(v => s.read.parquet(s"$tableDir/cursor/v=$v"))
-      manifestUnder(toks, prev)
-        .write.mode("overwrite").parquet(s"$tableDir/out/batch=$batchId")
-      val advanced = prev match {
-        case Some(st) => mergeCursors(st, cursorsOf(toks))
-        case None     => cursorsOf(toks)
-      }
-      advanced.coalesce(1) // |langs| rows — the sketch-state class
-        .write.mode("overwrite").parquet(s"$tableDir/cursor/v=$batchId")
+      val prev = SnapshotStream.predecessor(s, s"$tableDir/cursor", batchId)
+      SnapshotStream.appendBatch(manifestUnder(toks, prev), tableDir, batchId)
+      val local = cursorsOf(toks)
+      // |langs| rows — the sketch-state class: one file per version
+      SnapshotStream.commit(prev.fold(local)(mergeCursors(_, local)).coalesce(1),
+        s"$tableDir/cursor", batchId)
     } finally toks.unpersist()
   }
 
   /** The maintained manifest: every packed batch. */
-  def storedManifest(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/out"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
-      s"no packed manifests under $dir")
-    s.read.parquet(dir).drop("batch")
-  }
+  def storedManifest(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.readAppended(s, tableDir, "packed manifests")
 
   /** Gate: two crawl-ordered batches through the cursor-carry chain;
     * the manifests' union must reproduce the one-shot packer exactly
@@ -121,17 +108,14 @@ object PackStream {
     *       consuming the result, or |batch|-sized cache blocks
     *       accumulate across calls. */
   def streamPack(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text"))
-    val r = d.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    require(!r.isNullAt(0), s"empty documents table under $dir")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val mid = lo + (hi - lo) / 2
+    val Seq(d1, d2) = graft.Graft.rangeSplit(Tables.documents(s, dir)
+      .select(col("doc_id"), col("lang"), col("text")), "doc_id", 2)
     // toks1 feeds two consumers (its own manifest + batch 2's carried
     // cursors) — persisted so the scan+tokenize runs once; released by
     // the harness clearCache between queries (the allpairs contract)
-    val toks1 = tokensOf(d.where(col("doc_id") <= mid))
+    val toks1 = tokensOf(d1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val toks2 = tokensOf(d.where(col("doc_id") > mid))
+    val toks2 = tokensOf(d2)
     manifestUnder(toks1, None)
       .unionByName(manifestUnder(toks2, Some(cursorsOf(toks1))))
   }
@@ -152,20 +136,15 @@ object PackStream {
     * per-batch manifests must reproduce one-shot `pack_bpe` exactly
     * (the oracle IS packBpeSql). */
   def streamPackBpe(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text"))
-    val r = d.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    require(!r.isNullAt(0), s"empty documents table under $dir")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val mid = lo + (hi - lo) / 2
+    val Seq(d1, d2) = graft.Graft.rangeSplit(Tables.documents(s, dir)
+      .select(col("doc_id"), col("lang"), col("text")), "doc_id", 2)
     val seg = graft.operators.Tokenizer.vocabBpe(s, dir)
       .select(col("term"), col("n_sym"))
     // toks1 feeds two consumers (manifest + carried cursors) — the
     // streamPack persist contract, released by harness clearCache
-    val toks1 = graft.operators.Tokenizer
-      .bpeTokenCounts(d.where(col("doc_id") <= mid), seg)
+    val toks1 = graft.operators.Tokenizer.bpeTokenCounts(d1, seg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val toks2 = graft.operators.Tokenizer
-      .bpeTokenCounts(d.where(col("doc_id") > mid), seg)
+    val toks2 = graft.operators.Tokenizer.bpeTokenCounts(d2, seg)
     manifestUnder(toks1, None)
       .unionByName(manifestUnder(toks2, Some(cursorsOf(toks1))))
   }

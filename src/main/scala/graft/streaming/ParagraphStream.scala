@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.ParagraphDedup
 
@@ -12,12 +11,9 @@ import graft.operators.ParagraphDedup
   * pipeline actually runs (docs arrive forever; the seen set is the
   * standing state).
   *
-  * State and output both use [[SnapshotStream]]'s versioned-directory
-  * discipline (`v=<batchId>`, `_SUCCESS`-gated reads, merge target =
-  * latest version strictly below the batch id), so an at-least-once
-  * batch feed yields exactly-once state maintenance: a replayed batch
-  * re-reads the same predecessor seen-set and rewrites its own version
-  * byte-identically.
+  * State and output both follow [[SnapshotStream]]'s versioned rule,
+  * so an at-least-once batch feed yields exactly-once state
+  * maintenance.
   *
   * THE ORDER-FOLD IDENTITY (what the gate pins): if batches partition
   * the corpus into doc_id RANGES fed in order, the per-batch keeper
@@ -41,54 +37,42 @@ import graft.operators.ParagraphDedup
   */
 object ParagraphStream {
 
+  /** The seen-paragraph table before the first batch. */
+  private def noneSeen(s: SparkSession): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("chunk",
+          org.apache.spark.sql.types.StringType))))
+
   /** foreachBatch sink: dedup `batch` against the seen-paragraph table
-    * (versions under `$tableDir/seen`), write the cleaned batch to
-    * `$tableDir/out/v=<batchId>`, and the updated seen set to
-    * `$tableDir/seen/v=<batchId>`. */
+    * (versions under `$tableDir/seen`), write the cleaned batch as
+    * version `batchId` of `$tableDir/out`, and the updated seen set as
+    * version `batchId` of `$tableDir/seen`. */
   def paragraphSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     val seenDir = s"$tableDir/seen"
-    val seen = SnapshotStream.versionsIn(s, seenDir).filter(_ < batchId).lastOption
-      .map(v => s.read.parquet(s"$seenDir/v=$v"))
-      .getOrElse(s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("chunk",
-            org.apache.spark.sql.types.StringType)))))
+    val seen = SnapshotStream.predecessor(s, seenDir, batchId).getOrElse(noneSeen(s))
     // ONE split + anti-join feeds both writes (processAgainst
     // localCheckpoints the shared frames — the two writes are separate
     // actions and would otherwise each re-run the batch scan)
     val (cleaned, keptChunks) = ParagraphDedup.processAgainst(batch, seen)
-    cleaned.write.mode("overwrite").parquet(s"$tableDir/out/v=$batchId")
+    SnapshotStream.commit(cleaned, s"$tableDir/out", batchId)
     // fresh paragraphs = the batch's kept occurrences; the union stays
     // distinct because kept chunks were anti-joined against `seen`
-    seen.unionByName(keptChunks)
-      .write.mode("overwrite").parquet(s"$seenDir/v=$batchId")
+    SnapshotStream.commit(seen.unionByName(keptChunks), seenDir, batchId)
   }
 
   /** Cleaned output across all committed batches (reader view). */
-  def cleanedOutput(s: SparkSession, tableDir: String): DataFrame = {
-    val vs = SnapshotStream.versionsIn(s, s"$tableDir/out")
-    require(vs.nonEmpty, s"no output versions under $tableDir/out")
-    vs.map(v => s.read.parquet(s"$tableDir/out/v=$v")).reduce(_ unionByName _)
-  }
+  def cleanedOutput(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.allVersions(s, s"$tableDir/out", "output")
 
   /** Gate: the two-batch range fold (see the order-fold identity in
     * the object scaladoc) — batch 1 = doc_id below the midpoint, batch
     * 2 = the rest, seen-set carried between them. Oracle = the ONE-SHOT
     * `dedup_paragraph` SQL. */
   def streamParagraph(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val b1 = docs.where(col("doc_id") <= mid)
-    val b2 = docs.where(col("doc_id") > mid)
-    val empty = b1.sparkSession.createDataFrame(
-      b1.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("chunk",
-          org.apache.spark.sql.types.StringType))))
-    val (out1, seen1) = ParagraphDedup.processAgainst(b1, empty)
+    val Seq(b1, b2) = graft.Graft.rangeSplit(Tables.documents(s, dir), "doc_id", 2)
+    val (out1, seen1) = ParagraphDedup.processAgainst(b1, noneSeen(s))
     val out2 = ParagraphDedup.paragraphDedupAgainst(b2, seen1)
     out1.unionByName(out2)
   }

@@ -15,11 +15,8 @@ import graft.operators.HeavyHitters
   * [[graft.functions.CountMinAgg.merge]], so the streaming fold and
   * the one-shot aggregation are THE SAME arithmetic by construction.
   *
-  * State uses [[SnapshotStream]]'s versioned-directory discipline
-  * (`v=<batchId>`, `_SUCCESS`-gated reads, merge target = latest
-  * version strictly below the batch id) so an at-least-once batch feed
-  * maintains the sketch exactly-once: a replayed batch re-reads the
-  * same predecessor and rewrites its own version byte-identically.
+  * State follows [[SnapshotStream]]'s versioned rule, so an
+  * at-least-once batch feed maintains the sketch exactly-once.
   *
   * THE FOLD IDENTITY (what the gate pins): counter addition is
   * associative and commutative, so ANY batching of the corpus — and
@@ -39,8 +36,8 @@ object SketchStream {
     Seq(sk).toDF("cms")
   }
 
-  private def readSketch(s: SparkSession, path: String): Seq[Long] =
-    s.read.parquet(path).select(col("cms")).head().getSeq[Long](0)
+  private def readSketch(stored: DataFrame): Seq[Long] =
+    stored.select(col("cms")).head().getSeq[Long](0)
 
   /** Batch-local sketch: ONE mergeable aggregation over the batch's
     * token stream. */
@@ -56,35 +53,24 @@ object SketchStream {
   def cmsSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     val dir = s"$tableDir/cms"
-    val prev = SnapshotStream.versionsIn(s, dir).filter(_ < batchId).lastOption
-      .map(v => readSketch(s, s"$dir/v=$v"))
+    val prev = SnapshotStream.predecessor(s, dir, batchId).map(readSketch)
     val local = sketchOf(batch).toArray
-    val merged = prev match {
-      case Some(p) => HeavyHitters.cmsAgg.merge(local, p.toArray).toSeq
-      case None    => local.toSeq
-    }
-    sketchFrame(s, merged).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId")
+    val merged = prev.fold(local.toSeq)(p =>
+      HeavyHitters.cmsAgg.merge(local, p.toArray).toSeq)
+    SnapshotStream.commit(sketchFrame(s, merged).coalesce(1), dir, batchId)
   }
 
   /** The maintained sketch (latest committed version). */
-  def storedSketch(s: SparkSession, tableDir: String): IndexedSeq[Long] = {
-    val dir = s"$tableDir/cms"
-    val vs = SnapshotStream.versionsIn(s, dir)
-    require(vs.nonEmpty, s"no sketch versions under $dir")
-    readSketch(s, s"$dir/v=${vs.last}").toIndexedSeq
-  }
+  def storedSketch(s: SparkSession, tableDir: String): IndexedSeq[Long] =
+    readSketch(SnapshotStream.latest(s, s"$tableDir/cms", "sketch")).toIndexedSeq
 
   /** Gate: the two-batch range fold of the corpus through the sketch
     * merge, graded by the one-shot probe harness. Oracle =
     * `ta_cms_eval`'s relational replay — the fold identity. */
   def streamCms(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val s1 = sketchOf(docs.where(col("doc_id") <= mid))
-    val s2 = sketchOf(docs.where(col("doc_id") > mid))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(docs, "doc_id", 2)
+    val (s1, s2) = (sketchOf(b1), sketchOf(b2))
     val merged = HeavyHitters.cmsAgg.merge(s1.toArray, s2.toArray).toIndexedSeq
     HeavyHitters.cmsProbe(s, HeavyHitters.cmsToksOf(docs), merged)
   }
@@ -128,19 +114,13 @@ object SketchStream {
     val s = batch.sparkSession
     val dir = s"$tableDir/hll"
     val local = hllRegsOf(batch)
-    val merged = SnapshotStream.versionsIn(s, dir).filter(_ < batchId).lastOption
-      .map(v => mergeHllRegs(s.read.parquet(s"$dir/v=$v"), local))
-      .getOrElse(local)
-    merged.write.mode("overwrite").parquet(s"$dir/v=$batchId")
+    SnapshotStream.commit(SnapshotStream.predecessor(s, dir, batchId)
+      .fold(local)(mergeHllRegs(_, local)), dir, batchId)
   }
 
   /** The maintained keyed register table (latest committed version). */
-  def storedHllRegs(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/hll"
-    val vs = SnapshotStream.versionsIn(s, dir)
-    require(vs.nonEmpty, s"no register versions under $dir")
-    s.read.parquet(s"$dir/v=${vs.last}")
-  }
+  def storedHllRegs(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.latest(s, s"$tableDir/hll", "register")
 
   /** Gate: two-range-batch fold of per-lang registers, graded with the
     * one-shot eval projection against the exact distinct counts.
@@ -149,12 +129,8 @@ object SketchStream {
     * registers, so even the raw ESTIMATE doubles hash-check. */
   def streamHll(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val merged = mergeHllRegs(
-      hllRegsOf(docs.where(col("doc_id") <= mid)),
-      hllRegsOf(docs.where(col("doc_id") > mid)))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(docs, "doc_id", 2)
+    val merged = mergeHllRegs(hllRegsOf(b1), hllRegsOf(b2))
     val exact = HeavyHitters.hllLangToks(docs).distinct()
       .groupBy(col("lang")).agg(count(lit(1)).as("n_exact"))
     HeavyHitters.hllEvalOver(exact.join(merged, Seq("lang")))
@@ -192,19 +168,13 @@ object SketchStream {
     val s = batch.sparkSession
     val dir = s"$tableDir/quant"
     val local = quantileStateOf(batch)
-    val merged = SnapshotStream.versionsIn(s, dir).filter(_ < batchId).lastOption
-      .map(v => mergeQuantileState(s.read.parquet(s"$dir/v=$v"), local))
-      .getOrElse(local)
-    merged.write.mode("overwrite").parquet(s"$dir/v=$batchId")
+    SnapshotStream.commit(SnapshotStream.predecessor(s, dir, batchId)
+      .fold(local)(mergeQuantileState(_, local)), dir, batchId)
   }
 
   /** The maintained keyed quantile state (latest committed version). */
-  def storedQuantileState(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/quant"
-    val vs = SnapshotStream.versionsIn(s, dir)
-    require(vs.nonEmpty, s"no quantile-state versions under $dir")
-    s.read.parquet(s"$dir/v=${vs.last}")
-  }
+  def storedQuantileState(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.latest(s, s"$tableDir/quant", "quantile-state")
 
   /** Gate: two-range-batch fold of per-lang (n, sketch) state, graded
     * with the one-shot eval harness (driver estimates + exact rank
@@ -213,12 +183,8 @@ object SketchStream {
     * percentile ESTIMATE hash-checks. */
   def streamQuantile(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val Array(org.apache.spark.sql.Row(lo: Long, hi: Long)) =
-      docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()
-    val mid = lo + (hi - lo) / 2
-    val merged = mergeQuantileState(
-      quantileStateOf(docs.where(col("doc_id") <= mid)),
-      quantileStateOf(docs.where(col("doc_id") > mid)))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(docs, "doc_id", 2)
+    val merged = mergeQuantileState(quantileStateOf(b1), quantileStateOf(b2))
     val perLang = merged.collect().toSeq.map { r =>
       (r.getString(0), r.getLong(1), r.getSeq[Long](2).toIndexedSeq)
     }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import graft.Tables
@@ -34,6 +34,12 @@ import graft.operators.Snapshots
   * argument above makes writes converge, the marker keeps a torn
   * in-progress version from ever being read or merged against.
   *
+  * The layout is this object's: every versioned sink and stored-state
+  * reader in `graft.streaming` goes through [[predecessor]],
+  * [[commit]] and [[latest]]; append-only batch outputs through
+  * [[appendBatch]] and [[readAppended]]; min-keeper dedup state
+  * through [[MinKeeper]].
+  *
   * Scale: each version rewrite costs one key-shuffle of target+batch
   * (the upsert's full-outer join) plus a table write. At 100 TB the
   * target is key-bucketed and the rewrite is restricted to touched
@@ -52,8 +58,8 @@ object SnapshotStream {
     * reader gate table formats implement with a commit record; it also
     * keeps the SINK honest — a torn predecessor is skipped as a merge
     * target too. (If `mapreduce.fileoutputcommitter.marksuccessfuljobs`
-    * is disabled, every version is invisible and [[currentSnapshot]]
-    * fails loudly rather than tearing — re-enable the marker.) */
+    * is disabled, every version is invisible and [[latest]] fails
+    * loudly rather than tearing — re-enable the marker.) */
   private[graft] def versionsIn(s: SparkSession, tableDir: String): Seq[Long] = {
     val root = new Path(tableDir)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -65,26 +71,75 @@ object SnapshotStream {
       .sorted
   }
 
+  /** Version `v` of the table under `dir`, committed or not — callers
+    * pick `v` from [[versionsIn]]. */
+  private[graft] def readVersion(s: SparkSession, dir: String, v: Long): DataFrame =
+    s.read.parquet(s"$dir/v=$v")
+
+  /** Batch `batchId`'s merge target: the newest committed version
+    * STRICTLY BELOW the batch id, or None before the first commit (the
+    * caller's bootstrap). A replayed batch skips its own half-written
+    * version and re-reads the predecessor it read the first time. */
+  private[graft] def predecessor(s: SparkSession, dir: String,
+      batchId: Long): Option[DataFrame] =
+    versionsIn(s, dir).filter(_ < batchId).lastOption.map(readVersion(s, dir, _))
+
+  /** Write `df` as version `batchId` of the table under `dir`, whole
+    * (a replay overwrites it); Spark's `_SUCCESS` lands last and is
+    * the commit point. The caller shapes the write: `coalesce(1)` for
+    * |keys|-row state, a hash `repartition` for corpus-shaped state. */
+  private[graft] def commit(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/v=$batchId")
+
+  /** The newest committed version — what a reader pins; fails naming
+    * `what` when nothing is committed yet. */
+  private[graft] def latest(s: SparkSession, dir: String, what: String): DataFrame = {
+    val vs = versionsIn(s, dir)
+    require(vs.nonEmpty, s"no $what versions under $dir")
+    readVersion(s, dir, vs.last)
+  }
+
+  /** Every committed version, unioned by name (per-batch outputs kept
+    * as versions); fails naming `what` when nothing is committed. */
+  private[graft] def allVersions(s: SparkSession, dir: String, what: String): DataFrame = {
+    val vs = versionsIn(s, dir)
+    require(vs.nonEmpty, s"no $what versions under $dir")
+    vs.map(readVersion(s, dir, _)).reduce(_ unionByName _)
+  }
+
+  /** Append-only batch output: batch `batchId` overwrites its own
+    * `out/batch=<id>` dir under `tableDir`, so a replay lands on the
+    * same path instead of duplicating rows. */
+  private[graft] def appendBatch(df: DataFrame, tableDir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$tableDir/out/batch=$batchId")
+
+  /** Every appended batch output under `tableDir`, unioned by
+    * partition discovery over the `batch=` dirs. */
+  private[graft] def readAppended(s: SparkSession, tableDir: String, what: String): DataFrame =
+    readDir(s, s"$tableDir/out", what).drop("batch")
+
+  /** The parquet table under `dir` (appended outputs, bucketed state);
+    * fails naming `what` when the dir does not exist yet. */
+  private[graft] def readDir(s: SparkSession, dir: String, what: String): DataFrame = {
+    val p = new Path(dir)
+    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
+      s"no $what under $dir")
+    s.read.parquet(dir)
+  }
+
   /** The foreachBatch sink: merge `batch` into the latest snapshot
     * version below `batchId` (or `init` when none exists yet) and write
     * the result as `v=<batchId>`. Safe to re-invoke with the same
     * (batch, batchId) — see the object scaladoc's replay argument. */
   def versionedUpsertSink(tableDir: String, key: String, init: DataFrame)(
       batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val target = versionsIn(s, tableDir).filter(_ < batchId).lastOption
-      .map(v => s.read.parquet(s"$tableDir/v=$v"))
-      .getOrElse(init)
-    Snapshots.upsertOver(target, batch, key).drop("op")
-      .write.mode("overwrite").parquet(s"$tableDir/v=$batchId")
+    val target = predecessor(batch.sparkSession, tableDir, batchId).getOrElse(init)
+    commit(Snapshots.upsertOver(target, batch, key).drop("op"), tableDir, batchId)
   }
 
   /** Read the table as of its newest version (what a reader pins). */
-  def currentSnapshot(s: SparkSession, tableDir: String): DataFrame = {
-    val vs = versionsIn(s, tableDir)
-    require(vs.nonEmpty, s"no snapshot versions under $tableDir")
-    s.read.parquet(s"$tableDir/v=${vs.last}")
-  }
+  def currentSnapshot(s: SparkSession, tableDir: String): DataFrame =
+    latest(s, tableDir, "snapshot")
 
   // ------------------------- batch twin (driver oracle gate) ---------
 
@@ -165,5 +220,74 @@ object SnapshotStream {
     dropCommitted.foreach(v => fs.delete(new Path(root, s"v=$v"), true))
     tornOld.foreach(p => fs.delete(p, true))
     dropCommitted
+  }
+}
+
+/** Min-keeper dedup state keyed by the column `key`: key → MIN owning
+  * doc_id — the state [[WebStream]] (`fp`), [[ImageStream]] and
+  * [[AudioStream]] (`key`) fold. It is corpus-shaped, so it lives
+  * key-hash-BUCKETED under `<tableDir>/<key>` and folds through
+  * [[graft.sources.ZMaintain.mergeBucketed]] (per-batch I/O = Σ
+  * touched-bucket bytes); MIN is idempotent, so an at-least-once
+  * replay is a no-op on it. Admission reads the FOLDED state — a row
+  * is kept iff its key's keeper is its own doc_id — so a replayed
+  * batch recomputes identical rows and overwrites its own
+  * `out/batch=` dir with them ([[SnapshotStream.appendBatch]]; the
+  * state is in-place, not versioned, so the strictly-monotone
+  * admission rule stands in for the predecessor-version rule).
+  *
+  * THE FOLD IDENTITY: with crawl-ordered batches (doc ids monotone
+  * across batches), min-keeper admission over any batching equals the
+  * one-shot "keep the min doc_id per key" over the whole input.
+  * Out-of-order batching still converges the STATE (MIN is
+  * order-free); only already-emitted superseded keepers linger in old
+  * `batch=` dirs, the at-least-once append semantics. */
+private[graft] final class MinKeeper(key: String) {
+
+  /** Key-hash bucket fan-out — small for the fixture; thousands at
+    * 100 TB (the [[graft.sources.Bucketing]] sizing rule). */
+  val NBuckets = 64
+
+  def bucket: Column = pmod(hash(col(key)), lit(NBuckets)).cast("long")
+
+  /** Batch-local state: ONE mergeable aggregation over rows carrying
+    * `key` and `doc_id`. */
+  def stateOf(rows: DataFrame): DataFrame =
+    rows.groupBy(col(key)).agg(min(col("doc_id")).as("keeper"))
+
+  /** Keyed state merge — pointwise MIN, idempotent. */
+  def merge(a: DataFrame, b: DataFrame): DataFrame =
+    a.select(col(key), col("keeper").as("ka"))
+      .join(b.select(col(key), col("keeper").as("kb")), Seq(key), "full_outer")
+      .select(col(key),
+        least(coalesce(col("ka"), col("kb")), coalesce(col("kb"), col("ka")))
+          .as("keeper"))
+
+  /** The rows whose key's keeper is their own doc_id, in `rows`'
+    * columns. Batch-keyed join, never corpus-keyed. */
+  def admittedUnder(rows: DataFrame, state: DataFrame): DataFrame =
+    rows.join(state, Seq(key))
+      .where(col("doc_id") === col("keeper"))
+      .select(rows.columns.map(col): _*)
+
+  /** Fold the batch-local `state` into the stored state, then append
+    * the rows `admit` keeps under the FOLDED state as batch `batchId`'s
+    * output. */
+  def fold(tableDir: String, batchId: Long, state: DataFrame)(
+      admit: DataFrame => DataFrame): Unit = {
+    val s = state.sparkSession
+    graft.sources.ZMaintain.mergeBucketed(s, s"$tableDir/$key",
+      state, bucket, merge, sortWithin = Some(key))
+    SnapshotStream.appendBatch(
+      admit(s.read.parquet(s"$tableDir/$key").select(col(key), col("keeper"))),
+      tableDir, batchId)
+  }
+
+  /** The sink body for rows that carry `key`: persisted once (the
+    * decode pass feeds the fold AND the admission), folded, admitted. */
+  def sink(rows: DataFrame, tableDir: String, batchId: Long): Unit = {
+    val kept = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try fold(tableDir, batchId, stateOf(kept))(admittedUnder(kept, _))
+    finally kept.unpersist()
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import graft.operators.Ivm
 
 /** Streaming incremental view maintenance — the fourth
@@ -8,10 +9,8 @@ import graft.operators.Ivm
   * [[SketchStream]], and [[HistoryStream]]): each micro-batch is a
   * CHANGE FEED ([[Ivm.changeFeedOver]] rows: op + old/new values) and
   * folds into the standing aggregate view via [[Ivm.applyFeed]], under
-  * [[SnapshotStream]]'s versioned-directory discipline — an
-  * at-least-once feed maintains the view exactly-once, because a
-  * replayed batch re-reads the same predecessor version and rewrites
-  * its own version byte-identically (signed deltas are NOT idempotent
+  * [[SnapshotStream]]'s versioned rule — an at-least-once feed
+  * maintains the view exactly-once (signed deltas are NOT idempotent
   * on their own — applying a feed twice double-counts — so the
   * versioned sink is load-bearing here, more than for any other fold).
   *
@@ -28,22 +27,13 @@ object ViewStream {
   def viewSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     val dir = s"$tableDir/view"
-    val prev = SnapshotStream.versionsIn(s, dir).filter(_ < batchId).lastOption
-      .map(v => s.read.parquet(s"$dir/v=$v"))
-      .getOrElse {
-        import org.apache.spark.sql.functions._
-        batch.select(col("n_source").as("source"), col("n_lang").as("lang"),
-          lit(0L).as("n_docs"), lit(0L).as("sum_chars")).where(lit(false))
-      }
-    Ivm.applyFeed(prev, batch)
-      .write.mode("overwrite").parquet(s"$dir/v=$batchId")
+    val prev = SnapshotStream.predecessor(s, dir, batchId).getOrElse(
+      batch.select(col("n_source").as("source"), col("n_lang").as("lang"),
+        lit(0L).as("n_docs"), lit(0L).as("sum_chars")).where(lit(false)))
+    SnapshotStream.commit(Ivm.applyFeed(prev, batch), dir, batchId)
   }
 
   /** The maintained view (latest committed version). */
-  def currentView(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/view"
-    val vs = SnapshotStream.versionsIn(s, dir)
-    require(vs.nonEmpty, s"no view versions under $dir")
-    s.read.parquet(s"$dir/v=${vs.last}")
-  }
+  def currentView(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.latest(s, s"$tableDir/view", "view")
 }

@@ -15,35 +15,17 @@ import graft.web.WebIngest
   * story as a STREAM: each batch's cost is batch-bounded — no
   * snapshot text is ever rescanned.
   *
-  * State layout under `tableDir`:
-  *   - `fp/` — content fingerprint → MIN owning doc_id, corpus-shaped,
-  *     so it lives fp-hash-BUCKETED and folds through
-  *     [[graft.sources.ZMaintain.mergeBucketed]] (per-batch I/O = Σ
-  *     touched-bucket bytes; the [[FrontierStream]] scale argument).
-  *     MIN is idempotent → at-least-once replay is a no-op.
-  *   - `frontier/` — [[FrontierStream]]'s two monotone tables, folded
-  *     from the SAME batch by the same sink.
-  *   - `out/batch=<id>/` — the admitted training rows. Admission is
-  *     REPLAY-DETERMINISTIC by construction: a row is admitted iff the
-  *     folded state's keeper for its fingerprint IS its own doc_id
-  *     (state folds FIRST, then admission reads the state — a replayed
-  *     batch finds the identical state, recomputes the identical rows,
-  *     and overwrites its own `batch=` dir byte-for-byte; the
-  *     strictly-monotone cousin of [[FeatureStream]]'s
-  *     predecessor-version rule, needed here because mergeBucketed
-  *     state is in-place, not versioned).
+  * State under `tableDir`: [[MinKeeper]]'s on the column `fp`
+  * (content fingerprint → MIN owning doc_id, bucketed; admitted
+  * training rows appended per batch; replay-safe), plus `frontier/` —
+  * [[FrontierStream]]'s two monotone tables, folded from the SAME
+  * batch by the same sink.
   *
-  * THE FOLD IDENTITY (what the gate pins): with crawl-ordered batches
-  * (doc ids monotone across batches — what an ingest stream delivers),
-  * min-keeper admission over any batching equals the ONE-SHOT "keep
-  * the min doc_id per fingerprint" over the whole corpus, so the
-  * union of emitted batches must reproduce `pipeline_web` filtered to
-  * fingerprint keepers — the gate's oracle nests
+  * THE FOLD IDENTITY (what the gate pins): the union of emitted
+  * batches must reproduce `pipeline_web` filtered to fingerprint
+  * keepers (MinKeeper's identity) — the gate's oracle nests
   * [[WebIngest.pipelineWebSql]] verbatim (the `stream_feat_scale`
   * pattern: a member regression flips this capstone's hash too).
-  * Out-of-order batching still converges the STATE (MIN is
-  * order-free); only already-emitted superseded keepers linger in old
-  * `batch=` dirs, the documented at-least-once append semantics.
   *
   * The fingerprint is md5 of the first [[WebStream.FpPrefix]] chars of
   * the extracted text BODY (after the synthetic `doc N & ` marker):
@@ -56,8 +38,6 @@ import graft.web.WebIngest
   */
 object WebStream {
 
-  val NBuckets = 64
-
   /** Body-prefix length the fingerprint covers. */
   val FpPrefix = 32
 
@@ -67,76 +47,41 @@ object WebStream {
   private[graft] def fpCol: Column =
     md5(expr(s"substring(text, instr(text, ' & ') + 3, $FpPrefix)"))
 
-  private[graft] def fpBucket: Column =
-    pmod(hash(col("fp")), lit(NBuckets)).cast("long")
+  private[graft] val fps = new MinKeeper("fp")
 
-  /** Batch-local fingerprint state: fp → min owning doc_id (ONE
-    * mergeable aggregation over the batch's extracted rows). */
+  /** Batch-local fingerprint state: fp → min owning doc_id. */
   private[graft] def fpOf(rows: DataFrame): DataFrame =
-    rows.select(fpCol.as("fp"), col("doc_id"))
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("keeper"))
+    fps.stateOf(rows.select(fpCol.as("fp"), col("doc_id")))
 
-  /** Keyed state merge — pointwise MIN, idempotent. */
-  private[graft] def mergeFp(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("fp"), col("keeper").as("ka"))
-      .join(b.select(col("fp"), col("keeper").as("kb")), Seq("fp"), "full_outer")
-      .select(col("fp"),
-        least(coalesce(col("ka"), col("kb")), coalesce(col("kb"), col("ka")))
-          .as("keeper"))
-
-  /** Admission under a (folded) fingerprint state: the rows whose
-    * fingerprint keeper is their own doc_id. The join is
-    * state-sized-per-touched-fp, batch-keyed — never corpus-keyed. */
-  private[graft] def admittedUnder(rows: DataFrame, state: DataFrame): DataFrame = {
-    val cols = rows.columns
-    rows.withColumn("fp", fpCol)
-      .join(state, Seq("fp"))
-      .where(col("doc_id") === col("keeper"))
-      .select(col("fp") +: cols.map(col): _*)
-  }
+  /** Admission under a (folded) fingerprint state, fingerprint first. */
+  private[graft] def admittedUnder(rows: DataFrame, state: DataFrame): DataFrame =
+    fps.admittedUnder(rows.withColumn("fp", fpCol), state)
+      .select(col("fp") +: rows.columns.map(col): _*)
 
   /** foreachBatch sink: extract the batch's training rows once
     * (persisted — the gzip/WARC/HTML pass is the expensive tier and
-    * feeds three consumers), fold fingerprint + frontier state, then
-    * admit against the folded state and overwrite this batch's own
-    * `out/batch=` dir. */
+    * feeds both the fold and the admission), fold the frontier, then
+    * the fingerprint state and the admission (the [[MinKeeper]] body). */
   def webSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
     val rows = WebIngest.pipelineRowsOf(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      graft.sources.ZMaintain.mergeBucketed(s, s"$tableDir/fp",
-        fpOf(rows), fpBucket, mergeFp, sortWithin = Some("fp"))
       FrontierStream.frontierSink(s"$tableDir/frontier")(batch, batchId)
-      val state = s.read.parquet(s"$tableDir/fp")
-        .select(col("fp"), col("keeper"))
-      admittedUnder(rows, state)
-        .write.mode("overwrite").parquet(s"$tableDir/out/batch=$batchId")
+      fps.fold(tableDir, batchId, fpOf(rows))(admittedUnder(rows, _))
     } finally rows.unpersist()
   }
 
-  /** The maintained training set: every admitted batch, unioned by
-    * partition discovery over the `batch=` dirs. */
-  def storedTraining(s: SparkSession, tableDir: String): DataFrame = {
-    val dir = s"$tableDir/out"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
-      s"no admitted training rows under $dir")
-    s.read.parquet(dir).drop("batch")
-  }
+  /** The maintained training set: every admitted batch. */
+  def storedTraining(s: SparkSession, tableDir: String): DataFrame =
+    SnapshotStream.readAppended(s, tableDir, "admitted training rows")
 
   /** Gate: two crawl-ordered batches through the extract → fold →
     * admit chain; must equal the one-shot min-keeper filter of
     * `pipeline_web` (the fold identity — oracle nests its SQL). */
   def streamWeb(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    require(!r.isNullAt(0), s"empty documents table under $dir")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val mid = lo + (hi - lo) / 2
-    val (b1, b2) = (docs.where(col("doc_id") <= mid), docs.where(col("doc_id") > mid))
+    val Seq(b1, b2) = graft.Graft.rangeSplit(Tables.documents(s, dir), "doc_id", 2)
     val (rows1, rows2) = (WebIngest.pipelineRowsOf(b1), WebIngest.pipelineRowsOf(b2))
-    val folded = mergeFp(fpOf(rows1), fpOf(rows2))
+    val folded = fps.merge(fpOf(rows1), fpOf(rows2))
     admittedUnder(rows1.unionByName(rows2), folded)
   }
 }

@@ -22,6 +22,21 @@ class GraftSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { g.table("no_such_table") }
   }
 
+  test("rangeSplit cuts at lo + i*(hi-lo)/parts and rejects an empty input naming the key") {
+    val s = TestSpark.session
+    import s.implicits._
+    val df = (0L to 11L).toDF("k")
+    def ranges(parts: Int): Seq[Seq[Long]] = Graft.rangeSplit(df, "k", parts)
+      .map(_.collect().map(_.getLong(0)).sorted.toSeq)
+    assert(ranges(2) == Seq(0L to 5L, 6L to 11L))
+    // multiply before divide: the second cut is 2*11/3 = 7, not 2*(11/3) = 6
+    assert(ranges(3) == Seq(0L to 3L, 4L to 7L, 8L to 11L))
+    val e = intercept[IllegalArgumentException] {
+      Graft.rangeSplit(df.where($"k" < 0L), "k", 2)
+    }
+    assert(e.getMessage.contains("`k`"), e.getMessage)
+  }
+
   test("sql sees the fixture tables as views") {
     assert(g.sql("SELECT count(*) AS n FROM documents").head().getLong(0) > 0)
     assert(g.sql(

@@ -34,4 +34,20 @@ class LayoutSpec extends AnyFunSuite {
     val hits = codeMentions("addSparkListener")
     assert(hits.size == 1 && hits.head.startsWith("graft/tools/RunListener.scala:"), hits)
   }
+
+  test("the versioned-state layout lives in SnapshotStream") {
+    val snapshot = "graft/streaming/SnapshotStream.scala:"
+    val paths = (codeMentions("\"v=") ++ codeMentions("/v=")).distinct
+    assert(paths.nonEmpty && paths.forall(_.startsWith(snapshot)), paths)
+    val listings = codeMentions("versionsIn(")
+    assert(listings.forall(h =>
+      h.startsWith(snapshot) || h.startsWith("graft/streaming/CcStream.scala:")), listings)
+    val fs = codeMentions("getFileSystem").filter(_.startsWith("graft/streaming/"))
+    assert(fs.nonEmpty && fs.forall(_.startsWith(snapshot)), fs)
+  }
+
+  test("no range split pattern-matches the min/max row (MatchError on empty input)") {
+    val hits = codeMentions("Row(lo: Long, hi: Long)")
+    assert(hits.isEmpty, hits)
+  }
 }

@@ -814,6 +814,45 @@ class StreamingSpec extends AnyFunSuite {
       "batch replay must be a no-op")
   }
 
+  test("streaming CC maintenance: a sig version without its labels twin is invisible to readers and skipped as merge target") {
+    // a crash between ccSink's two writes leaves sig/v=N committed
+    // without labels/v=N; readers must keep pinning v=N-1, and the next
+    // batch must merge from the v=N-1 pair, never from the orphan sig
+    import graft.streaming.CcStream
+    val sf = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val ids = docs.select(min(col("doc_id")), max(col("doc_id"))).collect()(0)
+    val mid = ids.getLong(0) + (ids.getLong(1) - ids.getLong(0)) / 2
+    val b1 = docs.where(col("doc_id") <= mid)
+    val b2 = docs.where(col("doc_id") > mid)
+    val table = Files.createTempDirectory("graft-scc-orphan").toString
+    def labMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    CcStream.ccSink(table)(b1, 0L)
+    val afterB1 = labMap(CcStream.storedLabels(spark, table))
+    // the orphan: a COMMITTED (_SUCCESS-marked) but empty signature
+    // index as sig/v=1 — merging against it would lose every
+    // cross-batch match
+    spark.read.parquet(s"$table/sig/v=0").limit(0)
+      .write.parquet(s"$table/sig/v=1")
+    assert(new java.io.File(s"$table/sig/v=1/_SUCCESS").exists())
+    assert(CcStream.committedVersions(spark, table) == Seq(0L))
+    assert(labMap(CcStream.storedLabels(spark, table)) == afterB1,
+      "readers must not pair the orphan sig version with any labels")
+    CcStream.ccSink(table)(b2, 2L)
+    assert(CcStream.committedVersions(spark, table) == Seq(0L, 2L))
+    val oneShot = graft.operators.Dedup.dedupCc(spark, sf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the fixture has clusters spanning both batches, so a merge from
+    // the empty orphan index would split them
+    assert(oneShot.groupBy(_._2).values.exists(c =>
+      c.keys.exists(_ <= mid) && c.keys.exists(_ > mid)),
+      "fixture must contain a cluster spanning both batches")
+    assert(labMap(CcStream.storedLabels(spark, table)) == oneShot,
+      "batch 2 must merge from the v=0 pair, not the orphan sig/v=1")
+  }
+
   test("streaming first-seen maintenance: checkpointed restart + replay converge on the one-shot table") {
     // min is associative/commutative/idempotent: the folded
     // first-occurrence table must equal the one-shot aggregation, and a
@@ -1308,7 +1347,7 @@ class StreamingSpec extends AnyFunSuite {
     WebStream.webSink(table)(tiny, 2L)
     val touched = graft.streaming.WebStream
       .fpOf(graft.web.WebIngest.pipelineRowsOf(tiny))
-      .select(WebStream.fpBucket.as("b")).distinct()
+      .select(WebStream.fps.bucket.as("b")).distinct()
       .collect().map(r => s"b=${r.getLong(0)}").toSet
     assert(touched.nonEmpty && touched.size < before.size,
       "tiny batch must touch a strict subset of fp buckets")
@@ -1355,7 +1394,7 @@ class StreamingSpec extends AnyFunSuite {
     addFile(b2, "b2.parquet"); run()          // RESTART: batch 1
     // fold identity through the REAL stream machinery
     val rows = ImageStream.imageRowsOf(docs)
-    val oneShot = keySet(ImageStream.admittedUnder(rows, ImageStream.keyOf(rows)))
+    val oneShot = keySet(ImageStream.keys.admittedUnder(rows, ImageStream.keys.stateOf(rows)))
     val streamed = keySet(ImageStream.storedImages(spark, table))
     assert(oneShot.nonEmpty && streamed == oneShot,
       "streamed image rows must equal the one-shot keeper set")
@@ -1415,7 +1454,7 @@ class StreamingSpec extends AnyFunSuite {
     addFile(b2, "b2.parquet"); run()          // RESTART: batch 1
     // fold identity through the REAL stream machinery
     val rows = AudioStream.audioRowsOf(docs)
-    val oneShot = keySet(AudioStream.admittedUnder(rows, AudioStream.keyOf(rows)))
+    val oneShot = keySet(AudioStream.keys.admittedUnder(rows, AudioStream.keys.stateOf(rows)))
     val streamed = keySet(AudioStream.storedAudio(spark, table))
     assert(oneShot.nonEmpty && streamed == oneShot,
       "streamed audio rows must equal the one-shot keeper set")
