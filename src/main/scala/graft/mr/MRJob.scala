@@ -1,7 +1,6 @@
 package graft.mr
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** One string key/value pair — the single datatype of the reference
   * engine's data plane (reference `mr/worker.go:19-22`). */
@@ -94,9 +93,8 @@ object MRJob {
   * The reference's input unit is an ENTIRE file: one S3 object = one map
   * task = one `(filename, contents)` record (`mr/coordinator.go:337-339`,
   * `mr/worker.go:127-132`). `spark.read.text` would silently line-split,
-  * so we use the binaryFile source (distributed listing + scan via
-  * FileSourceScanExec) and decode to UTF-8. Works for file://, s3a://,
-  * hdfs:// alike.
+  * so files are read whole through `wholeTextFiles`. Works for file://,
+  * s3a://, hdfs:// alike.
   */
 object WholeFiles {
   /** Default source: `wholeTextFiles` — unlike the binaryFile format it
@@ -107,17 +105,5 @@ object WholeFiles {
     spark.sparkContext.wholeTextFiles(pathGlob)
       .map { case (path, contents) => (path.split('/').last, contents) }
       .toDS()
-  }
-
-  /** DataFrame-native alternative via the binaryFile source (pure
-    * FileSourceScanExec listing/scan — preferable at large file counts)
-    * — but note it silently DROPS zero-byte files. */
-  def readBinary(spark: SparkSession, pathGlob: String): Dataset[(String, String)] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(
-        element_at(split(col("path"), "/"), -1).as("filename"),
-        col("content").cast("string").as("contents"))
-      .as[(String, String)]
   }
 }

@@ -89,8 +89,10 @@ object Dedup {
   /** Codegen pair generator over per-shingle posting lists: every
     * unordered {x, y} element pair of `ds` (distinct-element lists by
     * construction — the shingle stream is per-doc distinct) exactly
-    * once, as (da, db) = (least, greatest). Shared by the ngram and
-    * containment kernels (r17). */
+    * once, as (da, db) = (least, greatest). A posexplode picks each
+    * anchor position, slice takes the strict suffix, and a second
+    * explode emits the combination; [[sharedCounts]] counts over it
+    * (r17). */
   private[graft] def pairsOfLists(lists: DataFrame): DataFrame =
     lists
       .select(posexplode(col("ds")).as(Seq("i", "x")), col("ds"))
@@ -129,6 +131,241 @@ object Dedup {
     * collision canaries on every fixture. */
   private def gramId(c: Column): Column = xxhash64(c)
 
+  // ------------------------------------------------ exact-pair core
+  // The steps the pair joins below share, each written once. In
+  // V-SMART-Join terms every measure here is per-set terms (sizes),
+  // a per-pair term summed over shared grams (an intersection count)
+  // and a final formula (Jaccard, containment, the τ test).
+
+  /** Per-gram document frequency of a (doc_id, s) gram stream. */
+  private def dfOf(grams: DataFrame): DataFrame =
+    grams.groupBy(col("s")).agg(count(lit(1)).as("df"))
+
+  /** Per-doc set size of a per-doc-distinct (doc_id, s) gram stream. */
+  private def sizesOf(grams: DataFrame): DataFrame =
+    grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+
+  /** The grams of `sh` whose df (from [[dfOf]]) is at most [[MaxDf]].
+    * df FIRST, collect AFTER: count() partial-aggregates map-side, so a
+    * stop-shingle ("terms of service…" in 10⁸ docs) costs one long per
+    * partition before the filter drops it. The previous shape —
+    * collect_list then size() <= MaxDf — built the FULL posting list in
+    * one aggregation buffer before filtering: collect_list has no
+    * partial-combine cap, so a hot shingle materialized a df-length
+    * array in a single task (multi-GB at 100×). Now every collected
+    * list is ≤ MaxDf BY CONSTRUCTION (the semi-join admits only low-df
+    * shingles) — the DuckDB twins' keep/sh CTE shape. */
+  private def cappedOf(sh: DataFrame, dfs: DataFrame): DataFrame =
+    sh.join(dfs.where(col("df") <= MaxDf).select(col("s")), Seq("s"), "left_semi")
+
+  /** Shared-gram count `name` per unordered doc pair (da < db) over the
+    * posting lists of a df-capped gram stream. Pair generation stays
+    * whole-stage codegen ([[pairsOfLists]], r17): the typed flatMap it
+    * replaced paid an ExpressionEncoder round-trip per emitted pair, and
+    * the nested-transform HOF alternative stays rejected (r16:
+    * interpreted per element, ~3× slower on wide posting lists). Each
+    * pair is emitted ONCE (least, greatest): this count is the dominant
+    * aggregation — up to df² rows per shingle — and the measures are
+    * symmetric, so a caller that needs both directions recovers the
+    * second AFTER aggregation (emitting both here doubled the heaviest
+    * shuffle). */
+  private def sharedCounts(kept: DataFrame, name: String): DataFrame =
+    pairsOfLists(kept.groupBy(col("s")).agg(collect_list(col("doc_id")).as("ds")))
+      .groupBy(col("da"), col("db")).agg(count(lit(1)).as(name))
+
+  /** The distinct doc ids on either side of a (da, db) pair frame. */
+  private def pairDocs(pairs: DataFrame): DataFrame =
+    pairs.select(col("da").as("doc_id"))
+      .union(pairs.select(col("db").as("doc_id"))).distinct()
+
+  /** Jaccard as ONE IEEE division of exact integers (the oracle twins
+    * divide the same way, so it hash-checks as a double). */
+  private def jaccard(inter: Column, na: Column, nb: Column): Column =
+    inter.cast("double") / (na + nb - inter).cast("double")
+
+  /** EXACT-DUPLICATE CONTRACTION (r13): `(groups, reps)` — one row per
+    * distinct normalized text (`rep` = min doc_id, sorted `members`,
+    * `gsize`; persisted) and the docs of `docs` that are reps.
+    *
+    * The r13 100× rehearsal killed the uncontracted all-pairs join with
+    * disk exhaustion: on a duplicate-heavy corpus (the replica fixture
+    * is every doc ×100) the prefix candidate join explodes
+    * quadratically in duplicate-group size BEFORE the distinct (each
+    * identical copy contributes the same prefix grams), the verify then
+    * ships two doc-length gram arrays per exploded pair, and the recall
+    * eval's cap-free exact self-join measured 640 s with 638 GB of
+    * spill and a 385 s max task on the all-replica fixture. Every doc
+    * with the same NORMALIZED text has the same shingle set by
+    * construction ([[shinglesOf]] derives from `normalized`), so the
+    * pair machinery only needs one representative per distinct text:
+    * group on [[dedupExact]]'s key, run the join over reps, then expand
+    * the answer analytically ([[intraPairs]], [[fanOut]]) — intra-group
+    * pairs are exact duplicates (inter = na = nb, J = 1), cross-group
+    * pairs inherit their rep pair's exact counts. Output rows are
+    * BYTE-IDENTICAL to the uncontracted form (the gate hashes pin it);
+    * what changes is the shuffle: Σ|group|²·doclen of candidate/verify
+    * traffic becomes Σ|distinct-pairs|·doclen plus a generate-only
+    * expansion, so the wire cost no longer scales with duplication —
+    * only the answer itself does, which is irreducible for a LOSSLESS
+    * operator (the collapsed-corpus question is
+    * [[dedupAllpairsClean]]'s job). The member arrays are
+    * |group|-bounded; any group too large to hold as one array implies
+    * a |group|² output that is already impossible to emit.
+    *
+    * `groups` has up to four consumers (rep semi-join, intra expansion,
+    * cross ×2) and stays persisted past the caller's return: the
+    * harness releases it between gates via
+    * [[graft.Graft.releaseState]], and a library caller owns that
+    * release. */
+  private def contracted(docs: DataFrame): (DataFrame, DataFrame) = {
+    val groups = docs
+      .select(col("doc_id"), md5(normalized(col("text"))).as("fpx"))
+      .groupBy(col("fpx"))
+      .agg(min(col("doc_id")).as("rep"),
+        sort_array(collect_list(col("doc_id"))).as("members"),
+        count(lit(1)).as("gsize"))
+      .persist()
+    (groups, docs.join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"))
+  }
+
+  /** Intra-group leg of the contraction: every unordered member pair
+    * (da < db) of each multi-doc group, with its rep's set size `n`
+    * (both sides' size, and the intersection: the texts are equal).
+    * Joining `sizes` INNER keeps parity with the uncontracted form for
+    * shingle-less docs (< 3 normalized words): they never reach a pair
+    * join there, so their identical copies must not pair here either. */
+  private def intraPairs(groups: DataFrame, sizes: DataFrame): DataFrame =
+    groups.where(col("gsize") >= 2)
+      .join(sizes.select(col("doc_id").as("rep"), col("n")), Seq("rep"))
+      .select(col("n"), col("members"),
+        posexplode(col("members")).as(Seq("pos", "da")))
+      .select(col("da"), col("n"),
+        explode(expr("slice(members, pos + 2, size(members) - pos - 1)")).as("db"))
+
+  /** Cross-group leg of the contraction: each rep pair (da, db) of
+    * `pairs` fans out over da's members in `ga` × db's members in `gb`
+    * (identical texts ⇒ identical counts, so every other column of
+    * `pairs` carries over verbatim). Emits `(carried…, a, b)` with `a`
+    * bound to da's side; a self-join caller restores da < db itself. */
+  private def fanOut(pairs: DataFrame, ga: DataFrame, gb: DataFrame): DataFrame = {
+    val carry = pairs.columns.toSeq.filterNot(Set("da", "db")).map(col)
+    pairs
+      .join(ga.select(col("rep").as("da"), col("members").as("ma")), Seq("da"))
+      .join(gb.select(col("rep").as("db"), col("members").as("mb")), Seq("db"))
+      .select(carry :+ col("mb") :+ explode(col("ma")).as("a"): _*)
+      .select(carry :+ col("a") :+ explode(col("mb")).as("b"): _*)
+  }
+
+  /** PREFIX-FILTER candidates (AllPairs/PPJoin, see [[dedupAllpairs]])
+    * between the gram streams `dgA` and `dgB` under ONE total gram order
+    * (df asc, gram asc) counted over `census`; `pair` is any further
+    * pair predicate on the `a`/`b` sides (the self join's
+    * `a.doc_id < b.doc_id`; `lit(true)` between two tables, which the
+    * optimizer folds away). Emits distinct (da, db, na, nb), persisted:
+    * the candidate table feeds the doc-set semi-joins and the verify
+    * join; unpersisted, each re-runs the prefix join + distinct lineage
+    * — the r11 sf1 probe measured every stage cheap in isolation yet the
+    * composed query 2× slower than their sum. |pairs|×4 longs is the
+    * documented candidate budget, so the cut point is safe to cache;
+    * the harness releases it between gates ([[contracted]]'s contract).
+    *
+    * POSITIONAL filter (PPJoin's tightening of AllPairs): a match at
+    * prefix positions (i, j) leaves at most min(na−i, nb−j) further
+    * common grams, so the overlap can reach at most that + 1; prune
+    * when even the ceiling misses α = ⌈τ/(1+τ)·(na+nb)⌉, the minimum
+    * intersection any J ≥ τ pair must have (from J = α/(na+nb−α)).
+    * Integer form with τ = ppm/1e6: α = ⌈ppm·(na+nb)/(1e6+ppm)⌉.
+    *
+    * hint("merge"): the contraction (r13) makes BOTH sides of this join
+    * small and near-equal at fixture scale, and AQE's broadcast
+    * build-side pick then flips on byte-level size jitter — two
+    * semantically-identical renderings (BuildLeft/BuildRight with
+    * swapped children) that flap the plan fingerprint run to run
+    * (diffed 2026-08-16; isolated re-runs land on either). SMJ is the
+    * symmetric, deterministic strategy AND the 100 TB-correct one: on a
+    * distinct-heavy corpus the prefix tables are large and must never
+    * be broadcast; on a duplicate-heavy one both sides are tiny and SMJ
+    * costs the same few seconds. */
+  private def prefixCandidates(dgA: DataFrame, dgB: DataFrame, census: DataFrame,
+      pair: Column): DataFrame = {
+    val df = dfOf(census)
+    val byDoc = Window.partitionBy(col("doc_id"))
+    // p = n − ceil(τ·n) + 1 in pure integer math (τ = 0.6 ⇒ ⌈3n/5⌉;
+    // `div`, not `/` — Column `/` is IEEE division)
+    def prefixOf(dg: DataFrame): DataFrame = dg.join(df, "s")
+      .withColumn("rnk", row_number().over(byDoc.orderBy(col("df"), col("s"))))
+      .withColumn("n", count(lit(1)).over(byDoc))
+      .where(col("rnk") <= expr("n - ((n * 3 + 4) div 5) + 1"))
+      .select(col("s"), col("doc_id"), col("n"), col("rnk"))
+    prefixOf(dgA).as("a")
+      .join(prefixOf(dgB).as("b").hint("merge"), col("a.s") === col("b.s") && pair)
+      .where(lit(AllPairsTauPpm) * greatest(col("a.n"), col("b.n")) <=
+        lit(1000000L) * least(col("a.n"), col("b.n")))
+      .where(expr(s"1 + least(a.n - a.rnk, b.n - b.rnk) >= " +
+        s"($AllPairsTauPpm * (a.n + b.n) + ${1000000L + AllPairsTauPpm} - 1) " +
+        s"div ${1000000L + AllPairsTauPpm}"))
+      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
+        col("a.n").as("na"), col("b.n").as("nb"))
+      .distinct()
+      .persist()
+  }
+
+  /** Each doc of `ids`' grams from `grams`, packed into one SORTED
+    * array `ss` of 8-byte gram ids (doc-length-bounded collect_list
+    * buffers; r15 — the [[gramId]] collision contract): sorted once
+    * per doc, merged in-task by [[graft.functions.IntersectSizeSorted]]
+    * for every pair the doc appears in. */
+  private def packedSets(grams: DataFrame, ids: DataFrame): DataFrame =
+    grams.join(ids, Seq("doc_id"), "left_semi")
+      .groupBy(col("doc_id")).agg(sort_array(collect_list(gramId(col("s")))).as("ss"))
+
+  /** Exact verify of candidate pairs (da, db, na, nb) by the packed-array
+    * merge: da's array from `setsA`, db's from `setsB`
+    * ([[packedSets]]), the τ test on integers, and the exact
+    * (da, db, inter, na, nb, j_ppm) of every qualifying pair. The r10
+    * exploded form (pair × per-gram rows through a shuffle, then a
+    * pair-keyed count exchange) put Σ_pairs na rows on the wire and
+    * burned 86% of the sf1 wall in its sort; the r14e StageProbe then
+    * priced the string-array form's 5.0 GB pairs+arrays exchange at 985
+    * task-seconds on the distinct-heavy 100× fixture, which gram ids
+    * cut ~4×. `size(array_intersect)` would materialize the
+    * intersection array per pair just to read its length — at 7M
+    * candidate pairs that allocation was itself the next bottleneck
+    * (419 s of stage CPU); the codegen merge allocates nothing. na/nb
+    * ride through, so there is no re-join with the candidates after. */
+  private def verified(cand: DataFrame, setsA: DataFrame, setsB: DataFrame): DataFrame = {
+    graft.functions.IntersectSizeSorted.register(cand.sparkSession)
+    cand
+      .join(setsA.select(col("doc_id").as("da"), col("ss").as("ssa")), Seq("da"))
+      .join(setsB.select(col("doc_id").as("db"), col("ss").as("ssb")), Seq("db"))
+      .select(col("da"), col("db"), col("na"), col("nb"),
+        expr("intersect_size_sorted(ssa, ssb)").as("inter"))
+      .where(lit(1000000L) * col("inter") >=
+        lit(AllPairsTauPpm) * (col("na") + col("nb") - col("inter")))
+      .select(col("da"), col("db"), col("inter"), col("na"), col("nb"),
+        expr("1000000 * inter div (na + nb - inter)").as("j_ppm"))
+  }
+
+  /** The containment verdict over measured pairs `m` (ids `a`, `b`,
+    * full set sizes `na`, `nb`, exact intersection `inter`):
+    * containment = inter / min(na, nb) and Jaccard, each ONE IEEE
+    * division of exact integers; pairs at or above [[ContainT]] only,
+    * with `contained_id` (the smaller side; id tie-break) and
+    * `jaccard_missed` (the pairs only the containment lens catches). */
+  private def containmentVerdict(m: DataFrame, a: String, b: String,
+      na: String, nb: String): DataFrame =
+    m.select(col(a), col(b), col(na), col(nb), col("inter").as("n_common"),
+        (col("inter").cast("double") / least(col(na), col(nb)).cast("double"))
+          .as("containment"),
+        jaccard(col("inter"), col(na), col(nb)).as("jaccard"))
+      .where(col("containment") >= lit(ContainT))
+      .select(col(a), col(b), col(na), col(nb), col("n_common"),
+        col("containment"), col("jaccard"),
+        when(col(na) < col(nb), col(a))
+          .when(col(nb) < col(na), col(b))
+          .otherwise(least(col(a), col(b))).as("contained_id"),
+        (col("jaccard") < lit(CcThreshold)).cast("int").as("jaccard_missed"))
+
   /** Plan-shape note: the df-kept shingle stream (`kept`) feeds both the
     * posting lists and the per-doc sizes; its two child exchanges (the
     * shingle stream and the kept-key set, both hashed on s) are shared
@@ -141,47 +378,15 @@ object Dedup {
     * subtree-duplicating union. */
   def dedupNgram(s: SparkSession, dir: String): DataFrame = {
     val sh = shingles(s, dir)
-    // df FIRST, collect AFTER: count() partial-aggregates map-side, so a
-    // stop-shingle ("terms of service…" in 10⁸ docs) costs one long per
-    // partition before the filter drops it. The previous shape —
-    // collect_list then size() <= MaxDf — built the FULL posting list in
-    // one aggregation buffer before filtering: collect_list has no
-    // partial-combine cap, so a hot shingle materialized a df-length
-    // array in a single task (multi-GB at 100×). Now every collected
-    // list is ≤ MaxDf BY CONSTRUCTION (the semi-join admits only low-df
-    // shingles) — the DuckDB twin's keep/sh CTE shape.
-    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .where(col("df") <= MaxDf).select(col("s"))
-    val kept = sh.join(keep, Seq("s"), "left_semi")
-    val lists = kept.groupBy(col("s")).agg(collect_list(col("doc_id")).as("ds"))
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter =
-      // pair generation stays whole-stage-codegen (r17, guide §4): a
-      // posexplode picks each anchor position, slice takes the strict
-      // suffix, and a second explode emits the combination — every
-      // unordered pair {x, y} of the (distinct-element) posting list
-      // exactly once, ordered by least/greatest exactly like the old
-      // typed flatMap's x < y guard. The flatMap paid an
-      // ExpressionEncoder round-trip per emitted pair
-      // (deserialize Seq[Long], emit Tuple2s, SerializeFromObject);
-      // the nested-transform HOF alternative stays rejected (r16:
-      // interpreted per element, ~3× slower on wide posting lists).
-      // Emit each pair ONCE (least, greatest): the (da, db)
-      // intersection count is the dominant aggregation — up to df²
-      // rows per shingle — and Jaccard is symmetric, so the second
-      // direction is recovered AFTER aggregation from the tiny j table
-      // (the same one-explode post-aggregation symmetrize dedupMinhash
-      // uses; emitting both directions here doubled the heaviest
-      // shuffle)
-      pairsOfLists(lists)
-        .groupBy(col("da"), col("db"))
-        .agg(count(lit(1)).as("inter"))
+    val kept = cappedOf(sh, dfOf(sh))
+    val sizes = sizesOf(kept)
+    val inter = sharedCounts(kept, "inter")
     val jHalf = inter
       .join(sizes.as("sa"), col("da") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("db") === col("sb.doc_id"))
-      .select(col("da"), col("db"),
-        (col("inter").cast("double") /
-          (col("sa.n") + col("sb.n") - col("inter")).cast("double")).as("j"))
+      .select(col("da"), col("db"), jaccard(col("inter"), col("sa.n"), col("sb.n")).as("j"))
+    // the second direction, from the tiny j table (the same one-explode
+    // post-aggregation symmetrize dedupMinhash uses)
     val j = jHalf.select(explode(array(
         struct(col("da"), col("db"), col("j")),
         struct(col("db").as("da"), col("da").as("db"), col("j")))).as("r"))
@@ -686,48 +891,31 @@ object Dedup {
     * pipeline already runs; restricting it to sample×sample pairs is
     * a post-banding filter.
     *
-    * @note persist ownership as in [[allpairsOver]]: the returned plan
+    * @note persist ownership as in [[contracted]]: the returned plan
     *       pins a persisted intermediate (the contraction groups
     *       frame). The harness releases it between gates via
     *       [[graft.Graft.releaseState]]; a library caller owns that
     *       release — call `Graft.releaseState(spark)` (or
     *       `spark.catalog.clearCache()`) after consuming the result. */
   def dedupRecallEval(s: SparkSession, dir: String): DataFrame = {
-    // exact-duplicate contraction on the truth side (r13): the sampled
-    // exact self-join is DELIBERATELY df-cap-free (measuring over
-    // capped sets is what the eval exists to avoid — the r12 A/B that
-    // rejected the packed-array rewrite stands), but cap-free must not
-    // mean duplication-quadratic on the wire: the r13 100× sweep
-    // measured the exploded form at 640 s with 638 GB of spill and a
-    // 385 s max task on the all-replica fixture. Equal normalized
-    // texts have equal shingle sets, so the exact-Jaccard machinery
-    // runs over one rep per distinct sampled text and the true pair
-    // set is re-expanded analytically — intra-group pairs at Jaccard
-    // exactly 1.0 (always ≥ RecallThresh; suppressed for shingle-less
-    // reps, which the self-join never paired either), cross-group
-    // pairs inheriting their rep pair's exact n_a/n_b/jaccard. Rows
-    // are byte-identical to the exploded form (gate-hash-pinned);
-    // NOTHING is capped — every true pair is still emitted and judged
-    // against the production banding.
+    // [[contracted]] on the truth side: the sampled exact self-join is
+    // DELIBERATELY df-cap-free (measuring over capped sets is what the
+    // eval exists to avoid — the r12 A/B that rejected the packed-array
+    // rewrite stands), but cap-free must not mean
+    // duplication-quadratic on the wire. Intra-group pairs sit at
+    // Jaccard exactly 1.0 (always ≥ RecallThresh); NOTHING is capped —
+    // every true pair is still emitted and judged against the
+    // production banding.
     val docs = Tables.documents(s, dir)
       .where(col("doc_id") % RecallSampleMod === 0)
-    val groups = docs
-      .select(col("doc_id"), md5(normalized(col("text"))).as("fpx"))
-      .groupBy(col("fpx"))
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"),
-        count(lit(1)).as("gsize"))
-      // FOUR consumers (rep semi-join, intra expansion, cross ×2);
-      // released by the harness sweep — see the @note above
-      .persist()
-    val sh = shinglesOf(docs.join(
-      groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // hint("merge"): identical-sides self-join — the same AQE build-side
-    // jitter class pinned on allpairsOver/allpairsVs (r13/r14); SMJ is
-    // deterministic and the only correct strategy when the sampled
-    // shingle table is large (it must never be broadcast at corpus
-    // scale; the sample bound caps rows, not bytes-per-shingle).
+    val (groups, reps) = contracted(docs)
+    val sh = shinglesOf(reps)
+    val sizes = sizesOf(sh)
+    // hint("merge"): identical-sides self-join, the build-side jitter
+    // class [[prefixCandidates]] explains; SMJ is also the only correct
+    // strategy when the sampled shingle table is large (it must never
+    // be broadcast at corpus scale; the sample bound caps rows, not
+    // bytes-per-shingle).
     val inter = sh.as("a")
       .join(sh.as("b").hint("merge"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -737,24 +925,12 @@ object Dedup {
       .join(sizes.as("sa"), col("da") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("db") === col("sb.doc_id"))
       .select(col("da"), col("db"), col("sa.n").as("n_a"), col("sb.n").as("n_b"),
-        (col("inter").cast("double") /
-          (col("sa.n") + col("sb.n") - col("inter")).cast("double")).as("jaccard"))
+        jaccard(col("inter"), col("sa.n"), col("sb.n")).as("jaccard"))
       .where(col("jaccard") >= lit(RecallThresh))
-    val intra = groups.where(col("gsize") >= 2)
-      .join(sizes.select(col("doc_id").as("rep"), col("n")), Seq("rep"))
-      .select(col("n"), col("members"),
-        posexplode(col("members")).as(Seq("pos", "da")))
-      .select(col("da"), col("n"),
-        explode(expr("slice(members, pos + 2, size(members) - pos - 1)")).as("db"))
+    val intra = intraPairs(groups, sizes)
       .select(col("da"), col("db"), col("n").as("n_a"), col("n").as("n_b"),
         lit(1.0).as("jaccard"))
-    val cross = truthRep
-      .join(groups.select(col("rep").as("da"), col("members").as("ma")), Seq("da"))
-      .join(groups.select(col("rep").as("db"), col("members").as("mb")), Seq("db"))
-      .select(col("n_a"), col("n_b"), col("jaccard"),
-        col("mb"), explode(col("ma")).as("a"))
-      .select(col("n_a"), col("n_b"), col("jaccard"), col("a"),
-        explode(col("mb")).as("b"))
+    val cross = fanOut(truthRep, groups, groups)
       .select(least(col("a"), col("b")).as("da"),
         greatest(col("a"), col("b")).as("db"),
         when(col("a") < col("b"), col("n_a")).otherwise(col("n_b")).as("n_a"),
@@ -1498,28 +1674,23 @@ object Dedup {
     // bounded.
     val cand = est.where(col("est_j") >= CcThreshold)
     val sh = shingles(s, dir)
-    val candDocs = cand.select(col("da").as("doc_id"))
-      .union(cand.select(col("db").as("doc_id"))).distinct()
     // shingle rows for candidate docs only — at 100 TB the semi-join
     // prunes the corpus-wide shingle stream down to the verify set
-    val shc = sh.join(candDocs, Seq("doc_id"), "semi")
-    val sizes = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val shc = sh.join(pairDocs(cand), Seq("doc_id"), "semi")
+    val sizes = sizesOf(shc)
     val inter = cand.select(col("da"), col("db"))
       .join(shc.as("a"), col("da") === col("a.doc_id"))
       .join(shc.as("b"), col("db") === col("b.doc_id") && col("a.s") === col("b.s"))
       .groupBy(col("da"), col("db")).agg(count(lit(1)).as("inter"))
+    val common = coalesce(col("inter"), lit(0L))
     cand
       .join(sizes.as("sa"), col("da") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("db") === col("sb.doc_id"))
       .join(inter, Seq("da", "db"), "left")
-      .select(col("da"), col("db"), col("est_j"),
-        coalesce(col("inter"), lit(0L)).as("n_common"),
-        (coalesce(col("inter"), lit(0L)).cast("double") /
-          (col("sa.n") + col("sb.n") - coalesce(col("inter"), lit(0L))).cast("double"))
-          .as("jaccard"),
-        (coalesce(col("inter"), lit(0L)).cast("double") /
-          (col("sa.n") + col("sb.n") - coalesce(col("inter"), lit(0L))).cast("double")
-          >= lit(CcThreshold)).cast("int").as("is_dup"))
+      .select(col("da"), col("db"), col("est_j"), common.as("n_common"),
+        jaccard(common, col("sa.n"), col("sb.n")).as("jaccard"),
+        (jaccard(common, col("sa.n"), col("sb.n")) >= lit(CcThreshold))
+          .cast("int").as("is_dup"))
   }
 
   val dedupNgramVerifySql: String =
@@ -1603,13 +1774,7 @@ object Dedup {
   def containmentOver(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val sh = shinglesOf(docs)
-    // df-count → filter → semi-join → collect: same build order as
-    // [[dedupNgram]] (see the scale note there) — no posting list longer
-    // than MaxDf ever reaches an aggregation buffer.
-    val dfs = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val keep = dfs.where(col("df") <= MaxDf).select(col("s"))
-    val lists = sh.join(keep, Seq("s"), "left_semi")
-      .groupBy(col("s")).agg(collect_list(col("doc_id")).as("ds"))
+    val dfs = dfOf(sh)
     // KEPT/DROPPED INTERSECTION DECOMPOSITION (r14). The full-set
     // measure splits exactly along the df cap that already generates
     // candidates: every shingle is kept (df ≤ MaxDf) or dropped, so
@@ -1630,21 +1795,17 @@ object Dedup {
     // disk exhaustion (containment_incr limped through at 98 GB of
     // spill). Outputs are byte-identical: the split is a disjoint
     // partition of each doc's shingle set.
-    val candKept = pairsOfLists(lists) // codegen pair gen (r17, see dedupNgram)
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("inter_kept"))
+    val candKept = sharedCounts(cappedOf(sh, dfs), "inter_kept")
       // three consumers (candDocs via both unions + the measure row);
       // released by the harness releaseState contract like every other
       // dedup cut point
       .persist()
-    val candDocs = candKept.select(col("da").as("doc_id"))
-      .union(candKept.select(col("db").as("doc_id"))).distinct()
+    val candDocs = pairDocs(candKept)
     // full per-doc set sizes WITHOUT the arrays (sh is per-doc distinct)
-    val sizes = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).cast("long").as("n"))
+    val sizes = sizesOf(sh.join(candDocs, Seq("doc_id"), "left_semi"))
     graft.functions.IntersectSizeSorted.register(docs.sparkSession)
-    // dropped sets ride 8-byte gram ids, not strings (r15 — [[gramId]]
-    // collision contract); stop-shingle-sized arrays, so the win here
-    // is the compare loop more than the wire.
+    // dropped sets are stop-shingle-sized arrays, so the gram-id win
+    // here is the compare loop more than the wire.
     // SPLIT twins kept DELIBERATELY (r17 W13/W15, measured): fusing
     // this pass with `sizes` (count + null-skipping collect_list in
     // one groupBy, the shape containmentVs ships) was measured ×0.75
@@ -1657,10 +1818,8 @@ object Dedup {
     // a per-side dfN+dfO re-derivation and measured ×2 in an
     // alternating FSSF series — the pattern pays only where it removes
     // MORE than it moves onto the object-agg path.
-    val droppedSets = sh
-      .join(dfs.where(col("df") > MaxDf).select(col("s")), Seq("s"), "left_semi")
-      .join(candDocs, Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id")).agg(sort_array(collect_list(gramId(col("s")))).as("ss"))
+    val droppedSets = packedSets(
+      sh.join(dfs.where(col("df") > MaxDf).select(col("s")), Seq("s"), "left_semi"), candDocs)
     val inter = candKept
       .join(sizes.select(col("doc_id").as("da"), col("n").as("n_a")), Seq("da"))
       .join(sizes.select(col("doc_id").as("db"), col("n").as("n_b")), Seq("db"))
@@ -1670,20 +1829,7 @@ object Dedup {
         (col("inter_kept") +
           when(col("ssa").isNull || col("ssb").isNull, lit(0L))
             .otherwise(expr("intersect_size_sorted(ssa, ssb)"))).as("inter"))
-    inter
-      .select(col("da"), col("db"),
-        col("n_a"), col("n_b"), col("inter").as("n_common"),
-        (col("inter").cast("double") / least(col("n_a"), col("n_b")).cast("double"))
-          .as("containment"),
-        (col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")).cast("double")).as("jaccard"))
-      .where(col("containment") >= lit(ContainT))
-      .select(col("da"), col("db"), col("n_a"), col("n_b"), col("n_common"),
-        col("containment"), col("jaccard"),
-        when(col("n_a") < col("n_b"), col("da"))
-          .when(col("n_b") < col("n_a"), col("db"))
-          .otherwise(least(col("da"), col("db"))).as("contained_id"),
-        (col("jaccard") < lit(CcThreshold)).cast("int").as("jaccard_missed"))
+    containmentVerdict(inter, "da", "db", "n_a", "n_b")
   }
 
   /** Same inverted index, intersections, and single-division measures
@@ -1820,7 +1966,7 @@ object Dedup {
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).cast("long").as("n"),
           sort_array(collect_list(when(col("isd"), gramId(col("s"))))).as("ss"))
-    candKept
+    val inter = candKept
       .join(setsOf(shN, candN).select(col("doc_id").as("new_id"),
         col("n").as("n_new"), col("ss").as("ssa")), Seq("new_id"))
       .join(setsOf(shO, candO).select(col("doc_id").as("old_id"),
@@ -1828,20 +1974,7 @@ object Dedup {
       .select(col("new_id"), col("old_id"), col("n_new"), col("n_old"),
         (col("inter_kept") +
           expr("intersect_size_sorted(ssa, ssb)")).as("inter"))
-      .select(col("new_id"), col("old_id"),
-        col("n_new"), col("n_old"),
-        col("inter").as("n_common"),
-        (col("inter").cast("double") / least(col("n_new"), col("n_old")).cast("double"))
-          .as("containment"),
-        (col("inter").cast("double") /
-          (col("n_new") + col("n_old") - col("inter")).cast("double")).as("jaccard"))
-      .where(col("containment") >= lit(ContainT))
-      .select(col("new_id"), col("old_id"), col("n_new"), col("n_old"),
-        col("n_common"), col("containment"), col("jaccard"),
-        when(col("n_new") < col("n_old"), col("new_id"))
-          .when(col("n_old") < col("n_new"), col("old_id"))
-          .otherwise(least(col("new_id"), col("old_id"))).as("contained_id"),
-        (col("jaccard") < lit(CcThreshold)).cast("int").as("jaccard_missed"))
+    containmentVerdict(inter, "new_id", "old_id", "n_new", "n_old")
   }
 
   /** Gate: the [[dedupMinhashIncr]] split (batch = doc_id ≡ 1 mod 3)
@@ -2235,176 +2368,39 @@ object Dedup {
     * join itself at 1.6 s against a 100×-duplicate-structure fixture —
     * a salted two-path variant was built, measured as pure overhead,
     * and removed: measure, don't guess). The stage that DOES dominate
-    * on duplicate-heavy data is the exact verify — the r10 exploded
-    * form (pair × per-gram rows through a shuffle, then a pair-keyed
-    * count exchange) put Σ_pairs na rows on the wire and burned 86% of
-    * the sf1 wall in its sort. It now rides the [[containmentOver]]
-    * packed-array discipline instead: candidate docs' FULL gram sets
-    * collect once into SORTED per-doc arrays (doc-length-bounded
-    * buffers), each qualifying pair carries two packed arrays, and the
-    * intersection is the zero-allocation codegen merge
-    * [[graft.functions.IntersectSizeSorted]] (`size(array_intersect)`
-    * materializes the intersection array per pair just to read its
-    * length — at 7M candidate pairs that allocation was itself the
-    * next bottleneck, 419 s of stage CPU). Same candidates ×
-    * doc-length work, off the wire and out of the allocator: sf1
-    * measured 41.7 → 8.0 s wall, max task 36 → 4.5 s. Output: one row
-    * per qualifying unordered pair (da < db) with exact
+    * on duplicate-heavy data is the exact verify, which runs the
+    * packed-array merge ([[verified]]): same candidates × doc-length
+    * work as the exploded form, off the wire and out of the allocator
+    * (sf1 measured 41.7 → 8.0 s wall, max task 36 → 4.5 s). Output:
+    * one row per qualifying unordered pair (da < db) with exact
     * inter/sizes/j_ppm. */
   def dedupAllpairs(s: SparkSession, dir: String): DataFrame =
     allpairsOver(Tables.documents(s, dir))
 
   /** The exact join over any documents-shaped (doc_id, text) frame.
     *
-    * @note the returned frame's plan pins a PERSISTED intermediate (the
-    *       packed per-doc gram arrays feed both the prefix candidates
-    *       and the verify join). The harness releases it between gates
+    * @note the returned frame's plan pins PERSISTED intermediates (the
+    *       [[contracted]] groups and the [[prefixCandidates]] table).
+    *       The harness releases them between gates
     *       via [[graft.Graft.releaseState]]; a direct library caller
     *       owns that release — call `Graft.releaseState(spark)` (or
     *       `spark.catalog.clearCache()`) after consuming the result, or
     *       |docs|-sized cache blocks accumulate across calls. */
   private[graft] def allpairsOver(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // ---- EXACT-DUPLICATE CONTRACTION (r13) ----------------------------
-    // The r13 100× rehearsal killed the uncontracted form with disk
-    // exhaustion: on a duplicate-heavy corpus (the replica fixture is
-    // every doc ×100) the prefix candidate join explodes quadratically
-    // in duplicate-group size BEFORE the distinct (each identical copy
-    // contributes the same prefix grams), and the verify then ships two
-    // doc-length gram arrays per exploded pair. Every doc with the same
-    // NORMALIZED text has the same shingle set by construction
-    // ([[shinglesOf]] derives from `normalized`), so the Jaccard
-    // machinery only needs one representative per distinct text: group
-    // on [[dedupExact]]'s key, run prefix+verify over reps, then expand
-    // the lossless answer analytically — intra-group pairs are exact
-    // duplicates (inter = na = nb, J = 1), cross-group pairs inherit
-    // their rep pair's exact counts. Output rows are BYTE-IDENTICAL to
-    // the uncontracted form (the gate hash pins it); what changes is
-    // the shuffle: Σ|group|²·doclen of candidate/verify traffic becomes
-    // Σ|distinct-pairs|·doclen plus a generate-only expansion, so the
-    // wire cost no longer scales with duplication — only the answer
-    // itself does, which is irreducible for a LOSSLESS operator (the
-    // collapsed-corpus question is [[dedupAllpairsClean]]'s job).
-    // The member arrays are |group|-bounded; any group too large to
-    // hold as one array implies a |group|² output that is already
-    // impossible to emit, so the bound is dominated by the answer.
-    val groups = docs
-      .select(col("doc_id"), md5(normalized(col("text"))).as("fpx"))
-      .groupBy(col("fpx"))
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"),
-        count(lit(1)).as("gsize"))
-      // four consumers (rep semi-join, intra expansion, cross ×2) —
-      // same release contract as `cand` below
-      .persist()
-    val repDocs = docs.join(
-      groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-
+    val (groups, repDocs) = contracted(docs)
     val dg = shinglesOf(repDocs)
-    val df = dg.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val ranked = dg.join(df, "s")
-      .withColumn("rnk", row_number().over(byDoc.orderBy(col("df"), col("s"))))
-      .withColumn("n", count(lit(1)).over(byDoc))
-    // p = n − ceil(τ·n) + 1 in pure integer math (τ = 0.6 ⇒ ⌈3n/5⌉;
-    // `div`, not `/` — Column `/` is IEEE division)
-    val prefix = ranked
-      .where(col("rnk") <= expr("n - ((n * 3 + 4) div 5) + 1"))
-      .select(col("s"), col("doc_id"), col("n"), col("rnk"))
-    // POSITIONAL filter (PPJoin's tightening of AllPairs): a match at
-    // prefix positions (i, j) leaves at most min(na−i, nb−j) further
-    // common grams, so the overlap can reach at most that + 1; prune
-    // when even the ceiling misses α = ⌈τ/(1+τ)·(na+nb)⌉, the minimum
-    // intersection any J ≥ τ pair must have (from J = α/(na+nb−α)).
-    // Integer form with τ = ppm/1e6: α = ⌈ppm·(na+nb)/(1e6+ppm)⌉.
-    // hint("merge"): the contraction (r13) made BOTH sides of this
-    // self-join small and near-equal at fixture scale, and AQE's
-    // broadcast build-side pick then flips on byte-level size jitter —
-    // two semantically-identical renderings (BuildLeft/BuildRight with
-    // swapped children) that flap the plan fingerprint run to run
-    // (diffed 2026-08-16; isolated re-runs land on either). SMJ is the
-    // symmetric, deterministic strategy AND the 100 TB-correct one: on
-    // a distinct-heavy corpus the prefix table is large and must never
-    // be broadcast; on a duplicate-heavy one both sides are tiny and
-    // SMJ costs the same few seconds.
-    val cand = prefix.as("a")
-      .join(prefix.as("b").hint("merge"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .where(lit(AllPairsTauPpm) * greatest(col("a.n"), col("b.n")) <=
-        lit(1000000L) * least(col("a.n"), col("b.n")))
-      .where(expr(s"1 + least(a.n - a.rnk, b.n - b.rnk) >= " +
-        s"($AllPairsTauPpm * (a.n + b.n) + ${1000000L + AllPairsTauPpm} - 1) " +
-        s"div ${1000000L + AllPairsTauPpm}"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        col("a.n").as("na"), col("b.n").as("nb"))
-      .distinct()
-      // the candidate table feeds TWO consumers (the doc-set semi-join
-      // and the verify join); unpersisted, each re-runs the 36M-row
-      // prefix join + distinct lineage — the r11 sf1 probe measured
-      // every stage cheap in isolation yet the composed query 2×
-      // slower than their sum. |pairs|×4 longs is the documented
-      // candidate budget, so the cut point is safe to cache. RELEASE
-      // CONTRACT: the terminal action runs in the caller, so the cache
-      // outlives this function — every harness (Bench/Verify/
-      // ScaleRehearsal) clearCache()s between queries; a library
-      // caller embedding this in a long-lived session owns that sweep.
-      .persist()
-    // exact verify, candidate-bounded and OFF THE WIRE: candidate docs'
-    // full gram sets packed once into SORTED per-doc arrays (doc-length-
-    // bounded collect_list buffers, the containmentOver discipline) of
-    // 8-BYTE GRAM IDS, not strings (r15 — [[gramId]] collision
-    // contract; the r14e StageProbe priced the verify stage's 5.0 GB
-    // pairs+string-array exchange at 985 task-seconds on the
-    // distinct-heavy 100× fixture, and ids cut the array bytes ~4×
-    // and the merge compare to Long.compare). Every qualifying pair
-    // carries two arrays, intersection in-task by the zero-allocation
-    // codegen merge ([[graft.functions.IntersectSizeSorted]]'s long
-    // arm — sort once per doc, amortized over every pair the doc
-    // appears in); na/nb ride through, so no re-join with cand
-    // afterwards
-    graft.functions.IntersectSizeSorted.register(docs.sparkSession)
-    val candDocs = cand.select(col("da").as("doc_id"))
-      .union(cand.select(col("db").as("doc_id"))).distinct()
-    val docSets = dg.join(candDocs, Seq("doc_id"), "semi")
-      .groupBy(col("doc_id")).agg(sort_array(collect_list(gramId(col("s")))).as("ss"))
-    val repPairs = cand
-      .join(docSets.select(col("doc_id").as("da"), col("ss").as("ssa")), Seq("da"))
-      .join(docSets.select(col("doc_id").as("db"), col("ss").as("ssb")), Seq("db"))
-      .select(col("da"), col("db"), col("na"), col("nb"),
-        expr("intersect_size_sorted(ssa, ssb)").as("inter"))
-      .where(lit(1000000L) * col("inter") >=
-        lit(AllPairsTauPpm) * (col("na") + col("nb") - col("inter")))
-      .select(col("da"), col("db"), col("inter"), col("na"), col("nb"),
-        expr("1000000 * inter div (na + nb - inter)").as("j_ppm"))
-
-    // ---- analytic expansion back to the lossless answer ---------------
-    // intra-group: every unordered member pair of a multi-doc group is
-    // an exact duplicate (inter = na = nb = |shingle set|, J exactly
-    // 10⁶). Joining the rep's shingle COUNT inner keeps parity with the
-    // uncontracted form for shingle-less docs (< 3 normalized words):
-    // they never reach the candidate join there, so their identical
-    // copies must not pair here either.
-    val nOf = dg.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val intra = groups.where(col("gsize") >= 2)
-      .join(nOf.select(col("doc_id").as("rep"), col("n")), Seq("rep"))
-      .select(col("n"), col("members"),
-        posexplode(col("members")).as(Seq("pos", "da")))
-      .select(col("da"), col("n"),
-        explode(expr("slice(members, pos + 2, size(members) - pos - 1)")).as("db"))
+    val cand = prefixCandidates(dg, dg, dg, col("a.doc_id") < col("b.doc_id"))
+    val docSets = packedSets(dg, pairDocs(cand))
+    val repPairs = verified(cand, docSets, docSets)
+    // analytic expansion back to the lossless answer: intra-group pairs
+    // at inter = na = nb = |shingle set|, J exactly 10⁶; cross-group
+    // pairs restore da < db per expanded pair, swapping na/nb with it
+    // since na is bound to da's side
+    val intra = intraPairs(groups, sizesOf(dg))
       .select(col("da"), col("db"), col("n").as("inter"),
         col("n").as("na"), col("n").as("nb"),
         lit(1000000L).as("j_ppm"))
-    // cross-group: each qualifying rep pair fans out over both member
-    // sets (identical texts ⇒ identical counts, so inter/na/nb/j carry
-    // over verbatim); da < db is restored per expanded pair, swapping
-    // na/nb with it since na is bound to da's side.
-    val cross = repPairs
-      .join(groups.select(col("rep").as("da"), col("members").as("ma")), Seq("da"))
-      .join(groups.select(col("rep").as("db"), col("members").as("mb")), Seq("db"))
-      .select(col("inter"), col("na"), col("nb"), col("j_ppm"),
-        col("mb"), explode(col("ma")).as("a"))
-      .select(col("inter"), col("na"), col("nb"), col("j_ppm"), col("a"),
-        explode(col("mb")).as("b"))
+    val cross = fanOut(repPairs, groups, groups)
       .select(least(col("a"), col("b")).as("da"),
         greatest(col("a"), col("b")).as("db"),
         col("inter"),
@@ -2434,88 +2430,25 @@ object Dedup {
   /** Two-table exact join core: qualifying (batch doc, snapshot doc)
     * pairs only.
     *
-    * @note persist ownership as in [[allpairsOver]]: the returned plan
+    * @note persist ownership as in [[contracted]]: the returned plan
     *       pins a persisted intermediate; library callers must
     *       `Graft.releaseState(spark)` after consuming the result. */
   private[graft] def allpairsVs(batch: DataFrame, snapshot: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // exact-duplicate contraction per side, the [[allpairsOver]] r13
-    // discipline: the τ-machinery runs over one representative per
-    // distinct normalized text on each side, and the lossless
-    // batch×snapshot answer is re-expanded analytically afterwards
-    // (identical texts ⇒ identical shingle sets ⇒ the rep pair's exact
-    // inter/na/nb/j transfer verbatim to every member pair). No
-    // intra-group leg here — batch-internal pairs are dedupAllpairs's
-    // job, and a batch member and a snapshot member with the SAME text
-    // pair through their reps' J = 1 rep pair, never analytically.
-    def groupsOf(side: DataFrame) = side
-      .select(col("doc_id"), md5(normalized(col("text"))).as("fpx"))
-      .groupBy(col("fpx"))
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-      .persist()
-    val gB = groupsOf(batch)
-    val gS = groupsOf(snapshot)
-    val dgB = shinglesOf(batch.join(
-      gB.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"))
-    val dgS = shinglesOf(snapshot.join(
-      gS.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"))
-    val df = dgB.unionByName(dgS)
-      .groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    def prefixOf(dg: DataFrame): DataFrame = dg.join(df, "s")
-      .withColumn("rnk", row_number().over(byDoc.orderBy(col("df"), col("s"))))
-      .withColumn("n", count(lit(1)).over(byDoc))
-      .where(col("rnk") <= expr("n - ((n * 3 + 4) div 5) + 1"))
-      .select(col("s"), col("doc_id"), col("n"), col("rnk"))
-    // hint("merge"): same AQE build-side jitter class as allpairsOver's
-    // pinned prefix self-join (r13) — the contraction leaves two small,
-    // near-equal prefix tables at fixture scale, and the broadcast
-    // build-side pick flips on byte-level size jitter, flapping the
-    // plan fingerprint. SMJ is deterministic AND the 100 TB-correct
-    // strategy: a distinct-heavy corpus's prefix tables must never be
-    // broadcast. Pinned proactively per the r13 verdict.
-    val cand = prefixOf(dgB).as("a")
-      .join(prefixOf(dgS).as("b").hint("merge"), col("a.s") === col("b.s"))
-      .where(lit(AllPairsTauPpm) * greatest(col("a.n"), col("b.n")) <=
-        lit(1000000L) * least(col("a.n"), col("b.n")))
-      .where(expr(s"1 + least(a.n - a.rnk, b.n - b.rnk) >= " +
-        s"($AllPairsTauPpm * (a.n + b.n) + ${1000000L + AllPairsTauPpm} - 1) " +
-        s"div ${1000000L + AllPairsTauPpm}"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        col("a.n").as("na"), col("b.n").as("nb"))
-      .distinct()
-      // three consumers (both per-side semi-joins + the verify join):
-      // same cut point, same release contract as allpairsOver's cand
-      .persist()
-    // packed sorted-array verify, the allpairsOver discipline (na/nb
-    // ride through; both sides' sets sorted once, merged in-task) over
-    // 8-byte gram ids ([[gramId]] collision contract, r15)
-    graft.functions.IntersectSizeSorted.register(batch.sparkSession)
-    def setsOf(dg: DataFrame, side: DataFrame): DataFrame =
-      dg.join(side, Seq("doc_id"), "semi")
-        .groupBy(col("doc_id")).agg(sort_array(collect_list(gramId(col("s")))).as("ss"))
-    val setsB = setsOf(dgB, cand.select(col("da").as("doc_id")).distinct())
-    val setsS = setsOf(dgS, cand.select(col("db").as("doc_id")).distinct())
-    val repPairs = cand
-      .join(setsB.select(col("doc_id").as("da"), col("ss").as("ssa")), Seq("da"))
-      .join(setsS.select(col("doc_id").as("db"), col("ss").as("ssb")), Seq("db"))
-      .select(col("da"), col("db"), col("na"), col("nb"),
-        expr("intersect_size_sorted(ssa, ssb)").as("inter"))
-      .where(lit(1000000L) * col("inter") >=
-        lit(AllPairsTauPpm) * (col("na") + col("nb") - col("inter")))
-      .select(col("da"), col("db"), col("inter"), col("na"), col("nb"),
-        expr("1000000 * inter div (na + nb - inter)").as("j_ppm"))
-    // analytic expansion over both sides' member sets; da stays the
-    // batch doc and db the snapshot doc (side roles, not an ordering),
-    // so na/nb never swap
-    repPairs
-      .join(gB.select(col("rep").as("da"), col("members").as("ma")), Seq("da"))
-      .join(gS.select(col("rep").as("db"), col("members").as("mb")), Seq("db"))
-      .select(col("inter"), col("na"), col("nb"), col("j_ppm"),
-        col("mb"), explode(col("ma")).as("a"))
-      .select(col("inter"), col("na"), col("nb"), col("j_ppm"), col("a"),
-        explode(col("mb")).as("b"))
+    // [[contracted]] per side. No intra-group leg here — batch-internal
+    // pairs are dedupAllpairs's job, and a batch member and a snapshot
+    // member with the SAME text pair through their reps' J = 1 rep
+    // pair, never analytically.
+    val (gB, repsB) = contracted(batch)
+    val (gS, repsS) = contracted(snapshot)
+    val dgB = shinglesOf(repsB)
+    val dgS = shinglesOf(repsS)
+    val cand = prefixCandidates(dgB, dgS, dgB.unionByName(dgS), lit(true))
+    val repPairs = verified(cand,
+      packedSets(dgB, cand.select(col("da").as("doc_id")).distinct()),
+      packedSets(dgS, cand.select(col("db").as("doc_id")).distinct()))
+    // da stays the batch doc and db the snapshot doc (side roles, not
+    // an ordering), so na/nb never swap
+    fanOut(repPairs, gB, gS)
       .select(col("a").as("da"), col("b").as("db"), col("inter"),
         col("na"), col("nb"), col("j_ppm"))
   }

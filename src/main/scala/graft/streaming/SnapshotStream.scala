@@ -272,15 +272,18 @@ private[graft] final class MinKeeper(key: String) {
 
   /** Fold the batch-local `state` into the stored state, then append
     * the rows `admit` keeps under the FOLDED state as batch `batchId`'s
+    * output. A batch that touches no bucket (no rows) writes no state,
+    * and on a fresh table the state dir does not exist yet, so it
+    * admits against its own empty `state` and appends an empty
     * output. */
   def fold(tableDir: String, batchId: Long, state: DataFrame)(
       admit: DataFrame => DataFrame): Unit = {
     val s = state.sparkSession
-    graft.sources.ZMaintain.mergeBucketed(s, s"$tableDir/$key",
+    val touched = graft.sources.ZMaintain.mergeBucketed(s, s"$tableDir/$key",
       state, bucket, merge, sortWithin = Some(key))
+    val folded = if (touched.isEmpty) state else s.read.parquet(s"$tableDir/$key")
     SnapshotStream.appendBatch(
-      admit(s.read.parquet(s"$tableDir/$key").select(col(key), col("keeper"))),
-      tableDir, batchId)
+      admit(folded.select(col(key), col("keeper"))), tableDir, batchId)
   }
 
   /** The sink body for rows that carry `key`: persisted once (the

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Graft, SparkEntry}
+import graft.{Bench, Graft, SparkEntry}
 import graft.operators.SqlSurface
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -10,7 +10,10 @@ import scala.util.control.NonFatal
   * `scripts/run.sh graft.tools.Probe <mode> <sfDir> [--out <dir>] [gate...]`
   * (no gate = every registered gate, in name order). Modes:
   *   - `explain`: the formatted physical plan before execution (with
-  *     `--out`, one `<gate>.txt` per gate instead of stdout).
+  *     `--out`, one `<gate>.txt` per gate instead of stdout, passed
+  *     through [[graft.Bench.normalizePlan]] so expression ids, plan
+  *     ids and paths drop out and `diff -r` of two runs' directories
+  *     shows only real plan moves; stdout stays raw).
   *   - `final`: executes the gate's OWN plan and prints the node census
   *     of the final adaptive plan — executed scans and exchanges vs the
   *     ones AQE served by stage reuse, which the static explain cannot
@@ -95,7 +98,7 @@ object Probe {
             new java.io.File(o).mkdirs()
             val path = s"$o/$gate.txt"
             val w = new java.io.PrintWriter(path, "UTF-8")
-            try w.println(text) finally w.close()
+            try w.println(Bench.normalizePlan(text)) finally w.close()
             say(s"[explain] $gate -> $path")
         }
 

@@ -388,13 +388,28 @@ class DedupSpec extends AnyFunSuite {
       (100L + id, (ws.drop(rng.nextInt(2)) ++
         Seq.fill(rng.nextInt(2))(vocabWords(rng.nextInt(vocabWords.size)))).mkString(" "))
     }
-    val docs = (base ++ nearDups).toDF("doc_id", "text")
+    // exact-copy groups, appended after the random draws (the docs above
+    // do not change), in letter-only words so they share no gram with
+    // the drawn docs: a three-member group (one copy differs only in
+    // case and punctuation, so it normalizes equal) with a near-dup, a
+    // group whose members fall on both sides of the % 3 split with a
+    // near-dup, and a shingle-less doc with an identical copy, which
+    // must not pair
+    val textA = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    val textB = "lima mike november oscar papa quebec romeo sierra"
+    val copies = Seq(
+      200L -> textA, 203L -> textA, 206L -> (textA.toUpperCase + "!"),
+      209L -> (textA + " kilo"),
+      301L -> textB, 302L -> textB, 304L -> textB, 305L -> (textB + " tango"),
+      400L -> "uniform victor", 401L -> "uniform victor")
+    val all = base ++ nearDups ++ copies
+    val docs = all.toDF("doc_id", "text")
     def grams(t: String): Set[String] = {
       val w = t.toLowerCase.replaceAll("[^\\p{L}]+", " ").trim.split(" ").filter(_.nonEmpty)
       if (w.length < 3) Set.empty
       else w.sliding(3).map(_.mkString(" ")).toSet
     }
-    val gs = (base ++ nearDups).map { case (id, t) => id -> grams(t) }.toMap
+    val gs = all.map { case (id, t) => id -> grams(t) }.toMap
     val brute = (for {
       (a, ga) <- gs.toSeq; (b, gb) <- gs.toSeq if a < b && ga.nonEmpty && gb.nonEmpty
       inter = (ga & gb).size.toLong if inter > 0
@@ -408,6 +423,14 @@ class DedupSpec extends AnyFunSuite {
     assert(got == brute,
       s"missing=${(brute -- got).take(3)} extra=${(got -- brute).take(3)}")
     assert(brute.nonEmpty, "fixture must plant qualifying pairs")
+    // the contraction's two legs are exercised: intra-group copy pairs
+    // at J = 1, and no pair for the shingle-less copies
+    val copyPairs = Seq((200L, 203L), (200L, 206L), (203L, 206L),
+      (301L, 302L), (301L, 304L), (302L, 304L))
+    assert(copyPairs.forall { case (a, b) =>
+      got.exists(r => r._1 == a && r._2 == b && r._6 == 1000000L) }, copyPairs)
+    assert(Seq(200L, 203L, 206L).forall(a => got.exists(r => r._1 == a && r._2 == 209L)))
+    assert(!got.exists(r => r._1 >= 400L || r._2 >= 400L))
     // two-table form: exact batch×snapshot join must equal the brute
     // cross-pairs under the same split (union-census prefix discipline)
     val (batchIds, snapIds) = gs.keySet.partition(_ % 3 == 1)
@@ -425,6 +448,9 @@ class DedupSpec extends AnyFunSuite {
         r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     assert(gotVs == bruteVs,
       s"vs: missing=${(bruteVs -- gotVs).take(3)} extra=${(gotVs -- bruteVs).take(3)}")
+    // the split group pairs across the two tables through its reps
+    assert(Seq((301L, 302L), (304L, 302L), (301L, 305L), (304L, 305L))
+      .forall(p => gotVs.exists(r => (r._1, r._2) == p)))
   }
 
   test("dedup_cc convergence canary holds at both fixture SFs") {

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Layout rules for `src/main/scala` code (comment lines skipped): one
-  * session builder and one scheduler listener, so hand-built sessions
-  * and ad-hoc listeners cannot come back one tool at a time. */
+  * session builder, one scheduler listener and one copy of each dedup
+  * pair-join step, so the copies cannot come back one tool or one
+  * function at a time. */
 class LayoutSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -49,5 +50,14 @@ class LayoutSpec extends AnyFunSuite {
   test("no range split pattern-matches the min/max row (MatchError on empty input)") {
     val hits = codeMentions("Row(lo: Long, hi: Long)")
     assert(hits.isEmpty, hits)
+  }
+
+  test("the dedup pair-join steps are each written once") {
+    for (needle <- Seq("n - ((n * 3 + 4) div 5) + 1", "explode(col(\"ma\"))",
+        "sort_array(collect_list(gramId(")) {
+      val hits = codeMentions(needle)
+      assert(hits.size == 1 && hits.head.startsWith("graft/operators/Dedup.scala:"),
+        s"$needle: $hits")
+    }
   }
 }

@@ -34,6 +34,22 @@ class ProbeSpec extends AnyFunSuite {
     assert(new java.io.File(out, "sql_direct.txt").length() > 0)
   }
 
+  test("explain --out writes normalized plans: two runs of one gate are byte-identical") {
+    // the plan-identity check is `diff -r` of two --out dirs, so run-
+    // varying ids must not reach the files; stdout stays raw
+    val gate = "dedup_allpairs"
+    val dirs = Seq("a", "b").map(n =>
+      java.nio.file.Files.createTempDirectory(s"probe-explain-$n").toFile)
+    dirs.foreach(d => Probe.run(spark, "explain", sf, Seq(gate), Some(d.getPath)))
+    val Seq(a, b) = dirs.map(d =>
+      java.nio.file.Files.readAllBytes(new java.io.File(d, s"$gate.txt").toPath))
+    assert(a.nonEmpty && java.util.Arrays.equals(a, b))
+    val text = new String(a, "UTF-8")
+    assert("#\\d".r.findFirstIn(text).isEmpty, "expression ids must be normalized away")
+    val Seq(raw) = Probe.run(spark, "explain", sf, Seq(gate))
+    assert("#\\d".r.findFirstIn(raw).isDefined, "stdout keeps the raw plan")
+  }
+
   test("final reads the executed adaptive plan, finalized") {
     val lines = Probe.run(spark, "final", sf, Seq("dedup_exact", "dedup_containment"))
     assert(lines.size == 2)

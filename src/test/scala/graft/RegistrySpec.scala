@@ -75,7 +75,7 @@ class RegistrySpec extends AnyFunSuite {
     "Similarity.icpAssign",
     // IO plumbing: raw readers under registered source/sink gates
     "Formats.readIntermediate", "Formats.readOutputLines", "Formats.readOrc",
-    "WholeFiles.read", "WholeFiles.readBinary", "Manifest.keyed")
+    "WholeFiles.read", "Manifest.keyed")
 
   test("every public gate-shaped method in the gate packages is registered in SparkEntry") {
     val srcRoot = new java.io.File("src/main/scala/graft")

@@ -1478,6 +1478,47 @@ class StreamingSpec extends AnyFunSuite {
       "batch replay must be a no-op")
   }
 
+  test("min-keeper sinks: an empty first batch and an empty middle batch throw nothing and change no output") {
+    // an empty batch touches no state bucket, so on a fresh table the
+    // state dir does not exist; the sink must still append its (empty)
+    // output, and the appended union must equal the run without it
+    import graft.streaming.{AudioStream, ImageStream, WebStream}
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    type Sink = String => (DataFrame, Long) => Unit
+    val sf = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    val ids = docs.select(min(col("doc_id")), max(col("doc_id"))).collect()(0)
+    val mid = ids.getLong(0) + (ids.getLong(1) - ids.getLong(0)) / 2
+    val sinks = Seq[(String, Sink, (SparkSession, String) => DataFrame, String, DataFrame)](
+      ("web", WebStream.webSink, WebStream.storedTraining, "fp", docs),
+      ("image", ImageStream.imageSink, ImageStream.storedImages, "key",
+        docs.select(col("doc_id"))),
+      ("audio", AudioStream.audioSink, AudioStream.storedAudio, "key",
+        docs.select(col("doc_id"))))
+    for ((name, sink, stored, key, input) <- sinks) {
+      val (b1, b2) = (input.where(col("doc_id") <= mid), input.where(col("doc_id") > mid))
+      val empty = input.limit(0)
+      def keySet(table: String): Set[(Long, String)] =
+        stored(spark, table).select(col("doc_id"), col(key)).collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSet
+      val plain = Files.createTempDirectory(s"graft-$name-plain").toString
+      sink(plain)(b1, 0L); sink(plain)(b2, 1L)
+      val table = Files.createTempDirectory(s"graft-$name-empty").toString
+      sink(table)(empty, 0L)                    // empty FIRST batch, fresh table
+      assert(keySet(table).isEmpty, s"$name: an empty first batch admits nothing")
+      sink(table)(b1, 1L)
+      sink(table)(empty, 2L)                    // empty MIDDLE batch
+      sink(table)(b2, 3L)
+      val expected = keySet(plain)
+      assert(expected.nonEmpty && keySet(table) == expected,
+        s"$name: empty batches must not change the appended union")
+      for (b <- Seq(0L, 2L))
+        assert(new java.io.File(s"$table/out/batch=$b/_SUCCESS").isFile,
+          s"$name: empty batch $b must commit its (empty) output")
+    }
+  }
+
   test("streaming doremi model: count fold across restarts equals the one-shot mixture; replay never double-folds") {
     // the bigram-count state is a SUM (not idempotent) -> versioned
     // predecessor rule; the read-time weights under the folded model
