@@ -1327,93 +1327,108 @@ object Dedup {
     * table; today only the new batch's edges arrive (batch-internal
     * pairs + batch×snapshot probes against the stored band index, i.e.
     * exactly [[crossEst]]). Instead of re-running CC over the corpus,
-    * every snapshot endpoint is CONTRACTED to its prior component
-    * canonical: the reduced graph has one node per batch doc + one per
-    * TOUCHED prior component, so the component solve works over
-    * O(batch + touched components) — never the 100 TB snapshot. Prior
-    * components are connected by construction, so contraction preserves
-    * connectivity, and canonicals are component minima, so the reduced
-    * fixpoint's minima are the true global minima — the result is
-    * BIT-IDENTICAL to a full recompute, which is exactly how it is
-    * gate-checked: this query's oracle IS [[dedupCcSql]], the full
-    * recursive-CTE recompute. (Exactness caveat: the identity is over
-    * the same EDGE set; when [[MaxBucket]] caps bind, per-side banding
-    * can keep different bucket members than joint banding, so above the
-    * cap both paths are approximations that may diverge slightly — the
-    * standard LSH recall tradeoff, not an error in either path. Gate-SF
-    * buckets stay far below the cap.)
+    * the batch folds into the prior labels through [[foldComponents]]:
+    * the component solve works over O(batch + touched components) —
+    * never the 100 TB snapshot — and the result is BIT-IDENTICAL to a
+    * full recompute, which is exactly how it is gate-checked: this
+    * query's oracle IS [[dedupCcSql]], the full recursive-CTE
+    * recompute. (Exactness caveat: the identity is over the same EDGE
+    * set; when [[MaxBucket]] caps bind, per-side banding can keep
+    * different bucket members than joint banding, so above the cap both
+    * paths are approximations that may diverge slightly — the standard
+    * LSH recall tradeoff, not an error in either path. Gate-SF buckets
+    * stay far below the cap.)
     *
-    * (The snapshot-side CC here is computed in-process as the stand-in
-    * for the stored state, like the other incremental gate queries; a
-    * real pipeline reads `prior` and the snapshot band table from
-    * storage and runs ONLY the batch-sized stages.) */
+    * (The snapshot's stored state — signature index and labels — is
+    * built here by the bootstrap fold over [[ccEmptyState]], the same
+    * [[ccFold]] step stream_cc runs per batch; a real pipeline reads
+    * both from storage and runs ONLY [[dedupCcVs]].) */
   def dedupCcIncr(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val batch = docs.where(col("doc_id") % 3 === 1)
     val snapshot = docs.where(col("doc_id") % 3 =!= 1)
-    // ---- stand-in for yesterday's stored state (a real pipeline READS
-    // both of these; the gate's wall time therefore charges prior-state
-    // construction too — the steady-state cost is dedupCcVs alone)
-    // ONE materialized snapshot-signature pass (r17): without the cut
-    // the minhash kernel over the snapshot ran twice — once into the
-    // persisted prior edge table and again inside dedupCcVs's cross
-    // probe at the gate action (the ccSink/streamCc sigB discipline).
-    val sigS = graft.Graft.compactCheckpoint(
-      minhashSignaturesOf(s, snapshot).repartition(col("doc_id")))
-    val symS = symmetrize(
-      estOf(sigS).where(col("est_j") >= CcThreshold).select(col("da"), col("db")))
-      .persist()
-    val prior = propagateMin(s,
-      snapshot.select(col("doc_id"), col("doc_id").as("label")),
-      symS, "dedupCcIncr/prior")
-    symS.unpersist()
-    dedupCcVs(s, batch, sigS, prior)
+    val (sigS, prior) = ccFold(s, ccEmptyState(snapshot), snapshot)
+    dedupCcVs(s, docs.where(col("doc_id") % 3 === 1), sigS, prior)
   }
 
   /** The genuine steady-state entry: `batch` docs, the snapshot's
     * STORED signature table, and the STORED prior labels. Runs only the
-    * delta stages — batch signatures, batch-internal + cross probes,
-    * contraction, components of the reduced graph ([[propagateMin]]:
-    * a driver union-find while the reduced edge list fits
-    * [[LocalCcMaxEdges]], distributed rounds above it), relabel. */
+    * delta stages ([[ccLabels]]) and shapes them as [[ccOutput]]. */
   def dedupCcVs(s: SparkSession, batch: DataFrame, sigS: DataFrame,
       prior: DataFrame): DataFrame =
-    dedupCcVs(s, batch, sigS, prior, None)
+    ccOutput(ccLabels(s, batch,
+      minhashSignaturesOf(s, batch).repartition(col("doc_id")), sigS, prior))
 
-  /** `sigBOpt`: a MATERIALIZED (persisted/checkpointed) signature table
-    * for the batch, when the caller also needs it for a state write —
-    * the streaming sink passes one checkpointed copy so signatures are
-    * computed once per batch, not once per consumer. */
-  def dedupCcVs(s: SparkSession, batch: DataFrame, sigS: DataFrame,
-      prior: DataFrame, sigBOpt: Option[DataFrame]): DataFrame = {
-    val sigB = sigBOpt.getOrElse(
+  /** [[dedupCcVs]]'s (doc_id, label) fixpoint: the batch-internal and
+    * batch×index probes over the batch signatures `sigB`, thresholded at
+    * [[CcThreshold]], folded into `prior` by [[foldComponents]]. A caller
+    * that also writes `sigB` into its state passes a MATERIALIZED
+    * (checkpointed) table ([[ccFold]]), so signatures are computed once
+    * per batch, not once per consumer. */
+  private def ccLabels(s: SparkSession, batch: DataFrame, sigB: DataFrame,
+      sigS: DataFrame, prior: DataFrame): DataFrame = {
+    val pairs = estOf(sigB).unionByName(crossEst(sigB, sigS))
+      .where(col("est_j") >= CcThreshold).select(col("da"), col("db"))
+    foldComponents(s, batch.select(col("doc_id")), pairs, prior, "dedupCcVs")
+  }
+
+  /** The empty (signature index, labels) state: [[ccFold]] from it is a
+    * from-scratch CC of the batch — the bootstrap step. */
+  private[graft] def ccEmptyState(batch: DataFrame): (DataFrame, DataFrame) =
+    (minhashSignaturesOf(batch.sparkSession, batch).limit(0),
+      batch.select(col("doc_id"), col("doc_id").as("label")).limit(0))
+
+  /** One in-process fold of `batch` into the (signature index, labels)
+    * `state`: ONE materialized signature pass feeds both the probe and
+    * the index union. The index stays a LAZY union (r17): both legs are
+    * checkpointed, so it is lineage-flat and the next probe consumes it
+    * once. The labels are checkpointed: the next fold reads them twice
+    * (contraction + relabel). */
+  private[graft] def ccFold(s: SparkSession, state: (DataFrame, DataFrame),
+      batch: DataFrame): (DataFrame, DataFrame) = {
+    val (sigS, prior) = state
+    val sigB = graft.Graft.compactCheckpoint(
       minhashSignaturesOf(s, batch).repartition(col("doc_id")))
-    val internal = estOf(sigB)
-      .where(col("est_j") >= CcThreshold).select(col("da"), col("db"))
-    val cross = crossEst(sigB, sigS)
-      .where(col("est_j") >= CcThreshold).select(col("da"), col("db"))
-    // contract snapshot endpoints to their prior canonical
-    val crossC = cross.join(prior.withColumnRenamed("doc_id", "sdoc"),
-        col("db") === col("sdoc"))
-      .select(col("da"), col("label").as("db"))
-    val redEdges = internal.unionByName(crossC)
-    // reduced nodes: every batch doc + every touched canonical
-    val redNodes = batch.select(col("doc_id"))
-      .unionByName(redEdges.select(col("db").as("doc_id")))
-      .distinct()
-    val symR = symmetrize(redEdges).persist()
+    (sigS.unionByName(sigB),
+      graft.Graft.compactCheckpoint(ccLabels(s, batch, sigB, sigS, prior)))
+  }
+
+  /** The incremental-components fold shared by near-dup CC
+    * ([[ccLabels]]) and entity resolution
+    * ([[EntityResolution.erEntitiesVs]]): one batch's one-direction
+    * (da, db) match pairs — `da` a batch id, `db` a batch or a prior
+    * id — folded into the stored `prior` (doc_id, label) components.
+    *
+    *  1. CONTRACT: each `db` with a prior row becomes its prior label
+    *     (the component canonical); a batch endpoint keeps its own id.
+    *  2. SOLVE: the reduced graph — batch ids ∪ the `src` of the
+    *     PERSISTED symmetric contracted edges — through [[propagateMin]]
+    *     (a driver union-find while it fits [[LocalCcMaxEdges]]): O(batch
+    *     + touched components) nodes, never the stored corpus.
+    *  3. RELABEL: batch ids read the reduced fixpoint; prior ids route
+    *     through their label's fixpoint (untouched components keep
+    *     theirs), so a batch node bridging two prior components merges
+    *     them under the smaller canonical.
+    *
+    * Prior components are connected and labeled by their minima, so
+    * contraction preserves connectivity and the fold equals the
+    * from-scratch components of every pair folded so far; over an empty
+    * `prior` it IS the from-scratch components of the batch. Returns
+    * (doc_id, label) over batch ∪ prior ids; batch ids must not appear
+    * in `prior`. */
+  private[graft] def foldComponents(s: SparkSession, batchIds: DataFrame,
+      pairs: DataFrame, prior: DataFrame, what: String): DataFrame = {
+    val sym = symmetrize(pairs.join(prior.withColumnRenamed("doc_id", "pid"),
+        col("db") === col("pid"), "left")
+      .select(col("da"), coalesce(col("label"), col("db")).as("db"))).persist()
     val red = propagateMin(s,
-      redNodes.select(col("doc_id"), col("doc_id").as("label")),
-      symR, "dedupCcIncr/delta")
-    symR.unpersist()
-    // final labels: batch docs from the reduced fixpoint; snapshot docs
-    // re-labeled through their canonical's new label (untouched
-    // components keep their prior label)
+      batchIds.unionByName(sym.select(col("src").as("doc_id"))).distinct()
+        .select(col("doc_id"), col("doc_id").as("label")),
+      sym, what)
+    sym.unpersist()
     val redLab = red.select(col("doc_id").as("rid"), col("label").as("rlabel"))
-    val batchFinal = red.join(batch.select(col("doc_id")), "doc_id")
-    val snapFinal = prior.join(redLab, col("label") === col("rid"), "left")
-      .select(col("doc_id"), coalesce(col("rlabel"), col("label")).as("label"))
-    ccOutput(batchFinal.unionByName(snapFinal))
+    red.join(batchIds, "doc_id").unionByName(
+      prior.join(redLab, col("label") === col("rid"), "left")
+        .select(col("doc_id"), coalesce(col("rlabel"), col("label")).as("label")))
   }
 
   // --------------------------------------------------- dedup_cc_star

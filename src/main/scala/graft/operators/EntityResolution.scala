@@ -190,9 +190,35 @@ object EntityResolution {
 
   // ------------------------------------------------------------ er_incr
   /** INCREMENTAL entity resolution — the daily-catalog shape: the
-    * stored state is the distinct-name table + prior entity labels per
-    * representative; an arriving record batch costs O(batch-new names ×
-    * touched blocks), never a corpus re-match. Pipeline:
+    * stored state is the name table (name, rep, cnt, entity label); an
+    * arriving record batch folds into it through [[erEntitiesVs]] at
+    * O(batch-new names × touched blocks), never a corpus re-match.
+    * Gate: the catalog split into two key ranges and folded from
+    * [[emptyState]] (the bootstrap is the same step over an empty
+    * state — ONE code path backfills and maintains, the
+    * [[Ivm.streamIvm]] discipline), relabeled over all records; it
+    * serves both `er_incr` and `stream_er` ([[graft.streaming.ErStream]]
+    * runs the same step per micro-batch).
+    *
+    * EXACTNESS: bit-identical to the full recompute (the oracle IS
+    * [[erEntitiesSql]]) under two documented preconditions — batch
+    * keys ≥ stored keys (append-only ingest keeps representatives
+    * stable; a smaller key re-entering an old name routes to rebuild)
+    * and the block cap not NEWLY binding (same caveat as
+    * dedup_cc_incr's bucket caps; gate SFs sit far below it). */
+  def erIncr(s: SparkSession, dir: String): DataFrame = {
+    val all = names(s, dir)
+    val state = graft.Graft.rangeSplit(all, "k", 2).foldLeft(emptyState(s)) {
+      (st, batch) => erEntitiesVs(s, batch, dnOfState(st), priorOfState(st))
+    }
+    recordsUnder(all, state)
+  }
+
+  /** The genuine steady-state entry: `batchNames` (k, name, blk) rows,
+    * the STORED distinct-name table, and the STORED prior labels
+    * (rep → entity). Returns the UPDATED name state
+    * (name, rep, cnt, label) — the table a real pipeline writes back;
+    * per-record output is a label join over it (see [[erIncr]]).
     *   1. contract the batch to its own distinct names; split into
     *      ALREADY-KNOWN names (counts grow, zero new edges — their
     *      pairs are baked into the prior labels) and NEW names;
@@ -201,54 +227,10 @@ object EntityResolution {
     *      cap semantics — the [[Dedup]] incremental-containment
     *      lesson: per-side caps admit pairs the single-table rule
     *      drops);
-    *   3. contract snapshot endpoints to their prior entity label and
-    *      propagate over the reduced graph (new reps + touched
-    *      entities) — a new name bridging two prior entities merges
-    *      them here;
-    *   4. relabel: snapshot reps through their (possibly re-merged)
-    *      label, new reps from the reduced fixpoint; broadcast back to
-    *      records through the merged name table; sizes recomputed.
-    * EXACTNESS: bit-identical to the full recompute (the gate's oracle
-    * IS [[erEntitiesSql]]) under two documented preconditions — batch
-    * keys ≥ stored keys (append-only ingest keeps representatives
-    * stable; a smaller key re-entering an old name routes to rebuild)
-    * and the block cap not NEWLY binding (same caveat as
-    * dedup_cc_incr's bucket caps; gate SFs sit far below it).
-    *
-    * (The snapshot-side state here is computed in-process as the
-    * stand-in for the stored table, like the other incremental gates;
-    * a real pipeline reads `dn` and `prior` from storage and runs only
-    * the batch-sized stages.) */
-  def erIncr(s: SparkSession, dir: String): DataFrame = {
-    val all = names(s, dir)
-    val Seq(older, newer) = graft.Graft.rangeSplit(all, "k", 2)
-    // ---- stand-in for yesterday's stored state
-    val dnS = dnOf(older).persist()
-    val keepS = dnS.groupBy(col("blk")).agg(count(lit(1)).as("df"))
-      .where(col("df") <= ErMaxBlock).select(col("blk"))
-    val keptS = dnS.join(keepS, Seq("blk"), "left_semi")
-    val edgesS = keptS.as("a").join(keptS.as("b"),
-        col("a.blk") === col("b.blk") && col("a.name") < col("b.name") &&
-          levenshtein(col("a.name"), col("b.name"), ErMaxDist) >= 0)
-      .select(col("a.rep").as("da"), col("b.rep").as("db"))
-    val symS = Dedup.symmetrize(edgesS).repartition(col("src")).persist()
-    val prior = Dedup.propagateMin(s,
-      dnS.select(col("rep").as("doc_id"), col("rep").as("label")),
-      symS, "erIncr/prior")
-    symS.unpersist()
-    // ---- steady-state stages (batch-bounded): updated name → entity state
-    val state = erEntitiesVs(s, newer, dnS, prior)
-    // ---- write-back: records relabeled through the name column (a
-    // real pipeline materializes this lazily as a view over the stored
-    // record table; it is a label join, not a re-match)
-    recordsUnder(all, state)
-  }
-
-  /** The genuine steady-state entry: `batchNames` (k, name, blk) rows,
-    * the STORED distinct-name table, and the STORED prior labels
-    * (rep → entity). Returns the UPDATED name state
-    * (name, rep, cnt, label) — the table a real pipeline writes back;
-    * per-record output is a label join over it (see [[erIncr]]). */
+    *   3. fold the new-rep pairs into the prior entities
+    *      ([[Dedup.foldComponents]]: a new name bridging two prior
+    *      entities merges them);
+    *   4. join the rep labels onto the merged name table. */
   def erEntitiesVs(s: SparkSession, batchNames: DataFrame, dnS: DataFrame,
       prior: DataFrame): DataFrame = {
     val dnB = dnOf(batchNames)
@@ -267,30 +249,8 @@ object EntityResolution {
         col("a.blk") === col("b.blk") && col("a.name") =!= col("b.name") &&
           levenshtein(col("a.name"), col("b.name"), ErMaxDist) >= 0)
       .select(col("a.rep").as("da"), col("b.rep").as("db"))
-    // contract snapshot endpoints to their prior entity label (batch-new
-    // endpoints have no prior row and keep themselves)
-    val contracted = newEdges
-      .join(prior.withColumnRenamed("doc_id", "srep"),
-        col("db") === col("srep"), "left")
-      .select(col("da"), coalesce(col("label"), col("db")).as("db"))
-    val redNodes = dnBNew.select(col("rep").as("doc_id"))
-      .unionByName(contracted.select(col("db").as("doc_id")))
-      .distinct()
-    val symR = Dedup.symmetrize(contracted).persist()
-    val red = Dedup.propagateMin(s,
-      redNodes.select(col("doc_id"), col("doc_id").as("label")),
-      symR, "erIncr/delta")
-    symR.unpersist()
-    val redLab = red.select(col("doc_id").as("rid"), col("label").as("rlabel"))
-    // final rep → entity: snapshot reps re-route through their prior
-    // label's (possibly re-merged) reduced fixpoint; batch-new reps
-    // read the fixpoint directly
-    val snapLab = prior.join(redLab, col("label") === col("rid"), "left")
-      .select(col("doc_id").as("rep"), coalesce(col("rlabel"), col("label")).as("label"))
-    val newLab = red.join(dnBNew.select(col("rep")),
-        col("doc_id") === col("rep"))
-      .select(col("rep"), col("label"))
-    val repLab = snapLab.unionByName(newLab)
+    val repLab = Dedup.foldComponents(s, dnBNew.select(col("rep").as("doc_id")),
+      newEdges, prior, "erEntitiesVs")
     // plain localCheckpoint (r17): the r16 compaction of this fold
     // state regressed stream_er on BOTH the builder's closing record
     // (3.23->3.67 within-boot) and the driver's bench (3.70->5.00) —
@@ -298,18 +258,17 @@ object EntityResolution {
     // collapsed partitioning costs more than the tiny-task launches
     // it saved (VERDICT r16 item 2; per-site A/B re-run this round)
     val state = dnAll.select(col("name"), col("rep"), col("cnt"))
-      .join(repLab, "rep")
+      .join(repLab.withColumnRenamed("doc_id", "rep"), "rep")
       .select(col("name"), col("rep"), col("cnt"), col("label"))
       .localCheckpoint()
     dnAll.unpersist()
     state
   }
 
-  // --------------------------------------------- stream_er (state fold)
+  // ----------------------------------------------- name state (fold I/O)
   /** Empty name-state frame (the bootstrap predecessor): erEntitiesVs
     * run against it degenerates to a from-scratch build over the batch
-    * alone — ONE code path backfills and maintains, the
-    * [[Ivm.streamIvm]] discipline. */
+    * alone. */
   private[graft] def emptyState(s: SparkSession): DataFrame = {
     import s.implicits._
     Seq.empty[(String, Long, Long, Long)].toDF("name", "rep", "cnt", "label")
@@ -327,8 +286,7 @@ object EntityResolution {
     state.select(col("rep").as("doc_id"), col("label")).distinct()
 
   /** Record-level output from a name state: label join + skew-safe
-    * sizes — the write-back view shared by [[erIncr]] and the stream
-    * gate. */
+    * sizes — the write-back view of [[erIncr]]. */
   private def recordsUnder(records: DataFrame, state: DataFrame): DataFrame = {
     val sizes = state.groupBy(col("label")).agg(sum(col("cnt")).as("entity_size"))
     records.select(col("k"), col("name"))
@@ -337,21 +295,6 @@ object EntityResolution {
       .select(col("k").as("p_partkey"), col("label").as("entity_id"),
         col("entity_size"),
         (col("k") === col("label")).cast("int").as("is_canonical"))
-  }
-
-  /** Gate: the two-range-batch fold of the catalog through the ER
-    * state maintenance (bootstrap-from-empty, then one steady-state
-    * step), relabeled over all records; oracle IS the full recompute
-    * ([[erEntitiesSql]]) — the maintenance identity under the same
-    * preconditions as [[erIncr]]. */
-  def streamEr(s: SparkSession, dir: String): DataFrame = {
-    val all = names(s, dir)
-    val Seq(older, newer) = graft.Graft.rangeSplit(all, "k", 2)
-    val s1 = erEntitiesVs(s, older,
-      dnOfState(emptyState(s)), priorOfState(emptyState(s)))
-    val s2 = erEntitiesVs(s, newer,
-      dnOfState(s1), priorOfState(s1))
-    recordsUnder(all, s2)
   }
 
   /** Blocking-recall eval: over a deterministic representative-key

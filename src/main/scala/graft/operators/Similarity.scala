@@ -638,8 +638,10 @@ object Similarity {
 
   /** The stored-index entry: search over an ALREADY-MATERIALIZED IVF-PQ
     * index frame (the [[VecKernel.ivfPqEncode]] schema — at 100 TB this
-    * is a table you wrote once at ingest, like [[Dedup.dedupCcVs]]'s
-    * stored inputs), so the encode kernel never runs at query time. */
+    * is a table you wrote once at ingest, like the signature index and
+    * prior labels [[Dedup.dedupCcVs]] folds through
+    * [[Dedup.foldComponents]]), so the encode kernel never runs at
+    * query time. */
   def simIvfPqTopkOver(enc: DataFrame): DataFrame = {
     // same [[IvfMaxCell]] inverted-list cap as simIvfTopk: ADC makes
     // each candidate cheap, but hot-cell pair COUNTS still grow Σ|cell|².

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
 /** Streaming maintenance of the near-dup CLUSTER state — the daily
@@ -10,14 +9,16 @@ import graft.operators.Dedup
   * contract to their stored component canonicals, the components of
   * the reduced (batch + touched components)-sized graph relabel, and both
   * state tables (the signature index and the labels) advance one
-  * version. The delta stages are [[Dedup.dedupCcVs]] VERBATIM — the
-  * sink adds only the state plumbing, so the streamed fold and the
-  * batch gate cannot drift.
+  * version. Each batch is one [[Dedup.ccFold]], the step `stream_cc`
+  * and `dedup_cc_incr` run in-process (its components fold is
+  * [[Dedup.foldComponents]], shared with entity resolution) — the sink
+  * adds only the state plumbing, so the streamed fold and the batch
+  * gates cannot drift.
   *
-  * Bootstrap-from-empty is the SAME code path: with an empty signature
-  * index and empty prior labels, the cross probes and the snapshot
-  * relabel degenerate to nothing and [[Dedup.dedupCcVs]] is exactly a
-  * from-scratch CC of the batch (the `stream_er` discipline).
+  * Bootstrap-from-empty is the SAME code path: from
+  * [[Dedup.ccEmptyState]] the cross probes and the prior relabel
+  * degenerate to nothing and the fold is exactly a from-scratch CC of
+  * the batch (the `stream_er` discipline).
   *
   * Two tables, one commit point: `sig` writes BEFORE `labels`, and
   * readers and successor batches pin the newest version committed in
@@ -31,8 +32,8 @@ import graft.operators.Dedup
   * 100 TB, the ZMaintain composition; the labels table likewise. The
   * per-batch COMPUTE, though, is batch-bounded: batch signatures +
   * band probes + the components of a reduced graph over batch docs and
-  * touched components only ([[Dedup.dedupCcVs]]'s scaladoc carries the
-  * argument). That reduced graph is what makes the per-batch solve
+  * touched components only ([[Dedup.foldComponents]]'s scaladoc carries
+  * the argument). That reduced graph is what makes the per-batch solve
   * cheap: while its edge list fits [[Dedup.LocalCcMaxEdges]],
   * [[Dedup.propagateMin]] collects it once and solves it on the driver
   * instead of running checkpointed propagation rounds.
@@ -49,12 +50,6 @@ import graft.operators.Dedup
   * below it.)
   */
 object CcStream {
-
-  private def emptyState(batch: DataFrame): (DataFrame, DataFrame) = {
-    val s = batch.sparkSession
-    (Dedup.minhashSignaturesOf(s, batch).limit(0),
-      batch.select(col("doc_id"), col("doc_id").as("label")).limit(0))
-  }
 
   /** Versions committed in BOTH state tables (the readable pairs). */
   private[graft] def committedVersions(s: SparkSession, tableDir: String): Seq[Long] = {
@@ -74,16 +69,10 @@ object CcStream {
     * [[committedVersions]]. */
   def ccSink(tableDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val (sigS, prior) = committedVersions(s, tableDir).filter(_ < batchId).lastOption
-      .fold(emptyState(batch))(stateAt(s, tableDir, _))
-    // ONE materialized signature pass feeds both the fold and the
-    // state write (recomputing it per consumer doubled the batch cost)
-    val sigB = Dedup.minhashSignaturesOf(s, batch)
-      .repartition(col("doc_id")).localCheckpoint()
-    val out = Dedup.dedupCcVs(s, batch, sigS, prior, Some(sigB))
-    val labels = out.select(col("doc_id"), col("cluster_id").as("label"))
-      .localCheckpoint() // sever before the writes below re-trigger the fold
-    SnapshotStream.commit(sigS.unionByName(sigB), s"$tableDir/sig", batchId)
+    val state = committedVersions(s, tableDir).filter(_ < batchId).lastOption
+      .fold(Dedup.ccEmptyState(batch))(stateAt(s, tableDir, _))
+    val (sig, labels) = Dedup.ccFold(s, state, batch)
+    SnapshotStream.commit(sig, s"$tableDir/sig", batchId)
     SnapshotStream.commit(labels, s"$tableDir/labels", batchId)
   }
 
@@ -95,35 +84,14 @@ object CcStream {
   }
 
   /** Gate: the three-range-batch fold as its batch composition —
-    * bootstrap on the first third, then two maintenance steps (each
-    * [[Dedup.dedupCcVs]] against the accumulated state). Oracle IS
-    * `dedup_cc`'s SQL — the maintenance identity through a real
-    * intermediate state. */
+    * bootstrap on the first third, then one maintenance step
+    * ([[Dedup.ccFold]]) and the final [[Dedup.dedupCcVs]] against the
+    * accumulated state. Oracle IS `dedup_cc`'s SQL — the maintenance
+    * identity through a real intermediate state. */
   def streamCc(s: SparkSession, dir: String): DataFrame = {
     val Seq(b1, b2, b3) =
       graft.Graft.rangeSplit(graft.Tables.documents(s, dir), "doc_id", 3)
-    val (sig0, lab0) = emptyState(b1)
-    def step(batch: DataFrame, sigS: DataFrame, prior: DataFrame) = {
-      // ONE materialized signature pass per batch, shared by the fold
-      // and the state union — the ccSink discipline (r16: the gate
-      // recomputed the kernel once inside dedupCcVs and once for the
-      // union; same rows, one pass)
-      val sigB = graft.Graft.compactCheckpoint(
-        Dedup.minhashSignaturesOf(s, batch).repartition(col("doc_id")))
-      val out = Dedup.dedupCcVs(s, batch, sigS, prior, Some(sigB))
-      // the signature state stays a LAZY union (r17): both legs are
-      // already checkpointed, so the union is lineage-flat and the next
-      // step's cross probe consumes it exactly once — re-materializing
-      // it per step copied the whole accumulated state for nothing
-      // (the SINK's union write is different: it persists to parquet).
-      // The labels stay checkpointed: the next step reads `prior` twice
-      // (endpoint contraction + snapshot relabel).
-      (sigS.unionByName(sigB),
-        graft.Graft.compactCheckpoint(
-          out.select(col("doc_id"), col("cluster_id").as("label"))))
-    }
-    val (sig1, lab1) = step(b1, sig0, lab0)
-    val (sig2, lab2) = step(b2, sig1, lab1)
+    val (sig2, lab2) = Seq(b1, b2).foldLeft(Dedup.ccEmptyState(b1))(Dedup.ccFold(s, _, _))
     Dedup.dedupCcVs(s, b3, sig2, lab2)
   }
 }

@@ -5,19 +5,20 @@ import org.apache.spark.sql.functions.col
 import graft.operators.EntityResolution
 
 /** Streaming entity-resolution maintenance — the catalog-ingest shape:
-  * each arriving record batch folds through the contracted ER
-  * steady-state step ([[EntityResolution.erEntitiesVs]]: batch-new
-  * names verified, snapshot endpoints contracted to prior entities,
-  * delta propagation) into standing name-state (name, rep, cnt,
-  * entity label) under [[SnapshotStream]]'s versioned rule.
-  * Bootstrap-from-empty is the same code path (an empty predecessor
-  * degenerates the step to a from-scratch build over the batch).
+  * each arriving record batch folds through the ER steady-state step
+  * ([[EntityResolution.erEntitiesVs]]: batch-new names verified, then
+  * [[graft.operators.Dedup.foldComponents]] folds their pairs into the
+  * prior entities) into standing name-state (name, rep, cnt, entity
+  * label) under [[SnapshotStream]]'s versioned rule. Bootstrap-from-
+  * empty is the same code path (an empty predecessor degenerates the
+  * step to a from-scratch build over the batch).
   *
-  * Preconditions inherited from the batch twin (documented at
-  * [[EntityResolution.erIncr]]): append-only keys, block cap not
-  * newly binding. The StreamingSpec drives a checkpointed restart +
-  * manual replay and pins the final state's record labeling against
-  * the one-shot [[EntityResolution.erEntities]] recompute.
+  * Preconditions are the step's (documented at
+  * [[EntityResolution.erIncr]], the gate that folds the same step):
+  * append-only keys, block cap not newly binding. The StreamingSpec
+  * drives a checkpointed restart + manual replay and pins the final
+  * state's record labeling against the one-shot
+  * [[EntityResolution.erEntities]] recompute.
   */
 object ErStream {
 

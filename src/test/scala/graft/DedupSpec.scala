@@ -374,10 +374,35 @@ class DedupSpec extends AnyFunSuite {
     assert(byDoc(1L) == 0L && byDoc(0L) == 0L && byDoc(2L) == 0L)
   }
 
+  test("foldComponents: a bridging batch doc merges prior components; empty prior and no-pair batches") {
+    def frame(rows: Seq[(Long, Long)], a: String, b: String) = rows.toDF(a, b)
+    def ids(xs: Long*) = xs.toDF("doc_id")
+    def fold(batch: Seq[Long], pairs: Seq[(Long, Long)], prior: Seq[(Long, Long)]) =
+      Dedup.foldComponents(spark, ids(batch: _*), frame(pairs, "da", "db"),
+        frame(prior, "doc_id", "label"), "spec").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // prior components {1, 2, 3} (canonical 1), {5, 6} (canonical 5), {9}
+    val prior = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L)
+    // (a) batch doc 10 touches non-canonical members of both components,
+    // batch doc 11 reaches them only through 10: one component under 1;
+    // the untouched members (2, 5) are relabeled too, {9} is untouched
+    assert(fold(Seq(10L, 11L), Seq(10L -> 3L, 10L -> 6L, 11L -> 10L), prior) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 1L, 6L -> 1L, 9L -> 9L,
+        10L -> 1L, 11L -> 1L))
+    // (b) an empty prior: the from-scratch components of the batch
+    assert(fold(Seq(4L, 7L, 8L, 20L), Seq(7L -> 4L, 8L -> 7L), Seq.empty) ==
+      Map(4L -> 4L, 7L -> 4L, 8L -> 4L, 20L -> 20L))
+    // (c) no pairs: every prior label stays, each batch doc is its own
+    assert(fold(Seq(10L, 11L), Seq.empty, prior) ==
+      (prior ++ Seq(10L -> 10L, 11L -> 11L)).toMap)
+  }
+
   test("allpairs: prefix/length pruning is lossless on randomized corpora (differential vs brute)") {
     import spark.implicits._
     val rng = new scala.util.Random(23)
-    val vocabWords = (0 until 40).map(i => s"w$i")
+    // letter-only words: normalization strips digits, so numbered words
+    // would all collapse to one word and every drawn pair sit at J = 1
+    val vocabWords = (0 until 40).map(i => s"w${('a' + i / 26).toChar}${('a' + i % 26).toChar}")
     // random base docs + planted near-dups (append/drop a few words)
     val base = (0 until 25).map { i =>
       (i.toLong, (0 until (5 + rng.nextInt(20)))
@@ -423,6 +448,10 @@ class DedupSpec extends AnyFunSuite {
     assert(got == brute,
       s"missing=${(brute -- got).take(3)} extra=${(got -- brute).take(3)}")
     assert(brute.nonEmpty, "fixture must plant qualifying pairs")
+    // a drawn qualifying pair with a PARTIAL overlap, so the prefix,
+    // length and positional filters decide something
+    assert(brute.exists(r => r._2 < 200L && r._3 < math.min(r._4, r._5)),
+      "fixture must draw a qualifying pair below full containment")
     // the contraction's two legs are exercised: intra-group copy pairs
     // at J = 1, and no pair for the shingle-less copies
     val copyPairs = Seq((200L, 203L), (200L, 206L), (203L, 206L),

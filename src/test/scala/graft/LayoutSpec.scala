@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Layout rules for `src/main/scala` code (comment lines skipped): one
-  * session builder, one scheduler listener and one copy of each dedup
-  * pair-join step, so the copies cannot come back one tool or one
-  * function at a time. */
+  * session builder, one scheduler listener, one copy of each dedup
+  * pair-join step and one incremental-components fold, so the copies
+  * cannot come back one tool or one function at a time. */
 class LayoutSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -55,6 +55,15 @@ class LayoutSpec extends AnyFunSuite {
   test("the dedup pair-join steps are each written once") {
     for (needle <- Seq("n - ((n * 3 + 4) div 5) + 1", "explode(col(\"ma\"))",
         "sort_array(collect_list(gramId(")) {
+      val hits = codeMentions(needle)
+      assert(hits.size == 1 && hits.head.startsWith("graft/operators/Dedup.scala:"),
+        s"$needle: $hits")
+    }
+  }
+
+  test("the incremental-components contraction and prior relabel are each written once") {
+    for (needle <- Seq("coalesce(col(\"label\"), col(\"db\"))",
+        "coalesce(col(\"rlabel\"), col(\"label\"))")) {
       val hits = codeMentions(needle)
       assert(hits.size == 1 && hits.head.startsWith("graft/operators/Dedup.scala:"),
         s"$needle: $hits")

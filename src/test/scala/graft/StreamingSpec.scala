@@ -1010,7 +1010,7 @@ class StreamingSpec extends AnyFunSuite {
     // the streamed fold must label records exactly like the recompute
     val full = EntityResolution.erEntities(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    val folded = EntityResolution.streamEr(spark, sf).collect()
+    val folded = EntityResolution.erIncr(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     assert(folded == full, "two-batch fold must equal the recompute")
     val viaSink = stateLabels()
@@ -1516,6 +1516,45 @@ class StreamingSpec extends AnyFunSuite {
       for (b <- Seq(0L, 2L))
         assert(new java.io.File(s"$table/out/batch=$b/_SUCCESS").isFile,
           s"$name: empty batch $b must commit its (empty) output")
+    }
+  }
+
+  test("CC and ER sinks: an empty first batch and an empty middle batch change no stored state") {
+    // both sinks fold into versioned state: an empty first batch on a
+    // fresh table commits an empty state, and an empty middle batch
+    // re-commits its predecessor, so the final state equals the run
+    // without the empty batches
+    import graft.streaming.{CcStream, ErStream}
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    type Sink = String => (DataFrame, Long) => Unit
+    val sf = "/root/testdata/sf0.001"
+    val sinks = Seq[(String, Sink, (SparkSession, String) => DataFrame, DataFrame, String)](
+      ("cc", CcStream.ccSink, CcStream.storedLabels,
+        spark.read.parquet(s"$sf/documents.parquet").select(col("doc_id"), col("text")),
+        "doc_id"),
+      ("er", ErStream.erSink, ErStream.storedState,
+        spark.read.parquet(s"$sf/part.parquet").select(col("p_partkey"), col("p_name")),
+        "p_partkey"))
+    for ((name, sink, stored, input, key) <- sinks) {
+      val ids = input.select(min(col(key)), max(col(key))).collect()(0)
+      val mid = ids.getLong(0) + (ids.getLong(1) - ids.getLong(0)) / 2
+      val (b1, b2) = (input.where(col(key) <= mid), input.where(col(key) > mid))
+      val empty = input.limit(0)
+      def state(table: String) = stored(spark, table).collect().toSet
+      val plain = Files.createTempDirectory(s"graft-$name-plain").toString
+      sink(plain)(b1, 0L)
+      val afterB1 = state(plain)
+      sink(plain)(b2, 1L)
+      val table = Files.createTempDirectory(s"graft-$name-empty").toString
+      sink(table)(empty, 0L)                    // empty FIRST batch, fresh table
+      assert(state(table).isEmpty, s"$name: an empty first batch stores an empty state")
+      sink(table)(b1, 1L)
+      assert(state(table) == afterB1, s"$name: the first real batch folds from empty")
+      sink(table)(empty, 2L)                    // empty MIDDLE batch
+      assert(state(table) == afterB1, s"$name: an empty middle batch changes nothing")
+      sink(table)(b2, 3L)
+      assert(afterB1.nonEmpty && state(table) == state(plain),
+        s"$name: empty batches must not change the final state")
     }
   }
 
