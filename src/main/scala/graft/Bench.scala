@@ -267,6 +267,16 @@ object Bench {
       // DELIBERATE fp EPOCH BUMP for every lambda-bearing plan — the
       // r11d/r11e precedent; recorded in SCALE.md r15e.
       .replaceAll("lambda ([A-Za-z][A-Za-z0-9]*)_\\d+#x", "lambda $1_n#x")
+      // checkpointed scans name their RDD (`MapPartitionsRDD[1021] at
+      // localCheckpoint at Dedup.scala:1392`): the id counts the RDDs
+      // the JVM built before, i.e. which gates ran earlier, and the
+      // call site's line moves with any edit above it in its file
+      .replaceAll("RDD\\[\\d+\\]", "RDD[x]")
+      .replaceAll("(\\w+\\.scala):\\d+", "$1:x")
+      // the formatted explain's spellings of the stage and codegen ids
+      // above (pipeline_ppl's plan text flapped on them, fresh JVM per run)
+      .replaceAll("QueryStage\n(Output[^\n]*\n)Arguments: \\d+", "QueryStage\n$1Arguments: x")
+      .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : x]")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

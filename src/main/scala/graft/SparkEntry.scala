@@ -229,7 +229,7 @@ object SparkEntry {
     "sql_recursive"     -> (SqlSurface.qSqlRecursive _),
     "pipeline_rules"    -> (Pipeline.pipelineRules _),
     "dq_fk_check"       -> (Profiling.dqFkCheck _),
-    "stream_er"         -> (EntityResolution.erIncr _),
+    "stream_er"         -> (EntityResolution.streamEr _),
     "stream_hll"        -> (graft.streaming.SketchStream.streamHll _),
     "stream_quantile"   -> (graft.streaming.SketchStream.streamQuantile _),
     "mm_audio_fp"       -> (graft.multimodal.Media.mmAudioFp _),

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Dedup
 
 /** Multimodal-column plumbing: image/audio/video as opaque BINARY
   * columns plus typed metadata, with decode / feature-extraction /
@@ -1607,18 +1608,8 @@ object Media {
           .as("b"))
       .select(col("media_id"), col("b.band_id").as("band_id"),
         col("b.band_key").as("band_key"))
-    val qa = udaf(new graft.functions.TopKLongAgg(PhashMaxBucket))
-    val capped = banded.groupBy(col("band_id"), col("band_key"))
-      .agg(qa(col("media_id")).as("members"))
-      .select(col("band_id"), col("band_key"), explode(col("members")).as("media_id"))
-    val cand = capped.as("a")
-      .join(capped.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("ma"), col("b.media_id").as("mb"))
-      .distinct()
-    cand
+    val capped = Dedup.capped(banded, "media_id", Seq("band_id", "band_key"), PhashMaxBucket)
+    Dedup.bandPairs(capped, capped, "media_id", _ < _, "ma", "mb")
       .join(ph.as("pa"), col("ma") === col("pa.media_id"))
       .join(ph.as("pb"), col("mb") === col("pb.media_id"))
       .select(col("ma"), col("mb"),
@@ -1852,20 +1843,9 @@ object Media {
           .as("b"))
       .select(col("media_id"), col("n_frames"),
         col("b.band_id").as("band_id"), col("b.band_key").as("band_key"))
-    val qa = udaf(new graft.functions.TopKLongAgg(AudioMaxBucket))
-    val capped = banded.groupBy(col("n_frames"), col("band_id"), col("band_key"))
-      .agg(qa(col("media_id")).as("members"))
-      .select(col("n_frames"), col("band_id"), col("band_key"),
-        explode(col("members")).as("media_id"))
-    val cand = capped.as("a")
-      .join(capped.as("b"),
-        col("a.n_frames") === col("b.n_frames") &&
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("ma"), col("b.media_id").as("mb"))
-      .distinct()
-    cand
+    val capped = Dedup.capped(banded, "media_id", Seq("n_frames", "band_id", "band_key"),
+      AudioMaxBucket)
+    Dedup.bandPairs(capped, capped, "media_id", _ < _, "ma", "mb")
       .join(fps.as("pa"), col("ma") === col("pa.media_id"))
       .join(fps.as("pb"), col("mb") === col("pb.media_id"))
       .select(col("ma"), col("mb"),

@@ -969,7 +969,7 @@ object CorpusOps {
   /** Docs kept per source domain. */
   val DomainCapK = 10
 
-  private[graft] def topKAgg = new graft.functions.TopKAgg(DomainCapK)
+  private[graft] def topKAgg = new graft.functions.TopKAgg[String](DomainCapK)
 
   /** The compound (md5(id), id) selection key, encoded as ONE
     * lexicographically-faithful string — the SINGLE definition shared
@@ -1037,7 +1037,7 @@ object CorpusOps {
     * aggregation whose shuffle carries ≤ K keys per (cell, partition).
     * Output is K × cells rows at any corpus size. */
   def sampleClusterCap(s: SparkSession, dir: String): DataFrame = {
-    val qa = udaf(new graft.functions.TopKAgg(ClusterCapK))
+    val qa = udaf(new graft.functions.TopKAgg[String](ClusterCapK))
     KMeans.embKmeans(s, dir) // (vec_id, cell, n_members)
       .select(col("cell"), col("n_members"),
         hashIdKey(col("vec_id")).as("k"))

@@ -552,6 +552,49 @@ object Dedup {
     * recomputing it means re-hashing every shingle per reference — it
     * is materialized once either by persist or by a shared exchange,
     * per [[minhashEst]]'s `persistMh` contract. */
+  /** The bucket cap every banded candidate join stands on: (id,
+    * bucket…) rows of `rows`, keeping at most `k` of the smallest ids
+    * per bucket (deterministic by id). The cap is the bounded mergeable
+    * [[graft.functions.TopKAgg]], NOT a window: row_number over the
+    * bucket lands every member of a hot bucket in one task, while the
+    * aggregate caps each partition's partial state at k ids before the
+    * exchange. The oracles keep the windowed formulation (identical
+    * selection: the k smallest ids). */
+  private[graft] def capped(rows: DataFrame, id: String, bucketCols: Seq[String],
+      k: Int): DataFrame = {
+    val topk = udaf(new graft.functions.TopKAgg[Long](k))
+    rows.groupBy(bucketCols.map(col): _*).agg(topk(col(id)).as("ids"))
+      .select(explode(col("ids")).as(id) +: bucketCols.map(col): _*)
+  }
+
+  /** Candidate pairs of two [[capped]] frames: equal on every bucket
+    * column, `keep`ing the (a-id, b-id) pairs the caller's predicate
+    * admits, as (`outA`, `outB`). A pair can collide in several bands,
+    * so the distinct is part of the banding. */
+  private[graft] def bandPairs(a: DataFrame, b: DataFrame, id: String,
+      keep: (Column, Column) => Column, outA: String, outB: String): DataFrame = {
+    val sameBucket = a.columns.filter(_ != id)
+      .map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
+    a.as("a").join(b.as("b"), sameBucket && keep(col(s"a.$id"), col(s"b.$id")))
+      .select(col(s"a.$id").as(outA), col(s"b.$id").as(outB)).distinct()
+  }
+
+  /** Capped (doc_id, band_id, band_key) rows for one signature table —
+    * the banding half of [[bandCandidates]], reusable by the two-table
+    * incremental path (which bands each side separately and cross-joins
+    * instead of self-joining). */
+  private[graft] def bandedKeys(mh: DataFrame, bands: Int = Bands,
+      rowsPerBand: Int = RowsPerBand, maxBucket: Int = MaxBucket): DataFrame = {
+    require(bands * rowsPerBand <= K,
+      s"bands ($bands) x rowsPerBand ($rowsPerBand) exceeds the $K-row signature")
+    val stackArgs = (0 until bands).map { b =>
+      val ms = (0 until rowsPerBand).map(r => s"m${b * rowsPerBand + r}")
+      s"'b$b', concat_ws('_', ${ms.mkString(", ")})"
+    }.mkString(", ")
+    capped(mh.selectExpr("doc_id", s"stack($bands, $stackArgs) as (band_id, band_key)"),
+      "doc_id", Seq("band_id", "band_key"), maxBucket)
+  }
+
   /** LSH banding stage over a K-column signature table, parameterized
     * by the (bands, rowsPerBand) operating point. The collision curve
     * is P(candidate) = 1 − (1 − j^r)^b: more rows per band (r↑) sharpens
@@ -567,42 +610,10 @@ object Dedup {
     * b·maxBucket²/2 pairs per bucket regardless of how degenerate the
     * corpus is (the 87 s → 2.9 s fix measured on the 10× rehearsal,
     * SCALE.md). */
-  /** Capped (doc_id, band_id, band_key) rows for one signature table —
-    * the banding half of [[bandCandidates]], reusable by the two-table
-    * incremental path (which bands each side separately and cross-joins
-    * instead of self-joining). */
-  private[graft] def bandedKeys(mh: DataFrame, bands: Int = Bands,
-      rowsPerBand: Int = RowsPerBand, maxBucket: Int = MaxBucket): DataFrame = {
-    require(bands * rowsPerBand <= K,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) exceeds the $K-row signature")
-    val stackArgs = (0 until bands).map { b =>
-      val ms = (0 until rowsPerBand).map(r => s"m${b * rowsPerBand + r}")
-      s"'b$b', concat_ws('_', ${ms.mkString(", ")})"
-    }.mkString(", ")
-    // deterministic per-bucket cap (see [[MaxBucket]]) via the bounded
-    // mergeable aggregate, NOT a window: row_number over (band, key)
-    // lands every member of a hot bucket in one task, while
-    // [[graft.functions.TopKLongAgg]] caps each partition's partial
-    // state at K ids before the exchange — the oracle keeps the
-    // windowed formulation (identical selection: the K smallest ids)
-    val topk = udaf(new graft.functions.TopKLongAgg(maxBucket))
-    mh.selectExpr(
-        "doc_id", s"stack($bands, $stackArgs) as (band_id, band_key)")
-      .groupBy(col("band_id"), col("band_key"))
-      .agg(topk(col("doc_id")).as("ids"))
-      .select(col("band_id"), col("band_key"), explode(col("ids")).as("doc_id"))
-      .select(col("doc_id"), col("band_id"), col("band_key"))
-  }
-
   private[graft] def bandCandidates(mh: DataFrame, bands: Int = Bands,
       rowsPerBand: Int = RowsPerBand, maxBucket: Int = MaxBucket): DataFrame = {
     val banded = bandedKeys(mh, bands, rowsPerBand, maxBucket)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
+    bandPairs(banded, banded, "doc_id", _ < _, "da", "db")
   }
 
   /** `persistMh = true` callers run MULTIPLE jobs against mh (dedupCc's
@@ -632,15 +643,10 @@ object Dedup {
   /** Cross-side candidates + estimates (a-side × b-side only, each side
     * banded and bucket-capped independently — the incremental probe). */
   private[graft] def crossEst(mhA: DataFrame, mhB: DataFrame): DataFrame = {
-    val cand = bandedKeys(mhA).as("a")
-      .join(bandedKeys(mhB).as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key"))
-      // the two sides are normally disjoint (batch vs snapshot), but if
-      // a doc_id appears in both, it must not become its own est_j=1.0
-      // "duplicate" — mirror the self-join path's a < b exclusion
-      .where(col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
+    // the two sides are normally disjoint (batch vs snapshot), but if
+    // a doc_id appears in both, it must not become its own est_j=1.0
+    // "duplicate" — mirror the self-join path's a < b exclusion
+    val cand = bandPairs(bandedKeys(mhA), bandedKeys(mhB), "doc_id", _ =!= _, "da", "db")
     agreeEst(cand, mhA, mhB)
   }
 
@@ -2103,21 +2109,9 @@ object Dedup {
     val sh = dedupSimhash(s, dir)
     val keyExprs = (0 until 4).map(b =>
       s"$b, cast(shiftright(simhash, ${8 * b}) & 255 as bigint)").mkString(", ")
-    // bucket cap via the bounded aggregate — same rationale as
-    // [[bandedKeys]] (hot buckets never serialize into one window task)
-    val topk = udaf(new graft.functions.TopKLongAgg(MaxBucket))
-    val bands = sh.selectExpr("doc_id",
-        s"stack(4, $keyExprs) as (band_id, band_key)")
-      .groupBy(col("band_id"), col("band_key"))
-      .agg(topk(col("doc_id")).as("ids"))
-      .select(col("band_id"), col("band_key"), explode(col("ids")).as("doc_id"))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
-    cand
+    val bands = capped(sh.selectExpr("doc_id", s"stack(4, $keyExprs) as (band_id, band_key)"),
+      "doc_id", Seq("band_id", "band_key"), MaxBucket)
+    bandPairs(bands, bands, "doc_id", _ < _, "da", "db")
       .join(sh.select(col("doc_id"), col("simhash").as("sa")), col("da") === col("doc_id")).drop("doc_id")
       .join(sh.select(col("doc_id"), col("simhash").as("sb")), col("db") === col("doc_id")).drop("doc_id")
       .select(col("da"), col("db"),

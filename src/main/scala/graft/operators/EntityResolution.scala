@@ -196,9 +196,7 @@ object EntityResolution {
     * Gate: the catalog split into two key ranges and folded from
     * [[emptyState]] (the bootstrap is the same step over an empty
     * state — ONE code path backfills and maintains, the
-    * [[Ivm.streamIvm]] discipline), relabeled over all records; it
-    * serves both `er_incr` and `stream_er` ([[graft.streaming.ErStream]]
-    * runs the same step per micro-batch).
+    * [[Ivm.streamIvm]] discipline), relabeled over all records.
     *
     * EXACTNESS: bit-identical to the full recompute (the oracle IS
     * [[erEntitiesSql]]) under two documented preconditions — batch
@@ -206,9 +204,17 @@ object EntityResolution {
     * stable; a smaller key re-entering an old name routes to rebuild)
     * and the block cap not NEWLY binding (same caveat as
     * dedup_cc_incr's bucket caps; gate SFs sit far below it). */
-  def erIncr(s: SparkSession, dir: String): DataFrame = {
+  def erIncr(s: SparkSession, dir: String): DataFrame = rangeFold(s, dir, 2)
+
+  /** Gate: [[erIncr]]'s fold over three key ranges, so the last batch
+    * folds over a state that a fold built, not the bootstrap's
+    * ([[graft.streaming.ErStream]] runs the same step per micro-batch).
+    * Same oracle, same preconditions. */
+  def streamEr(s: SparkSession, dir: String): DataFrame = rangeFold(s, dir, 3)
+
+  private def rangeFold(s: SparkSession, dir: String, batches: Int): DataFrame = {
     val all = names(s, dir)
-    val state = graft.Graft.rangeSplit(all, "k", 2).foldLeft(emptyState(s)) {
+    val state = graft.Graft.rangeSplit(all, "k", batches).foldLeft(emptyState(s)) {
       (st, batch) => erEntitiesVs(s, batch, dnOfState(st), priorOfState(st))
     }
     recordsUnder(all, state)

@@ -509,7 +509,7 @@ object Pipeline {
     val kept = scored.crossJoin(broadcast(thr))
       .where(col("clf_score") > col("thr"))
       .join(Tables.documents(s, dir).select(col("doc_id"), col("source")), "doc_id")
-    val qa = udaf(new graft.functions.TopKAgg(MixCapK))
+    val qa = udaf(new graft.functions.TopKAgg[String](MixCapK))
     val capped = kept
       .select(col("source"), CorpusOps.hashIdKey(col("doc_id")).as("k"))
       .groupBy(col("source")).agg(qa(col("k")).as("topk"))

@@ -113,19 +113,15 @@ object Similarity {
   def nCentroids(n: Long): Int =
     math.max(16, 2 * math.ceil(math.sqrt(n.toDouble)).toLong).toInt
 
-  /** Cell membership with the [[IvfMaxCell]] cap applied — the bounded
-    * [[graft.functions.TopKLongAgg]] aggregate shuffles on `cell` (the
+  /** Cell membership with the [[IvfMaxCell]] cap applied
+    * ([[Dedup.capped]]): the bounded aggregate shuffles on `cell` (the
     * same key the candidate join needs next, so the cap costs no extra
     * exchange) with ≤ K ids per (cell, partition) in the shuffle: a hot
     * cell in a clustered corpus never serializes into one window task.
     * Selection is identical to the oracle's windowed form (the K
     * smallest vec_ids per cell). */
-  private[operators] def cappedAssign(cells: DataFrame): DataFrame = {
-    val topk = udaf(new graft.functions.TopKLongAgg(IvfMaxCell))
-    cells.select(col("vec_id"), col("cell"))
-      .groupBy(col("cell")).agg(topk(col("vec_id")).as("ids"))
-      .select(explode(col("ids")).as("vec_id"), col("cell"))
-  }
+  private[operators] def cappedAssign(cells: DataFrame): DataFrame =
+    Dedup.capped(cells, "vec_id", Seq("cell"), IvfMaxCell)
 
   /** Shared coarse-quantizer oracle chain: scaled vectors → centroid
     * count → centroid rows → per-vector centroid dots. Every IVF-family
@@ -646,15 +642,16 @@ object Similarity {
     // same [[IvfMaxCell]] inverted-list cap as simIvfTopk: ADC makes
     // each candidate cheap, but hot-cell pair COUNTS still grow Σ|cell|².
     // The cap CARRIES the codes through the bounded aggregate
-    // ([[graft.functions.TopKPayloadAgg]]: ≤ K (id, codes) entries per
-    // (cell, partition) in the shuffle, map-side combined) — an earlier
+    // ([[graft.functions.TopKAgg]] over [[graft.functions.IdCodes]]:
+    // ≤ K (id, codes) entries per (cell, partition) in the shuffle,
+    // map-side combined) — an earlier
     // version capped ids with [[cappedAssign]] and semi-joined the
     // codes back, which re-evaluated the encode branch a THIRD time
     // (column pruning defeats exchange reuse here, see [[simIvfPqTopk]])
     // and added an exchange; 10× rehearsal min-of-4: one-pass 2.0 s ==
     // the skew-unsafe window cap, join-back ≥ 5.4 s in every sample.
     // Selection (K smallest vec_ids per cell) and results are identical
-    val topk = udaf(new graft.functions.TopKPayloadAgg(IvfMaxCell))
+    val topk = udaf(new graft.functions.TopKAgg[graft.functions.IdCodes](IvfMaxCell))
     val assign = enc.select(col("vec_id"), col("cell"), col("codes"))
       .groupBy(col("cell")).agg(topk(col("vec_id"), col("codes")).as("members"))
       .select(col("cell"), explode(col("members")).as("m"))
@@ -750,21 +747,10 @@ object Similarity {
     val stackArgs = (0 until bands).map { b =>
       s"'p$b', shiftright(sig, ${b * bitsPerBand}) & ${(1L << bitsPerBand) - 1}"
     }.mkString(", ")
-    // bucket cap via the bounded aggregate — same selection, no
-    // one-task-per-hot-bucket window (see [[cappedAssign]])
-    val topk = udaf(new graft.functions.TopKLongAgg(maxBucket))
-    val banded = sig
-      .selectExpr("vec_id", s"stack($bands, $stackArgs) as (band_id, band_key)")
-      .groupBy(col("band_id"), col("band_key"))
-      .agg(topk(col("vec_id")).as("ids"))
-      .select(explode(col("ids")).as("vec_id"), col("band_id"), col("band_key"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"))
-      .distinct()
+    val banded = Dedup.capped(
+      sig.selectExpr("vec_id", s"stack($bands, $stackArgs) as (band_id, band_key)"),
+      "vec_id", Seq("band_id", "band_key"), maxBucket)
+    Dedup.bandPairs(banded, banded, "vec_id", _ =!= _, "query_id", "neighbor_id")
   }
 
   def simLshTopk(s: SparkSession, dir: String): DataFrame = {

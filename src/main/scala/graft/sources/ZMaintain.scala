@@ -86,9 +86,14 @@ object ZMaintain {
     // the batch's bucket set: bounded driver state (≤ NBuckets values)
     val touched = updates.select(bucketOf(col(key)).as("b"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (touched.isEmpty) {
+      // a first merge with no rows still leaves a readable, empty
+      // table: one bucket dir whose single file carries the schema
+      if (!fs.exists(root)) updates.limit(0).write.parquet(s"$dir/b=0")
+      return touched
+    }
     val existing = touched.filter(b =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$dir/bucket=$b")))
     val target =
@@ -117,7 +122,8 @@ object ZMaintain {
     * state-maintenance I/O proportional to the batch's bucket
     * footprint, never the table. Untouched bucket files are never
     * opened (byte-stable, StreamingSpec-pinned). Returns the touched
-    * bucket ids.
+    * bucket ids; a first merge that touches none writes an empty
+    * table, so the state reads back empty instead of missing.
     *
     * Crash/replay contract: there is no cross-bucket transaction — a
     * crash mid-write can land a subset of the touched buckets. The
@@ -130,9 +136,14 @@ object ZMaintain {
     val cols = updates.columns.toSeq
     val touched = updates.select(bucket.as("b")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (touched.isEmpty) {
+      // a first merge with no rows still leaves a readable, empty
+      // table: one bucket dir whose single file carries the schema
+      if (!fs.exists(root)) updates.limit(0).write.parquet(s"$dir/b=0")
+      return touched
+    }
     val existing = touched.filter(b =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$dir/b=$b")))
     val target =

@@ -272,10 +272,9 @@ private[graft] final class MinKeeper(key: String) {
 
   /** Fold the batch-local `state` into the stored state, then append
     * the rows `admit` keeps under the FOLDED state as batch `batchId`'s
-    * output. A batch that touches no bucket (no rows) writes no state,
-    * and on a fresh table the state dir does not exist yet, so it
-    * admits against its own empty `state` and appends an empty
-    * output. */
+    * output. A batch that touches no bucket (no rows) changes no
+    * state, so it admits against its own empty `state` without reading
+    * the stored one and appends an empty output. */
   def fold(tableDir: String, batchId: Long, state: DataFrame)(
       admit: DataFrame => DataFrame): Unit = {
     val s = state.sparkSession

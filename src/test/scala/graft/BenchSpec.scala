@@ -125,4 +125,23 @@ class BenchSpec extends AnyFunSuite {
     val userCol2 = "Filter (x_9#7 > 5)"
     assert(Bench.normalizePlan(userCol2).contains("x_9#x"))
   }
+
+  test("normalizePlan: RDD ids, call-site lines and formatted stage and codegen ids collapse, real changes do not") {
+    // a checkpointed scan names its RDD: the id depends on which gates
+    // ran earlier in the JVM, the line on edits above the call site
+    val runA = "Scan ExistingRDD[doc_id#1L,label#2L], MapPartitionsRDD[1021] at localCheckpoint at Dedup.scala:1392, ExistingRDD"
+    val runB = "Scan ExistingRDD[doc_id#7L,label#8L], MapPartitionsRDD[87] at localCheckpoint at Dedup.scala:1410, ExistingRDD"
+    assert(Bench.normalizePlan(runA) == Bench.normalizePlan(runB),
+      "RDD ids and call-site lines must not tell two plans apart")
+    val runC = runB.replace("Scan ExistingRDD", "Filter isnotnull(doc_id#7L)\n+- Scan ExistingRDD")
+    assert(Bench.normalizePlan(runA) != Bench.normalizePlan(runC))
+    // the formatted explain's stage and codegen ids collapse too; a
+    // limit's bare-number arguments do not
+    def stage(id: Int, codegen: Int) =
+      s"(28) ShuffleQueryStage\nOutput [2]: [g#1, sum#2]\nArguments: $id\n\n" +
+        s"(30) HashAggregate [codegen id : $codegen]\n\n(31) CollectLimit\nArguments: 10"
+    assert(Bench.normalizePlan(stage(5, 17)) == Bench.normalizePlan(stage(6, 16)))
+    assert(Bench.normalizePlan(stage(5, 17)) !=
+      Bench.normalizePlan(stage(5, 17).replace("Arguments: 10", "Arguments: 20")))
+  }
 }

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** Layout rules for `src/main/scala` code (comment lines skipped): one
   * session builder, one scheduler listener, one copy of each dedup
-  * pair-join step and one incremental-components fold, so the copies
-  * cannot come back one tool or one function at a time. */
+  * pair-join step, one incremental-components fold and one bucket cap,
+  * so the copies cannot come back one tool or one function at a time. */
 class LayoutSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -68,5 +68,12 @@ class LayoutSpec extends AnyFunSuite {
       assert(hits.size == 1 && hits.head.startsWith("graft/operators/Dedup.scala:"),
         s"$needle: $hits")
     }
+  }
+
+  test("the bucket cap is one aggregate, one capped-members step and one band join") {
+    for (needle <- Seq("TopKLongAgg", "TopKPayloadAgg", "col(\"a.band_key\")"))
+      assert(codeMentions(needle).isEmpty, s"$needle: ${codeMentions(needle)}")
+    val topk = codeMentions("new graft.functions.TopKAgg[Long]")
+    assert(topk.size == 1 && topk.head.startsWith("graft/operators/Dedup.scala:"), topk)
   }
 }

@@ -246,27 +246,37 @@ class PlanSpec extends AnyFunSuite {
   test("band-bucket / cell caps partial-aggregate; no window over a bucket key") {
     // the skew hazard this pins: row_number() over (band/cell) lands a
     // hot bucket's every member in ONE window task (AQE cannot split
-    // window partitions); the TopKLongAgg form caps each partition's
+    // window partitions); the TopKAgg form caps each partition's
     // shuffle contribution at K ids
-    def check(df: DataFrame, name: String, bucketCols: Seq[String],
-        agg: String = "partial_topklongagg"): Unit = {
+    def check(df: DataFrame, name: String, bucketCols: Seq[String]): String = {
       val txt = plan(df).toString
-      assert(txt.contains(agg),
+      assert(txt.contains("partial_topkagg"),
         s"$name: bucket cap must partial-aggregate before the exchange")
       bucketCols.foreach { c =>
         assert(!txt.contains(s"windowspecdefinition($c"),
           s"$name: no window may partition on the bucket key $c")
       }
+      txt
     }
     check(Dedup.dedupMinhash(spark, dir), "dedup_minhash", Seq("band_id"))
     check(Dedup.dedupSimhashPairs(spark, dir), "dedup_simhash_pairs", Seq("band_id"))
     check(Dedup.dedupSemantic(spark, dir), "dedup_semantic", Seq("cell"))
     check(Similarity.simIvfTopk(spark, dir), "sim_ivf_topk", Seq("cell"))
     check(Similarity.simLshTopk(spark, dir), "sim_lsh_topk", Seq("band_id"))
+    check(graft.multimodal.Media.mmPhashPairs(spark, dir), "mm_phash_pairs", Seq("band_id"))
+    check(graft.multimodal.Media.mmAudioPairs(spark, dir), "mm_audio_pairs",
+      Seq("n_frames", "band_id"))
     // the IVF-PQ cap carries the codes payload through the aggregate
-    // (one pass, no join-back — see TopKPayloadAgg's scaladoc)
-    check(Similarity.simIvfPqTopk(spark, dir), "sim_ivfpq_topk", Seq("cell"),
-      agg = "partial_topkpayloadagg")
+    // (one pass, no join-back): its members are (id, codes) structs,
+    // and the probe-to-cell join is the plan's only join
+    val pq = Similarity.simIvfPqTopk(spark, dir)
+    val pqTxt = check(pq, "sim_ivfpq_topk", Seq("cell"))
+    assert("topkagg\\(vec_id#\\d+L?, codes#".r.findFirstIn(pqTxt).nonEmpty,
+      s"sim_ivfpq_topk: the cap must carry the codes:\n$pqTxt")
+    val joins = plan(pq).collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }
+    assert(joins.size == 1, s"sim_ivfpq_topk: no join-back of the codes (${joins.size} joins):\n$pqTxt")
   }
 
   test("sample_importance: the log-ratio table broadcasts; no window in the scoring pipeline") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -1519,22 +1520,13 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("CC and ER sinks: an empty first batch and an empty middle batch change no stored state") {
-    // both sinks fold into versioned state: an empty first batch on a
-    // fresh table commits an empty state, and an empty middle batch
-    // re-commits its predecessor, so the final state equals the run
-    // without the empty batches
-    import graft.streaming.{CcStream, ErStream}
-    import org.apache.spark.sql.{DataFrame, SparkSession}
-    type Sink = String => (DataFrame, Long) => Unit
-    val sf = "/root/testdata/sf0.001"
-    val sinks = Seq[(String, Sink, (SparkSession, String) => DataFrame, DataFrame, String)](
-      ("cc", CcStream.ccSink, CcStream.storedLabels,
-        spark.read.parquet(s"$sf/documents.parquet").select(col("doc_id"), col("text")),
-        "doc_id"),
-      ("er", ErStream.erSink, ErStream.storedState,
-        spark.read.parquet(s"$sf/part.parquet").select(col("p_partkey"), col("p_name")),
-        "p_partkey"))
+  /** Each sink folds `input`'s two key ranges with an empty batch
+    * first and one in the middle: an empty first batch on a fresh
+    * table stores an empty state, and an empty middle batch changes
+    * nothing, so the final state equals the run without the empty
+    * batches. */
+  private def emptyBatchesChangeNoState(sinks: Seq[(String, String => (DataFrame, Long) => Unit,
+      (SparkSession, String) => DataFrame, DataFrame, String)]): Unit =
     for ((name, sink, stored, input, key) <- sinks) {
       val ids = input.select(min(col(key)), max(col(key))).collect()(0)
       val mid = ids.getLong(0) + (ids.getLong(1) - ids.getLong(0)) / 2
@@ -1556,6 +1548,33 @@ class StreamingSpec extends AnyFunSuite {
       assert(afterB1.nonEmpty && state(table) == state(plain),
         s"$name: empty batches must not change the final state")
     }
+
+  test("CC and ER sinks: an empty first batch and an empty middle batch change no stored state") {
+    // both sinks fold into versioned state: an empty first batch on a
+    // fresh table commits an empty state, and an empty middle batch
+    // re-commits its predecessor
+    import graft.streaming.{CcStream, ErStream}
+    val sf = "/root/testdata/sf0.001"
+    emptyBatchesChangeNoState(Seq(
+      ("cc", CcStream.ccSink, CcStream.storedLabels,
+        spark.read.parquet(s"$sf/documents.parquet").select(col("doc_id"), col("text")),
+        "doc_id"),
+      ("er", ErStream.erSink, ErStream.storedState,
+        spark.read.parquet(s"$sf/part.parquet").select(col("p_partkey"), col("p_name")),
+        "p_partkey")))
+  }
+
+  test("keyed-state sinks: an empty first batch and an empty middle batch change no stored state") {
+    // the HLL and quantile sinks commit versioned state; the novelty
+    // sink folds into bucketed state, where an empty first batch
+    // touches no bucket and must still leave a readable empty table
+    import graft.streaming.{NoveltyStream, SketchStream}
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang"))
+    emptyBatchesChangeNoState(Seq(
+      ("hll", SketchStream.hllSink, SketchStream.storedHllRegs, docs, "doc_id"),
+      ("quantile", SketchStream.quantileSink, SketchStream.storedQuantileState, docs, "doc_id"),
+      ("novelty", NoveltyStream.noveltySink, NoveltyStream.storedFirstSeen, docs, "doc_id")))
   }
 
   test("streaming doremi model: count fold across restarts equals the one-shot mixture; replay never double-folds") {

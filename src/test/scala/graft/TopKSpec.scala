@@ -1,8 +1,11 @@
 package graft
 
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.Random
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.TopKAgg
+import graft.functions.{IdCodes, TopKAgg}
 import graft.operators.CorpusOps
 
 /** The bounded top-K aggregate: reduce/merge equal sorted-take(K), the
@@ -13,19 +16,30 @@ class TopKSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
   private val K = 7
-  private val agg = new TopKAgg(K)
+  private val agg = new TopKAgg[String](K)
 
-  test("reduce+merge == sorted.take(K) on random streams, state never exceeds K") {
-    val rnd = new scala.util.Random(3)
+  /** Random `keys` split in two, each half folded by reduce, then
+    * merged: equals sorted.take(K), and no state ever exceeds K. */
+  private def checkReduceMerge[T: Ordering: ClassTag: TypeTag](draw: Random => T): Unit = {
+    val agg = new TopKAgg[T](K)
+    val rnd = new Random(3)
     (1 to 50).foreach { _ =>
-      val keys = Seq.fill(rnd.between(0, 60))(rnd.alphanumeric.take(8).mkString)
+      val keys = Seq.fill(rnd.between(0, 60))(draw(rnd))
       val (l, r) = keys.splitAt(rnd.between(0, keys.size + 1))
-      def fold(vs: Seq[String]) = vs.foldLeft(agg.zero) { (b, k) =>
+      def fold(vs: Seq[T]) = vs.foldLeft(agg.zero) { (b, k) =>
         val nb = agg.reduce(b, k); assert(nb.length <= K); nb
       }
       val merged = agg.merge(fold(l), fold(r))
       assert(merged.toSeq == keys.sorted.take(K))
     }
+  }
+
+  test("reduce+merge == sorted.take(K) on random streams, state never exceeds K") {
+    checkReduceMerge(_.alphanumeric.take(8).mkString)
+    checkReduceMerge(_.between(0L, 40L)) // small range: duplicate keys are kept
+    // distinct ids (vector ids are): the payload must follow its id
+    val ids = Iterator.from(0).map(_.toLong * 7919 % 100003)
+    checkReduceMerge(r => IdCodes(ids.next(), Seq.fill(3)(r.nextInt(256))))
   }
 
   test("distributed: skewed partitioning yields the identical top-K per group") {
