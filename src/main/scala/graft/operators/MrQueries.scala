@@ -11,8 +11,8 @@ import graft.mr.{Apps, MRJob}
   *  1. DataFrame-native (this file's q functions) — codegen'd built-ins,
   *    partial aggregation, the way you'd actually run them on 100 TB;
   *  2. through the [[graft.mr.MRJob]] compat façade (mrCompatWc) — the
-  *     faithful groupByKey path, proving the compat layer end-to-end in
-  *     the driver's oracle gate.
+  *     faithful combiner-free shuffle and sorted reduce, proving the
+  *     compat layer end-to-end in the DuckDB oracle gate.
   *
   * The "documents" fixture table stands in for the reference's
   * bucket-of-text-files corpus; `doc_<id>` is the document name.
@@ -112,8 +112,8 @@ object MrQueries {
 
   // ---------------------------------------------------- mr_compat_wc
   /** Word count routed through the faithful MapReduce façade
-    * ([[graft.mr.MRJob]]): whole-document map fn → groupByKey →
-    * reduce fn. Same oracle as mrWc — proves the compat layer computes
+    * ([[graft.mr.MRJob]]): whole-document map fn → key-hashed
+    * shuffle → sort and group → reduce fn. Same oracle as mrWc — proves the compat layer computes
     * identical results to the DataFrame-native plan. */
   def mrCompatWc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Layout rules for `src/main/scala` code (comment lines skipped): one
   * session builder, one scheduler listener, one copy of each dedup
-  * pair-join step, one incremental-components fold and one bucket cap,
-  * so the copies cannot come back one tool or one function at a time. */
+  * pair-join step, one incremental-components fold, one bucket cap and
+  * one whole-file reader, so the copies cannot come back one tool or one
+  * function at a time. */
 class LayoutSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -75,5 +76,9 @@ class LayoutSpec extends AnyFunSuite {
       assert(codeMentions(needle).isEmpty, s"$needle: ${codeMentions(needle)}")
     val topk = codeMentions("new graft.functions.TopKAgg[Long]")
     assert(topk.size == 1 && topk.head.startsWith("graft/operators/Dedup.scala:"), topk)
+  }
+
+  test("whole files are read by the listed reader, not wholeTextFiles") {
+    assert(codeMentions("wholeTextFiles").isEmpty, codeMentions("wholeTextFiles"))
   }
 }

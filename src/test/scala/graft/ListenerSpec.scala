@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.mr.{Apps, MRJob}
+import graft.tools.RunListener
 import scala.collection.concurrent.TrieMap
 
 /** SURVEY §2.2 A6 (jobcount): the reference asserts every map task ran
@@ -55,6 +56,16 @@ class ListenerSpec extends AnyFunSuite {
       s"every task must succeed on attempt 0: ${attempts.filter(_._2.exists(v => v._1 != 0 || !v._2))}")
     val multi = attempts.filter(_._2.size != 1)
     assert(multi.isEmpty, s"tasks ran more than once: $multi")
+  }
+
+  test("runFiles runs two jobs: the map stage, then the reduce stage that writes") {
+    val in = java.nio.file.Files.createTempDirectory("graft-jobs-in")
+    for (i <- 1 to 5) java.nio.file.Files.writeString(in.resolve(s"f$i.txt"), s"w$i x y x")
+    val out = s"${java.nio.file.Files.createTempDirectory("graft-jobs-out")}/out"
+    val listener = RunListener.of(spark)
+    listener.reset()
+    MRJob.runFiles(spark, in.toString, out, Apps.wcMap, Apps.wcReduce)
+    assert(listener.jobs.size == 2, listener.jobs)
   }
 
   test("in-flight data-quality counters (Observation API) match a separate audit query, at zero extra passes") {

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.mr.{Apps, MRJob}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
+import graft.mr.{Apps, MRJob, WholeFiles}
 
 /** Differential + property tests for the MapReduce compat layer,
   * mirroring the reference's test strategy (SURVEY.md §5): distributed
@@ -94,16 +96,76 @@ class MRJobSpec extends AnyFunSuite {
     assert(a.collect().sorted === b.collect().sorted)
   }
 
-  test("whole-file source: one file = one record, never line-split") {
+  /** A temp dir holding `files` (name → bytes). */
+  private def dirOf(files: (String, Array[Byte])*): java.nio.file.Path = {
     val dir = java.nio.file.Files.createTempDirectory("graft-wholefiles")
-    corpus.foreach { case (name, contents) =>
-      java.nio.file.Files.writeString(dir.resolve(name), contents)
-    }
-    val ds = graft.mr.WholeFiles.read(spark, dir.toString)
+    files.foreach { case (name, bytes) => java.nio.file.Files.write(dir.resolve(name), bytes) }
+    dir
+  }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(UTF_8)
+
+  private def corpusDir: java.nio.file.Path = dirOf(corpus.map { case (n, c) => n -> utf8(c) }: _*)
+
+  test("whole-file source: one file = one record, never line-split") {
+    val ds = WholeFiles.read(spark, corpusDir.toString)
     val got = ds.collect().toMap
     assert(got.size == corpus.size)
     assert(got("f1.txt").contains("\n"), "multi-line file must stay one record")
     assert(got === corpus.toMap)
+  }
+
+  test("whole-file source: a zero-byte file is a record") {
+    val dir = dirOf("empty.txt" -> Array.emptyByteArray, "a.txt" -> utf8("a b"))
+    assert(WholeFiles.read(spark, dir.toString).collect().toSet ==
+      Set("empty.txt" -> "", "a.txt" -> "a b"))
+  }
+
+  test("whole-file source: _ and . names are skipped; a directory equals its glob") {
+    val dir = dirOf("a.txt" -> utf8("x"), "b.txt" -> utf8("y z"),
+      "_SUCCESS" -> Array.emptyByteArray, ".x.crc" -> utf8("crc"))
+    val byDir = WholeFiles.read(spark, dir.toString).collect().sorted.toSeq
+    assert(byDir == Seq("a.txt" -> "x", "b.txt" -> "y z"))
+    assert(WholeFiles.read(spark, s"$dir/*.txt").collect().sorted.toSeq == byDir)
+  }
+
+  test("whole-file source: a glob that matches nothing throws") {
+    val dir = dirOf("a.txt" -> utf8("x"))
+    intercept[java.io.IOException](WholeFiles.read(spark, s"$dir/*.csv").collect())
+    intercept[java.io.IOException](WholeFiles.read(spark, s"$dir/none").collect())
+  }
+
+  test("whole-file source: multi-byte letters and an invalid byte decode as wholeTextFiles does") {
+    val bytes = utf8("grüße 日本語 été\n") ++ Array(0xff.toByte) ++ utf8(" fin")
+    val dir = dirOf("u.txt" -> bytes)
+    val oracle = spark.sparkContext.wholeTextFiles(dir.toString).collect()
+      .map { case (p, c) => (p.split('/').last, c) }.toSeq
+    assert(WholeFiles.read(spark, dir.toString).collect().toSeq == oracle)
+    assert(oracle.head._2.contains('\uFFFD'))
+  }
+
+  /** `runFiles` over `corpus` in a temp dir: the `part-` files' lines. */
+  private def runFilesParts(mapf: MRJob.MapF, reducef: MRJob.ReduceF): Seq[Seq[String]] = {
+    val out = s"${java.nio.file.Files.createTempDirectory("graft-mr-out")}/out"
+    MRJob.runFiles(spark, corpusDir.toString, out, mapf, reducef, nReduce = 3)
+    new java.io.File(out).listFiles().toSeq.filter(_.getName.startsWith("part-"))
+      .map(f => java.nio.file.Files.readAllLines(f.toPath, UTF_8).asScala.toSeq)
+  }
+
+  test("runFiles over files (an empty one, multi-line ones) equals the sequential oracle") {
+    for ((mapf, reducef) <- Seq(Apps.wcMap -> Apps.wcReduce,
+        Apps.indexerMap -> Apps.indexerReduce))
+      assert(runFilesParts(mapf, reducef).flatten.sorted == oracle(corpus, mapf, reducef))
+  }
+
+  test("runFiles: every part- file is in ascending key order (UTF-8 byte order)") {
+    val parts = runFilesParts(Apps.wcMap, Apps.wcReduce)
+    assert(parts.count(_.nonEmpty) > 1, "the keys must spread over several reducers")
+    for (lines <- parts) {
+      val keys = lines.map(l => utf8(l.takeWhile(_ != ' ')))
+      assert(keys.zip(keys.drop(1)).forall { case (a, b) =>
+        java.util.Arrays.compareUnsigned(a, b) < 0 }, lines)
+    }
   }
 
   implicit class LinesOps(lines: Seq[String]) {

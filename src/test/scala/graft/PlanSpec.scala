@@ -308,6 +308,16 @@ class PlanSpec extends AnyFunSuite {
       s"entropy needs only doc_id+text: $read")
   }
 
+  test("MRJob.runKV: one key-hashed exchange into nReduce partitions, no round-robin") {
+    import spark.implicits._
+    val input = Seq("a.txt" -> "x y x", "b.txt" -> "y z").toDS()
+    val txt = graft.mr.MRJob.runKV(input, graft.mr.Apps.wcMap, graft.mr.Apps.wcReduce,
+      nReduce = 7).queryExecution.executedPlan.toString
+    assert("Exchange ".r.findAllIn(txt).length == 1, txt)
+    assert("Exchange hashpartitioning\\(key#\\d+, 7\\)".r.findFirstIn(txt).isDefined, txt)
+    assert(!txt.contains("RoundRobinPartitioning"), txt)
+  }
+
   test("events_transitions: exactly one user-keyed exchange (the lag window's), no cartesian") {
     val prepared = Relational2.eventsTransitions(spark, dir)
       .queryExecution.executedPlan.toString
