@@ -278,6 +278,16 @@ object Bench {
       .replaceAll("QueryStage\n(Output[^\n]*\n)Arguments: \\d+", "QueryStage\n$1Arguments: x")
       .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : x]")
 
+  /** JSON string literal: quote, backslash, newline and every other
+    * control char below 0x20 escaped, so a tab or CR in a gate name, an
+    * error or an oracle SQL can never break a reader's JSON parse.
+    * Bench's record line and Verify's `oracle_sql.json` both use it. */
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -299,7 +309,7 @@ object Bench {
     val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(list) => list.split(",").toSeq // local iteration filter
       case None =>
-        if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")) SparkEntry.queries.keys.toSeq.sorted
+        if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")) SparkEntry.names
         else SparkEntry.benchQueries
     }
     // warmup: JVM/codegen/parquet-footer costs land here, not in q1's
@@ -514,11 +524,6 @@ object Bench {
     // errored queries are excluded from `queries` AND `total`: a broken
     // query must read as missing+errored, never as a fast time
     val total = ok.map(_._2).sum
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val errJson = errs.map { case (k, e) => s"${jstr(k)}:${jstr(e)}" }
       .mkString("{", ",", "}")
     def floorJson(ts: Map[String, Double]): String =

@@ -45,7 +45,7 @@ final class Graft private (val spark: SparkSession, val dataDir: String) {
         s"unknown table '$name' (have: ${tableNames.mkString(", ")})"))
 
   /** Every registered operator, by gate name. */
-  def ops: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
+  def ops: Seq[String] = SparkEntry.names
 
   /** Run an operator at its gate operating point. The returned frame is
     * lazy — call an action (show/count/write) to execute. */

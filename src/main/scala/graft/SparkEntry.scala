@@ -1,14 +1,20 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.multimodal.Media
 import graft.operators._
+import graft.plans.MvRewrite
+import graft.sources.{Formats, IcebergExport, Manifest, ZMaintain, ZOrder, ZPrune}
+import graft.streaming._
+import graft.web.{Redirects, WebIngest}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every implemented operator from SURVEY.md §2 (plus the extension
-  * surface: dedup, similarity search, text analysis, streaming) gets one
-  * entry in [[queries]]; SQL-expressible ones also get a DuckDB oracle in
-  * [[oracleSql]] with IDENTICAL column names and deterministic values.
+/** The gate registry (driver contract, SURVEY.md §7). Every implemented
+  * operator from SURVEY.md §2, plus the extension surface (dedup,
+  * similarity search, text analysis, streaming), is one row of
+  * [[gates]]: its name, its operator and its DuckDB oracle SQL, which
+  * must produce IDENTICAL column names and deterministic values.
+  * [[queries]], [[oracleSql]] and [[names]] are derived from the rows,
+  * so a gate cannot be registered without its oracle.
   */
 object SparkEntry {
 
@@ -16,665 +22,409 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg"            -> (Relational.q1Agg _),
-    "q2_selective_agg"  -> (Relational.q2SelectiveAgg _),
-    "q3_join_topk"      -> (Relational.q3JoinTopk _),
-    "q4_semi_join"      -> (Relational.q4SemiJoin _),
-    "q5_anti_join"      -> (Relational.q5AntiJoin _),
-    "q6_multi_join"     -> (Relational.q6MultiJoin _),
-    "q7_broadcast_join" -> (Relational.q7BroadcastJoin _),
-    "q8_window_rank"    -> (Relational.q8WindowRank _),
-    "q9_window_running" -> (Relational.q9WindowRunning _),
-    "q10_topk"          -> (Relational.q10TopK _),
-    "q11_setops"        -> (Relational.q11SetOps _),
-    "q12_rollup"        -> (Relational.q12Rollup _),
-    "q13_cube"          -> (Relational.q13Cube _),
-    "q14_distinct_agg"  -> (Relational.q14DistinctAgg _),
-    "q15_scalar"        -> (Relational.q15Scalar _),
-    "q16_date_parts"    -> (Relational.q16DateParts _),
-    "q17_json"          -> (Relational.q17Json _),
-    "q18_asof"          -> (Relational.q18AsOf _),
-    "q19_event_window"  -> (Relational.q19EventWindow _),
-    "q20_approx_distinct" -> (Relational.q20ApproxDistinct _),
-    "q21_arrays"        -> (Relational.q21Arrays _),
-    "q23_stats"         -> (Relational.q23Stats _),
-    "q24_pivot"         -> (Relational2.q24Pivot _),
-    "q25_correlated"    -> (Relational2.q25Correlated _),
-    "q26_posexplode"    -> (Relational2.q26PosExplode _),
-    "q27_maps"          -> (Relational2.q27Maps _),
-    "q28_regex"         -> (Relational2.q28Regex _),
-    "q29_window_battery" -> (Relational2.q29WindowBattery _),
-    "q30_range_join"    -> (Relational2.q30RangeJoin _),
-    "mr_wc"             -> (MrQueries.mrWc _),
-    "mr_indexer"        -> (MrQueries.mrIndexer _),
-    "mr_doc_tokens"     -> (MrQueries.mrDocTokens _),
-    "mr_metadata"       -> (MrQueries.mrMetadata _),
-    "mr_compat_wc"      -> (MrQueries.mrCompatWc _),
-    "mr_compat_indexer" -> (MrQueries.mrCompatIndexer _),
-    "ta_quality"        -> (TextAnalysis.taQuality _),
-    "ta_token_count"    -> (TextAnalysis.taTokenCount _),
-    "ta_lang_id"        -> (TextAnalysis.taLangId _),
-    "ta_fingerprint"    -> (TextAnalysis.taFingerprint _),
-    "ta_chunk_fp"       -> (TextAnalysis.taChunkFp _),
-    "ta_heavy_hitters"  -> (HeavyHitters.taHeavyHitters _),
-    "dedup_exact"       -> (Dedup.dedupExact _),
-    "dedup_ngram"       -> (Dedup.dedupNgram _),
-    "dedup_minhash"     -> (Dedup.dedupMinhash _),
-    "dedup_simhash"     -> (Dedup.dedupSimhash _),
-    "dedup_embedding"   -> (Dedup.dedupEmbedding _),
-    "dedup_cc"          -> (Dedup.dedupCc _),
-    "dedup_cc_star"     -> (Dedup.dedupCcStar _),
-    "minhash_agg_sig"   -> (Dedup.minhashAggSig _),
-    "q38_bucketed_join" -> (BucketedJoin.q38BucketedJoin _),
-    "q39_full_outer"    -> (Pipeline.q39FullOuter _),
-    "q40_gapfill"       -> (Relational2.q40GapFill _),
-    "pipeline_clean"    -> (Pipeline.pipelineClean _),
-    "ta_tfidf"          -> (CorpusOps.taTfidf _),
-    "ta_bigrams"        -> (CorpusOps.taBigrams _),
-    "ta_lm_score"       -> (CorpusOps.taLmScore _),
-    "ta_lm_kn"          -> (CorpusOps.taLmKn _),
-    "ta_bm25"           -> (CorpusOps.taBm25 _),
-    "sample_stratified" -> (CorpusOps.sampleStratified _),
-    "sample_fixed_k"    -> (CorpusOps.sampleFixedK _),
-    "emb_centroids"     -> (CorpusOps.embCentroids _),
-    "emb_kmeans"        -> (KMeans.embKmeans _),
-    "emb_quantize"      -> (KMeans.embQuantize _),
-    "q31_approx_pctile" -> (Relational.q31ApproxPercentile _),
-    "q32_range_frame"   -> (Relational2.q32RangeFrame _),
-    "q33_cov_corr"      -> (Relational.q33CovCorr _),
-    "q34_histogram"     -> (Relational.q34Histogram _),
-    "q36_funnel"        -> (Relational2.q36Funnel _),
-    "q37_cohort"        -> (Relational2.q37Cohort _),
-    "q35_dq_checks"     -> (Relational.q35DqChecks _),
-    "dedup_edit"        -> (Dedup.dedupEdit _),
-    "dedup_ngram_verify" -> (Dedup.dedupNgramVerify _),
-    "dedup_substring"   -> (Dedup.dedupSubstring _),
-    "sql_cte"           -> (SqlSurface.qSqlCte _),
-    "sim_topk"          -> (Similarity.simTopk _),
-    "sim_lsh_topk"      -> (Similarity.simLshTopk _),
-    "sim_ivf_topk"      -> (Similarity.simIvfTopk _),
-    "stream_sliding"    -> (graft.streaming.EventStreams.qStreamSliding _),
-    "stream_session"    -> (graft.streaming.EventStreams.qStreamSession _),
-    "stream_user_stats" -> (graft.streaming.EventStreams.qStreamUserStats _),
-    "stream_join"       -> (graft.streaming.EventStreams.qStreamJoin _),
-    "stream_left_join"  -> (graft.streaming.EventStreams.qStreamLeftJoin _),
-    "stream_dedup"      -> (graft.streaming.EventStreams.qStreamDedup _),
-    "mm_features"       -> (graft.multimodal.Media.mmFeatures _),
-    "mm_frames"         -> (graft.multimodal.Media.mmFrames _),
-    "dedup_simhash_pairs" -> (Dedup.dedupSimhashPairs _),
-    "sql_direct"        -> (SqlSurface.qSqlDirect _),
-    "q22_grouping_sets" -> (SqlSurface.qGroupingSets _),
-    "pii_mask"          -> (Cleaning.piiMask _),
-    "ta_denylist_scrub" -> (Cleaning.taDenylistScrub _),
-    "ta_decontaminate"  -> (Cleaning.taDecontaminate _),
-    "ta_repetition"     -> (Cleaning.taRepetition _),
-    "ta_pack_chunks"    -> (Cleaning.taPackChunks _),
-    "dedup_incremental" -> (Cleaning.dedupIncremental _),
-    "emb_pq"            -> (KMeans.embPq _),
-    "emb_pq_trained"    -> (KMeans.embPqTrained _),
-    "pipeline_full"     -> (Pipeline.pipelineFull _),
-    "pipeline_scored"   -> (Pipeline.pipelineScored _),
-    "pipeline_ppl"      -> (Pipeline.pipelinePpl _),
-    "ta_denylist_scrub_large" -> (Cleaning.taDenylistScrubLarge _),
-    "ta_denylist_phrases" -> (Cleaning.taDenylistPhrases _),
-    "vocab_build"       -> (Tokenizer.vocabBuild _),
-    "vocab_encode"      -> (Tokenizer.vocabEncode _),
-    "sample_mixture"    -> (CorpusOps.sampleMixture _),
-    "corpus_shuffle"    -> (CorpusOps.corpusShuffle _),
-    "ta_quality_clf"    -> (Classifier.taQualityClf _),
-    "ta_quality_clf_model" -> (Classifier.taQualityClfModel _),
-    "dedup_semantic"    -> (Dedup.dedupSemantic _),
-    "dedup_semantic_cc" -> (Dedup.dedupSemanticCc _),
-    "sim_ivfpq_topk"    -> (Similarity.simIvfPqTopk _),
-    "sim_recall_eval"   -> (Similarity.simRecallEval _),
-    "dedup_minhash_incr" -> (Dedup.dedupMinhashIncr _),
-    "search_hybrid"     -> ((s, dir) => Pipeline.searchHybrid(s, dir)),
-    "search_hybrid_wide" -> (Pipeline.searchHybridWide _),
-    "q18_asof_salted"   -> (Relational.q18AsOfSaltedGate _),
-    "q41_unpivot"       -> (Relational2.q41Unpivot _),
-    "q42_islands"       -> (Relational2.q42Islands _),
-    "events_attribution" -> (Relational2.eventsAttribution _),
-    "events_transitions" -> (Relational2.eventsTransitions _),
-    "events_anomaly"    -> (Relational2.eventsAnomaly _),
-    "dedup_cc_incr"     -> (Dedup.dedupCcIncr _),
-    "mm_resize"         -> (graft.multimodal.Media.mmResize _),
-    "mm_dedup"          -> (graft.multimodal.Media.mmDedup _),
-    "mm_png"            -> (graft.multimodal.Media.mmPng _),
-    "mm_gif"            -> (graft.multimodal.Media.mmGif _),
-    "mm_gif_frames"     -> (graft.multimodal.Media.mmGifFrames _),
-    "mm_tiff"           -> (graft.multimodal.Media.mmTiff _),
-    "mm_tiff_pages"     -> (graft.multimodal.Media.mmTiffPages _),
-    "mm_pack_pairs"     -> (graft.multimodal.Media.mmPackPairs _),
-    "mm_pack_bpe"       -> (graft.multimodal.Media.mmPackBpe _),
-    "mm_wav"            -> (graft.multimodal.Media.mmWav _),
-    "mm_energy"         -> (graft.multimodal.Media.mmEnergy _),
-    "mm_phash"          -> (graft.multimodal.Media.mmPhash _),
-    "mm_phash_pairs"    -> (graft.multimodal.Media.mmPhashPairs _),
-    "graph_pagerank"    -> (Graphs.graphPagerank _),
-    "graph_canonical"   -> (Graphs.graphCanonical _),
-    "graph_communities" -> (Graphs.graphCommunities _),
-    "ta_cms_eval"       -> (HeavyHitters.taCmsEval _),
-    "ta_hll_eval"       -> (HeavyHitters.taHllEval _),
-    "ta_quantile_eval"  -> (HeavyHitters.taQuantileEval _),
-    "sample_domain_cap" -> (CorpusOps.sampleDomainCap _),
-    "dedup_containment" -> (Dedup.dedupContainment _),
-    "sample_cluster_cap" -> (CorpusOps.sampleClusterCap _),
-    "pipeline_mix"      -> (Pipeline.pipelineMix _),
-    "pipeline_incr"     -> (Pipeline.pipelineIncr _),
-    "snapshot_upsert"   -> (Snapshots.snapshotUpsert _),
-    "q43_zorder"        -> (graft.sources.ZOrder.q43ZOrder _),
-    "corpus_split"      -> (CorpusOps.corpusSplit _),
-    "corpus_report"     -> (CorpusOps.corpusReport _),
-    "snapshot_zmaintain" -> (graft.sources.ZMaintain.snapshotZMaintain _),
-    "stream_upsert"     -> (graft.streaming.SnapshotStream.streamUpsert _),
-    "sim_index_upsert"  -> (Similarity.simIndexUpsert _),
-    "sim_index_recall"  -> (Similarity.simIndexRecall _),
-    "dedup_containment_incr" -> (Dedup.dedupContainmentIncr _),
-    "dedup_paragraph"   -> (ParagraphDedup.dedupParagraph _),
-    "vocab_bpe"         -> (Tokenizer.vocabBpe _),
-    "graph_triangles"   -> (Graphs.graphTriangles _),
-    "layout_manifest"   -> (graft.sources.Manifest.layoutManifest _),
-    "layout_export_iceberg" -> (graft.sources.IcebergExport.layoutExportIceberg _),
-    "vocab_bpe_encode"  -> (Tokenizer.vocabBpeEncode _),
-    "pack_bpe"          -> (Tokenizer.packBpe _),
-    "pack_report"       -> (Tokenizer.packReport _),
-    "dedup_paragraph_incr" -> (ParagraphDedup.dedupParagraphIncr _),
-    "stream_paragraph"  -> (graft.streaming.ParagraphStream.streamParagraph _),
-    "snapshot_diff"     -> (Snapshots.snapshotDiff _),
-    "snapshot_history"  -> (Snapshots.snapshotHistory _),
-    "snapshot_timetravel" -> (Snapshots.snapshotTimetravel _),
-    "sample_importance" -> (CorpusOps.sampleImportance _),
-    "mix_doremi"        -> (CorpusOps.mixDoremi _),
-    "dedup_recall_eval" -> (Dedup.dedupRecallEval _),
-    "stream_cms"        -> (graft.streaming.SketchStream.streamCms _),
-    "emb_pca"           -> (Pca.embPca _),
-    "graph_bfs"         -> (Graphs.graphBfs _),
-    "sample_epoch_mix"  -> (CorpusOps.sampleEpochMix _),
-    "sql_lateral"       -> (SqlSurface.qSqlLateral _),
-    "ta_entropy"        -> (CorpusOps.taEntropy _),
-    "ta_winnow"         -> (TextAnalysis.taWinnow _),
-    "ta_langid_eval"    -> (TextAnalysis.taLangIdEval _),
-    "layout_prune_scan" -> (graft.sources.ZPrune.layoutPruneScan _),
-    "graph_kcore"       -> (Graphs.graphKcore _),
-    "ta_collocations"   -> (CorpusOps.taCollocations _),
-    "sample_temperature" -> (CorpusOps.sampleTemperature _),
-    "corpus_budget"     -> (CorpusOps.corpusBudget _),
-    "corpus_overlap"    -> (CorpusOps.corpusOverlap _),
-    "corpus_drift"      -> (CorpusOps.corpusDrift _),
-    "emb_kmeans_pp"     -> (KMeans.embKmeansPp _),
-    "stream_history"    -> (Snapshots.streamHistory _),
-    "dedup_threshold_curve" -> (Dedup.dedupThresholdCurve _),
-    "ta_lang_mix"       -> (TextAnalysis.taLangMix _),
-    "ivm_agg"           -> (Ivm.ivmAgg _),
-    "ivm_fold"          -> (Ivm.ivmFold _),
-    "stream_ivm"        -> (Ivm.streamIvm _),
-    "layout_bloom_scan" -> (graft.sources.ZPrune.layoutBloomScan _),
-    "ivm_join"          -> (Ivm.ivmJoin _),
-    "snapshot_restore"  -> (Snapshots.snapshotRestore _),
-    "mv_rewrite"        -> (graft.plans.MvRewrite.mvRewrite _),
-    "ta_gopher_rules"   -> (TextAnalysis.taGopherRules _),
-    "q44_skyline"       -> (Skyline.q44Skyline _),
-    "er_pairs"          -> (EntityResolution.erPairs _),
-    "er_entities"       -> (EntityResolution.erEntities _),
-    "er_block_recall"   -> (EntityResolution.erBlockRecall _),
-    "stream_kmeans"     -> (graft.streaming.CentroidStream.streamKmeans _),
-    "skyline_incr"      -> (Skyline.skylineIncr _),
-    "er_incr"           -> (EntityResolution.erIncr _),
-    "events_paths"      -> (Relational2.eventsPaths _),
-    "dq_skew_report"    -> (Relational.dqSkewReport _),
-    "dq_profile"        -> (Profiling.dqProfile _),
-    "dq_join_estimate"  -> (HeavyHitters.dqJoinEstimate _),
-    "ivm_dim"           -> (Ivm.ivmDim _),
-    "sql_recursive"     -> (SqlSurface.qSqlRecursive _),
-    "pipeline_rules"    -> (Pipeline.pipelineRules _),
-    "dq_fk_check"       -> (Profiling.dqFkCheck _),
-    "stream_er"         -> (EntityResolution.streamEr _),
-    "stream_hll"        -> (graft.streaming.SketchStream.streamHll _),
-    "stream_quantile"   -> (graft.streaming.SketchStream.streamQuantile _),
-    "mm_audio_fp"       -> (graft.multimodal.Media.mmAudioFp _),
-    "mm_audio_pairs"    -> (graft.multimodal.Media.mmAudioPairs _),
-    "graph_jaccard"     -> (Graphs.graphJaccard _),
-    "vocab_coverage"    -> (Tokenizer.vocabCoverage _),
-    "sim_hard_negatives" -> (Similarity.simHardNegatives _),
-    "sim_bitext"        -> (Similarity.simBitext _),
-    "corpus_icp"        -> (Similarity.corpusIcp _),
-    "pack_icp"          -> (Similarity.packIcp _),
-    "stream_icp"        -> (graft.streaming.IcpStream.streamIcp _),
-    "events_dau"        -> (Relational2.eventsDau _),
-    "ta_novelty"        -> (CorpusOps.taNovelty _),
-    "stream_novelty"    -> (graft.streaming.NoveltyStream.streamNovelty _),
-    "corpus_waterfall"  -> (Pipeline.corpusWaterfall _),
-    "stream_cc"         -> (graft.streaming.CcStream.streamCc _),
-    "events_rfm"        -> (Relational2.eventsRfm _),
-    "corpus_rank"       -> (CorpusOps.corpusRank _),
-    "snapshot_apply"    -> (Snapshots.snapshotApply _),
-    "mm_phash_cc"       -> (graft.multimodal.Media.mmPhashCc _),
-    "events_ewma"       -> (Relational2.eventsEwma _),
-    "sql_window"        -> (SqlSurface.qSqlWindow _),
-    "dedup_keep_longest" -> (Dedup.dedupKeepLongest _),
-    "ta_quality_calibration" -> (Classifier.taQualityCalibration _),
-    "q45_exact_pctile"  -> (Selection.q45ExactPctile _),
-    "mm_jpeg"           -> (graft.multimodal.Media.mmJpeg _),
-    "mm_ulaw"           -> (graft.multimodal.Media.mmUlaw _),
-    "mm_alaw"           -> (graft.multimodal.Media.mmAlaw _),
-    "mm_flac"           -> (graft.multimodal.Media.mmFlac _),
-    "mm_audio_dispatch" -> (graft.multimodal.Media.mmAudioDispatch _),
-    "mm_audio_xdedup"   -> (graft.multimodal.Media.mmAudioXdedup _),
-    "mm_video"          -> (graft.multimodal.Media.mmVideo _),
-    "ta_decontaminate_semantic" -> (Cleaning.taDecontaminateSemantic _),
-    "vocab_wordpiece"   -> (Tokenizer.vocabWordpiece _),
-    "vocab_wordpiece_encode" -> (Tokenizer.vocabWordpieceEncode _),
-    "dedup_allpairs"    -> (Dedup.dedupAllpairs _),
-    "dedup_allpairs_clean" -> (Dedup.dedupAllpairsClean _),
-    "dedup_allpairs_incr" -> (Dedup.dedupAllpairsIncr _),
-    "layout_schema_merge" -> (graft.sources.Formats.layoutSchemaMerge _),
-    "web_warc_extract"  -> (graft.web.WebIngest.webWarcExtract _),
-    "web_images"        -> (graft.web.WebIngest.webImages _),
-    "web_url_parse"     -> (graft.web.WebIngest.webUrlParse _),
-    "web_domain_stats"  -> (graft.web.WebIngest.webDomainStats _),
-    "web_robots"        -> (graft.web.WebIngest.webRobots _),
-    "web_links"         -> (graft.web.WebIngest.webLinks _),
-    "web_link_graph"    -> (graft.web.WebIngest.webLinkGraph _),
-    "web_url_normalize" -> (graft.web.WebIngest.webUrlNormalize _),
-    "web_frontier"      -> (graft.web.WebIngest.webFrontier _),
-    "web_charset"       -> (graft.web.WebIngest.webCharset _),
-    "web_redirects"     -> (graft.web.Redirects.webRedirects _),
-    "web_boilerplate"   -> (graft.web.WebIngest.webBoilerplate _),
-    "web_sitemap"       -> (graft.web.WebIngest.webSitemap _),
-    "stream_frontier"   -> (graft.streaming.FrontierStream.streamFrontier _),
-    "web_host_pagerank" -> (graft.web.WebIngest.webHostPagerank _),
-    "feat_scale"        -> (Features.featScale _),
-    "feat_bucketize"    -> (Features.featBucketize _),
-    "feat_onehot"       -> (Features.featOnehot _),
-    "feat_hashed_cross" -> (Features.featHashedCross _),
-    "web_warc_index"    -> (graft.web.WebIngest.webWarcIndex _),
-    "ta_sentences"      -> (TextAnalysis.taSentences _),
-    "pipeline_web"      -> (graft.web.WebIngest.pipelineWeb _),
-    "web_anchor_text"   -> (graft.web.WebIngest.webAnchorText _),
-    "web_frontier_admitted" -> (graft.web.WebIngest.webFrontierAdmitted _),
-    "ta_readability"    -> (TextAnalysis.taReadability _),
-    "feat_quantile_bucketize" -> (Features.featQuantileBucketize _),
-    "feat_target_encode" -> (Features.featTargetEncode _),
-    "stream_feat_scale" -> (graft.streaming.FeatureStream.streamFeatScale _),
-    "stream_web"        -> (graft.streaming.WebStream.streamWeb _),
-    "stream_images"     -> (graft.streaming.ImageStream.streamImages _),
-    "stream_audio"      -> (graft.streaming.AudioStream.streamAudio _),
-    "stream_doremi"     -> (graft.streaming.DoremiStream.streamDoremi _),
-    "stream_pack"       -> (graft.streaming.PackStream.streamPack _),
-    "stream_pack_bpe"   -> (graft.streaming.PackStream.streamPackBpe _),
-    "q46_pctile_wide"   -> (Selection.q46PctileWide _)
-  )
+  /** One registered gate. The oracle SQL is held by name: building or
+    * reading [[queries]] evaluates no `*Sql` val. */
+  private[graft] final class Gate(val name: String,
+      val op: (SparkSession, String) => DataFrame, sqlOf: () => String) {
+    def sql: String = sqlOf()
+  }
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg"            -> Relational.q1AggSql,
-    "q2_selective_agg"  -> Relational.q2SelectiveAggSql,
-    "q3_join_topk"      -> Relational.q3JoinTopkSql,
-    "q4_semi_join"      -> Relational.q4SemiJoinSql,
-    "q5_anti_join"      -> Relational.q5AntiJoinSql,
-    "q6_multi_join"     -> Relational.q6MultiJoinSql,
-    "q7_broadcast_join" -> Relational.q7BroadcastJoinSql,
-    "q8_window_rank"    -> Relational.q8WindowRankSql,
-    "q9_window_running" -> Relational.q9WindowRunningSql,
-    "q10_topk"          -> Relational.q10TopKSql,
-    "q11_setops"        -> Relational.q11SetOpsSql,
-    "q12_rollup"        -> Relational.q12RollupSql,
-    "q13_cube"          -> Relational.q13CubeSql,
-    "q14_distinct_agg"  -> Relational.q14DistinctAggSql,
-    "q15_scalar"        -> Relational.q15ScalarSql,
-    "q16_date_parts"    -> Relational.q16DatePartsSql,
-    "q17_json"          -> Relational.q17JsonSql,
-    "q18_asof"          -> Relational.q18AsOfSql,
-    "q19_event_window"  -> Relational.q19EventWindowSql,
-    "q20_approx_distinct" -> Relational.q20ApproxDistinctSql,
-    "q21_arrays"        -> Relational.q21ArraysSql,
-    "q23_stats"         -> Relational.q23StatsSql,
-    "q24_pivot"         -> Relational2.q24PivotSql,
-    "q25_correlated"    -> Relational2.q25CorrelatedSql,
-    "q26_posexplode"    -> Relational2.q26PosExplodeSql,
-    "q27_maps"          -> Relational2.q27MapsSql,
-    "q28_regex"         -> Relational2.q28RegexSql,
-    "q29_window_battery" -> Relational2.q29WindowBatterySql,
-    "q30_range_join"    -> Relational2.q30RangeJoinSql,
-    "mr_wc"             -> MrQueries.mrWcSql,
-    "mr_indexer"        -> MrQueries.mrIndexerSql,
-    "mr_doc_tokens"     -> MrQueries.mrDocTokensSql,
-    "mr_metadata"       -> MrQueries.mrMetadataSql,
-    "mr_compat_wc"      -> MrQueries.mrCompatWcSql,
-    "mr_compat_indexer" -> MrQueries.mrCompatIndexerSql,
-    "ta_quality"        -> TextAnalysis.taQualitySql,
-    "ta_token_count"    -> TextAnalysis.taTokenCountSql,
-    "ta_lang_id"        -> TextAnalysis.taLangIdSql,
-    "ta_fingerprint"    -> TextAnalysis.taFingerprintSql,
-    "ta_chunk_fp"       -> TextAnalysis.taChunkFpSql,
-    "ta_heavy_hitters"  -> HeavyHitters.taHeavyHittersSql,
-    "dedup_exact"       -> Dedup.dedupExactSql,
-    "dedup_ngram"       -> Dedup.dedupNgramSql,
-    "dedup_minhash"     -> Dedup.dedupMinhashSql,
-    "dedup_simhash"     -> Dedup.dedupSimhashSql,
-    "dedup_embedding"   -> Dedup.dedupEmbeddingSql,
-    "dedup_cc"          -> Dedup.dedupCcSql,
-    "dedup_cc_star"     -> Dedup.dedupCcStarSql,
-    "minhash_agg_sig"   -> Dedup.minhashAggSigSql,
-    "q38_bucketed_join" -> BucketedJoin.q38BucketedJoinSql,
-    "q39_full_outer"    -> Pipeline.q39FullOuterSql,
-    "q40_gapfill"       -> Relational2.q40GapFillSql,
-    "pipeline_clean"    -> Pipeline.pipelineCleanSql,
-    "ta_tfidf"          -> CorpusOps.taTfidfSql,
-    "ta_bigrams"        -> CorpusOps.taBigramsSql,
-    "ta_lm_score"       -> CorpusOps.taLmScoreSql,
-    "ta_lm_kn"          -> CorpusOps.taLmKnSql,
-    "ta_bm25"           -> CorpusOps.taBm25Sql,
-    "sample_stratified" -> CorpusOps.sampleStratifiedSql,
-    "sample_fixed_k"    -> CorpusOps.sampleFixedKSql,
-    "emb_centroids"     -> CorpusOps.embCentroidsSql,
-    "emb_kmeans"        -> KMeans.embKmeansSql,
-    "emb_quantize"      -> KMeans.embQuantizeSql,
-    "q31_approx_pctile" -> Relational.q31ApproxPercentileSql,
-    "q32_range_frame"   -> Relational2.q32RangeFrameSql,
-    "q33_cov_corr"      -> Relational.q33CovCorrSql,
-    "q34_histogram"     -> Relational.q34HistogramSql,
-    "q36_funnel"        -> Relational2.q36FunnelSql,
-    "q37_cohort"        -> Relational2.q37CohortSql,
-    "q35_dq_checks"     -> Relational.q35DqChecksSql,
-    "dedup_edit"        -> Dedup.dedupEditSql,
-    "dedup_ngram_verify" -> Dedup.dedupNgramVerifySql,
-    "dedup_substring"   -> Dedup.dedupSubstringSql,
-    "sql_cte"           -> SqlSurface.sqlCte,
-    "sim_topk"          -> Similarity.simTopkSql,
-    "sim_lsh_topk"      -> Similarity.simLshTopkSql,
-    "sim_ivf_topk"      -> Similarity.simIvfTopkSql,
-    "stream_sliding"    -> graft.streaming.EventStreams.qStreamSlidingSql,
-    "stream_session"    -> graft.streaming.EventStreams.qStreamSessionSql,
-    "stream_user_stats" -> graft.streaming.EventStreams.qStreamUserStatsSql,
-    "stream_join"       -> graft.streaming.EventStreams.qStreamJoinSql,
-    "stream_left_join"  -> graft.streaming.EventStreams.qStreamLeftJoinSql,
-    "stream_dedup"      -> graft.streaming.EventStreams.qStreamDedupSql,
-    "mm_features"       -> graft.multimodal.Media.mmFeaturesSql,
-    "mm_frames"         -> graft.multimodal.Media.mmFramesSql,
-    "dedup_simhash_pairs" -> Dedup.dedupSimhashPairsSql,
-    "sql_direct"        -> SqlSurface.sqlDirect,
-    "q22_grouping_sets" -> SqlSurface.sqlGroupingSets,
-    "pii_mask"          -> Cleaning.piiMaskSql,
-    "ta_denylist_scrub" -> Cleaning.taDenylistScrubSql,
-    "ta_decontaminate"  -> Cleaning.taDecontaminateSql,
-    "ta_repetition"     -> Cleaning.taRepetitionSql,
-    "ta_pack_chunks"    -> Cleaning.taPackChunksSql,
-    "dedup_incremental" -> Cleaning.dedupIncrementalSql,
-    "emb_pq"            -> KMeans.embPqSql,
-    "emb_pq_trained"    -> KMeans.embPqTrainedSql,
-    "pipeline_full"     -> Pipeline.pipelineFullSql,
-    "pipeline_scored"   -> Pipeline.pipelineScoredSql,
-    "pipeline_ppl"      -> Pipeline.pipelinePplSql,
+  private def gate(name: String, op: (SparkSession, String) => DataFrame,
+      sql: => String): Gate = new Gate(name, op, () => sql)
+
+  /** Every gate, one row each. A row whose oracle is another gate's SQL
+    * says why the two must agree. */
+  private[graft] val gates: Seq[Gate] = Seq(
+    gate("q1_agg", Relational.q1Agg _, Relational.q1AggSql),
+    gate("q2_selective_agg", Relational.q2SelectiveAgg _, Relational.q2SelectiveAggSql),
+    gate("q3_join_topk", Relational.q3JoinTopk _, Relational.q3JoinTopkSql),
+    gate("q4_semi_join", Relational.q4SemiJoin _, Relational.q4SemiJoinSql),
+    gate("q5_anti_join", Relational.q5AntiJoin _, Relational.q5AntiJoinSql),
+    gate("q6_multi_join", Relational.q6MultiJoin _, Relational.q6MultiJoinSql),
+    gate("q7_broadcast_join", Relational.q7BroadcastJoin _, Relational.q7BroadcastJoinSql),
+    gate("q8_window_rank", Relational.q8WindowRank _, Relational.q8WindowRankSql),
+    gate("q9_window_running", Relational.q9WindowRunning _, Relational.q9WindowRunningSql),
+    gate("q10_topk", Relational.q10TopK _, Relational.q10TopKSql),
+    gate("q11_setops", Relational.q11SetOps _, Relational.q11SetOpsSql),
+    gate("q12_rollup", Relational.q12Rollup _, Relational.q12RollupSql),
+    gate("q13_cube", Relational.q13Cube _, Relational.q13CubeSql),
+    gate("q14_distinct_agg", Relational.q14DistinctAgg _, Relational.q14DistinctAggSql),
+    gate("q15_scalar", Relational.q15Scalar _, Relational.q15ScalarSql),
+    gate("q16_date_parts", Relational.q16DateParts _, Relational.q16DatePartsSql),
+    gate("q17_json", Relational.q17Json _, Relational.q17JsonSql),
+    gate("q18_asof", Relational.q18AsOf _, Relational.q18AsOfSql),
+    gate("q19_event_window", Relational.q19EventWindow _, Relational.q19EventWindowSql),
+    gate("q20_approx_distinct", Relational.q20ApproxDistinct _, Relational.q20ApproxDistinctSql),
+    gate("q21_arrays", Relational.q21Arrays _, Relational.q21ArraysSql),
+    gate("q23_stats", Relational.q23Stats _, Relational.q23StatsSql),
+    gate("q24_pivot", Relational2.q24Pivot _, Relational2.q24PivotSql),
+    gate("q25_correlated", Relational2.q25Correlated _, Relational2.q25CorrelatedSql),
+    gate("q26_posexplode", Relational2.q26PosExplode _, Relational2.q26PosExplodeSql),
+    gate("q27_maps", Relational2.q27Maps _, Relational2.q27MapsSql),
+    gate("q28_regex", Relational2.q28Regex _, Relational2.q28RegexSql),
+    gate("q29_window_battery", Relational2.q29WindowBattery _, Relational2.q29WindowBatterySql),
+    gate("q30_range_join", Relational2.q30RangeJoin _, Relational2.q30RangeJoinSql),
+    gate("mr_wc", MrQueries.mrWc _, MrQueries.mrWcSql),
+    gate("mr_indexer", MrQueries.mrIndexer _, MrQueries.mrIndexerSql),
+    gate("mr_doc_tokens", MrQueries.mrDocTokens _, MrQueries.mrDocTokensSql),
+    gate("mr_metadata", MrQueries.mrMetadata _, MrQueries.mrMetadataSql),
+    // same oracle as mr_wc: the compat façade must compute what the
+    // DataFrame-native plan computes
+    gate("mr_compat_wc", MrQueries.mrCompatWc _, MrQueries.mrWcSql),
+    // same oracle as mr_indexer: the façade's "<n> <docs>" reduce
+    // value is parsed back to mr_indexer's columns
+    gate("mr_compat_indexer", MrQueries.mrCompatIndexer _, MrQueries.mrIndexerSql),
+    gate("ta_quality", TextAnalysis.taQuality _, TextAnalysis.taQualitySql),
+    gate("ta_token_count", TextAnalysis.taTokenCount _, TextAnalysis.taTokenCountSql),
+    gate("ta_lang_id", TextAnalysis.taLangId _, TextAnalysis.taLangIdSql),
+    gate("ta_fingerprint", TextAnalysis.taFingerprint _, TextAnalysis.taFingerprintSql),
+    gate("ta_chunk_fp", TextAnalysis.taChunkFp _, TextAnalysis.taChunkFpSql),
+    gate("ta_heavy_hitters", HeavyHitters.taHeavyHitters _, HeavyHitters.taHeavyHittersSql),
+    gate("dedup_exact", Dedup.dedupExact _, Dedup.dedupExactSql),
+    gate("dedup_ngram", Dedup.dedupNgram _, Dedup.dedupNgramSql),
+    gate("dedup_minhash", Dedup.dedupMinhash _, Dedup.dedupMinhashSql),
+    gate("dedup_simhash", Dedup.dedupSimhash _, Dedup.dedupSimhashSql),
+    gate("dedup_embedding", Dedup.dedupEmbedding _, Dedup.dedupEmbeddingSql),
+    gate("dedup_cc", Dedup.dedupCc _, Dedup.dedupCcSql),
+    // same fixpoint as min-label propagation, so the same oracle
+    gate("dedup_cc_star", Dedup.dedupCcStar _, Dedup.dedupCcSql),
+    gate("minhash_agg_sig", Dedup.minhashAggSig _, Dedup.minhashAggSigSql),
+    gate("q38_bucketed_join", BucketedJoin.q38BucketedJoin _, BucketedJoin.q38BucketedJoinSql),
+    gate("q39_full_outer", Pipeline.q39FullOuter _, Pipeline.q39FullOuterSql),
+    gate("q40_gapfill", Relational2.q40GapFill _, Relational2.q40GapFillSql),
+    gate("pipeline_clean", Pipeline.pipelineClean _, Pipeline.pipelineCleanSql),
+    gate("ta_tfidf", CorpusOps.taTfidf _, CorpusOps.taTfidfSql),
+    gate("ta_bigrams", CorpusOps.taBigrams _, CorpusOps.taBigramsSql),
+    gate("ta_lm_score", CorpusOps.taLmScore _, CorpusOps.taLmScoreSql),
+    gate("ta_lm_kn", CorpusOps.taLmKn _, CorpusOps.taLmKnSql),
+    gate("ta_bm25", CorpusOps.taBm25 _, CorpusOps.taBm25Sql),
+    gate("sample_stratified", CorpusOps.sampleStratified _, CorpusOps.sampleStratifiedSql),
+    gate("sample_fixed_k", CorpusOps.sampleFixedK _, CorpusOps.sampleFixedKSql),
+    gate("emb_centroids", CorpusOps.embCentroids _, CorpusOps.embCentroidsSql),
+    gate("emb_kmeans", KMeans.embKmeans _, KMeans.embKmeansSql),
+    gate("emb_quantize", KMeans.embQuantize _, KMeans.embQuantizeSql),
+    gate("q31_approx_pctile", Relational.q31ApproxPercentile _, Relational.q31ApproxPercentileSql),
+    gate("q32_range_frame", Relational2.q32RangeFrame _, Relational2.q32RangeFrameSql),
+    gate("q33_cov_corr", Relational.q33CovCorr _, Relational.q33CovCorrSql),
+    gate("q34_histogram", Relational.q34Histogram _, Relational.q34HistogramSql),
+    gate("q36_funnel", Relational2.q36Funnel _, Relational2.q36FunnelSql),
+    gate("q37_cohort", Relational2.q37Cohort _, Relational2.q37CohortSql),
+    gate("q35_dq_checks", Relational.q35DqChecks _, Relational.q35DqChecksSql),
+    gate("dedup_edit", Dedup.dedupEdit _, Dedup.dedupEditSql),
+    gate("dedup_ngram_verify", Dedup.dedupNgramVerify _, Dedup.dedupNgramVerifySql),
+    gate("dedup_substring", Dedup.dedupSubstring _, Dedup.dedupSubstringSql),
+    gate("sql_cte", SqlSurface.qSqlCte _, SqlSurface.sqlCte),
+    gate("sim_topk", Similarity.simTopk _, Similarity.simTopkSql),
+    gate("sim_lsh_topk", Similarity.simLshTopk _, Similarity.simLshTopkSql),
+    gate("sim_ivf_topk", Similarity.simIvfTopk _, Similarity.simIvfTopkSql),
+    gate("stream_sliding", EventStreams.qStreamSliding _, EventStreams.qStreamSlidingSql),
+    gate("stream_session", EventStreams.qStreamSession _, EventStreams.qStreamSessionSql),
+    gate("stream_user_stats", EventStreams.qStreamUserStats _, EventStreams.qStreamUserStatsSql),
+    gate("stream_join", EventStreams.qStreamJoin _, EventStreams.qStreamJoinSql),
+    gate("stream_left_join", EventStreams.qStreamLeftJoin _, EventStreams.qStreamLeftJoinSql),
+    gate("stream_dedup", EventStreams.qStreamDedup _, EventStreams.qStreamDedupSql),
+    gate("mm_features", Media.mmFeatures _, Media.mmFeaturesSql),
+    gate("mm_frames", Media.mmFrames _, Media.mmFramesSql),
+    gate("dedup_simhash_pairs", Dedup.dedupSimhashPairs _, Dedup.dedupSimhashPairsSql),
+    gate("sql_direct", SqlSurface.qSqlDirect _, SqlSurface.sqlDirect),
+    gate("q22_grouping_sets", SqlSurface.qGroupingSets _, SqlSurface.sqlGroupingSets),
+    gate("pii_mask", Cleaning.piiMask _, Cleaning.piiMaskSql),
+    gate("ta_denylist_scrub", Cleaning.taDenylistScrub _, Cleaning.taDenylistScrubSql),
+    gate("ta_decontaminate", Cleaning.taDecontaminate _, Cleaning.taDecontaminateSql),
+    gate("ta_repetition", Cleaning.taRepetition _, Cleaning.taRepetitionSql),
+    gate("ta_pack_chunks", Cleaning.taPackChunks _, Cleaning.taPackChunksSql),
+    gate("dedup_incremental", Cleaning.dedupIncremental _, Cleaning.dedupIncrementalSql),
+    gate("emb_pq", KMeans.embPq _, KMeans.embPqSql),
+    gate("emb_pq_trained", KMeans.embPqTrained _, KMeans.embPqTrainedSql),
+    gate("pipeline_full", Pipeline.pipelineFull _, Pipeline.pipelineFullSql),
+    gate("pipeline_scored", Pipeline.pipelineScored _, Pipeline.pipelineScoredSql),
+    gate("pipeline_ppl", Pipeline.pipelinePpl _, Pipeline.pipelinePplSql),
     // same oracle as the regex twin: the set kernel is bit-identical
-    "ta_denylist_scrub_large" -> Cleaning.taDenylistScrubSql,
-    "ta_denylist_phrases" -> Cleaning.taDenylistPhrasesSql,
-    "vocab_build"       -> Tokenizer.vocabBuildSql,
-    "vocab_encode"      -> Tokenizer.vocabEncodeSql,
-    "sample_mixture"    -> CorpusOps.sampleMixtureSql,
-    "corpus_shuffle"    -> CorpusOps.corpusShuffleSql,
-    "ta_quality_clf"    -> Classifier.taQualityClfSql,
-    "ta_quality_clf_model" -> Classifier.taQualityClfModelSql,
-    "dedup_semantic"    -> Dedup.dedupSemanticSql,
-    "dedup_semantic_cc" -> Dedup.dedupSemanticCcSql,
-    "sim_ivfpq_topk"    -> Similarity.simIvfPqTopkSql,
-    "sim_recall_eval"   -> Similarity.simRecallEvalSql,
-    "dedup_minhash_incr" -> Dedup.dedupMinhashIncrSql,
-    "search_hybrid"     -> Pipeline.searchHybridSql,
-    "search_hybrid_wide" -> Pipeline.searchHybridWideSql,
-    "q18_asof_salted"   -> Relational.q18AsOfSql,
-    "q41_unpivot"       -> Relational2.q41UnpivotSql,
-    "q42_islands"       -> Relational2.q42IslandsSql,
-    "events_attribution" -> Relational2.eventsAttributionSql,
-    "events_transitions" -> Relational2.eventsTransitionsSql,
-    "events_anomaly"    -> Relational2.eventsAnomalySql,
+    gate("ta_denylist_scrub_large", Cleaning.taDenylistScrubLarge _, Cleaning.taDenylistScrubSql),
+    gate("ta_denylist_phrases", Cleaning.taDenylistPhrases _, Cleaning.taDenylistPhrasesSql),
+    gate("vocab_build", Tokenizer.vocabBuild _, Tokenizer.vocabBuildSql),
+    gate("vocab_encode", Tokenizer.vocabEncode _, Tokenizer.vocabEncodeSql),
+    gate("sample_mixture", CorpusOps.sampleMixture _, CorpusOps.sampleMixtureSql),
+    gate("corpus_shuffle", CorpusOps.corpusShuffle _, CorpusOps.corpusShuffleSql),
+    gate("ta_quality_clf", Classifier.taQualityClf _, Classifier.taQualityClfSql),
+    gate("ta_quality_clf_model", Classifier.taQualityClfModel _, Classifier.taQualityClfModelSql),
+    gate("dedup_semantic", Dedup.dedupSemantic _, Dedup.dedupSemanticSql),
+    gate("dedup_semantic_cc", Dedup.dedupSemanticCc _, Dedup.dedupSemanticCcSql),
+    gate("sim_ivfpq_topk", Similarity.simIvfPqTopk _, Similarity.simIvfPqTopkSql),
+    gate("sim_recall_eval", Similarity.simRecallEval _, Similarity.simRecallEvalSql),
+    gate("dedup_minhash_incr", Dedup.dedupMinhashIncr _, Dedup.dedupMinhashIncrSql),
+    gate("search_hybrid", (s, dir) => Pipeline.searchHybrid(s, dir), Pipeline.searchHybridSql),
+    gate("search_hybrid_wide", Pipeline.searchHybridWide _, Pipeline.searchHybridWideSql),
+    // salted == unsalted is the operator's whole contract
+    gate("q18_asof_salted", Relational.q18AsOfSaltedGate _, Relational.q18AsOfSql),
+    gate("q41_unpivot", Relational2.q41Unpivot _, Relational2.q41UnpivotSql),
+    gate("q42_islands", Relational2.q42Islands _, Relational2.q42IslandsSql),
+    gate("events_attribution", Relational2.eventsAttribution _, Relational2.eventsAttributionSql),
+    gate("events_transitions", Relational2.eventsTransitions _, Relational2.eventsTransitionsSql),
+    gate("events_anomaly", Relational2.eventsAnomaly _, Relational2.eventsAnomalySql),
     // the incremental path must reproduce the full recompute exactly —
     // its oracle IS the full-graph recursive-CTE CC
-    "dedup_cc_incr"     -> Dedup.dedupCcSql,
-    "mm_resize"         -> graft.multimodal.Media.mmResizeSql,
-    "mm_dedup"          -> graft.multimodal.Media.mmDedupSql,
-    "mm_png"            -> graft.multimodal.Media.mmPngSql,
-    "mm_gif"            -> graft.multimodal.Media.mmGifSql,
-    "mm_gif_frames"     -> graft.multimodal.Media.mmGifFramesSql,
-    "mm_tiff"           -> graft.multimodal.Media.mmTiffSql,
-    "mm_tiff_pages"     -> graft.multimodal.Media.mmTiffPagesSql,
-    "mm_pack_pairs"     -> graft.multimodal.Media.mmPackPairsSql,
-    "mm_pack_bpe"       -> graft.multimodal.Media.mmPackBpeSql,
-    "mm_wav"            -> graft.multimodal.Media.mmWavSql,
-    "mm_energy"         -> graft.multimodal.Media.mmEnergySql,
-    "mm_phash"          -> graft.multimodal.Media.mmPhashSql,
-    "mm_phash_pairs"    -> graft.multimodal.Media.mmPhashPairsSql,
-    "graph_pagerank"    -> Graphs.graphPagerankSql,
-    "graph_canonical"   -> Graphs.graphCanonicalSql,
-    "graph_communities" -> Graphs.graphCommunitiesSql,
-    "ta_cms_eval"       -> HeavyHitters.taCmsEvalSql,
-    "ta_hll_eval"       -> HeavyHitters.taHllEvalSql,
-    "ta_quantile_eval"  -> HeavyHitters.taQuantileEvalSql,
-    "sample_domain_cap" -> CorpusOps.sampleDomainCapSql,
-    "dedup_containment" -> Dedup.dedupContainmentSql,
-    "sample_cluster_cap" -> CorpusOps.sampleClusterCapSql,
-    "pipeline_mix"      -> Pipeline.pipelineMixSql,
-    "pipeline_incr"     -> Pipeline.pipelineIncrSql,
-    "snapshot_upsert"   -> Snapshots.snapshotUpsertSql,
-    "q43_zorder"        -> graft.sources.ZOrder.q43ZOrderSql,
-    "corpus_split"      -> CorpusOps.corpusSplitSql,
-    "corpus_report"     -> CorpusOps.corpusReportSql,
-    "snapshot_zmaintain" -> graft.sources.ZMaintain.snapshotZMaintainSql,
-    "stream_upsert"     -> graft.streaming.SnapshotStream.streamUpsertSql,
+    gate("dedup_cc_incr", Dedup.dedupCcIncr _, Dedup.dedupCcSql),
+    gate("mm_resize", Media.mmResize _, Media.mmResizeSql),
+    gate("mm_dedup", Media.mmDedup _, Media.mmDedupSql),
+    gate("mm_png", Media.mmPng _, Media.mmPngSql),
+    gate("mm_gif", Media.mmGif _, Media.mmGifSql),
+    gate("mm_gif_frames", Media.mmGifFrames _, Media.mmGifFramesSql),
+    gate("mm_tiff", Media.mmTiff _, Media.mmTiffSql),
+    gate("mm_tiff_pages", Media.mmTiffPages _, Media.mmTiffPagesSql),
+    gate("mm_pack_pairs", Media.mmPackPairs _, Media.mmPackPairsSql),
+    gate("mm_pack_bpe", Media.mmPackBpe _, Media.mmPackBpeSql),
+    gate("mm_wav", Media.mmWav _, Media.mmWavSql),
+    gate("mm_energy", Media.mmEnergy _, Media.mmEnergySql),
+    gate("mm_phash", Media.mmPhash _, Media.mmPhashSql),
+    gate("mm_phash_pairs", Media.mmPhashPairs _, Media.mmPhashPairsSql),
+    gate("graph_pagerank", Graphs.graphPagerank _, Graphs.graphPagerankSql),
+    gate("graph_canonical", Graphs.graphCanonical _, Graphs.graphCanonicalSql),
+    gate("graph_communities", Graphs.graphCommunities _, Graphs.graphCommunitiesSql),
+    gate("ta_cms_eval", HeavyHitters.taCmsEval _, HeavyHitters.taCmsEvalSql),
+    gate("ta_hll_eval", HeavyHitters.taHllEval _, HeavyHitters.taHllEvalSql),
+    gate("ta_quantile_eval", HeavyHitters.taQuantileEval _, HeavyHitters.taQuantileEvalSql),
+    gate("sample_domain_cap", CorpusOps.sampleDomainCap _, CorpusOps.sampleDomainCapSql),
+    gate("dedup_containment", Dedup.dedupContainment _, Dedup.dedupContainmentSql),
+    gate("sample_cluster_cap", CorpusOps.sampleClusterCap _, CorpusOps.sampleClusterCapSql),
+    gate("pipeline_mix", Pipeline.pipelineMix _, Pipeline.pipelineMixSql),
+    gate("pipeline_incr", Pipeline.pipelineIncr _, Pipeline.pipelineIncrSql),
+    gate("snapshot_upsert", Snapshots.snapshotUpsert _, Snapshots.snapshotUpsertSql),
+    gate("q43_zorder", ZOrder.q43ZOrder _, ZOrder.q43ZOrderSql),
+    gate("corpus_split", CorpusOps.corpusSplit _, CorpusOps.corpusSplitSql),
+    gate("corpus_report", CorpusOps.corpusReport _, CorpusOps.corpusReportSql),
+    gate("snapshot_zmaintain", ZMaintain.snapshotZMaintain _, ZMaintain.snapshotZMaintainSql),
+    gate("stream_upsert", SnapshotStream.streamUpsert _, SnapshotStream.streamUpsertSql),
     // the maintained index must reconstruct the one-pass index exactly,
     // so its search oracle IS the stored-index search oracle
-    "sim_index_upsert"  -> Similarity.simIvfPqTopkSql,
-    "sim_index_recall"  -> Similarity.simIndexRecallSql,
-    "dedup_containment_incr" -> Dedup.dedupContainmentIncrSql,
-    "dedup_paragraph"   -> ParagraphDedup.dedupParagraphSql,
-    "vocab_bpe"         -> Tokenizer.vocabBpeSql,
-    "graph_triangles"   -> Graphs.graphTrianglesSql,
-    "layout_manifest"   -> graft.sources.Manifest.layoutManifestSql,
+    gate("sim_index_upsert", Similarity.simIndexUpsert _, Similarity.simIvfPqTopkSql),
+    gate("sim_index_recall", Similarity.simIndexRecall _, Similarity.simIndexRecallSql),
+    gate("dedup_containment_incr", Dedup.dedupContainmentIncr _, Dedup.dedupContainmentIncrSql),
+    gate("dedup_paragraph", ParagraphDedup.dedupParagraph _, ParagraphDedup.dedupParagraphSql),
+    gate("vocab_bpe", Tokenizer.vocabBpe _, Tokenizer.vocabBpeSql),
+    gate("graph_triangles", Graphs.graphTriangles _, Graphs.graphTrianglesSql),
+    gate("layout_manifest", Manifest.layoutManifest _, Manifest.layoutManifestSql),
     // round-trip identity: the Iceberg-tree read-back must reconstruct
     // exactly the stats table the export was built from
-    "layout_export_iceberg" -> graft.sources.IcebergExport.layoutExportIcebergSql,
-    "vocab_bpe_encode"  -> Tokenizer.vocabBpeEncodeSql,
-    "pack_bpe"          -> Tokenizer.packBpeSql,
-    "pack_report"       -> Tokenizer.packReportSql,
-    "dedup_paragraph_incr" -> ParagraphDedup.dedupParagraphIncrSql,
+    gate("layout_export_iceberg", IcebergExport.layoutExportIceberg _, Manifest.layoutManifestSql),
+    gate("vocab_bpe_encode", Tokenizer.vocabBpeEncode _, Tokenizer.vocabBpeEncodeSql),
+    gate("pack_bpe", Tokenizer.packBpe _, Tokenizer.packBpeSql),
+    gate("pack_report", Tokenizer.packReport _, Tokenizer.packReportSql),
+    gate("dedup_paragraph_incr", ParagraphDedup.dedupParagraphIncr _, ParagraphDedup.dedupParagraphIncrSql),
     // the order-fold identity: sequential range batches through the
     // seen-paragraph state must reproduce the ONE-SHOT dedup exactly
-    "stream_paragraph"  -> ParagraphDedup.dedupParagraphSql,
-    "snapshot_diff"     -> Snapshots.snapshotDiffSql,
-    "snapshot_history"  -> Snapshots.snapshotHistorySql,
+    gate("stream_paragraph", ParagraphStream.streamParagraph _, ParagraphDedup.dedupParagraphSql),
+    gate("snapshot_diff", Snapshots.snapshotDiff _, Snapshots.snapshotDiffSql),
+    gate("snapshot_history", Snapshots.snapshotHistory _, Snapshots.snapshotHistorySql),
     // the time-travel identity: the AS-OF v=1 interval read must equal
     // the direct upsert fold to v1
-    "snapshot_timetravel" -> Snapshots.snapshotTimetravelSql,
-    "sample_importance" -> CorpusOps.sampleImportanceSql,
-    "mix_doremi"        -> CorpusOps.mixDoremiSql,
-    "dedup_recall_eval" -> Dedup.dedupRecallEvalSql,
+    gate("snapshot_timetravel", Snapshots.snapshotTimetravel _, Snapshots.snapshotTimetravelSql),
+    gate("sample_importance", CorpusOps.sampleImportance _, CorpusOps.sampleImportanceSql),
+    gate("mix_doremi", CorpusOps.mixDoremi _, CorpusOps.mixDoremiSql),
+    gate("dedup_recall_eval", Dedup.dedupRecallEval _, Dedup.dedupRecallEvalSql),
     // the sketch fold identity: counter addition is associative, so the
     // two-batch fold must reproduce the ONE-SHOT ta_cms_eval exactly
-    "stream_cms"        -> HeavyHitters.taCmsEvalSql,
-    "emb_pca"           -> Pca.embPcaSql,
-    "graph_bfs"         -> Graphs.graphBfsSql,
-    "sample_epoch_mix"  -> CorpusOps.sampleEpochMixSql,
-    "sql_lateral"       -> SqlSurface.sqlLateral,
-    "ta_entropy"        -> CorpusOps.taEntropySql,
-    "ta_winnow"         -> TextAnalysis.taWinnowSql,
-    "ta_langid_eval"    -> TextAnalysis.taLangIdEvalSql,
+    gate("stream_cms", SketchStream.streamCms _, HeavyHitters.taCmsEvalSql),
+    gate("emb_pca", Pca.embPca _, Pca.embPcaSql),
+    gate("graph_bfs", Graphs.graphBfs _, Graphs.graphBfsSql),
+    gate("sample_epoch_mix", CorpusOps.sampleEpochMix _, CorpusOps.sampleEpochMixSql),
+    gate("sql_lateral", SqlSurface.qSqlLateral _, SqlSurface.sqlLateral),
+    gate("ta_entropy", CorpusOps.taEntropy _, CorpusOps.taEntropySql),
+    gate("ta_winnow", TextAnalysis.taWinnow _, TextAnalysis.taWinnowSql),
+    gate("ta_langid_eval", TextAnalysis.taLangIdEval _, TextAnalysis.taLangIdEvalSql),
     // the pruned scan must be semantically invisible: plain relational
     // twin with the bucket recomputed from the interleave
-    "layout_prune_scan" -> graft.sources.ZPrune.layoutPruneScanSql,
-    "graph_kcore"       -> Graphs.graphKcoreSql,
-    "ta_collocations"   -> CorpusOps.taCollocationsSql,
-    "sample_temperature" -> CorpusOps.sampleTemperatureSql,
-    "corpus_budget"     -> CorpusOps.corpusBudgetSql,
-    "corpus_overlap"    -> CorpusOps.corpusOverlapSql,
-    "corpus_drift"      -> CorpusOps.corpusDriftSql,
-    "emb_kmeans_pp"     -> KMeans.embKmeansPpSql,
+    gate("layout_prune_scan", ZPrune.layoutPruneScan _, ZPrune.layoutPruneScanSql),
+    gate("graph_kcore", Graphs.graphKcore _, Graphs.graphKcoreSql),
+    gate("ta_collocations", CorpusOps.taCollocations _, CorpusOps.taCollocationsSql),
+    gate("sample_temperature", CorpusOps.sampleTemperature _, CorpusOps.sampleTemperatureSql),
+    gate("corpus_budget", CorpusOps.corpusBudget _, CorpusOps.corpusBudgetSql),
+    gate("corpus_overlap", CorpusOps.corpusOverlap _, CorpusOps.corpusOverlapSql),
+    gate("corpus_drift", CorpusOps.corpusDrift _, CorpusOps.corpusDriftSql),
+    gate("emb_kmeans_pp", KMeans.embKmeansPp _, KMeans.embKmeansPpSql),
     // the maintenance identity: the incremental close-and-append fold
     // must equal the one-shot history REBUILD
-    "stream_history"    -> Snapshots.snapshotHistorySql,
-    "dedup_threshold_curve" -> Dedup.dedupThresholdCurveSql,
-    "ta_lang_mix"       -> TextAnalysis.taLangMixSql,
+    gate("stream_history", Snapshots.streamHistory _, Snapshots.snapshotHistorySql),
+    gate("dedup_threshold_curve", Dedup.dedupThresholdCurve _, Dedup.dedupThresholdCurveSql),
+    gate("ta_lang_mix", TextAnalysis.taLangMix _, TextAnalysis.taLangMixSql),
     // the view-maintenance identity: signed-delta merge from the change
     // feed must equal the from-scratch recompute over the new version
-    "ivm_agg"           -> Ivm.ivmAggSql,
-    "ivm_fold"          -> Ivm.ivmFoldSql,
+    gate("ivm_agg", Ivm.ivmAgg _, Ivm.ivmAggSql),
+    gate("ivm_fold", Ivm.ivmFold _, Ivm.ivmFoldSql),
     // bootstrap-from-empty + feed fold must equal the recompute at v2:
     // one code path backfills a new view and keeps it fresh
-    "stream_ivm"        -> Ivm.ivmFoldSql,
+    gate("stream_ivm", Ivm.streamIvm _, Ivm.ivmFoldSql),
     // membership skipping must be semantically invisible: plain point
     // lookup with the bucket recomputed from the interleave
-    "layout_bloom_scan" -> graft.sources.ZPrune.layoutBloomScanSql,
+    gate("layout_bloom_scan", ZPrune.layoutBloomScan _, ZPrune.layoutBloomScanSql),
     // join-view maintenance: ΔR ⋈ dim merged into the stored view must
     // equal re-joining and re-aggregating the new fact version
-    "ivm_join"          -> Ivm.ivmJoinSql,
+    gate("ivm_join", Ivm.ivmJoin _, Ivm.ivmJoinSql),
     // rollback without rewriting history: close changed-since-v opens,
     // reopen the AS-OF-v values, leave untouched keys alone
-    "snapshot_restore"  -> Snapshots.snapshotRestoreSql,
+    gate("snapshot_restore", Snapshots.snapshotRestore _, Snapshots.snapshotRestoreSql),
     // the rewrite must be result-invisible: the oracle aggregates the
     // corpus directly while the gate's plan reads the view
-    "mv_rewrite"        -> graft.plans.MvRewrite.mvRewriteSql,
-    "ta_gopher_rules"   -> TextAnalysis.taGopherRulesSql,
-    "q44_skyline"       -> Skyline.q44SkylineSql,
-    "er_pairs"          -> EntityResolution.erPairsSql,
-    "er_entities"       -> EntityResolution.erEntitiesSql,
-    "er_block_recall"   -> EntityResolution.erBlockRecallSql,
+    gate("mv_rewrite", MvRewrite.mvRewrite _, MvRewrite.mvRewriteSql),
+    gate("ta_gopher_rules", TextAnalysis.taGopherRules _, TextAnalysis.taGopherRulesSql),
+    gate("q44_skyline", Skyline.q44Skyline _, Skyline.q44SkylineSql),
+    gate("er_pairs", EntityResolution.erPairs _, EntityResolution.erPairsSql),
+    gate("er_entities", EntityResolution.erEntities _, EntityResolution.erEntitiesSql),
+    gate("er_block_recall", EntityResolution.erBlockRecall _, EntityResolution.erBlockRecallSql),
     // the centroid-state fold identity: any batching through the
     // (Σ, n) merge must equal the one-shot first Lloyd round
-    "stream_kmeans"     -> graft.streaming.CentroidStream.streamKmeansSql,
+    gate("stream_kmeans", CentroidStream.streamKmeans _, CentroidStream.streamKmeansSql),
     // the frontier-merge identity: skyline(A ∪ B) =
     // skyline(skyline(A) ∪ skyline(B)) — the incremental fold must
     // reproduce the one-shot frontier exactly
-    "skyline_incr"      -> Skyline.q44SkylineSql,
+    gate("skyline_incr", Skyline.skylineIncr _, Skyline.q44SkylineSql),
     // the incremental-ER identity: contraction + delta propagation
     // must reproduce the full recompute exactly (append-only keys,
     // cap not newly binding)
-    "er_incr"           -> EntityResolution.erEntitiesSql,
-    "events_paths"      -> Relational2.eventsPathsSql,
-    "dq_skew_report"    -> Relational.dqSkewReportSql,
-    "dq_profile"        -> Profiling.dqProfileSql,
-    "dq_join_estimate"  -> HeavyHitters.dqJoinEstimateSql,
+    gate("er_incr", EntityResolution.erIncr _, EntityResolution.erEntitiesSql),
+    gate("events_paths", Relational2.eventsPaths _, Relational2.eventsPathsSql),
+    gate("dq_skew_report", Relational.dqSkewReport _, Relational.dqSkewReportSql),
+    gate("dq_profile", Profiling.dqProfile _, Profiling.dqProfileSql),
+    gate("dq_join_estimate", HeavyHitters.dqJoinEstimate _, HeavyHitters.dqJoinEstimateSql),
     // dim-side view maintenance: remapping the fact pre-aggregate
     // through the dim feed must equal re-joining against the new dim
-    "ivm_dim"           -> Ivm.ivmDimSql,
+    gate("ivm_dim", Ivm.ivmDim _, Ivm.ivmDimSql),
     // one recursive-CTE string, both engines verbatim
-    "sql_recursive"     -> SqlSurface.sqlRecursive,
-    "pipeline_rules"    -> Pipeline.pipelineRulesSql,
-    "dq_fk_check"       -> Profiling.dqFkCheckSql,
+    gate("sql_recursive", SqlSurface.qSqlRecursive _, SqlSurface.sqlRecursive),
+    gate("pipeline_rules", Pipeline.pipelineRules _, Pipeline.pipelineRulesSql),
+    gate("dq_fk_check", Profiling.dqFkCheck _, Profiling.dqFkCheckSql),
     // the ER maintenance identity: bootstrap + steady-state fold must
     // equal the full recompute
-    "stream_er"         -> EntityResolution.erEntitiesSql,
+    gate("stream_er", EntityResolution.streamEr _, EntityResolution.erEntitiesSql),
     // keyed-sketch fold identities: register max / counter addition
     // over any batching must equal the one-shot aggregation, so each
     // stream gate's oracle IS its one-shot eval's SQL
-    "stream_hll"        -> HeavyHitters.taHllEvalSql,
-    "stream_quantile"   -> HeavyHitters.taQuantileEvalSql,
-    "mm_audio_fp"       -> graft.multimodal.Media.mmAudioFpSql,
-    "mm_audio_pairs"    -> graft.multimodal.Media.mmAudioPairsSql,
-    "graph_jaccard"     -> Graphs.graphJaccardSql,
-    "vocab_coverage"    -> Tokenizer.vocabCoverageSql,
-    "sim_hard_negatives" -> Similarity.simHardNegativesSql,
-    "sim_bitext"        -> Similarity.simBitextSql,
-    "corpus_icp"        -> Similarity.corpusIcpSql,
-    "pack_icp"          -> Similarity.packIcpSql,
-    "stream_icp"        -> graft.streaming.IcpStream.streamIcpSql,
-    "events_dau"        -> Relational2.eventsDauSql,
-    "ta_novelty"        -> CorpusOps.taNoveltySql,
+    gate("stream_hll", SketchStream.streamHll _, HeavyHitters.taHllEvalSql),
+    gate("stream_quantile", SketchStream.streamQuantile _, HeavyHitters.taQuantileEvalSql),
+    gate("mm_audio_fp", Media.mmAudioFp _, Media.mmAudioFpSql),
+    gate("mm_audio_pairs", Media.mmAudioPairs _, Media.mmAudioPairsSql),
+    gate("graph_jaccard", Graphs.graphJaccard _, Graphs.graphJaccardSql),
+    gate("vocab_coverage", Tokenizer.vocabCoverage _, Tokenizer.vocabCoverageSql),
+    gate("sim_hard_negatives", Similarity.simHardNegatives _, Similarity.simHardNegativesSql),
+    gate("sim_bitext", Similarity.simBitext _, Similarity.simBitextSql),
+    gate("corpus_icp", Similarity.corpusIcp _, Similarity.corpusIcpSql),
+    gate("pack_icp", Similarity.packIcp _, Similarity.packIcpSql),
+    gate("stream_icp", IcpStream.streamIcp _, IcpStream.streamIcpSql),
+    gate("events_dau", Relational2.eventsDau _, Relational2.eventsDauSql),
+    gate("ta_novelty", CorpusOps.taNovelty _, CorpusOps.taNoveltySql),
     // the min-merge fold identity: first-occurrence state over any
     // batching must reproduce the one-shot novelty exactly
-    "stream_novelty"    -> CorpusOps.taNoveltySql,
-    "corpus_waterfall"  -> Pipeline.corpusWaterfallSql,
+    gate("stream_novelty", NoveltyStream.streamNovelty _, CorpusOps.taNoveltySql),
+    gate("corpus_waterfall", Pipeline.corpusWaterfall _, Pipeline.corpusWaterfallSql),
     // the CC maintenance identity: the three-batch fold through the
     // contraction step must equal the full-corpus recompute
-    "stream_cc"         -> Dedup.dedupCcSql,
-    "events_rfm"        -> Relational2.eventsRfmSql,
-    "corpus_rank"       -> CorpusOps.corpusRankSql,
+    gate("stream_cc", CcStream.streamCc _, Dedup.dedupCcSql),
+    gate("events_rfm", Relational2.eventsRfm _, Relational2.eventsRfmSql),
+    gate("corpus_rank", CorpusOps.corpusRank _, CorpusOps.corpusRankSql),
     // the CDC round-trip identity: apply(v_old, diff(v_old, v_new))
     // must equal v_new constructed directly
-    "snapshot_apply"    -> Snapshots.snapshotApplySql,
-    "mm_phash_cc"       -> graft.multimodal.Media.mmPhashCcSql,
-    "events_ewma"       -> Relational2.eventsEwmaSql,
+    gate("snapshot_apply", Snapshots.snapshotApply _, Snapshots.snapshotApplySql),
+    gate("mm_phash_cc", Media.mmPhashCc _, Media.mmPhashCcSql),
+    gate("events_ewma", Relational2.eventsEwma _, Relational2.eventsEwmaSql),
     // one window-function ANSI string, both engines verbatim
-    "sql_window"        -> SqlSurface.sqlWindow,
-    "dedup_keep_longest" -> Dedup.dedupKeepLongestSql,
-    "ta_quality_calibration" -> Classifier.taQualityCalibrationSql,
+    gate("sql_window", SqlSurface.qSqlWindow _, SqlSurface.sqlWindow),
+    gate("dedup_keep_longest", Dedup.dedupKeepLongest _, Dedup.dedupKeepLongestSql),
+    gate("ta_quality_calibration", Classifier.taQualityCalibration _, Classifier.taQualityCalibrationSql),
     // exact order statistics by two-pass counting selection: every
     // output is an ELEMENT of the column at the ceil-rank position, so
     // the oracle's brute ROW_NUMBER walk must agree to the cent
-    "q45_exact_pctile"  -> Selection.q45ExactPctileSql,
+    gate("q45_exact_pctile", Selection.q45ExactPctile _, Selection.q45ExactPctileSql),
     // lossy format, exact oracle: on the block-constant even-valued
     // subspace the JPEG DCT round-trip is bit-exact, so the analytic
     // twin's sums match iff the entropy/DCT pipeline reconstructed
     // every pixel (JpegCodec scaladoc has the arithmetic)
-    "mm_jpeg"           -> graft.multimodal.Media.mmJpegSql,
+    gate("mm_jpeg", Media.mmJpeg _, Media.mmJpegSql),
     // same lossy-but-exact trick for audio: µ-law's encode∘decode is
     // the identity on the codeword image, and the oracle evaluates the
     // G.711 expansion in integer SQL
-    "mm_ulaw"           -> graft.multimodal.Media.mmUlawSql,
-    "mm_alaw"           -> graft.multimodal.Media.mmAlawSql,
-    "mm_flac"           -> graft.multimodal.Media.mmFlacSql,
-    "mm_audio_dispatch" -> graft.multimodal.Media.mmAudioDispatchSql,
-    "mm_audio_xdedup"   -> graft.multimodal.Media.mmAudioXdedupSql,
+    gate("mm_ulaw", Media.mmUlaw _, Media.mmUlawSql),
+    gate("mm_alaw", Media.mmAlaw _, Media.mmAlawSql),
+    gate("mm_flac", Media.mmFlac _, Media.mmFlacSql),
+    gate("mm_audio_dispatch", Media.mmAudioDispatch _, Media.mmAudioDispatchSql),
+    gate("mm_audio_xdedup", Media.mmAudioXdedup _, Media.mmAudioXdedupSql),
     // MJPEG frames through the AVI container walk + every-2nd-frame
     // sampling; the twin sums the sampled frames' block formula
-    "mm_video"          -> graft.multimodal.Media.mmVideoSql,
+    gate("mm_video", Media.mmVideo _, Media.mmVideoSql),
     // the embedding lens on the SAME benchmark split the n-gram
     // decontaminator checks — cell-bucketed corpus×bench scoring at
     // dedup_semantic's own integer-exact threshold
-    "ta_decontaminate_semantic" -> Cleaning.taDecontaminateSemanticSql,
+    gate("ta_decontaminate_semantic", Cleaning.taDecontaminateSemantic _, Cleaning.taDecontaminateSemanticSql),
     // maximal-munch segmentation: the oracle replays the greedy walk
     // via a (word, position) longest-match jump table + recursive
     // stepping, so the hash covers every word's full segmentation
-    "vocab_wordpiece"   -> Tokenizer.vocabWordpieceSql,
-    "vocab_wordpiece_encode" -> Tokenizer.vocabWordpieceEncodeSql,
+    gate("vocab_wordpiece", Tokenizer.vocabWordpiece _, Tokenizer.vocabWordpieceSql),
+    gate("vocab_wordpiece_encode", Tokenizer.vocabWordpieceEncode _, Tokenizer.vocabWordpieceEncodeSql),
     // the oracle is the BRUTE all-pairs join on purpose: the gate only
     // hash-matches if the prefix/length pruning is provably lossless
-    "dedup_allpairs"    -> Dedup.dedupAllpairsSql,
+    gate("dedup_allpairs", Dedup.dedupAllpairs _, Dedup.dedupAllpairsSql),
     // the doctrine composed: exact join AMONG replica-collapsed
     // canonicals — the scale-safe form on duplicate-heavy corpora
-    "dedup_allpairs_clean" -> Dedup.dedupAllpairsCleanSql,
+    gate("dedup_allpairs_clean", Dedup.dedupAllpairsClean _, Dedup.dedupAllpairsCleanSql),
     // the incremental member: exact new-vs-snapshot join, prefix
     // discipline over the UNION gram census, brute cross-join oracle
-    "dedup_allpairs_incr" -> Dedup.dedupAllpairsIncrSql,
+    gate("dedup_allpairs_incr", Dedup.dedupAllpairsIncr _, Dedup.dedupAllpairsIncrSql),
     // schema evolution: merged read across two file generations must
     // surface old-generation rows with NULL in the added column
-    "layout_schema_merge" -> graft.sources.Formats.layoutSchemaMergeSql,
-    "web_warc_extract"  -> graft.web.WebIngest.webWarcExtractSql,
-    "web_images"        -> graft.web.WebIngest.webImagesSql,
-    "web_url_parse"     -> graft.web.WebIngest.webUrlParseSql,
-    "web_domain_stats"  -> graft.web.WebIngest.webDomainStatsSql,
-    "web_robots"        -> graft.web.WebIngest.webRobotsSql,
-    "web_links"         -> graft.web.WebIngest.webLinksSql,
-    "web_link_graph"    -> graft.web.WebIngest.webLinkGraphSql,
-    "web_url_normalize" -> graft.web.WebIngest.webUrlNormalizeSql,
-    "web_frontier"      -> graft.web.WebIngest.webFrontierSql,
-    "web_charset"       -> graft.web.WebIngest.webCharsetSql,
-    "web_redirects"     -> graft.web.Redirects.webRedirectsSql,
-    "web_boilerplate"   -> graft.web.WebIngest.webBoilerplateSql,
-    "web_sitemap"       -> graft.web.WebIngest.webSitemapSql,
-    "stream_frontier"   -> graft.web.WebIngest.streamFrontierSql,
-    "web_host_pagerank" -> graft.web.WebIngest.webHostPagerankSql,
-    "feat_scale"        -> Features.featScaleSql,
-    "feat_bucketize"    -> Features.featBucketizeSql,
-    "feat_onehot"       -> Features.featOnehotSql,
-    "feat_hashed_cross" -> Features.featHashedCrossSql,
-    "web_warc_index"    -> graft.web.WebIngest.webWarcIndexSql,
-    "ta_sentences"      -> TextAnalysis.taSentencesSql,
-    "pipeline_web"      -> graft.web.WebIngest.pipelineWebSql,
-    "web_anchor_text"   -> graft.web.WebIngest.webAnchorTextSql,
-    "web_frontier_admitted" -> graft.web.WebIngest.webFrontierAdmittedSql,
-    "ta_readability"    -> TextAnalysis.taReadabilitySql,
-    "feat_quantile_bucketize" -> Features.featQuantileBucketizeSql,
-    "feat_target_encode" -> Features.featTargetEncodeSql,
-    "stream_feat_scale" -> Features.featScaleSql,
-    "stream_web"        -> graft.web.WebIngest.streamWebSql,
-    "stream_images"     -> graft.streaming.ImageStream.streamImagesSql,
-    "stream_audio"      -> graft.streaming.AudioStream.streamAudioSql,
-    "stream_doremi"     -> CorpusOps.mixDoremiSql,
-    "stream_pack"       -> graft.operators.Cleaning.taPackChunksSql,
+    gate("layout_schema_merge", Formats.layoutSchemaMerge _, Formats.layoutSchemaMergeSql),
+    gate("web_warc_extract", WebIngest.webWarcExtract _, WebIngest.webWarcExtractSql),
+    gate("web_images", WebIngest.webImages _, WebIngest.webImagesSql),
+    gate("web_url_parse", WebIngest.webUrlParse _, WebIngest.webUrlParseSql),
+    gate("web_domain_stats", WebIngest.webDomainStats _, WebIngest.webDomainStatsSql),
+    gate("web_robots", WebIngest.webRobots _, WebIngest.webRobotsSql),
+    gate("web_links", WebIngest.webLinks _, WebIngest.webLinksSql),
+    gate("web_link_graph", WebIngest.webLinkGraph _, WebIngest.webLinkGraphSql),
+    gate("web_url_normalize", WebIngest.webUrlNormalize _, WebIngest.webUrlNormalizeSql),
+    gate("web_frontier", WebIngest.webFrontier _, WebIngest.webFrontierSql),
+    gate("web_charset", WebIngest.webCharset _, WebIngest.webCharsetSql),
+    gate("web_redirects", Redirects.webRedirects _, Redirects.webRedirectsSql),
+    gate("web_boilerplate", WebIngest.webBoilerplate _, WebIngest.webBoilerplateSql),
+    gate("web_sitemap", WebIngest.webSitemap _, WebIngest.webSitemapSql),
+    gate("stream_frontier", FrontierStream.streamFrontier _, WebIngest.streamFrontierSql),
+    gate("web_host_pagerank", WebIngest.webHostPagerank _, WebIngest.webHostPagerankSql),
+    gate("feat_scale", Features.featScale _, Features.featScaleSql),
+    gate("feat_bucketize", Features.featBucketize _, Features.featBucketizeSql),
+    gate("feat_onehot", Features.featOnehot _, Features.featOnehotSql),
+    gate("feat_hashed_cross", Features.featHashedCross _, Features.featHashedCrossSql),
+    gate("web_warc_index", WebIngest.webWarcIndex _, WebIngest.webWarcIndexSql),
+    gate("ta_sentences", TextAnalysis.taSentences _, TextAnalysis.taSentencesSql),
+    gate("pipeline_web", WebIngest.pipelineWeb _, WebIngest.pipelineWebSql),
+    gate("web_anchor_text", WebIngest.webAnchorText _, WebIngest.webAnchorTextSql),
+    gate("web_frontier_admitted", WebIngest.webFrontierAdmitted _, WebIngest.webFrontierAdmittedSql),
+    gate("ta_readability", TextAnalysis.taReadability _, TextAnalysis.taReadabilitySql),
+    gate("feat_quantile_bucketize", Features.featQuantileBucketize _, Features.featQuantileBucketizeSql),
+    gate("feat_target_encode", Features.featTargetEncode _, Features.featTargetEncodeSql),
+    // the stats fold identity: scoring under the folded stats must
+    // reproduce one-shot feat_scale exactly
+    gate("stream_feat_scale", FeatureStream.streamFeatScale _, Features.featScaleSql),
+    gate("stream_web", WebStream.streamWeb _, WebIngest.streamWebSql),
+    gate("stream_images", ImageStream.streamImages _, ImageStream.streamImagesSql),
+    gate("stream_audio", AudioStream.streamAudio _, AudioStream.streamAudioSql),
+    // the count fold identity: weights under the folded model must
+    // equal one-shot mix_doremi exactly
+    gate("stream_doremi", DoremiStream.streamDoremi _, CorpusOps.mixDoremiSql),
+    // the cursor-carry fold identity: the batched manifests must
+    // reproduce one-shot ta_pack_chunks exactly
+    gate("stream_pack", PackStream.streamPack _, Cleaning.taPackChunksSql),
     // the cursor-carry fold identity under the REAL token metric: the
     // batched manifests must reproduce one-shot pack_bpe exactly
-    "stream_pack_bpe"   -> graft.operators.Tokenizer.packBpeSql,
-    "q46_pctile_wide"   -> Selection.q46PctileWideSql
+    gate("stream_pack_bpe", PackStream.streamPackBpe _, Tokenizer.packBpeSql),
+    gate("q46_pctile_wide", Selection.q46PctileWide _, Selection.q46PctileWideSql)
   )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.op).toMap
+
+  /** Lazy, so that reading [[queries]] never builds the oracle SQL. */
+  lazy val oracleSql: Map[String, String] = gates.map(g => g.name -> g.sql).toMap
+
+  /** Every gate name, sorted: the all-gates order of Verify, Probe,
+    * ScaleRehearsal, `Graft.ops` and `BENCH_ALL`. */
+  val names: Seq[String] = gates.map(_.name).sorted
 
   /** Headline subset used by Bench (keep it representative, not
     * exhaustive). r3 adds the star-CC variant, the zero-shuffle

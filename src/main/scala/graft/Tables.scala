@@ -87,12 +87,10 @@ object Tables {
     s.read.parquet(s"$dir/$name.parquet")
 
   /** Byte threshold under which [[fanOutSmall]] fans a scan out
-    * (SPARK_GRAFT_SMALL_SCAN_MB, default 256 MB). Any table above it
-    * already yields at least a few natural splits and real corpora are
-    * orders of magnitude past it — the fan-out is a SMALL-INPUT floor,
-    * never a production reshuffle. */
-  private def smallScanBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_SCAN_MB", "256").toLong << 20
+    * (256 MB). Any table above it already yields at least a few
+    * natural splits and real corpora are orders of magnitude past it —
+    * the fan-out is a SMALL-INPUT floor, never a production reshuffle. */
+  private val smallScanBytes: Long = 256L << 20
 
   /** Scale-adaptive scan fan-out for CPU-DENSE per-row kernels (r16,
     * guide §2/§6: derive partitioning from input size, never a
@@ -119,9 +117,8 @@ object Tables {
           .getContentSummary(p).getLength
       } catch { case _: Throwable => Long.MaxValue } // unknown ⇒ untouched
     if (bytes < smallScanBytes) {
-      // the override is validated like smallScanBytes' unknown-size
-      // handling (r17, ADVICE): a malformed or non-positive value falls
-      // back to the default instead of throwing inside a table loader
+      // a malformed or non-positive override falls back to the default
+      // instead of throwing inside a table loader (r17, ADVICE)
       val n = sys.env.get("SPARK_GRAFT_FANOUT")
         .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
         .filter(_ >= 1)

@@ -11,12 +11,10 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Graft.session(cpus, partitions = cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.names.filter(name => only.forall(_.contains(name))).foreach { name =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1f s)")
       } catch { case e: Throwable =>
@@ -30,20 +28,8 @@ object Verify {
         Graft.releaseState(spark)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -5,14 +5,13 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native Catalyst expression: |A ∩ B| of two SORTED arrays (both
-  * `array<string>` or both `array<bigint>`) by linear merge — the
-  * codegen'd replacement for `size(array_intersect(a, b))` on the
-  * dedup verify tiers. The long variant (built r14, WIRED r15) serves
+/** Native Catalyst expression: |A ∩ B| of two SORTED `array<bigint>`
+  * by linear merge — the codegen'd replacement for
+  * `size(array_intersect(a, b))` on the dedup verify tiers. It serves
   * the hash-encoded gram sets: every packed-array verify site
-  * (allpairs ×2, containment dropped-sets ×2) now packs `xxhash64`
+  * (allpairs ×2, containment dropped-sets ×2) packs `xxhash64`
   * gram ids via `Dedup.gramId` — see its collision contract — because
   * the all-pairs verify ships two doc-length arrays per candidate
   * pair, and 8-byte ids cut that wire/spill volume ~4× against
@@ -31,7 +30,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * PRECONDITIONS (the call sites own them, DedupSpec pins the
   * differential vs `size(array_intersect)`):
   *   - both arrays sorted ascending under the SAME ordering —
-  *     `sort_array` on both sides (UTF8String binary order);
+  *     `sort_array` on both sides (signed Long order);
   *   - each array duplicate-free (a set, the per-doc DISTINCT-shingle
   *     contract). Equal runs would be counted min(multiplicity) here
   *     vs 1 by array_intersect — sets make the two agree.
@@ -48,23 +47,11 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
       case _ => None
     }
     (elem(left), elem(right)) match {
-      case (Some(StringType), Some(StringType)) => TypeCheckResult.TypeCheckSuccess
       case (Some(LongType), Some(LongType)) => TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<string>, array<string>) or " +
-          s"(array<bigint>, array<bigint>), got " +
+        s"$prettyName requires (array<bigint>, array<bigint>), got " +
           s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
     }
-  }
-
-  /** Both-sides element type is pinned by checkInputDataTypes; the
-    * merge loop dispatches on it once per expression instance (lazy
-    * val, r15 ADVICE — a def here re-matched dataType per ROW on the
-    * interpreted/fallback path, contradicting this very comment;
-    * codegen always baked the branch in at compile time either way). */
-  private lazy val longElems: Boolean = left.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
   }
 
   private def elemNullable(e: Expression): Boolean = e.dataType match {
@@ -81,8 +68,8 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
     * containsNull=false skips it entirely) nulls the result whenever
     * either array holds a null member, wherever it sits. The merge loop
     * alone would only notice a null it reaches before either side is
-    * exhausted (['a'] vs ['a', null] slipping through as 1 while
-    * ['a'] vs [null, 'a'] nulls) — inconsistent for SQL users of the
+    * exhausted ([1] vs [1, null] slipping through as 1 while
+    * [1] vs [null, 1] nulls) — inconsistent for SQL users of the
     * session-registered function. Sets have no null members on the
     * in-repo paths; for anyone else the contract is now simply
     * "any null element ⇒ NULL" (the [[DotProductI64]] stance). */
@@ -100,20 +87,11 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
     var c = 0L
     var i = 0
     var j = 0
-    if (longElems) {
-      while (i < na && j < nb) {
-        val cmp = java.lang.Long.compare(x.getLong(i), y.getLong(j))
-        if (cmp == 0) { c += 1; i += 1; j += 1 }
-        else if (cmp < 0) i += 1
-        else j += 1
-      }
-    } else {
-      while (i < na && j < nb) {
-        val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-        if (cmp == 0) { c += 1; i += 1; j += 1 }
-        else if (cmp < 0) i += 1
-        else j += 1
-      }
+    while (i < na && j < nb) {
+      val cmp = java.lang.Long.compare(x.getLong(i), y.getLong(j))
+      if (cmp == 0) { c += 1; i += 1; j += 1 }
+      else if (cmp < 0) i += 1
+      else j += 1
     }
     c
   }
@@ -127,9 +105,7 @@ case class IntersectSizeSorted(left: Expression, right: Expression)
       val acc = ctx.freshName("acc")
       val cmp = ctx.freshName("cmp")
       val anyNull = ctx.freshName("anyNull")
-      val cmpExpr =
-        if (longElems) s"java.lang.Long.compare($a.getLong($i), $b.getLong($j))"
-        else s"$a.getUTF8String($i).compareTo($b.getUTF8String($j))"
+      val cmpExpr = s"java.lang.Long.compare($a.getLong($i), $b.getLong($j))"
       val header =
         s"""
            |int $na = $a.numElements();

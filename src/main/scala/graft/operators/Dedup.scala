@@ -1544,9 +1544,6 @@ object Dedup {
     ccOutput(labels) // shared output shape — identical contract to dedupCc
   }
 
-  /** Same fixpoint as min-label propagation ⇒ same oracle. */
-  val dedupCcStarSql: String = dedupCcSql
-
   // ------------------------------------------------------- dedup_edit
   /** Normalized-text prefix length fed to the edit-distance DP. */
   val EditPrefix = 200

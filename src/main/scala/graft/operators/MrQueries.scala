@@ -124,8 +124,6 @@ object MrQueries {
       .select(col("key").as("word"), col("value").cast("long").as("cnt"))
   }
 
-  val mrCompatWcSql: String = mrWcSql
-
   /** Inverted index through the compat façade; the reference reduce
     * emits `"<n> <docs,comma>"` as one string (`mrapps/indexer.go:38`),
     * parsed back to columns to share mrIndexer's oracle. */
@@ -139,6 +137,4 @@ object MrQueries {
         substring_index(col("value"), " ", 1).cast("long").as("n_docs"),
         expr("substring(value, instr(value, ' ') + 1)").as("docs"))
   }
-
-  val mrCompatIndexerSql: String = mrIndexerSql
 }

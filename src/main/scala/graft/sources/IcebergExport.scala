@@ -330,8 +330,4 @@ object IcebergExport {
     s.createDataFrame(
       s.sparkContext.parallelize(readTree(root), 1), outSchema)
   }
-
-  /** Round-trip identity: the oracle IS the manifest's (the export
-    * must reconstruct exactly the table the stats came from). */
-  val layoutExportIcebergSql: String = Manifest.layoutManifestSql
 }

@@ -29,6 +29,11 @@ import scala.util.control.NonFatal
   * persisted state released in between (a warm JVM, the full job set);
   * io reports the second run WITHOUT that release — the bench
   * protocol, where run 2 reuses run 1's persisted intermediates.
+  * Wall times of different gates compare only at the same position in
+  * the JVM: the first gate probed reads about 3 s slower than the same
+  * function probed second, even after its warm run (er_incr 10.13 s vs
+  * stream_er 7.25 s at sf0.01 on 4 cores, one function behind both). To
+  * compare two commits, probe the same gate list in the same order.
   * `SPARK_GRAFT_CPUS` (default 32) sets the local cores. */
 object Probe {
   val Modes = Seq("explain", "final", "jobs", "stages", "io", "sql")
@@ -66,7 +71,7 @@ object Probe {
     require(out.isEmpty || mode == "explain", s"--out is explain-only, not '$mode'")
     val unknown = gates.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
-    if (gates.isEmpty) SparkEntry.queries.keys.toSeq.sorted else gates
+    if (gates.isEmpty) SparkEntry.names else gates
   }
 
   private def seconds[T](f: => T): (T, Double) = {

@@ -266,10 +266,9 @@ object ScaleRehearsal {
     // (corpus_icp's silent permutation loss and dedup_allpairs' 11.6x
     // wall were caught only because their operators were listed).
     // SPARK_GRAFT_REHEARSAL_ONLY=a,b,c still restricts for focused probes.
-    val allNames = SparkEntry.queries.keys.toSeq.sorted
     val names = sys.env.get("SPARK_GRAFT_REHEARSAL_ONLY") match {
       case Some(list) => list.split(",").toSeq
-      case None => allNames
+      case None => SparkEntry.names
     }
     // per-task metrics listener: the 100×-class question is not only
     // wall time but whether any single task's memory footprint or

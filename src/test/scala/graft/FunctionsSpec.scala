@@ -73,41 +73,46 @@ class FunctionsSpec extends AnyFunSuite {
     import spark.implicits._
     IntersectSizeSorted.register(spark)
     val rng = new scala.util.Random(23)
-    // random word SETS (duplicate-free, the call-site contract)
+    // random gram-id SETS (duplicate-free, the call-site contract)
     val rows = (0 until 200).map { i =>
-      val a = rng.shuffle((0 until 500).map(w => s"w$w")).take(rng.nextInt(80)).distinct
-      val b = rng.shuffle((0 until 500).map(w => s"w$w")).take(rng.nextInt(80)).distinct
+      val a = rng.shuffle((0 until 500).map(_.toLong)).take(rng.nextInt(80)).distinct
+      val b = rng.shuffle((0 until 500).map(_.toLong)).take(rng.nextInt(80)).distinct
       (i, a, b)
     }
     val df = rows.toDF("id", "a", "b")
       .selectExpr("id", "sort_array(a) as sa", "sort_array(b) as sb")
-    val got = df.selectExpr("id",
+    def differential(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val q = d.selectExpr("id",
         "intersect_size_sorted(sa, sb) as merged",
         "cast(size(array_intersect(sa, sb)) as bigint) as builtin")
-      .collect()
-    got.foreach(r => assert(r.getLong(1) == r.getLong(2),
-      s"row ${r.getInt(0)}: merged ${r.getLong(1)} vs builtin ${r.getLong(2)}"))
+      val got = q.collect()
+      assert(got.length == rows.length)
+      got.foreach(r => assert(r.getLong(1) == r.getLong(2),
+        s"row ${r.getInt(0)}: merged ${r.getLong(1)} vs builtin ${r.getLong(2)}"))
+      q
+    }
+    differential(df)  // interpreted / constant-folded path
     // edges: empty sides, disjoint, identical
     val edge = Seq(
-      (Seq.empty[String], Seq("a", "b"), 0L),
-      (Seq("a", "b"), Seq.empty[String], 0L),
-      (Seq("a", "c"), Seq("b", "d"), 0L),
-      (Seq("a", "b", "c"), Seq("a", "b", "c"), 3L))
+      (Seq.empty[Long], Seq(1L, 2L), 0L),
+      (Seq(1L, 2L), Seq.empty[Long], 0L),
+      (Seq(1L, 3L), Seq(2L, 4L), 0L),
+      (Seq(1L, 2L, 3L), Seq(1L, 2L, 3L), 3L))
       .toDF("a", "b", "want")
       .selectExpr("intersect_size_sorted(sort_array(a), sort_array(b)) as got", "want")
       .collect()
     edge.foreach(r => assert(r.getLong(0) == r.getLong(1)))
     // the expression must run INSIDE whole-stage codegen on the hot
-    // path, not fall back interpreted (the reason it exists). A bare
-    // local relation constant-folds to LocalTableScan, so force a real
-    // exchange first — the shape the dedup verify tiers actually have.
-    val staged = df.repartition(2).selectExpr("intersect_size_sorted(sa, sb) as x")
-    staged.collect()
+    // path, not fall back interpreted (the reason it exists), and give
+    // the builtin's values there too. A bare local relation
+    // constant-folds to LocalTableScan, so force a real exchange first
+    // — the shape the dedup verify tiers actually have.
+    val staged = differential(df.repartition(2))
     // AQE plan strings mark codegen'd nodes with a `*(n)` prefix (the
     // literal WholeStageCodegen node name only appears in non-adaptive
-    // explain output)
+    // explain output); the Project lists `id` before the merge
     val plan = staged.queryExecution.executedPlan.toString
-    assert("""\*\(\d+\) Project \[intersect_size_sorted""".r
+    assert("""\*\(\d+\) Project \[[^\n]*intersect_size_sorted""".r
         .findFirstIn(plan).isDefined,
       s"intersect_size_sorted fell out of codegen:\n$plan")
   }
@@ -117,16 +122,16 @@ class FunctionsSpec extends AnyFunSuite {
     IntersectSizeSorted.register(spark)
     // Position-INDEPENDENT null propagation: before the r12 pre-scan a
     // null past the point where the shorter array exhausted slipped
-    // through (['a'] vs ['a', null] → 1 while ['a'] vs [null, 'a'] →
+    // through ([1] vs [1, null] → 1 while [1] vs [null, 1] →
     // NULL). Now any null member on either side nulls the result, in
     // both interpreted (LocalTableScan) and codegen (post-exchange)
-    // paths. toDF on Seq[Option[String]] yields containsNull=true
+    // paths. toDF on Seq[Option[Long]] yields containsNull=true
     // arrays, so the null branch is genuinely exercised.
     val rows = Seq(
-      (1, Seq(Option("a")), Seq(Option("a"), None)),          // null AFTER exhaustion
-      (2, Seq(Option("a")), Seq(None, Option("a"))),          // null BEFORE
-      (3, Seq(Option("a"), None), Seq(Option("a"))),          // left side, after
-      (4, Seq(Option("a"), Option("b")), Seq(Option("a"), Option("b"))))
+      (1, Seq(Option(1L)), Seq(Option(1L), None)),            // null AFTER exhaustion
+      (2, Seq(Option(1L)), Seq(None, Option(1L))),            // null BEFORE
+      (3, Seq(Option(1L), None), Seq(Option(1L))),            // left side, after
+      (4, Seq(Option(1L), Option(2L)), Seq(Option(1L), Option(2L))))
       .toDF("id", "a", "b")
     def check(df: org.apache.spark.sql.DataFrame): Unit = {
       val got = df.selectExpr("id", "intersect_size_sorted(a, b) as x")
@@ -141,29 +146,11 @@ class FunctionsSpec extends AnyFunSuite {
   test("intersect_size_sorted: array<bigint> variant matches array_intersect; mixed types rejected") {
     import spark.implicits._
     IntersectSizeSorted.register(spark)
-    // the r14 dictionary-encoded verify path: same merge semantics over
-    // 8-byte gram ids; differential vs the builtin on random long SETS,
-    // in both interpreted and codegen paths
-    val rng = new scala.util.Random(37)
-    val rows = (0 until 200).map { i =>
-      val a = rng.shuffle((0 until 500).map(_.toLong)).take(rng.nextInt(80)).distinct
-      val b = rng.shuffle((0 until 500).map(_.toLong)).take(rng.nextInt(80)).distinct
-      (i, a, b)
-    }
-    val df = rows.toDF("id", "a", "b")
-      .selectExpr("id", "sort_array(a) as sa", "sort_array(b) as sb")
-    def check(d: org.apache.spark.sql.DataFrame): Unit =
-      d.selectExpr("id",
-          "intersect_size_sorted(sa, sb) as merged",
-          "cast(size(array_intersect(sa, sb)) as bigint) as builtin")
-        .collect()
-        .foreach(r => assert(r.getLong(1) == r.getLong(2),
-          s"row ${r.getInt(0)}: merged ${r.getLong(1)} vs builtin ${r.getLong(2)}"))
-    check(df)
-    check(df.repartition(2))
-    // negative-ID ordering: sort_array puts negatives first and the
-    // signed Long.compare merge must agree (gram ids are non-negative
-    // on the in-repo path, but the SQL surface makes no such promise)
+    // the random-set differential vs the builtin is the first
+    // intersect_size_sorted test. Negative-ID ordering: sort_array puts
+    // negatives first and the signed Long.compare merge must agree (gram
+    // ids are non-negative on the in-repo path, but the SQL surface
+    // makes no such promise)
     val neg = Seq((Seq(-5L, -1L, 3L), Seq(-5L, 2L, 3L), 2L))
       .toDF("a", "b", "want")
       .selectExpr("intersect_size_sorted(sort_array(a), sort_array(b)) as got", "want")
@@ -175,5 +162,12 @@ class FunctionsSpec extends AnyFunSuite {
         .selectExpr("intersect_size_sorted(a, b)").collect()
     }
     assert(err.getMessage.contains("intersect_size_sorted"))
+    // every call site packs gram ids, so string arrays are rejected too,
+    // and the failure names both argument types
+    val str = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((Seq("a"), Seq("a"))).toDF("a", "b")
+        .selectExpr("intersect_size_sorted(a, b)").collect()
+    }
+    assert(str.getMessage.contains("(array<string>, array<string>)"), str.getMessage)
   }
 }

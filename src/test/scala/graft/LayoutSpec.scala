@@ -6,21 +6,24 @@ import scala.jdk.CollectionConverters._
 
 /** Layout rules for `src/main/scala` code (comment lines skipped): one
   * session builder, one scheduler listener, one copy of each dedup
-  * pair-join step, one incremental-components fold, one bucket cap and
-  * one whole-file reader, so the copies cannot come back one tool or one
-  * function at a time. */
+  * pair-join step, one incremental-components fold, one bucket cap, one
+  * whole-file reader and one registry row per gate, so the copies cannot
+  * come back one tool or one function at a time. */
 class LayoutSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
   /** `file:line` of every code line under [[root]] that contains `needle`. */
-  private def codeMentions(needle: String): Seq[String] = {
+  private def codeMentions(needle: String): Seq[String] = codeLines(_.contains(needle))
+
+  /** `file:line` of every code line under [[root]] that `matches`. */
+  private def codeLines(matches: String => Boolean): Seq[String] = {
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     val files = Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     files.flatMap { f: Path =>
       Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains(needle) &&
+        case (line, i) if matches(line) &&
             !Seq("//", "*", "/*").exists(line.trim.startsWith) =>
           s"${root.relativize(f)}:${i + 1}"
       }
@@ -80,5 +83,12 @@ class LayoutSpec extends AnyFunSuite {
 
   test("whole files are read by the listed reader, not wholeTextFiles") {
     assert(codeMentions("wholeTextFiles").isEmpty, codeMentions("wholeTextFiles"))
+  }
+
+  test("SparkEntry names each gate once, in its row: no \"name\" -> map literal") {
+    val arrow = "\"[a-z0-9_]+\"\\s*->".r
+    val hits = codeLines(arrow.findFirstIn(_).isDefined)
+      .filter(_.startsWith("graft/SparkEntry.scala:"))
+    assert(hits.isEmpty, hits)
   }
 }

@@ -3,15 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Registry drift canary — the r9 lesson mechanized. The 260-line
-  * hand-maintained [[SparkEntry.queries]] map is the correctness
-  * gate's ground truth; r9 shipped a whole operator (Selection) as
-  * dead code because nothing asserted "every public gate function is
+/** Registry drift canary — the r9 lesson mechanized. The gate rows of
+  * [[SparkEntry.gates]] (name, operator and oracle SQL in one row, so a
+  * gate cannot exist without its oracle) are the correctness gate's
+  * ground truth; r9 shipped a whole operator (Selection) as dead code
+  * because nothing asserted "every public gate function is
   * registered". This spec closes that class of drift:
   *
-  *   1. `queries` and `oracleSql` keysets are in exact bijection
-  *      (a query without an oracle silently downgrades to a weaker
-  *      rows-only check; an oracle without a query is dead SQL).
+  *   1. no gate name is registered twice (`queries` and `oracleSql`
+  *      are built with `toMap`, which would silently keep only the
+  *      last of two rows).
   *   2. every `benchQueries` headline name is a registered query.
   *   3. every PUBLIC method with the driver's gate signature
   *      `(SparkSession, String) => DataFrame` on any object in the
@@ -24,11 +25,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 class RegistrySpec extends AnyFunSuite {
 
-  test("queries and oracleSql keysets are in exact bijection") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q diff o).isEmpty, s"queries without an oracle: ${(q diff o).toSeq.sorted}")
-    assert((o diff q).isEmpty, s"oracles without a query: ${(o diff q).toSeq.sorted}")
+  test("no gate name is registered twice") {
+    val dups = SparkEntry.gates.groupBy(_.name).collect {
+      case (n, rows) if rows.size > 1 => n
+    }
+    assert(dups.isEmpty, s"gates registered twice: ${dups.toSeq.sorted}")
   }
 
   test("every benchQueries headline name is a registered query") {

@@ -1524,7 +1524,8 @@ class StreamingSpec extends AnyFunSuite {
     * first and one in the middle: an empty first batch on a fresh
     * table stores an empty state, and an empty middle batch changes
     * nothing, so the final state equals the run without the empty
-    * batches. */
+    * batches. The run without them uses the same batch ids (1 and 3),
+    * so state stamped with its batch id compares too. */
   private def emptyBatchesChangeNoState(sinks: Seq[(String, String => (DataFrame, Long) => Unit,
       (SparkSession, String) => DataFrame, DataFrame, String)]): Unit =
     for ((name, sink, stored, input, key) <- sinks) {
@@ -1534,9 +1535,9 @@ class StreamingSpec extends AnyFunSuite {
       val empty = input.limit(0)
       def state(table: String) = stored(spark, table).collect().toSet
       val plain = Files.createTempDirectory(s"graft-$name-plain").toString
-      sink(plain)(b1, 0L)
+      sink(plain)(b1, 1L)
       val afterB1 = state(plain)
-      sink(plain)(b2, 1L)
+      sink(plain)(b2, 3L)
       val table = Files.createTempDirectory(s"graft-$name-empty").toString
       sink(table)(empty, 0L)                    // empty FIRST batch, fresh table
       assert(state(table).isEmpty, s"$name: an empty first batch stores an empty state")
@@ -1575,6 +1576,33 @@ class StreamingSpec extends AnyFunSuite {
       ("hll", SketchStream.hllSink, SketchStream.storedHllRegs, docs, "doc_id"),
       ("quantile", SketchStream.quantileSink, SketchStream.storedQuantileState, docs, "doc_id"),
       ("novelty", NoveltyStream.noveltySink, NoveltyStream.storedFirstSeen, docs, "doc_id")))
+  }
+
+  test("sketch, centroid, scaling-stats and history sinks: an empty first batch and an empty middle batch change no stored state") {
+    // all four commit versioned state. The CMS state is one global
+    // sketch row, empty when every counter is zero, so it is compared
+    // as its nonzero slots; the centroid table lists every seed cell,
+    // so it is compared as its cells with members
+    import graft.streaming.{CentroidStream, FeatureStream, HistoryStream, SketchStream}
+    val sf = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val nonzeroSlots = (s: SparkSession, t: String) => {
+      import s.implicits._
+      SketchStream.storedSketch(s, t).zipWithIndex
+        .collect { case (c, i) if c != 0L => (i.toLong, c) }.toDF("slot", "count")
+    }
+    emptyBatchesChangeNoState(Seq(
+      ("cms", SketchStream.cmsSink, nonzeroSlots,
+        docs.select(col("doc_id"), col("text"), col("lang")), "doc_id"),
+      ("centroid", (t: String) => CentroidStream.centroidSink(t, sf)(_, _),
+        (s: SparkSession, t: String) =>
+          CentroidStream.storedCentroids(s, t, sf).where(col("n_members") > 0),
+        Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding")),
+        "vec_id"),
+      ("scale", FeatureStream.scaleSink, FeatureStream.storedStats,
+        docs.select(col("doc_id"), col("lang"), col("n_chars")), "doc_id"),
+      ("history", HistoryStream.historySink, HistoryStream.currentHistory,
+        docs.select(col("doc_id"), col("text")), "doc_id")))
   }
 
   test("streaming doremi model: count fold across restarts equals the one-shot mixture; replay never double-folds") {
