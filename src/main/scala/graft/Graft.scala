@@ -155,7 +155,13 @@ object Graft {
     * floor, the same shape as Tables.fanOutSmall's small-input
     * fan-out. Hash partitioning is NOT preserved through coalesce, but
     * loop states are re-shuffled by their round joins anyway (the
-    * mapPartitions-era kernels never preserved it either). */
+    * mapPartitions-era kernels never preserved it either).
+    *
+    * This sizing is still needed under [[applySettings]]: cached-plan
+    * coalescing sizes a PERSISTED frame by its bytes (AQE re-plans the
+    * cached plan's last exchange), but a localCheckpoint is a
+    * LogicalRDD, which AQE cannot re-plan, so it keeps whatever
+    * partition count the checkpoint job ran with. */
   private[graft] def compactCheckpoint(df: DataFrame,
       targetBytes: Long = 8L << 20): DataFrame = {
     val ck = df.localCheckpoint()
@@ -309,12 +315,17 @@ object Graft {
     apply(session(cpus), dataDir)
 
   /** The one session builder: a local session at the engine's standard
-    * operating point (AQE on, `partitions` shuffle partitions, UTC,
-    * ns-parquet handling). If a SparkSession already exists in this
-    * JVM, getOrCreate returns IT and the builder configs (master/cpus
-    * included) are ignored — so the session-level settings the engine
-    * depends on are re-applied explicitly below, and they take effect
-    * either way; only the master/cpus request is best-effort on a
+    * operating point ([[applySettings]]: AQE on, cached plans coalesced
+    * by AQE like any other exchange, UTC, ns-parquet handling; plus
+    * `partitions` shuffle partitions). Cached-plan coalescing is what
+    * sizes the engine's `.persist()` cut points by their bytes: the
+    * persisted candidate and verify frames of a 0.2 MB corpus are
+    * cached in a few partitions, not 32 (64 after a union), and every
+    * later scan of them runs that few tasks. If a SparkSession already
+    * exists in this JVM, getOrCreate returns IT and the builder
+    * configs (master/cpus included) are ignored — so the session-level
+    * settings the engine depends on are re-applied explicitly below,
+    * and they take effect either way; only the master/cpus request is best-effort on a
     * pre-existing session. Bucketed-table gates (q38) saveAsTable into
     * the warehouse, so it is pinned under java.io.tmpdir unless the JVM
     * was given `-Dspark.sql.warehouse.dir`: no run depends on the
@@ -331,10 +342,22 @@ object Graft {
     // runtime-settable session confs: applied even when getOrCreate
     // returned someone else's session
     spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    applySettings(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Set the engine's runtime session settings on `spark`; applied by
+    * [[session]] and by the test session (which keeps its own master
+    * and shuffle partition count), so tests run the operating point the
+    * benchmark measures. The cached-plan line lets AQE coalesce a
+    * persisted frame's last exchange by bytes: without it a cached plan
+    * keeps all `spark.sql.shuffle.partitions` of its output, and every
+    * scan of a 0.2 MB cache runs that many tasks. */
+  private[graft] def applySettings(spark: SparkSession): Unit = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true"
+  ).foreach { case (k, v) => spark.conf.set(k, v) }
 }

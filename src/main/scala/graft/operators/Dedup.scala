@@ -216,7 +216,11 @@ object Dedup {
     * cross ×2) and stays persisted past the caller's return: the
     * harness releases it between gates via
     * [[graft.Graft.releaseState]], and a library caller owns that
-    * release. */
+    * release. The cache is sized by its bytes: the session's
+    * cached-plan coalescing ([[graft.Graft.applySettings]]) lets AQE shrink
+    * the group-by's partitions, so a fixture-sized table is cached, and
+    * scanned by each consumer, in a few tasks rather than the full
+    * shuffle width. */
   private def contracted(docs: DataFrame): (DataFrame, DataFrame) = {
     val groups = docs
       .select(col("doc_id"), md5(normalized(col("text"))).as("fpx"))
@@ -267,7 +271,9 @@ object Dedup {
     * — the r11 sf1 probe measured every stage cheap in isolation yet the
     * composed query 2× slower than their sum. |pairs|×4 longs is the
     * documented candidate budget, so the cut point is safe to cache;
-    * the harness releases it between gates ([[contracted]]'s contract).
+    * the harness releases it between gates ([[contracted]]'s contract),
+    * and it is cached in as many partitions as its bytes need
+    * ([[contracted]]'s sizing note).
     *
     * POSITIONAL filter (PPJoin's tightening of AllPairs): a match at
     * prefix positions (i, j) leaves at most min(na−i, nb−j) further
@@ -1788,7 +1794,13 @@ object Dedup {
     *       via [[graft.Graft.releaseState]]; a direct library caller
     *       owns that release — call `Graft.releaseState(spark)` (or
     *       `spark.catalog.clearCache()`) after consuming the result,
-    *       or |pairs|-sized cache blocks accumulate across calls. */
+    *       or |pairs|-sized cache blocks accumulate across calls. The
+    *       cache holds as many partitions as its bytes need
+    *       ([[graft.Graft.applySettings]]'s cached-plan coalescing), so the
+    *       three scans of a small candidate table run a few tasks each,
+    *       not the shuffle width (64 after the pair-doc union);
+    *       ListenerSpec pins that no stage of a 3-doc run reaches the
+    *       shuffle width. */
   def containmentOver(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val sh = shinglesOf(docs)

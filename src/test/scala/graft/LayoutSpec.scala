@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Layout rules for `src/main/scala` code (comment lines skipped): one
-  * session builder, one scheduler listener, one copy of each dedup
-  * pair-join step, one incremental-components fold, one bucket cap, one
-  * whole-file reader and one registry row per gate, so the copies cannot
-  * come back one tool or one function at a time. */
+  * session builder with one settings list, one scheduler listener, one
+  * copy of each dedup pair-join step, one incremental-components fold,
+  * one bucket cap, one whole-file reader and one registry row per gate,
+  * so the copies cannot come back one tool or one function at a time. */
 class LayoutSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -32,6 +32,11 @@ class LayoutSpec extends AnyFunSuite {
 
   test("SparkSession.builder appears once, in Graft.session") {
     val hits = codeMentions("SparkSession.builder")
+    assert(hits.size == 1 && hits.head.startsWith("graft/Graft.scala:"), hits)
+  }
+
+  test("the cached-plan coalescing setting is set once, in Graft's settings list") {
+    val hits = codeMentions("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning")
     assert(hits.size == 1 && hits.head.startsWith("graft/Graft.scala:"), hits)
   }
 

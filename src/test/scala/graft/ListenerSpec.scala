@@ -68,6 +68,48 @@ class ListenerSpec extends AnyFunSuite {
     assert(listener.jobs.size == 2, listener.jobs)
   }
 
+  // Graft.applySettings lets AQE coalesce a cached plan's last exchange;
+  // without it the cache keeps every shuffle partition and each later
+  // scan of it runs that many tasks, whatever the cached bytes
+  private def width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  test("a persisted aggregate over a tiny input is cached in fewer partitions than the shuffle width") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions._
+    val agg = spark.range(1000).groupBy((col("id") % 10).as("k")).count().persist()
+    try {
+      assert(agg.count() == 10)
+      val cached = agg.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+      }
+      val info = spark.sparkContext.getRDDStorageInfo.find(i => cached.contains(i.id))
+      assert(info.exists(i => i.numCachedPartitions > 0 && i.numPartitions < width),
+        s"a 10-row aggregate must be cached in fewer than $width partitions: ${info.map(_.numPartitions)}")
+    } finally agg.unpersist(blocking = true)
+  }
+
+  test("containmentOver over a 3-doc input runs no stage at the shuffle width") {
+    // it persists its candidate table and scans it from both pair-doc
+    // unions and the measure row (DedupSpec's planted pair)
+    import graft.operators.Dedup
+    val small = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val filler = (0 until 30)
+      .map(i => s"filler${('a' + i % 26).toChar}${('a' + i / 26).toChar}")
+      .mkString(" ")
+    val docs = Seq((1L, small), (2L, s"$filler $small"),
+      (3L, "unrelated corpus words entirely disjoint from both documents here now"))
+      .toDF("doc_id", "text")
+    val listener = RunListener.of(spark)
+    listener.reset()
+    try assert(Dedup.containmentOver(docs).collect().length == 1)
+    finally Graft.releaseState(spark)
+    val stages = listener.stages
+    assert(stages.nonEmpty, "listener saw no stages")
+    val wide = stages.filter(_.tally.tasks >= width)
+    assert(wide.isEmpty, s"stages with $width or more tasks over a 3-doc input: " +
+      wide.map(st => s"${st.id}: ${st.tally.tasks} tasks [${st.ops}]").mkString("; "))
+  }
+
   test("in-flight data-quality counters (Observation API) match a separate audit query, at zero extra passes") {
     // the production shape for pipeline health metrics at 100 TB: a
     // run the pipeline is ALREADY making carries its own audit counters

@@ -615,4 +615,30 @@ class PlanSpec extends AnyFunSuite {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+
+  test("persisting gates return the same rows with cached-plan coalescing on and off") {
+    // the setting in Graft.applySettings changes only how many partitions a
+    // persisted frame is cached in; one gate per persisting operator
+    // family (dedup candidate and verify tables, incremental
+    // components, entity resolution, the stream fold, skew report,
+    // classifier features) must not see it in its rows
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val gates = Seq("dedup_containment", "dedup_containment_incr", "dedup_allpairs",
+      "dedup_allpairs_incr", "dedup_recall_eval", "dedup_cc", "er_entities",
+      "stream_cc", "dq_skew_report", "ta_quality_clf")
+    def rows(coalesce: Boolean): Map[String, Seq[String]] = {
+      spark.conf.set(key, coalesce.toString)
+      gates.map { g =>
+        try g -> SparkEntry.queries(g)(spark, dir).collect().map(_.toString).toSeq.sorted
+        finally Graft.releaseState(spark)
+      }.toMap
+    }
+    val saved = spark.conf.get(key)
+    val (on, off) = try (rows(coalesce = true), rows(coalesce = false))
+      finally spark.conf.set(key, saved)
+    for (g <- gates) {
+      assert(on(g).nonEmpty, s"$g returned no rows")
+      assert(on(g) == off(g), s"$g: rows differ with cached-plan coalescing on and off")
+    }
+  }
 }

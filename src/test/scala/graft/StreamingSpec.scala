@@ -1605,6 +1605,29 @@ class StreamingSpec extends AnyFunSuite {
         docs.select(col("doc_id"), col("text")), "doc_id")))
   }
 
+  test("frontier, pack, paragraph, view and doremi sinks: an empty first batch and an empty middle batch change no stored state") {
+    // frontier folds into bucketed state, the other four into versioned
+    // state or versioned / appended per-batch outputs; the pack and
+    // paragraph outputs carry their cursor and seen-set state, so they
+    // are what is compared. The view sink folds a change feed: here
+    // the bootstrap feed, every row of it an insert
+    import graft.streaming.{DoremiStream, FrontierStream, PackStream, ParagraphStream, ViewStream}
+    import graft.operators.Ivm
+    val sf = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val bootstrap = Ivm.changeFeedOver(docs.where(lit(false)), docs, "doc_id")
+    emptyBatchesChangeNoState(Seq(
+      ("frontier", FrontierStream.frontierSink, FrontierStream.storedFrontier,
+        docs.select(col("doc_id"), col("lang"), col("source")), "doc_id"),
+      ("pack", PackStream.packSink, PackStream.storedManifest,
+        docs.select(col("doc_id"), col("lang"), col("text")), "doc_id"),
+      ("paragraph", ParagraphStream.paragraphSink, ParagraphStream.cleanedOutput,
+        docs.select(col("doc_id"), col("text")), "doc_id"),
+      ("view", ViewStream.viewSink, ViewStream.currentView, bootstrap, "doc_id"),
+      ("doremi", DoremiStream.doremiSink, DoremiStream.storedModel,
+        docs.select(col("doc_id"), col("text"), col("lang")), "doc_id")))
+  }
+
   test("streaming doremi model: count fold across restarts equals the one-shot mixture; replay never double-folds") {
     // the bigram-count state is a SUM (not idempotent) -> versioned
     // predecessor rule; the read-time weights under the folded model
